@@ -185,7 +185,6 @@ def cmd_sync(args) -> int:
         max_files_per_trigger=args.max_files_per_trigger,
         dlq_dir=args.dlq_dir,
         merge_mode=args.merge_mode,
-        decoder=args.decoder,
         evolve_schema=not args.no_evolve,
         auto_rebucket=args.auto_rebucket,
     )
@@ -605,8 +604,10 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--merge-mode", choices=["append", "upsert"], default="append")
     sp.add_argument(
         "--property", action="append", default=[], metavar="KEY=VALUE",
-        help="extra table property (repeatable), e.g. write.salt=auto, "
-             "write.salt_n=32, target_file_bytes=134217728")
+        help="extra table property (repeatable), e.g. write.salt=auto "
+             "(picks the spread per batch; prefer it for skewed keys — a "
+             "fixed write.salt_n=32 helps at tens of tasks but over-shards "
+             "at ~1000), target_file_bytes=134217728")
     sp.set_defaults(fn=cmd_create_table)
 
     sp = sub.add_parser("generate-create-sql",
@@ -651,10 +652,6 @@ def build_parser() -> argparse.ArgumentParser:
     sp.add_argument("--max-files-per-trigger", type=int, default=8)
     sp.add_argument("--dlq-dir", default=None)
     sp.add_argument("--merge-mode", choices=["append", "upsert"], default=None)
-    sp.add_argument("--decoder", choices=["jvm", "arrow"], default="jvm",
-                    help="batch decode stage; arrow = vectorized pandas "
-                         "(composes with schema evolution, which stays ON "
-                         "for both decoders unless --no-evolve)")
     sp.add_argument("--no-evolve", action="store_true",
                     help="disable per-batch schema evolution (unknown "
                          "payload keys are dropped instead of ALTER ADDed)")

@@ -363,6 +363,27 @@ def _arrow_type_for(spark_type_name: str):
     return pa.type_for_alias(alias) if alias else None
 
 
+def _arrow_read_aligned(path: str, carried: Sequence[str], arrow_schema):
+    """Read one data file as ``arrow_schema`` inside a task — the Arrow
+    twin of ``LakeTable._read_entries``: each column in ``carried`` (the
+    file holds its current values, see ``LakeTable._carried_columns``) is
+    cast to its canonical :func:`_arrow_type_for` type, which also applies
+    any widening since the file was written; every other column reads as
+    typed NULL (absent from the file, or (re-)added after it). Output
+    schemas are identical across files, so generations concatenate
+    whatever their Arrow nullability on disk."""
+    import pyarrow as _pa
+    import pyarrow.parquet as _pq
+
+    tbl = _pq.read_table(path, columns=list(carried), use_threads=False)
+    n = tbl.num_rows
+    return _pa.Table.from_arrays(
+        [tbl.column(f.name).cast(f.type) if f.name in carried
+         else _pa.nulls(n, f.type) for f in arrow_schema],
+        schema=arrow_schema,
+    )
+
+
 def _bucket_overlap(entry_bucket: int, entry_mod: int, want: set, want_mod: int) -> bool:
     """Can a file bucketed under ``entry_mod`` hold a key whose bucket
     under ``want_mod`` is in ``want``? Exact when one modulus divides the
@@ -850,6 +871,23 @@ class LakeTable:
             self.n_buckets if want_mod is None else want_mod,
         )
 
+    def _file_schema(self, sid) -> T.StructType:
+        """Physical schema of the files written under schema ``sid``."""
+        return _physical(T.StructType.fromJson(self.manifest["schemas"][str(sid)]))
+
+    def _carried_columns(self, sid) -> set[str]:
+        """Columns a file written under schema ``sid`` holds CURRENT values
+        for: its own schema's columns, minus those (re-)added at a later
+        generation — older same-named bytes belong to a since-dropped
+        column and must read as NULL (see alter_drop_column). Every reader
+        of historical files (:meth:`_read_entries` and the per-bucket Arrow
+        paths via :func:`_arrow_read_aligned`) aligns by this one rule."""
+        added_at = self.manifest.get("column_added_at", {})
+        return {
+            f.name for f in self._file_schema(sid).fields
+            if int(sid) >= int(added_at.get(f.name, 0))
+        }
+
     def _read_entries(self, files: Sequence[dict], phys_cur: T.StructType) -> DataFrame:
         """Union-read manifest file entries aligned to ``phys_cur``: widened
         columns cast, missing columns NULL-filled — one ``spark.read`` per
@@ -861,19 +899,12 @@ class LakeTable:
             by_schema.setdefault(str(f["schema_id"]), []).append(
                 os.path.join(self.root, f["path"])
             )
-        added_at = self.manifest.get("column_added_at", {})
         parts = []
         for sid, paths in by_schema.items():
-            file_schema = _physical(T.StructType.fromJson(self.manifest["schemas"][sid]))
-            part = self.spark.read.schema(file_schema).parquet(*paths)
-            have = {f.name for f in file_schema.fields}
+            part = self.spark.read.schema(self._file_schema(sid)).parquet(*paths)
+            carried = self._carried_columns(sid)
             sel = [
-                (F.col(f.name).cast(f.dataType)
-                 # a file only carries a column's CURRENT values if it was
-                 # written at or after the column's (re-)add generation —
-                 # older same-named bytes belong to a since-dropped column
-                 # and must read as NULL (see alter_drop_column)
-                 if f.name in have and int(sid) >= int(added_at.get(f.name, 0))
+                (F.col(f.name).cast(f.dataType) if f.name in carried
                  else F.lit(None).cast(f.dataType)).alias(f.name)
                 for f in phys_cur.fields
             ]
@@ -1851,24 +1882,38 @@ class LakeTable:
                     )
                 return MergeStats(skipped=False, version=self.version, source_rows=0,
                                   total_buckets=self.n_buckets)
+            files = [
+                f for f in self.manifest["files"]
+                if self._bucket_match(f, set(touched))
+            ]
             # exactly the files whose content goes into the merge output —
             # the rebase-retry must drop these and ONLY these
-            consumed = {
-                f["path"]
-                for f in self.manifest["files"]
-                if self._bucket_match(f, set(touched))
-            }
+            consumed = {f["path"] for f in files}
             entries = None
+            route = {}
             if strategy == "auto":
-                # per-bucket Arrow merge: the target never re-enters Spark
-                # (no scan + union shuffle, no driver-serial broadcast);
-                # handles multi-generation targets directly
-                entries = self._merge_local_entries(touched, src, n_src)
+                fallback = self._local_fallback(files)
+                # cost-model floor: a tiny micro-batch over a small target
+                # is cheaper through the broadcast plan than through
+                # len(touched) Python tasks' fixed overhead
+                if fallback is None and (
+                    sum(int(f.get("bytes") or 0) for f in files)
+                    < int(self.properties.get("local_merge_min_bytes", 64 << 20))
+                    and n_src < int(self.properties.get("local_merge_min_rows", 100_000))
+                ):
+                    fallback = "sub_floor"
+                if fallback is None:
+                    # per-bucket Arrow merge: the target never re-enters
+                    # Spark (no scan + union shuffle, no driver-serial
+                    # broadcast); handles multi-generation targets directly
+                    entries = self._merge_local_entries(files, src)
+                    route = {"strategy": "local"}
+                else:
+                    route = {"fallback": fallback}
             if entries is None:
                 target = self.read(
                     buckets=touched, live_only=False, with_meta=True, collapse=False
                 ).withColumn("_bucket", self._bucket_expr())
-                merged = None
                 # broadcast path requires: batch small enough to broadcast
                 # AND a single-generation target (a needs_collapse table may
                 # hold several versions per key per bucket — only the
@@ -1879,10 +1924,12 @@ class LakeTable:
                     and not self.properties.get("needs_collapse")
                 ):
                     merged = self._merge_via_broadcast(target, src)
-                if merged is None:
+                    route["strategy"] = "broadcast"
+                else:
                     merged = lww_collapse(
                         target.unionByName(src), self.pk, self.version_cols
                     )
+                    route["strategy"] = "classic"
                 n_parts = max(1, min(len(touched), self._n_write_parts()))
                 entries = self._write_txn(
                     merged, self._txn_name(), n_parts, collapsed=True
@@ -1895,6 +1942,7 @@ class LakeTable:
                     "operation": "merge",
                     "source_rows": n_src,
                     "touched_buckets": len(touched),
+                    **route,
                 },
                 consumed, entries, props,
             )
@@ -1913,12 +1961,12 @@ class LakeTable:
 
     def _kv_row_width(self) -> int:
         """Estimated broadcast bytes/row for this table's (pk, version)
-        relation — the payload both broadcast plans ship."""
+        relation — the payload the broadcast merge plan ships."""
         names = set(self.pk) | set(self.version_cols)
         fields = list(self.schema.fields) + META_FIELDS  # _offset may be a version col
         return _est_row_width([f for f in fields if f.name in names])
 
-    def _merge_via_broadcast(self, target: DataFrame, src: DataFrame) -> DataFrame | None:
+    def _merge_via_broadcast(self, target: DataFrame, src: DataFrame) -> DataFrame:
         """Upsert merge without the wide union+collapse shuffle.
 
         The classic plan shuffles EVERY row of the touched buckets (target
@@ -1968,75 +2016,28 @@ class LakeTable:
         ).drop(*[f"__k{i}" for i in range(len(pk))], "__tv")
         return t_keep.unionByName(s_keep)
 
-    def _merge_local_entries(
-        self, touched, src: DataFrame, n_src: int = 0
-    ) -> list[dict] | None:
+    def _merge_local_entries(self, files: Sequence[dict], src: DataFrame) -> list[dict]:
         """Shuffle-minimal per-bucket upsert merge — the COW twin of
-        :meth:`_compact_local_entries`. Returns new manifest entries, or
-        None when not applicable (caller falls back to the plan-based
-        broadcast/classic merge).
+        :meth:`_compact_local_entries`; the caller has checked
+        :meth:`_local_fallback` and the cost floor. Returns the new manifest
+        entries replacing ``files`` (the touched buckets' files).
 
         The only shuffle is the batch's own bucket partitioning (any merge
         needs it); the TARGET side never re-enters Spark: each per-bucket
-        task reads its bucket's parquet directly (pyarrow), appends the
-        batch group, winner-selects on the light (pk, version) projection
-        and writes the replacement file. Eliminates the target scan +
-        union shuffle / driver-serial broadcast build from the CoW path.
+        task reads its bucket's parquet directly (pyarrow, aligned to the
+        current schema by :func:`_arrow_read_aligned`), appends the batch
+        group, winner-selects on the light (pk, version) projection and
+        writes the replacement file. Eliminates the target scan + union
+        shuffle / driver-serial broadcast build from the CoW path.
 
         Batch-side type fidelity: the group arrives as an Arrow table
         (applyInArrow — NO pandas round-trip), cast to the canonical
         physical Arrow schema (:func:`_arrow_type_for`): a long column with
         NULLs stays int64, float NaN stays NaN (pandas would silently turn
-        it into null), timestamps are us/UTC end-to-end. Only float/double
-        VERSION columns fall back to the plan paths (NaN ordering — see
-        :meth:`_float_version_cols`)."""
-        import pyarrow as pa
-
-        sid = str(self.manifest["schema_id"])
-        files = [
-            f for f in self.manifest["files"]
-            if self._bucket_match(f, set(touched))
-        ]
-        if any(str(f["schema_id"]) != sid for f in files):
-            return None
-        if any(self._file_mod(f) != self.n_buckets for f in files):
-            return None
+        it into null), timestamps are us/UTC end-to-end."""
         phys = _physical(self.schema)
-        if any(_arrow_type_for(f.dataType.typeName()) is None for f in phys.fields):
-            return None
-        if self._float_version_cols(phys):
-            return None
-        cap = int(self.properties.get(
-            "local_compact_max_bucket_bytes", 4 << 30
-        ))
-        by_b: dict[int, list[dict]] = {}
-        for f in files:
-            by_b.setdefault(int(f["bucket"]), []).append(f)
-        total_bytes = 0
-        for ents in by_b.values():
-            bb = sum(int(e.get("bytes") or 0) for e in ents)
-            if bb > cap:
-                return None
-            total_bytes += bb
-        # cost-model floor: a tiny micro-batch over a small target is
-        # cheaper through the broadcast plan than through len(touched)
-        # Python tasks' fixed overhead
-        if (
-            total_bytes < int(self.properties.get("local_merge_min_bytes", 64 << 20))
-            and n_src < int(self.properties.get("local_merge_min_rows", 100_000))
-        ):
-            return None
-        arrow_schema = pa.schema([
-            (f.name, _arrow_type_for(f.dataType.typeName()))
-            for f in phys.fields
-        ])
-        paths_by_b = {
-            b: (
-                [e["path"] for e in ents],
-                int(sum(int(e.get("bytes") or 0) for e in ents)),
-            )
-            for b, ents in by_b.items()
-        }
+        arrow_schema = self._arrow_schema(phys)
+        reads_by_b = self._bucket_reads(files, arrow_schema.names)
         txn_rel = os.path.join(DATA_DIR, self._txn_name("-merge"))
         txn_dir = os.path.join(self.root, txn_rel)
         os.makedirs(txn_dir, exist_ok=False)
@@ -2044,7 +2045,7 @@ class LakeTable:
         pk, vcols = list(self.pk), list(self.version_cols)
         pk_types = self._pk_type_names(phys)
         stats_cols = self._stats_cols()
-        schema_names = [f.name for f in phys.fields]
+        schema_names = arrow_schema.names
         sid_i = self.manifest["schema_id"]
         n_buckets = self.n_buckets
         target_file_bytes = int(self.properties.get("target_file_bytes", 128 << 20))
@@ -2054,7 +2055,6 @@ class LakeTable:
             import os as _os
 
             import pyarrow as _pa
-            import pyarrow.parquet as _pq
 
             _arrow_pin_single_thread()
             b = int(key[0].as_py())
@@ -2062,12 +2062,10 @@ class LakeTable:
                 tbl_in.select(schema_names).cast(arrow_schema)
                 .replace_schema_metadata(None)
             )
-            paths, in_bytes = paths_by_b.get(b, ([], 0))
+            reads, in_bytes = reads_by_b.get(b, ([], 0))
             parts = [
-                _pq.read_table(_os.path.join(root, p), use_threads=False)
-                .select(schema_names).cast(arrow_schema)
-                .replace_schema_metadata(None)
-                for p in paths
+                _arrow_read_aligned(_os.path.join(root, p), carried, arrow_schema)
+                for p, carried in reads
             ]
             tbl = _pa.concat_tables(parts + [batch]) if parts else batch
             tbl = _arrow_lww_collapse(tbl, pk, vcols, False)
@@ -2392,59 +2390,6 @@ class LakeTable:
         uncollapsed = {int(f["bucket"]) for f in fl if not f.get("collapsed")}
         return {b for b, g in gens.items() if g > 1} | uncollapsed
 
-    def _collapse_via_winners(
-        self, raw: DataFrame, threshold: int, skip_count: bool = False
-    ) -> tuple[DataFrame | None, DataFrame | None]:
-        """LWW-collapse ``raw`` by broadcast winner filter when the winner
-        set is small enough; None -> caller should use the classic
-        single-shuffle collapse.
-
-        The classic collapse shuffles EVERY row generation with all its
-        wide columns (content-heavy; memory-bandwidth-bound on tmpfs/disk).
-        This variant instead: (1) one column-pruned light pass over
-        (pk, version) picks the max version per key — the scan reads only
-        those columns thanks to parquet column pruning; (2) the winner set
-        broadcasts and hash-filters the wide rows with NO wide shuffle;
-        (3) the surviving ~|keys| rows (deduped for at-least-once double
-        delivery) take the final small shuffle. Wide-row shuffle volume
-        drops by the generation factor (measured 8M -> 0.9M rows).
-
-        Scale guard: broadcasting is only sane while winners fit the
-        driver/executors (threshold rows); per-bucket incremental compacts
-        bound the winner set by construction, and anything bigger falls
-        back to the classic collapse."""
-        light = raw.select(*self.pk, *self.version_cols)
-        winners = light.groupBy(*self.pk).agg(
-            F.max(F.struct(*self.version_cols)).alias("__w")
-        )
-        if skip_count:
-            # caller proved the bound from manifest row stats (keys <= rows):
-            # no persist, no separate count job — the light scan runs ONCE,
-            # inside the broadcast-exchange build. Removes a whole action's
-            # scheduling + scan from every steady-state incremental compact.
-            pass
-        else:
-            winners = winners.persist()
-            n = winners.count()
-            if n > threshold or n * self._kv_row_width() > UPSERT_BROADCAST_BYTES:
-                winners.unpersist()
-                return None, None
-        keyed = winners.select(
-            *[F.col(c).alias(f"__k{i}") for i, c in enumerate(self.pk)], "__w"
-        )
-        cond = F.lit(True)
-        for i, c in enumerate(self.pk):
-            cond = cond & (F.col(c) == F.col(f"__k{i}"))
-        cond = cond & (F.struct(*self.version_cols) == F.col("__w"))
-        filtered = raw.join(F.broadcast(keyed), cond, "inner").drop(
-            *[f"__k{i}" for i in range(len(self.pk))], "__w"
-        )
-        # duplicate delivery can leave two identical winner rows; the final
-        # collapse on the ~|keys|-sized survivor set absorbs them. The
-        # caller must materialize (write) before unpersisting the returned
-        # winners handle — compact() does so synchronously.
-        return lww_collapse(filtered, self.pk, self.version_cols), winners
-
     def _float_version_cols(self, phys: T.StructType) -> bool:
         """True when any VERSION column is float/double — the one type whose
         ordering the Arrow-local winner select cannot reproduce: Spark sorts
@@ -2458,32 +2403,92 @@ class LakeTable:
             for f in phys.fields if f.name in vc
         )
 
-    # types the Arrow-local compaction handles losslessly (read + winner
-    # select + write without ever widening/narrowing a column)
-    _LOCAL_COMPACT_TYPES = {
-        "string", "boolean", "byte", "short", "integer", "long",
-        "float", "double", "date", "timestamp", "binary",
-    }
+    @staticmethod
+    def _arrow_schema(phys: T.StructType):
+        """Canonical Arrow schema of the physical columns (every type must
+        have an :func:`_arrow_type_for` mapping)."""
+        import pyarrow as pa
+
+        return pa.schema([
+            (f.name, _arrow_type_for(f.dataType.typeName())) for f in phys.fields
+        ])
+
+    def _bucket_reads(self, files: Sequence[dict], names: Sequence[str]) -> dict:
+        """bucket -> ([(path, carried column names)], bytes) for the
+        per-bucket Arrow tasks: each file's columns that carry current
+        values, in schema order (see :meth:`_carried_columns`)."""
+        carried: dict[str, list[str]] = {}
+        out: dict[int, tuple[list, int]] = {}
+        for f in files:
+            sid = str(f["schema_id"])
+            if sid not in carried:
+                have = self._carried_columns(sid)
+                carried[sid] = [c for c in names if c in have]
+            reads, nbytes = out.get(int(f["bucket"]), ([], 0))
+            reads.append((f["path"], carried[sid]))
+            out[int(f["bucket"])] = (reads, nbytes + int(f.get("bytes") or 0))
+        return out
+
+    def _local_fallback(self, files: Sequence[dict]) -> str | None:
+        """Why the per-bucket Arrow path cannot rewrite ``files``, or None
+        when it can. Compact and upsert-merge commits record the reason as
+        ``fallback`` when they take the plan path instead:
+
+        - ``type:<name>``: a column with no Arrow mapping (array, map,
+          struct, decimal);
+        - ``float_version``: a float/double version column
+          (:meth:`_float_version_cols`);
+        - ``widen:<from>->string``: a file's column was widened to string
+          since it was written — the value rendering is Spark's cast, which
+          Arrow's does not reproduce (numeric widenings and date ->
+          timestamp cast identically, and stay local);
+        - ``mixed_moduli``: files from before an unfinished rebucket;
+        - ``bucket_over_cap``: a bucket over
+          ``local_compact_max_bucket_bytes`` — one task holds a bucket's
+          generations in memory, the plan path spills (or rebucket())."""
+        phys = _physical(self.schema)
+        for f in phys.fields:
+            if _arrow_type_for(f.dataType.typeName()) is None:
+                return f"type:{f.dataType.typeName()}"
+        if self._float_version_cols(phys):
+            return "float_version"
+        cur = {f.name: f.dataType.typeName() for f in phys.fields}
+        for sid in {str(f["schema_id"]) for f in files}:
+            carried = self._carried_columns(sid)
+            for f in self._file_schema(sid).fields:
+                t = f.dataType.typeName()
+                if f.name in carried and t != "string" and cur.get(f.name) == "string":
+                    return f"widen:{t}->string"
+        if any(self._file_mod(f) != self.n_buckets for f in files):
+            return "mixed_moduli"
+        cap = int(self.properties.get("local_compact_max_bucket_bytes", 4 << 30))
+        per_b: dict[int, int] = {}
+        for f in files:
+            per_b[int(f["bucket"])] = per_b.get(int(f["bucket"]), 0) + int(f.get("bytes") or 0)
+        if any(nbytes > cap for nbytes in per_b.values()):
+            return "bucket_over_cap"
+        return None
 
     def _compact_local_entries(
         self,
-        sel: Sequence[int],
+        files: Sequence[dict],
         purge_tombstones: bool,
         target_file_bytes: int,
-    ) -> list[dict] | None:
-        """Shuffle-free, broadcast-free per-bucket compaction. Returns the
-        new manifest entries, or None when not applicable (mixed schema
-        generations / mixed bucket moduli / exotic column types) so the
-        caller falls back to the collapse-plan paths.
+    ) -> list[dict]:
+        """Shuffle-free, broadcast-free per-bucket compaction of ``files``
+        (the selected buckets' files; the caller has checked
+        :meth:`_local_fallback`). Returns the new manifest entries.
 
         The table layout already guarantees that ALL generations of a key
         live inside one bucket's files — so collapsing a bucket needs no
         data movement at all: one task per bucket reads that bucket's
-        parquet files (pyarrow), picks the max-version row per key, drops
-        tombstones, sorts by PK and writes the replacement file(s) directly.
-        Zero shuffle, zero driver-side broadcast build — the two costs that
-        cap N->4N scaling in the plan-based paths (a winner broadcast is
-        driver-serial; a wide-row shuffle is memory-bandwidth-bound). This
+        parquet files (pyarrow, each aligned to the current schema by
+        :func:`_arrow_read_aligned` — files from before an
+        alter_add_columns / widen / drop-then-re-add read exactly as
+        :meth:`_read_entries` serves them), picks the max-version row per
+        key, drops tombstones, sorts by PK and writes the replacement
+        file(s) directly. Zero shuffle, zero driver-side broadcast build —
+        the two costs that cap N->4N scaling in the plan-based paths. This
         is how lakehouse compaction services rewrite partitions: an
         embarrassingly parallel per-partition job, wall-clock = slowest
         single bucket, scaling linearly with executors at any table size.
@@ -2498,41 +2503,11 @@ class LakeTable:
         so integer columns with NULLs can never degrade to float64. The one
         ordering divergence is float/double VERSION columns: Spark sorts
         NaN above every value, Arrow groups NaN with nulls under
-        ``null_placement`` — those tables take the plan-based paths
-        (data columns may still be float; only the winner rule reads
-        version columns)."""
-        sid = str(self.manifest["schema_id"])
-        files = [
-            f for f in self.manifest["files"]
-            if self._bucket_match(f, set(sel))
-        ]
+        ``null_placement`` — those tables take the classic plan."""
         if not files:
             return []
-        if any(str(f["schema_id"]) != sid for f in files):
-            return None
-        if any(self._file_mod(f) != self.n_buckets for f in files):
-            return None
         phys = _physical(self.schema)
-        if any(
-            f.dataType.typeName() not in self._LOCAL_COMPACT_TYPES
-            for f in phys.fields
-        ):
-            return None
-        if self._float_version_cols(phys):
-            return None
-
-        by_b: dict[int, list[dict]] = {}
-        for f in files:
-            by_b.setdefault(int(f["bucket"]), []).append(f)
-        # OOM guard: one task holds one bucket's generations in memory; a
-        # bucket past this bound (an under-bucketed table) must take the
-        # spill-capable plan-based collapse instead — or better, rebucket()
-        cap = int(self.properties.get(
-            "local_compact_max_bucket_bytes", 4 << 30
-        ))
-        for ents in by_b.values():
-            if sum(int(e.get("bytes") or 0) for e in ents) > cap:
-                return None
+        arrow_schema = self._arrow_schema(phys)
         txn_rel = os.path.join(DATA_DIR, self._txn_name("-compact"))
         txn_dir = os.path.join(self.root, txn_rel)
         os.makedirs(txn_dir, exist_ok=False)
@@ -2550,16 +2525,13 @@ class LakeTable:
         # layout per table by its dominant read. PK tie-breaker keeps the
         # sort total, so reruns are byte-deterministic.
         cluster_col = self.properties.get("cluster_by")
-        schema_names = [f.name for f in phys.fields]
         n_buckets = self.n_buckets
         sid_i = self.manifest["schema_id"]
         tasks = [
-            (
-                int(b),
-                json.dumps([e["path"] for e in ents]),
-                int(sum(int(e.get("bytes") or 0) for e in ents)),
+            (int(b), json.dumps(reads), int(nbytes))
+            for b, (reads, nbytes) in sorted(
+                self._bucket_reads(files, arrow_schema.names).items()
             )
-            for b, ents in sorted(by_b.items())
         ]
 
         def run(batches):
@@ -2568,26 +2540,19 @@ class LakeTable:
 
             import pandas as _pd
             import pyarrow as _pa
-            import pyarrow.parquet as _pq
 
             _arrow_pin_single_thread()
             for pdf_in in batches:
                 out = []
-                for b, paths_j, in_bytes in zip(
-                    pdf_in["bucket"], pdf_in["paths"], pdf_in["in_bytes"]
+                for b, reads_j, in_bytes in zip(
+                    pdf_in["bucket"], pdf_in["reads"], pdf_in["in_bytes"]
                 ):
-                    paths = [_os.path.join(root, p) for p in _json.loads(paths_j)]
-                    parts = [_pq.read_table(p, use_threads=False) for p in paths]
-                    # generations of one bucket can disagree on Arrow
-                    # nullability (spark.range batches write `not null`,
-                    # decoded CDC batches write nullable) — promote by
-                    # field name instead of requiring identical schemas
-                    tbl = (
-                        parts[0]
-                        if len(parts) == 1
-                        else _pa.concat_tables(parts, promote_options="default")
-                    )
-                    tbl = tbl.select(schema_names)
+                    tbl = _pa.concat_tables([
+                        _arrow_read_aligned(
+                            _os.path.join(root, p), carried, arrow_schema
+                        )
+                        for p, carried in _json.loads(reads_j)
+                    ])
                     tbl = _arrow_lww_collapse(tbl, pk, vcols, purge_tombstones)
                     if cluster_col and cluster_col in tbl.schema.names and tbl.num_rows:
                         import pyarrow.compute as _pc
@@ -2617,7 +2582,7 @@ class LakeTable:
                 )
 
         tdf = self.spark.createDataFrame(
-            tasks, "bucket int, paths string, in_bytes long"
+            tasks, "bucket int, reads string, in_bytes long"
         )
         # round-robin to one task per partition: hashing bucket ids into
         # len(tasks) partitions would leave ~1/e of them empty
@@ -2629,7 +2594,6 @@ class LakeTable:
         buckets: Sequence[int] | None = None,
         max_generations: int | None = None,
         purge_tombstones: bool = False,
-        winner_broadcast_rows: int = 4_000_000,
         strategy: str = "auto",
     ) -> list[int]:
         """Rewrite buckets to one generation each (the ClickHouse background
@@ -2661,15 +2625,18 @@ class LakeTable:
         - ``"auto"`` (default): the shuffle-free per-bucket Arrow rewrite
           (:meth:`_compact_local_entries`) whenever applicable — it has no
           wide shuffle and no driver-serial broadcast build, so it scales
-          linearly with executors; falls back to the plan-based paths for
-          mixed schema generations / mixed bucket moduli / exotic types;
+          linearly with executors; otherwise the classic plan, with the
+          reason (:meth:`_local_fallback`) recorded as the commit
+          summary's ``fallback``;
         - ``"local"``: force the per-bucket rewrite (error if inapplicable);
-        - ``"winners"``: the broadcast-winner-filter collapse (column-pruned
-          light scan + broadcast filter, no wide shuffle — but the broadcast
-          build is driver-serial);
-        - ``"classic"``: the single full-shuffle LWW collapse."""
-        if strategy == "classic":
-            winner_broadcast_rows = 0
+        - ``"classic"``: the single full-shuffle LWW collapse.
+
+        The commit summary's ``strategy`` records which one ran."""
+        if strategy not in ("auto", "local", "classic"):
+            raise ValueError(
+                f"unknown compact strategy {strategy!r} "
+                "(expected 'auto', 'local' or 'classic')"
+            )
         gens = self.bucket_generations()
         uncollapsed = {
             int(f["bucket"]) for f in self.manifest["files"] if not f.get("collapsed")
@@ -2685,69 +2652,33 @@ class LakeTable:
             sel = sorted(gens)
         if not sel:
             return []
+        sel_files = [
+            f for f in self.manifest["files"] if self._bucket_match(f, set(sel))
+        ]
         # exactly the files this compact consumes — the rebase-retry below
         # must drop these (and ONLY these) from whatever manifest is
         # current at commit time
-        input_paths = {
-            f["path"] for f in self.manifest["files"]
-            if self._bucket_match(f, set(sel))
-        }
-        if strategy in ("auto", "local"):
-            target_b = int(self.properties.get("target_file_bytes", 128 << 20))
-            entries = self._compact_local_entries(sel, purge_tombstones, target_b)
-            if entries is not None:
+        input_paths = {f["path"] for f in sel_files}
+        summary = {"operation": "compact", "purged": purge_tombstones,
+                   "buckets": len(sel)}
+        if strategy != "classic":
+            fallback = self._local_fallback(sel_files)
+            if fallback is None:
+                target_b = int(self.properties.get("target_file_bytes", 128 << 20))
+                entries = self._compact_local_entries(
+                    sel_files, purge_tombstones, target_b
+                )
                 self._commit_with_rebase(
-                    {"operation": "compact", "purged": purge_tombstones,
-                     "buckets": len(sel), "strategy": "local"},
-                    input_paths, entries, {},
+                    {**summary, "strategy": "local"}, input_paths, entries, {},
                 )
                 return sel
             if strategy == "local":
                 raise ValueError(
-                    "local compaction not applicable (mixed schema "
-                    "generations, mixed bucket moduli, or unsupported "
-                    "column types) — use strategy='auto'"
+                    f"local compaction not applicable ({fallback}) — "
+                    "use strategy='auto'"
                 )
-        winners = None
-        if self.properties.get("needs_collapse") and winner_broadcast_rows:
-            # collapse strategy choice: the classic path shuffles every
-            # generation's WIDE rows; the winners path (see
-            # _collapse_via_winners) prunes the scan to (pk, version),
-            # broadcast-filters, and shuffles only ~|keys| wide rows —
-            # picked automatically when the counted winner set fits
-            # broadcast, as it always does for per-bucket incremental
-            # compacts
-            raw = self.read(buckets=sel, live_only=False, with_meta=True, collapse=False)
-            # manifest row stats bound the winner count for free (keys <=
-            # rows): when the bound already fits the broadcast caps, skip
-            # the persist+count gate job entirely — the light scan then
-            # runs once, inside the broadcast build (one fewer action per
-            # steady-state compact; scheduling overhead is pure serial
-            # time, the thing that caps multi-executor scaling efficiency)
-            sel_files = [
-                f for f in self.manifest["files"]
-                if self._bucket_match(f, set(sel))
-            ]
-            # the bound is only a bound if EVERY selected file carries a
-            # row stat — a legacy stat-less entry counted as 0 would
-            # under-bound the winner set and let skip_count build an
-            # uncapped broadcast; such entries fall back to the
-            # persist+count gate instead
-            have_all_stats = all(f.get("rows") is not None for f in sel_files)
-            est_rows = sum(int(f["rows"]) for f in sel_files) if have_all_stats else 0
-            precounted = (
-                have_all_stats
-                and est_rows > 0
-                and est_rows <= winner_broadcast_rows
-                and est_rows * self._kv_row_width() <= UPSERT_BROADCAST_BYTES
-            )
-            df, winners = self._collapse_via_winners(
-                raw, winner_broadcast_rows, skip_count=precounted
-            )
-            if df is None:
-                df = self.read(buckets=sel, live_only=False, with_meta=True)
-        else:
-            df = self.read(buckets=sel, live_only=False, with_meta=True)
+            summary["fallback"] = fallback
+        df = self.read(buckets=sel, live_only=False, with_meta=True)
         df = df.withColumn("_bucket", self._bucket_expr())
         if purge_tombstones:
             # null-safe: read() serves _is_delete=NULL rows as LIVE
@@ -2759,7 +2690,6 @@ class LakeTable:
         # parallelism for every later read), so the partition count also
         # scales with the selected bytes / target_file_bytes — estimated
         # from manifest stats, an upper bound since collapse only shrinks
-        sel_set_est = set(sel)
         def _fsize(f: dict) -> int:
             if f.get("bytes"):
                 return int(f["bytes"])
@@ -2768,28 +2698,19 @@ class LakeTable:
             except OSError:
                 return 0
 
-        est_bytes = sum(
-            _fsize(f) for f in self.manifest["files"]
-            if self._bucket_match(f, sel_set_est)
-        )
+        est_bytes = sum(_fsize(f) for f in sel_files)
         target = int(self.properties.get("target_file_bytes", 128 << 20))
         size_parts = (est_bytes + target - 1) // target if est_bytes else 1
         n_parts = max(1, min(len(sel), self._n_write_parts()), size_parts)
-        try:
-            entries = self._write_txn(
-                df, self._txn_name("-compact"), n_parts, collapsed=True,
-                n_buckets_hint=len(sel),
-            )
-        finally:
-            if winners is not None:
-                winners.unpersist()
+        entries = self._write_txn(
+            df, self._txn_name("-compact"), n_parts, collapsed=True,
+            n_buckets_hint=len(sel),
+        )
         # maintenance must never block (or be blocked by) the ingest
         # writer — the ClickHouse background-merge contract; see
         # _commit_with_rebase for why the rebase is safe
         self._commit_with_rebase(
-            {"operation": "compact", "purged": purge_tombstones,
-             "buckets": len(sel)},
-            input_paths, entries, {},
+            {**summary, "strategy": "classic"}, input_paths, entries, {},
         )
         return sel
 

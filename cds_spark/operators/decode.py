@@ -91,8 +91,8 @@ def _finish(
     if offset_col is None:
         # A monotonically_increasing_id() fallback would be partition-layout-
         # dependent and change across restarts — replays would NOT converge
-        # under the (commit, offset) LWW tiebreak. Same guard as the Arrow
-        # path: the caller must supply a real, stable offset column.
+        # under the (commit, offset) LWW tiebreak: the caller must supply a
+        # real, stable offset column.
         raise ValueError("decode requires offset_col (stable unique per event)")
     part = F.col(partition_col) if partition_col else F.lit(0)
     off = F.col(offset_col)
@@ -517,255 +517,6 @@ def decode_feed_rows(
     dlq = full.filter(~F.col("__keep")).drop("__keep")
     good = full.filter(F.col("__keep")).drop("__keep", "_raw")
     return good, dlq
-
-
-def decode_feed_arrow(
-    df: DataFrame,
-    payload_col: str = "payload",
-    op_col: str = "op",
-    partition_col: str | None = "partition",
-    offset_col: str | None = "offset",
-    inject: dict[str, str] | None = None,
-    keep_cols: "Sequence[str]" = (),
-) -> DataFrame:
-    """Arrow-batched pandas decode of the F2 feed — the mapInPandas
-    alternative to :func:`decode_feed` (input_hint mandates vectorized
-    pandas/Arrow UDFs; the reference chose its JSON decoder by micro-benchmark
-    too, parse_test.go:78-94).
-
-    Semantically identical to decode_feed (asserted by test, including
-    numeric-token preservation and nested values); measured ~3.7x slower
-    than JVM ``from_json`` at 32 cores / 2M events (3.0s vs 11.1s
-    steady-state) because every payload byte crosses the JVM<->Arrow
-    boundary, so the JVM path is the default and this is the template for
-    dialects ``from_json`` cannot express (e.g. polymorphic envelopes
-    needing real code). Batch-level parse loop — no per-row Python UDF
-    calls, one Arrow batch per GIL acquisition.
-
-    Value rendering matches from_json(map<string,string>) exactly — which
-    (verified empirically) is Jackson RE-SERIALIZATION, not raw source
-    text: float tokens normalize via Java Double.toString ('1.50'->'1.5',
-    12345678.5->'1.2345678E7' — replicated by _java_double_str), int
-    tokens keep full precision (BigInteger), booleans are 'true'/'false',
-    strings unescape, null stays null, nested objects/arrays re-serialize
-    compactly (caveat: floats INSIDE nested values use Python repr, which
-    diverges from Java formatting only at |x| >= 1e7). Null partition ->
-    null, null offset -> null (same as the JVM cast) — one malformed
-    envelope row must not fail the whole Arrow batch."""
-    import json as _json
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    if offset_col is None:
-        # a pandas batch-local index would collide across batches/partitions
-        # and break the LWW version tiebreaker — require a real offset column
-        raise ValueError("decode_feed_arrow requires offset_col (unique per event)")
-    inject = dict(inject or {})
-    src_fields = {f.name: f for f in df.schema.fields}
-    out_schema = T.StructType(
-        [
-            T.StructField("op", T.StringType()),
-            T.StructField("data", MAP_SS),
-            T.StructField("exists", T.ArrayType(T.StringType())),
-            T.StructField("_partition", T.LongType()),
-            T.StructField("_offset", T.LongType()),
-        ]
-        # keep_cols: raw source columns passed through VERBATIM (their
-        # original types) — lets the live pipeline's schema-evolution probe
-        # sample raw payloads from the Arrow decode output, exactly like
-        # decode_feed(keep_cols=...)
-        + [src_fields[c] for c in keep_cols]
-    )
-    op_map = dict(_OP_NORMALIZE)
-    inj_keys = list(inject.items())
-
-    def _to_str(v):
-        # envelope (typed) columns injected under the payload: match the
-        # JVM cast-to-string rendering. pandas hands over NUMPY scalars:
-        # np.bool_ is NOT a bool subclass (str() would render 'True'),
-        # and floats need the Java Double.toString form — without these
-        # branches the two decoders' data maps diverge on injected
-        # boolean/double columns
-        import numpy as _np
-
-        if v is None:
-            return None
-        if isinstance(v, (bool, _np.bool_)):
-            return "true" if v else "false"
-        if isinstance(v, (float, _np.floating)):
-            return _java_double_str(float(v))
-        return str(v)
-
-    def _java_double_str(x: float) -> str:
-        """Java Double.toString: plain decimal in [1e-3, 1e7), else
-        'd.dddEn' scientific (no '+', capital E); shortest round-trip
-        digits (same digit selection as Python repr)."""
-        import math
-        from decimal import Decimal
-
-        if math.isnan(x):
-            return "NaN"
-        if math.isinf(x):
-            return "Infinity" if x > 0 else "-Infinity"
-        if x == 0.0:
-            return "0.0" if math.copysign(1.0, x) > 0 else "-0.0"
-        m = abs(x)
-        if 1e-3 <= m < 1e7:
-            s = repr(x)
-            if "." not in s:
-                s += ".0"
-            return s
-        sign, digits, exp = Decimal(repr(x)).as_tuple()
-        digs = "".join(map(str, digits)).rstrip("0") or "0"
-        e = len(digits) + exp - 1
-        mant = digs[0] + "." + (digs[1:] or "0")
-        return ("-" if sign else "") + mant + "E" + str(e)
-
-    def _raw_items(s: str) -> list | None:
-        """Top-level (key, rendered_value) pairs of a JSON object with
-        from_json(map<string,string>) parity (see docstring). Returns None
-        for malformed input / non-objects."""
-        n = len(s)
-
-        def ws(i):
-            while i < n and s[i] in " \t\r\n":
-                i += 1
-            return i
-
-        def scan_string(j):
-            j += 1
-            while j < n:
-                if s[j] == "\\":
-                    j += 2
-                    continue
-                if s[j] == '"':
-                    return j + 1
-                j += 1
-            raise ValueError("unterminated string")
-
-        def scan_value(j):
-            c = s[j]
-            if c == '"':
-                return scan_string(j)
-            if c in "{[":
-                depth = 0
-                while j < n:
-                    c2 = s[j]
-                    if c2 == '"':
-                        j = scan_string(j)
-                        continue
-                    if c2 in "{[":
-                        depth += 1
-                    elif c2 in "}]":
-                        depth -= 1
-                        if depth == 0:
-                            return j + 1
-                    j += 1
-                raise ValueError("unterminated container")
-            k = j
-            while k < n and s[k] not in ",}] \t\r\n":
-                k += 1
-            if k == j:
-                raise ValueError("empty value")
-            return k
-
-        def _no_const(c):
-            # only reachable INSIDE nested containers (scalars are handled
-            # above): rendering parity for nested NaN/Infinity is not
-            # defined, reject to the DLQ (documented nested-value caveat)
-            raise ValueError(f"non-standard JSON constant {c}")
-
-        try:
-            i = ws(0)
-            if i >= n or s[i] != "{":
-                return None
-            i = ws(i + 1)
-            items: list = []
-            if i < n and s[i] == "}":
-                return items if s[i + 1:].strip() == "" else None
-            while True:
-                i = ws(i)
-                if i >= n or s[i] != '"':
-                    raise ValueError("expected key")
-                j = scan_string(i)
-                key = _json.loads(s[i:j])
-                i = ws(j)
-                if i >= n or s[i] != ":":
-                    raise ValueError("expected colon")
-                i = ws(i + 1)
-                if i >= n:
-                    raise ValueError("missing value")
-                j = scan_value(i)
-                rawv = s[i:j]
-                if rawv.startswith('"'):
-                    items.append((key, _json.loads(rawv)))
-                elif rawv == "null":
-                    items.append((key, None))
-                elif rawv[0] in "{[":
-                    items.append(
-                        (key, _json.dumps(_json.loads(rawv, parse_constant=_no_const),
-                                          separators=(",", ":"), ensure_ascii=False))
-                    )
-                elif rawv in ("NaN", "Infinity", "-Infinity"):
-                    # Jackson (from_json) ACCEPTS these non-standard tokens
-                    # and re-serializes them as QUOTED strings (measured:
-                    # {"a":NaN} -> {a -> "NaN"}) — match exactly; Python
-                    # json would instead type them float and render inf/nan
-                    items.append((key, f'"{rawv}"'))
-                else:
-                    v = _json.loads(rawv, parse_constant=_no_const)
-                    if isinstance(v, bool):
-                        items.append((key, "true" if v else "false"))
-                    elif isinstance(v, int):
-                        items.append((key, str(v)))  # BigInteger: full digits
-                    elif isinstance(v, float):
-                        items.append((key, _java_double_str(v)))
-                    else:
-                        items.append((key, rawv))
-                i = ws(j)
-                if i < n and s[i] == ",":
-                    i += 1
-                    continue
-                if i < n and s[i] == "}":
-                    return items if s[i + 1:].strip() == "" else None
-                raise ValueError("expected , or }")
-        except ValueError:
-            return None
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ops, datas, exists, parts, offs = [], [], [], [], []
-            kept = {c: [] for c in keep_cols}
-            part_src = pdf[partition_col] if partition_col else None
-            off_src = pdf[offset_col]
-            for i in range(len(pdf)):
-                op = op_map.get(pdf[op_col].iloc[i])
-                if op is None:
-                    continue
-                raw = pdf[payload_col].iloc[i]
-                items = _raw_items(raw) if isinstance(raw, str) else None
-                if items is not None:
-                    data = {k: _to_str(pdf[src].iloc[i]) for k, src in inj_keys}
-                    data.update(items)  # duplicate keys: last wins (LAST_WIN)
-                else:
-                    data = None
-                p = part_src.iloc[i] if part_src is not None else 0
-                o = off_src.iloc[i]
-                ops.append(op)
-                datas.append(data)
-                exists.append(list(data.keys()) if data is not None else None)
-                parts.append(int(p) if (part_src is None or pd.notna(p)) else None)
-                offs.append(int(o) if pd.notna(o) else None)
-                for c in keep_cols:
-                    kept[c].append(pdf[c].iloc[i])
-            out = {"op": ops, "data": datas, "exists": exists,
-                   "_partition": parts, "_offset": offs}
-            for c in keep_cols:
-                out[c] = kept[c]
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(run, out_schema)
 
 
 # ---------------------------------------------------------------------------

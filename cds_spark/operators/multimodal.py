@@ -213,15 +213,26 @@ def _mp4_bytes(duration_ms: int, width: int, height: int,
 
 def _mp4_walk(buf: bytes, start: int, end: int):
     """Yield (type, body_start, box_end) for the sibling boxes in
-    buf[start:end]. Stops on a malformed size rather than looping."""
+    buf[start:end]. ISO/IEC 14496-12 size forms: ``size == 1`` means a
+    64-bit largesize follows the type (common for a large ``mdat`` placed
+    before ``moov``); ``size == 0`` means the box runs to ``end``. Stops on
+    a malformed size rather than looping."""
     import struct
 
     off = start
     while off + 8 <= end:
         (size,) = struct.unpack(">I", buf[off:off + 4])
-        if size < 8 or off + size > end:
+        body = off + 8
+        if size == 1:
+            if off + 16 > end:
+                return
+            (size,) = struct.unpack(">Q", buf[off + 8:off + 16])
+            body = off + 16
+        elif size == 0:
+            size = end - off
+        if size < body - off or off + size > end:
             return
-        yield buf[off + 4:off + 8], off + 8, off + size
+        yield buf[off + 4:off + 8], body, off + size
         off += size
 
 

@@ -725,7 +725,11 @@ GROUP BY t.doc_id
 # runs merge into maximal duplicated spans.
 
 SPAN_W = 16  # tokens per window
-_SPAN_SEP = "\x1f"  # unit separator: cannot appear in \s+-split tokens
+# unit separator joining a window's tokens before hashing. \x1f is not
+# regex whitespace (Java or RE2), so it CAN survive a \s+ split inside a
+# token; a token carrying it could make two distinct windows join to the
+# same string. Collision-improbable on text corpora, not impossible.
+_SPAN_SEP = "\x1f"
 
 
 def duplicate_spans(docs: DataFrame, w: int = SPAN_W, winnow_k: int = 1) -> DataFrame:

@@ -50,12 +50,6 @@ class JobSpec:
     version_inject: dict = field(default_factory=lambda: {"commit": "commit"})
     max_files_per_trigger: int = 8
     evolve_schema: bool = True
-    #: batch decode stage: "jvm" (default — from_json expressions, fastest)
-    #: or "arrow" (the input_hint's vectorized pandas/Arrow decode,
-    #: decode_feed_arrow — equivalence-tested against the JVM path).
-    #: Composes with evolve_schema since round 3: the Arrow form passes the
-    #: raw payload through (keep_cols) for new-column type sampling.
-    decoder: str = "jvm"
     dlq_dir: str | None = None
     lineage_dir: str | None = None
     #: None -> table default; "append" = merge-on-read fast ingest,
@@ -198,12 +192,6 @@ class IncrementalSync:
     """Owns one job's foreachBatch loop + lineage/metrics sidecar."""
 
     def __init__(self, spark: SparkSession, spec: JobSpec):
-        if spec.decoder not in ("jvm", "arrow"):
-            # a typo in a sync-many jobs.json (which bypasses the CLI's
-            # choices= guard) must not silently run the wrong decode stage
-            raise ValueError(
-                f"unknown decoder {spec.decoder!r}: expected 'jvm' or 'arrow'"
-            )
         from cds_spark.secrets import expand_spec_env, spec_public_view
 
         self.spark = spark
@@ -241,41 +229,22 @@ class IncrementalSync:
         #   needed, so nothing ever looks at the map form.
         events = None
         if self.spec.evolve_schema:
-            # both decode shapes carry the raw payload through
-            # (keep_cols) so the evolution probe can sample types for
-            # unknown keys — arrow + evolution compose since round 3
-            if self.spec.decoder == "arrow":
-                from cds_spark.operators.decode import decode_feed_arrow
-
-                events = decode_feed_arrow(
-                    batch, inject=self.spec.version_inject, keep_cols=("payload",)
-                ).persist()
-            else:
-                events = decode_feed(
-                    batch, inject=self.spec.version_inject, keep_cols=("payload",)
-                ).persist()
+            # the raw payload rides along (keep_cols) so the evolution
+            # probe can sample types for unknown keys
+            events = decode_feed(
+                batch, inject=self.spec.version_inject, keep_cols=("payload",)
+            ).persist()
         jvm_cached: list = []
         try:
             if events is not None:
                 added = discover_and_evolve(table, events)
-                rows, dlq = events_to_rows(events, table.schema, table.pk)
-            elif self.spec.decoder == "arrow":
-                from cds_spark.operators.decode import decode_feed_arrow
-
-                added = []
-                # persist the (expensive, ~3.7x slower than JVM) Arrow
-                # decode like the evolve path does its map decode: the
-                # lineage agg, DLQ split and merge all reuse one parse
-                events = decode_feed_arrow(
-                    batch, inject=self.spec.version_inject
-                ).persist()
                 rows, dlq = events_to_rows(events, table.schema, table.pk)
             else:
                 added = []
                 rows, dlq = decode_feed_rows(
                     batch, table.schema, table.pk, inject=self.spec.version_inject
                 )
-                # same invariant as the other two branches: the fused
+                # same invariant as the evolve branch: the fused
                 # parse feeds the lineage agg, the DLQ count AND the
                 # merge — without a persist the from_json re-runs per
                 # action, eroding the path's whole speed advantage

@@ -5,11 +5,15 @@ status (manager.go:45-69), idempotent under replay via chunk fences."""
 
 import datetime
 import json
+import os
 import sys
 from pathlib import Path
 
+import pytest
+
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
+from cds_spark.lake.table import LakeTable  # noqa: E402
 from cds_spark.streaming.pipeline import (  # noqa: E402
     _hour_in_window,
     full_sync_windowed,
@@ -240,3 +244,80 @@ def test_resume_with_different_n_chunks_uses_frozen_grid(spark, tmp_path):
     got = {r["doc_id"]
            for r in LakeTable.load(spark, root2).current().collect()}
     assert got == set(range(600))
+
+
+def test_fullsync_lost_sidecar_recovers_frozen_grid_from_table(spark, tmp_path):
+    """The frozen bounds now also live in the table's properties: a lost
+    sidecar plus a GROWN source must resume on the original grid (no
+    silent row loss) and pick up growth via the tail chunk."""
+    from cds_spark.streaming.pipeline import full_sync_windowed
+
+    class FakeClock:
+        def __init__(self, hours):
+            self.h = list(hours)
+
+        def __call__(self):
+            h = self.h.pop(0) if len(self.h) > 1 else self.h[0]
+            return datetime.datetime(2024, 1, 1, h, 0, 0)
+
+    src1 = spark.range(0, 300).selectExpr(
+        "id AS doc_id", "concat('x-', id) AS val", "id AS ver")
+    root = str(tmp_path / "fs")
+    sp = str(tmp_path / "fs.json")
+    st = full_sync_windowed(
+        spark, src1, root, pk=["doc_id"], version_cols=["ver"],
+        n_chunks=3, n_buckets=4, window_hours=(2, 4), status_path=sp,
+        job_id="g1", clock=FakeClock([2, 9]),
+    )
+    assert st["status"] == "PAUSE" and st["next_chunk"] == 1
+    os.unlink(sp)  # sidecar wiped
+    t = LakeTable.load(spark, root)
+    assert "fullsync.g1.bounds" in t.properties
+    # source GROWS during the pause (monotonic ids — canonical scenario)
+    src2 = spark.range(0, 450).selectExpr(
+        "id AS doc_id", "concat('x-', id) AS val", "id AS ver")
+    st2 = full_sync_windowed(
+        spark, src2, root, pk=["doc_id"], version_cols=["ver"],
+        n_chunks=3, n_buckets=4, window_hours=(2, 4), status_path=sp,
+        job_id="g1", clock=FakeClock([3]),
+    )
+    assert st2["status"] == "FINISHED"
+    assert LakeTable.load(spark, root).current().count() == 450
+
+
+def test_fullsync_resume_without_any_bounds_fails_loudly(spark, tmp_path):
+    """ADVICE r4: a pre-upgrade sidecar (next_chunk>0, no bounds) on a table
+    without recoverable bounds must raise, not recompute a shifted grid."""
+    from cds_spark.streaming.pipeline import full_sync_windowed
+
+    class Clock3:
+        def __call__(self):
+            return datetime.datetime(2024, 1, 1, 3, 0, 0)
+
+    src = spark.range(0, 300).selectExpr(
+        "id AS doc_id", "concat('x-', id) AS val", "id AS ver")
+    root = str(tmp_path / "old")
+    sp = str(tmp_path / "old.json")
+    # build a table state with advanced fences, then strip the bounds
+    # property from the manifest on disk (simulating a pre-upgrade table)
+    st = full_sync_windowed(
+        spark, src, root, pk=["doc_id"], version_cols=["ver"],
+        n_chunks=3, n_buckets=4, window_hours=(2, 4), status_path=sp,
+        job_id="o1", clock=Clock3(),
+    )
+    assert st["status"] == "FINISHED"
+    t = LakeTable.load(spark, root)
+    mpath = LakeTable._meta_path(root, t.version)
+    m = json.load(open(mpath))
+    m["properties"].pop("fullsync.o1.bounds", None)
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    # old-format sidecar: mid-run, no bounds
+    with open(sp, "w") as f:
+        json.dump({"job_id": "o1", "status": "RUNNING", "next_chunk": 2}, f)
+    with pytest.raises(RuntimeError, match="frozen chunk grid"):
+        full_sync_windowed(
+            spark, src, root, pk=["doc_id"], version_cols=["ver"],
+            n_chunks=3, n_buckets=4, window_hours=(2, 4), status_path=sp,
+            job_id="o1", clock=Clock3(),
+        )

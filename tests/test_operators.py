@@ -166,6 +166,29 @@ def test_decode_real_png_wav_mp4_stdlib():
         decode_real(b"\x00" * 64, "video/mp4")
 
 
+def test_decode_real_mp4_largesize_mdat_before_moov():
+    """A 64-bit largesize box (size field 1) and a to-end box (size field
+    0) are valid ISO-BMFF: a large mdat before moov must not stop the box
+    walk before moov is found."""
+    import struct
+
+    from cds_spark.operators.multimodal import _mp4_bytes, _mp4_walk, decode_real
+
+    buf = _mp4_bytes(7_250, 1920, 1080)
+    boxes = {t: buf[a - 8:b] for t, a, b in _mp4_walk(buf, 0, len(buf))}
+    media = b"\x01\x02\x03" * 100
+    mdat = struct.pack(">I", 1) + b"mdat" + struct.pack(">Q", 16 + len(media)) + media
+    tail = struct.pack(">I", 0) + b"free" + b"\x00" * 12
+    mp4 = boxes[b"ftyp"] + mdat + boxes[b"moov"] + tail
+    walked = [(t, a, b) for t, a, b in _mp4_walk(mp4, 0, len(mp4))]
+    assert [t for t, _, _ in walked] == [b"ftyp", b"mdat", b"moov", b"free"]
+    _, a, b = walked[1]
+    assert mp4[a:b] == media
+    assert walked[-1][2] == len(mp4)
+    d = decode_real(mp4, "video/mp4")
+    assert (d["width"], d["height"], d["duration_ms"]) == (1920, 1080, 7_250)
+
+
 def test_multimodal_real_decode_arrow_path(spark):
     """End-to-end: synth_media_binary emits GENUINE PNG/WAV bytes; the
     Arrow-batched extract_features_real decodes them and every feature
@@ -321,23 +344,36 @@ def _decode_canon(rows):
 
 
 def test_arrow_decode_matches_jvm_decode(spark):
-    from cds_spark.operators.decode import decode_feed, decode_feed_arrow
+    """decode_feed on the generated F2 feed equals a json.loads replay of
+    the same envelopes: every whitelisted event kept (duplicate deliveries
+    included), data = injected commit + payload keys, exists = data keys.
+    (The test name predates the single decoder; the check is decode_feed
+    against an independent Python decode.)"""
+    import json
+
+    from cds_spark.operators.decode import decode_feed
     from cds_spark.sources.feed import change_feed
 
     feed = change_feed(spark, 400, n_repos=6, paths_per_repo=9, seed=21)
-    jvm = decode_feed(feed, inject={"commit": "commit"}).collect()
-    arrow = decode_feed_arrow(feed, inject={"commit": "commit"}).collect()
-    assert _decode_canon(jvm) == _decode_canon(arrow)
+    got = decode_feed(feed, inject={"commit": "commit"}).collect()
+    exp = []
+    for r in feed.collect():
+        data = {"commit": r["commit"], **json.loads(r["payload"])}
+        exp.append({"op": r["op"], "data": data, "exists": list(data),
+                    "_partition": r["partition"], "_offset": r["offset"]})
+    assert len(exp) > 400  # duplicate deliveries ride along
+    assert _decode_canon(got) == _decode_canon(exp)
 
 
 def test_arrow_decode_parity_on_adversarial_payloads(spark):
-    """Non-canonical producers: numeric tokens render like the JVM's
-    Jackson re-serialization (Java Double.toString: '1.50'->'1.5',
-    12345678.5->'1.2345678E7'; big ints keep full digits), nested
-    objects/arrays render as compact JSON, booleans/nulls match from_json,
-    and null partition/offset rows flow through (null meta, not a dead
-    Arrow batch)."""
-    from cds_spark.operators.decode import decode_feed, decode_feed_arrow
+    """Non-canonical producers, pinned to the JVM decode's literal output:
+    numeric tokens render as Jackson re-serializes them (Java
+    Double.toString: '1.50'->'1.5', 12345678.5->'1.23456785E7'; big ints
+    keep full digits), nested objects/arrays render as compact JSON,
+    booleans/nulls as from_json does, duplicate keys keep the last value,
+    malformed or non-object payloads decode to a NULL map, non-whitelisted
+    ops drop, and a null partition flows through as null."""
+    from cds_spark.operators.decode import decode_feed
 
     rows = [
         ("c", "a", '{"x": 1.50, "y": "s", "n": null, "b": true}', 0, 1),
@@ -354,16 +390,26 @@ def test_arrow_decode_parity_on_adversarial_payloads(spark):
     df = spark.createDataFrame(
         rows, "op string, commit string, payload string, partition int, offset long"
     )
-    jvm = decode_feed(df, inject={"commit": "commit"}).collect()
-    arrow = decode_feed_arrow(df, inject={"commit": "commit"}).collect()
-    assert _decode_canon(jvm) == _decode_canon(arrow)
-    by_off = {r["_offset"]: r for r in arrow}
-    assert by_off[1].data["x"] == "1.5"  # Jackson-normalized, both paths
-    assert by_off[1].data["b"] == "true" and by_off[1].data["n"] is None
-    assert by_off[3].data["big"] == "12345678901234567890"
-    assert by_off[5].data is None and by_off[6].data is None
-    assert by_off[7]._partition is None
-    assert by_off[10].data["sci"] == "1.23456785E7"  # Java sci threshold 1e7
+    got = decode_feed(df, inject={"commit": "commit"}).collect()
+
+    def ev(op, data, part, off):
+        return {"op": op, "data": data, "exists": list(data) if data else None,
+                "_partition": part, "_offset": off}
+
+    exp = [
+        ev("c", {"commit": "a", "x": "1.5", "y": "s", "n": None, "b": "true"}, 0, 1),
+        ev("u", {"commit": "b", "nested": '{"a":1.5,"l":[1,"two",null]}'}, 0, 2),
+        ev("u", {"commit": "c", "big": "12345678901234567890", "neg": "-0.0",
+                 "e": "1500.0"}, 0, 3),
+        ev("d", {"commit": "d", "dup": "2"}, 0, 4),
+        ev("c", None, 0, 5),
+        ev("c", None, 0, 6),
+        ev("c", {"commit": "g", "k": "v"}, None, 7),
+        ev("c", {"commit": "h"}, 1, 8),
+        ev("u", {"commit": "j", "sci": "1.23456785E7", "tiny": "1.0E-4",
+                 "exp": "1.0E20"}, 0, 10),
+    ]
+    assert _decode_canon(got) == _decode_canon(exp)
 
 
 def test_quadratic_baselines_refuse_large_inputs(spark):
@@ -658,10 +704,10 @@ def test_chunk_documents_rejects_bad_overlap(spark):
 
 
 def test_arrow_decoder_matches_jvm_on_nonstandard_json(spark):
-    """Jackson (from_json) accepts NaN/Infinity and re-serializes them as
-    QUOTED strings; Python json types them float. The decoders must render
-    identically or jvm/arrow replays of the same feed diverge."""
-    from cds_spark.operators.decode import decode_feed, decode_feed_arrow
+    """Jackson (from_json) accepts the non-standard NaN/Infinity tokens and
+    re-serializes them as QUOTED strings (Python json would type them
+    float); pinned so a decode change cannot silently alter replays."""
+    from cds_spark.operators.decode import decode_feed
 
     feed = spark.createDataFrame(
         [
@@ -671,15 +717,12 @@ def test_arrow_decoder_matches_jvm_on_nonstandard_json(spark):
         ],
         "op string, repo string, path string, commit string, offset long, payload string, partition int",
     )
-    jvm = decode_feed(feed, inject={"commit": "commit"}).select("_offset", "data").collect()
-    arrow = decode_feed_arrow(feed, inject={"commit": "commit"}).select("_offset", "data").collect()
-    jm = {r["_offset"]: r["data"] for r in jvm}
-    am = {r["_offset"]: r["data"] for r in arrow}
-    # Jackson ACCEPTS the non-standard tokens, re-serialized as quoted
-    # strings (measured) — the arrow decoder must render identically
-    assert jm[0]["val"] == '"NaN"' and am[0] == jm[0]
-    assert jm[1]["val"] == '"Infinity"' and am[1] == jm[1]
-    assert jm[2] is not None and am[2] == jm[2]  # normal payload: identical
+    got = decode_feed(feed, inject={"commit": "commit"}).select("_offset", "data").collect()
+    assert {r["_offset"]: r["data"] for r in got} == {
+        0: {"commit": "c1", "repo": "r", "path": "p", "val": '"NaN"'},
+        1: {"commit": "c1", "repo": "r", "path": "q", "val": '"Infinity"'},
+        2: {"commit": "c1", "repo": "r", "path": "s", "val": "1.5"},
+    }
 
 
 def test_state_digest_multiplicity_sensitive(spark):

@@ -6,6 +6,7 @@ pkg/ckgroup/ckgroup.go:12-47 is manual copy + cutover)."""
 import sys
 from pathlib import Path
 
+import pyspark.sql.types as T
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
@@ -146,3 +147,144 @@ def test_rebucket_under_concurrent_ingest(spark, tmp_path):
     v = t2.validate()
     assert v["misplaced_rows"] == 0 and v["null_pk_rows"] == 0
     feed.unpersist()
+
+
+def test_stats_flags_over_cap_bucket(spark, tmp_path):
+    """Verdict #6: an over-cap bucket must surface in stats() with a
+    rebucket hint (power-of-two suggestion)."""
+    schema = T.StructType([
+        T.StructField("k", T.LongType()),
+        T.StructField("v", T.StringType()),
+        T.StructField("ver", T.LongType()),
+    ])
+    root = str(tmp_path / "cap")
+    t = LakeTable.create(
+        spark, root, schema, pk=["k"], version_cols=["ver"], n_buckets=2,
+        properties={"merge_mode": "append",
+                    "local_compact_max_bucket_bytes": 1024},
+    )
+    t.merge(spark.range(0, 5000).selectExpr(
+        "id AS k", "concat(uuid(), uuid()) AS v", "id AS ver"))
+    st = LakeTable.load(spark, root).stats()
+    assert st["n_over_cap_buckets"] >= 1
+    assert st["over_cap_buckets"]
+    assert "rebucket(" in st["rebucket_hint"]
+    n = st["rebucket_suggested_n"]
+    assert n > 2 and n % 2 == 0 and (n // 2 & (n // 2 - 1)) == 0
+
+
+def test_validate_ok_right_after_rebucket_begin(spark, tmp_path):
+    """ADVICE r4 (medium): after rebucket-begin every file carries ONE
+    legacy modulus != n_buckets; validate() must judge placement under the
+    per-file modulus, not the new one."""
+    schema = T.StructType([
+        T.StructField("k", T.LongType()),
+        T.StructField("v", T.StringType()),
+        T.StructField("ver", T.LongType()),
+    ])
+    root = str(tmp_path / "vb")
+    t = LakeTable.create(
+        spark, root, schema, pk=["k"], version_cols=["ver"], n_buckets=4,
+        properties={"merge_mode": "append"},
+    )
+    t.merge(spark.range(0, 800).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver"))
+    assert t.validate()["ok"]
+    # replicate exactly phase 1 of rebucket(): stamp mods, flip n_buckets
+    m = t._next_manifest({"operation": "rebucket-begin",
+                          "from_buckets": 4, "to_buckets": 8})
+    for f in m["files"]:
+        f.setdefault("mod", 4)
+    m["n_buckets"] = 8
+    t._commit(m)
+    t2 = LakeTable.load(spark, root)
+    res = t2.validate()
+    assert res["misplaced_rows"] == 0 and res["ok"], res
+
+
+def test_rebucket_survives_concurrent_schema_evolution(spark, tmp_path):
+    """ADVICE r4: an ALTER landing mid-rebucket must not stamp new-schema
+    ids over old-column files — phys/schema_id are recomputed per
+    iteration from the reloaded manifest."""
+    schema = T.StructType([
+        T.StructField("k", T.LongType()),
+        T.StructField("v", T.StringType()),
+        T.StructField("ver", T.LongType()),
+    ])
+    root = str(tmp_path / "rse")
+    t = LakeTable.create(
+        spark, root, schema, pk=["k"], version_cols=["ver"], n_buckets=8,
+        properties={"merge_mode": "append"},
+    )
+    t.merge(spark.range(0, 2000).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver"))
+
+    calls = {"n": 0}
+    orig_reload = t._reload_latest
+
+    def reload_with_race():
+        calls["n"] += 1
+        if calls["n"] == 2:  # between rewrite groups
+            other = LakeTable.load(spark, root)
+            other.alter_add_columns([T.StructField("extra", T.StringType())])
+        orig_reload()
+
+    t._reload_latest = reload_with_race
+    out = t.rebucket(16, group=3)
+    assert out["n_buckets"] == 16
+    t2 = LakeTable.load(spark, root)
+    # every entry's stamped schema must contain the columns its file holds
+    for f in t2.manifest["files"]:
+        sid = str(f["schema_id"])
+        assert sid in t2.manifest["schemas"]
+    df = t2.current()
+    assert df.count() == 2000
+    assert "extra" in df.columns
+    assert t2.validate()["ok"]
+
+
+def test_stats_over_cap_is_per_modulus_mid_rebucket(spark, tmp_path):
+    """Round-5 review: mid-rebucket the manifest holds files under TWO
+    moduli; summing bucket bytes by bare bucket id would add bucket b
+    (mod old) to bucket b (mod new) — two healthy buckets reading as one
+    over-cap bucket, plus a rebucket_suggested_n fighting the rebucket
+    already in progress. Accounting must key on (mod, bucket) and the
+    hint must stand down while moduli are mixed."""
+    schema = T.StructType([
+        T.StructField("k", T.LongType()),
+        T.StructField("v", T.StringType()),
+        T.StructField("ver", T.LongType()),
+    ])
+    root = str(tmp_path / "capmix")
+    t = LakeTable.create(
+        spark, root, schema, pk=["k"], version_cols=["ver"], n_buckets=2,
+        properties={"merge_mode": "append"},
+    )
+    t.merge(spark.range(0, 3000).selectExpr(
+        "id AS k", "concat(uuid(), uuid()) AS v", "id AS ver"))
+    per_bucket = {}
+    for f in t.manifest["files"]:
+        per_bucket[f["bucket"]] = (
+            per_bucket.get(f["bucket"], 0) + int(f["bytes"])
+        )
+    # cap chosen so every bucket is healthy under its own modulus but the
+    # cross-modulus sum of a shared bucket id would breach it
+    cap = max(per_bucket.values()) + 1
+    # enter rebucket-begin (phase 1): stamp legacy mods, flip n_buckets
+    m = t._next_manifest({"operation": "rebucket-begin",
+                          "from_buckets": 2, "to_buckets": 4})
+    for f in m["files"]:
+        f.setdefault("mod", 2)
+    m["n_buckets"] = 4
+    m["properties"]["local_compact_max_bucket_bytes"] = str(cap)
+    t._commit(m)
+    t2 = LakeTable.load(spark, root)
+    # new-modulus ingest lands alongside the legacy files
+    t2.merge(spark.range(3000, 6000).selectExpr(
+        "id AS k", "concat(uuid(), uuid()) AS v", "id AS ver"))
+    t3 = LakeTable.load(spark, root)
+    mods = {t3._file_mod(f) for f in t3.manifest["files"]}
+    assert mods == {2, 4}, "test precondition: mixed moduli present"
+    st = t3.stats()
+    assert st["n_over_cap_buckets"] == 0, st
+    assert "rebucket_suggested_n" not in st, st

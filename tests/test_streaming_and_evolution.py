@@ -2,7 +2,9 @@
 
 import json
 import os
+import re
 
+import pyspark.sql.types as T
 import pytest
 from pyspark.sql import functions as F
 
@@ -412,70 +414,176 @@ def test_kafka_source_config_surface(spark, tmp_path):
             raise
 
 
-def test_compact_skip_count_gate_is_taken_and_equivalent(spark, tmp_path):
-    """The manifest-row-stats gate must (a) actually SKIP the winners
-    count job when the bound fits (asserted by poisoning count on the
-    winners plan path via a tiny threshold comparison), and (b) produce
-    output identical to the counted path."""
-    from cds_spark.operators.decode import decode_feed_rows
-    from cds_spark.sources.feed import REPO_SCHEMA, change_feed
-
-    feed = change_feed(spark, 2000, n_repos=8, paths_per_repo=12, seed=33)
-    root = str(tmp_path / "skipcnt")
-    t = LakeTable.create(
-        spark, root, REPO_SCHEMA, pk=["repo", "path"],
-        version_cols=["commit", "_offset"], n_buckets=4,
-    )
-    rows, _ = decode_feed_rows(feed, t.schema, t.pk, inject={"commit": "commit"})
-    t.merge(rows, fence=("sc", 0))
-    raw = t.read(live_only=False, with_meta=True, collapse=False)
-    df_skip, w_skip = t._collapse_via_winners(raw, 4_000_000, skip_count=True)
-    df_cnt, w_cnt = t._collapse_via_winners(raw, 4_000_000, skip_count=False)
-    a = sorted(tuple(r) for r in df_skip.collect())
-    b = sorted(tuple(r) for r in df_cnt.collect())
-    assert a == b and len(a) > 0
-    w_cnt.unpersist()
-    # manifest row stats exist for every file (the gate's precondition)
-    assert all(int(f.get("rows") or 0) > 0 for f in t.manifest["files"])
+def _matrix_batch(spark, schema, rows):
+    """rows: (k, ver, is_delete, value...) -> a merge batch of ``schema``
+    plus the ``_is_delete`` meta column."""
+    full = T.StructType(list(schema.fields) + [T.StructField("_is_delete", T.BooleanType())])
+    return spark.createDataFrame(
+        [(k, ver, *vals, dele) for k, ver, dele, *vals in rows], full)
 
 
-def test_compact_winners_strategy_matches_classic(spark, tmp_path):
-    """compact()'s broadcast-winners collapse must produce the same final
-    state as the classic full-shuffle collapse, including tombstone purge
-    and duplicate-delivery absorption; a tiny winner threshold falls back
-    to classic."""
-    from cds_spark.operators.decode import decode_feed_rows
-    from cds_spark.sources.feed import REPO_SCHEMA, change_feed
+def _matrix_rows(lo, hi, ver, value):
+    """Keys k-lo..k-hi at version ``ver``: every 5th is a delete, every 4th
+    is delivered twice (at-least-once duplicates the collapse absorbs)."""
+    out = []
+    for i in range(lo, hi):
+        row = (f"k-{i:03d}", ver, i % 5 == 0, *value(i))
+        out += [row] * (2 if i % 4 == 0 else 1)
+    return out
 
-    feed = change_feed(spark, 3000, n_repos=10, paths_per_repo=15, seed=31)
-    states = {}
-    for label, kw in (
-        ("classic", dict(strategy="classic")),
-        ("winners", dict(strategy="winners")),
-        ("fallback", dict(strategy="winners", winner_broadcast_rows=1)),
-        ("local", dict(strategy="local")),
-        ("auto", dict()),
+
+def _build_matrix_table(spark, root, scenario):
+    """A merge-on-read table with three overlapping generations whose
+    history exercises ``scenario``'s schema evolution between them."""
+    import datetime
+
+    base = [T.StructField("k", T.StringType()), T.StructField("ver", T.LongType())]
+    if scenario == "timestamp":
+        cols = [T.StructField("ts", T.TimestampType()), T.StructField("d", T.DateType())]
+
+        def value(i):
+            return (datetime.datetime(2024, 3, 1) + datetime.timedelta(seconds=i * 3601,
+                                                                       microseconds=i),
+                    datetime.date(2024, 3, 1) + datetime.timedelta(days=i % 11))
+    else:
+        cols = [T.StructField("n", T.IntegerType()), T.StructField("s", T.StringType())]
+
+        def value(i):
+            return (i * 7, f"s{i}")
+    schema = T.StructType(base + cols)
+    t = LakeTable.create(spark, root, schema, pk=["k"], version_cols=["ver"],
+                         n_buckets=4, properties={"merge_mode": "append"})
+    t.merge(_matrix_batch(spark, schema, _matrix_rows(0, 60, 1, value)))
+    if scenario == "add_columns":
+        t.alter_add_columns([T.StructField("extra", T.LongType())])
+        schema = t.schema
+
+        def value(i):
+            return (i * 7, f"s{i}", i * 1000)
+    elif scenario == "widen":
+        t.alter_widen_column("n", T.LongType())
+        schema = t.schema
+
+        def value(i):
+            return ((1 << 33) + i, f"s{i}")
+    elif scenario == "drop_readd":
+        t.alter_drop_column("s")
+        t.alter_add_columns([T.StructField("s", T.StringType())])
+        schema = t.schema
+
+        def value(i):
+            return (i * 7, f"new{i}")
+    t.merge(_matrix_batch(spark, schema, _matrix_rows(40, 100, 2, value)))
+    t.merge(_matrix_batch(spark, schema, _matrix_rows(20, 50, 3, value)))
+    return t
+
+
+@pytest.mark.parametrize(
+    "scenario", ["plain", "add_columns", "widen", "drop_readd", "timestamp"])
+def test_compact_strategy_matrix_matches_classic(spark, tmp_path, scenario):
+    """compact() under classic / local / auto, with and without tombstone
+    purge, over a table whose older generations predate an
+    alter_add_columns, an int->long widen or a drop-then-re-add (or that
+    carries timestamp/date columns): every strategy leaves the same
+    physical rows as classic, and auto commits the per-bucket Arrow path."""
+    import shutil
+
+    src = str(tmp_path / "src")
+    t0 = _build_matrix_table(spark, src, scenario)
+    assert t0.properties.get("needs_collapse")
+    before = sorted(tuple(r) for r in t0.current().collect())
+    for purge in (False, True):
+        states = {}
+        for strategy in ("classic", "local", "auto"):
+            root = str(tmp_path / f"{strategy}-{purge}")
+            shutil.copytree(src, root)
+            LakeTable.load(spark, root).compact(purge_tombstones=purge, strategy=strategy)
+            t = LakeTable.load(spark, root)
+            summary = t.history()[-1]["summary"]
+            assert summary["operation"] == "compact"
+            assert summary["strategy"] == ("classic" if strategy == "classic" else "local")
+            assert "fallback" not in summary
+            # physical rows, uncollapsed: every bucket is one generation now
+            states[strategy] = sorted(
+                tuple(r) for r in
+                t.read(live_only=False, with_meta=True, collapse=False).collect())
+            assert sorted(tuple(r) for r in t.current().collect()) == before
+        assert states["classic"] == states["local"] == states["auto"]
+        n_dead = sum(1 for r in states["classic"] if r[-2])
+        assert (n_dead == 0) == purge
+
+
+def test_compact_and_merge_record_fallback_reason(spark, tmp_path):
+    """Each reason the per-bucket Arrow path declines a compact is recorded
+    in the commit summary (``strategy: classic`` + ``fallback``), the
+    result still matches the dict state, and strategy='local' refuses with
+    the same reason. Upsert merges record their path the same way."""
+    def table(name, fields, vcol="ver", props=None):
+        schema = T.StructType([T.StructField("k", T.StringType())] + fields)
+        t = LakeTable.create(spark, str(tmp_path / name), schema, pk=["k"],
+                             version_cols=[vcol], n_buckets=4,
+                             properties={"merge_mode": "append", **(props or {})})
+        return t, schema
+
+    def two_gens(t, schema, row):
+        for v in (1, 2):
+            t.merge(spark.createDataFrame([row(i, v) for i in range(12)], schema))
+
+    cases = {}
+    t, sc = table("fv", [T.StructField("ver", T.DoubleType())])
+    two_gens(t, sc, lambda i, v: (f"k{i}", v + i / 10))
+    cases["float_version"] = t
+    t, sc = table("arr", [T.StructField("ver", T.LongType()),
+                          T.StructField("v", T.ArrayType(T.FloatType()))])
+    two_gens(t, sc, lambda i, v: (f"k{i}", v, [float(i), float(v)]))
+    cases["type:array"] = t
+    t, sc = table("cap", [T.StructField("ver", T.LongType())],
+                  props={"local_compact_max_bucket_bytes": 1})
+    two_gens(t, sc, lambda i, v: (f"k{i}", v))
+    cases["bucket_over_cap"] = t
+    t, sc = table("mod", [T.StructField("ver", T.LongType())])
+    two_gens(t, sc, lambda i, v: (f"k{i}", v))
+    t.rebucket(8, max_groups=0)  # begin only: every file keeps modulus 4
+    cases["mixed_moduli"] = t
+    t, sc = table("wstr", [T.StructField("ver", T.LongType()),
+                           T.StructField("n", T.DoubleType())])
+    two_gens(t, sc, lambda i, v: (f"k{i}", v, i * 1.5e20))
+    t.alter_widen_column("n", T.StringType())
+    cases["widen:double->string"] = t
+
+    for reason, t in cases.items():
+        want = sorted(tuple(r) for r in t.current().collect())
+        with pytest.raises(ValueError, match=re.escape(reason)):
+            t.compact(strategy="local")
+        t.compact()
+        summary = t.history()[-1]["summary"]
+        assert (summary["strategy"], summary["fallback"]) == ("classic", reason)
+        t2 = LakeTable.load(spark, t.root)
+        assert sorted(tuple(r) for r in t2.current().collect()) == want
+
+    # upsert merges: sub-floor batches take the broadcast plan, disabled
+    # floors the local path, non-primitive columns the plan with its type
+    for name, fields, props, row, want in (
+        ("m_floor", [T.StructField("ver", T.LongType())], {},
+         lambda i, v: (f"k{i}", v), {"strategy": "broadcast", "fallback": "sub_floor"}),
+        ("m_local", [T.StructField("ver", T.LongType())],
+         {"local_merge_min_rows": 0, "local_merge_min_bytes": 0},
+         lambda i, v: (f"k{i}", v), {"strategy": "local"}),
+        ("m_arr", [T.StructField("ver", T.LongType()),
+                   T.StructField("v", T.ArrayType(T.FloatType()))],
+         {"local_merge_min_rows": 0, "local_merge_min_bytes": 0},
+         lambda i, v: (f"k{i}", v, [float(v)]),
+         {"strategy": "broadcast", "fallback": "type:array"}),
     ):
-        root = str(tmp_path / f"ct_{label}")
-        t = LakeTable.create(
-            spark, root, REPO_SCHEMA, pk=["repo", "path"],
-            version_cols=["commit", "_offset"], n_buckets=8,
-        )
-        for i in range(2):
-            batch = feed.filter(
-                (F.col("offset") >= i * 1500) & (F.col("offset") < (i + 1) * 1500)
-            )
-            rows, _ = decode_feed_rows(batch, t.schema, t.pk, inject={"commit": "commit"})
-            t.merge(rows, fence=("w", i))
-        t.compact(purge_tombstones=True, **kw)
-        t2 = LakeTable.load(spark, root)
-        assert not t2.properties.get("needs_collapse")
-        states[label] = sorted(tuple(r) for r in t2.current().collect())
-        assert t2.read(live_only=False).count() == len(states[label])  # purged
-    assert (
-        states["classic"] == states["winners"] == states["fallback"]
-        == states["local"] == states["auto"]
-    )
+        t, sc = table(name, fields, props={"merge_mode": "upsert", **props})
+        two_gens(t, sc, row)
+        summary = t.history()[-1]["summary"]
+        assert summary["operation"] == "merge"
+        assert {k: summary.get(k) for k in want} == want
+        assert ("fallback" in summary) == ("fallback" in want)
+    t.merge(spark.createDataFrame([("k0", 9, [1.0])], sc), strategy="plan")
+    summary = t.history()[-1]["summary"]
+    assert summary["strategy"] == "broadcast" and "fallback" not in summary
 
 
 def test_manifest_records_file_rows(spark, tmp_path):
@@ -909,39 +1017,34 @@ def test_merge_survives_concurrent_compact_commit(spark, tmp_path):
 
 
 def test_pipeline_arrow_decoder_matches_jvm(spark, tmp_path):
-    """decoder='arrow' (the input_hint's vectorized pandas path) drives the
-    full sync loop to the same final state as the JVM decoder."""
-    from cds_spark.sources.feed import write_feed_files
-    from cds_spark.streaming.pipeline import IncrementalSync, JobSpec
-
-    feed = change_feed(spark, 900, n_repos=6, paths_per_repo=10, seed=77)
+    """The fused decode (evolve_schema off) drives the full sync loop to
+    the dict-replay oracle's state. (The test name predates the single
+    decoder.)"""
+    feed = change_feed(spark, 900, n_repos=6, paths_per_repo=10, seed=77).persist()
+    oracle = reference_replay_pandas([r.asDict() for r in feed.collect()])
     topic = str(tmp_path / "atopic")
     write_feed_files(feed, topic, 3)
-    states = {}
-    for dec in ("jvm", "arrow"):
-        root = str(tmp_path / f"adec_{dec}")
-        LakeTable.create(
-            spark, root, REPO_SCHEMA, pk=["repo", "path"],
-            version_cols=["commit", "_offset"], n_buckets=8,
-        )
-        spec = JobSpec(job_id=f"ad-{dec}", table_root=root, source_dir=topic,
-                       checkpoint_dir=str(tmp_path / f"ack_{dec}"),
-                       evolve_schema=False, decoder=dec)
-        IncrementalSync(spark, spec).run_available()
-        t = LakeTable.load(spark, root)
-        states[dec] = sorted(tuple(r) for r in t.current().collect())
-    assert states["jvm"] == states["arrow"] and len(states["jvm"]) > 0
+    root = str(tmp_path / "adec")
+    LakeTable.create(
+        spark, root, REPO_SCHEMA, pk=["repo", "path"],
+        version_cols=["commit", "_offset"], n_buckets=8,
+    )
+    spec = JobSpec(job_id="ad", table_root=root, source_dir=topic,
+                   checkpoint_dir=str(tmp_path / "ack"), evolve_schema=False)
+    IncrementalSync(spark, spec).run_available()
+    cols = ["repo", "path", "commit", "lang", "content"]
+    got = sorted(tuple(r) for r in
+                 LakeTable.load(spark, root).current().select(*cols).collect())
+    exp = sorted(tuple(d[c] for c in cols) for d in oracle.values())
+    assert got == exp and len(got) > 0
 
 
 def test_arrow_decoder_with_schema_evolution(spark, tmp_path):
-    """decoder='arrow' composes with evolve_schema since round 3: the Arrow
-    decode passes the raw payload through (keep_cols) so the evolution
-    probe samples types for unknown keys; a new column discovered mid-batch
-    lands with the same values the JVM decode path produces."""
-    import json as _json
-
-    from cds_spark.operators.decode import decode_feed
-
+    """The map-form decode passes the raw payload through (keep_cols) so
+    the evolution probe samples types for unknown keys: a numeric key that
+    appears mid-feed lands as a numeric column whose values equal the
+    dict-replay oracle's (NULL where the winning event lacks the key).
+    (The test name predates the single decoder.)"""
     base = change_feed(spark, 300, n_repos=5, paths_per_repo=10, seed=21)
     # append a new key 'stars' (numeric) to half the payloads
     evolved = base.withColumn(
@@ -953,28 +1056,27 @@ def test_arrow_decoder_with_schema_evolution(spark, tmp_path):
                 "',\"stars\":', cast(offset % 50 as string), '}')"
             ),
         ).otherwise(F.col("payload")),
+    ).persist()
+    oracle = reference_replay_pandas([r.asDict() for r in evolved.collect()])
+    topic = str(tmp_path / "evo_topic")
+    write_feed_files(evolved, topic, 2)
+    root = str(tmp_path / "evo")
+    LakeTable.create(
+        spark, root, REPO_SCHEMA, pk=["repo", "path"],
+        version_cols=["commit", "_offset"], n_buckets=8,
     )
-    states = {}
-    for dec in ("jvm", "arrow"):
-        topic = str(tmp_path / f"evo_topic_{dec}")
-        write_feed_files(evolved, topic, 2)
-        root = str(tmp_path / f"evo_{dec}")
-        LakeTable.create(
-            spark, root, REPO_SCHEMA, pk=["repo", "path"],
-            version_cols=["commit", "_offset"], n_buckets=8,
-        )
-        spec = JobSpec(job_id=f"evo-{dec}", table_root=root, source_dir=topic,
-                       checkpoint_dir=str(tmp_path / f"evo_ck_{dec}"),
-                       evolve_schema=True, decoder=dec)
-        IncrementalSync(spark, spec).run_available()
-        t = LakeTable.load(spark, root)
-        assert "stars" in [f.name for f in t.schema.fields]
-        # numeric type inferred (not stuck string), values landed
-        stars_f = [f for f in t.schema.fields if f.name == "stars"][0]
-        assert stars_f.dataType.typeName() in ("long", "double")
-        states[dec] = sorted(tuple(r) for r in t.current().collect())
-    assert states["jvm"] == states["arrow"]
-    assert any(r[-1] is not None for r in states["arrow"])  # some stars set
+    spec = JobSpec(job_id="evo", table_root=root, source_dir=topic,
+                   checkpoint_dir=str(tmp_path / "evo_ck"), evolve_schema=True)
+    IncrementalSync(spark, spec).run_available()
+    t = LakeTable.load(spark, root)
+    # numeric type inferred (not stuck string), values landed
+    stars_f = [f for f in t.schema.fields if f.name == "stars"][0]
+    assert stars_f.dataType.typeName() in ("long", "double")
+    cols = ["repo", "path", "commit", "lang", "content", "stars"]
+    got = sorted(tuple(r) for r in t.current().select(*cols).collect())
+    exp = sorted(tuple(d.get(c) for c in cols) for d in oracle.values())
+    assert got == exp
+    assert any(r[-1] is not None for r in got)  # some stars set
 
 
 def test_purge_where_removes_keys_all_generations(spark, tmp_path):
@@ -1284,47 +1386,6 @@ def test_schema_evolution_null_first_occurrence_infers_value_type(spark, tmp_pat
     assert types["stars"] == "long", types
 
 
-def test_compact_statless_file_disables_skip_count_gate(spark, tmp_path):
-    """ADVICE r3 (medium): a legacy manifest entry with no 'rows' stat must
-    disable the precounted gate (counting it as 0 rows would under-bound
-    the winner set and allow an uncapped broadcast); compact must fall back
-    to the persist+count path and still produce the right state."""
-    from cds_spark.operators.decode import decode_feed_rows
-    from cds_spark.sources.feed import REPO_SCHEMA, change_feed
-
-    feed = change_feed(spark, 1500, n_repos=6, paths_per_repo=10, seed=44)
-    root = str(tmp_path / "statless")
-    t = LakeTable.create(
-        spark, root, REPO_SCHEMA, pk=["repo", "path"],
-        version_cols=["commit", "_offset"], n_buckets=4,
-        properties={"merge_mode": "append"},
-    )
-    for i in range(2):
-        batch = feed.filter(
-            (F.col("offset") >= i * 750) & (F.col("offset") < (i + 1) * 750)
-        )
-        rows, _ = decode_feed_rows(batch, t.schema, t.pk, inject={"commit": "commit"})
-        t.merge(rows, fence=("sl", i))
-    assert t.properties.get("needs_collapse")
-    expected = sorted(tuple(r) for r in t.current().collect())
-
-    # simulate a legacy (pre-row-stats) manifest entry
-    t.manifest["files"][0].pop("rows", None)
-
-    seen = {}
-    orig = t._collapse_via_winners
-
-    def spy(raw, cap, skip_count=False):
-        seen["skip_count"] = skip_count
-        return orig(raw, cap, skip_count=skip_count)
-
-    t._collapse_via_winners = spy
-    t.compact(purge_tombstones=True, strategy="winners")
-    assert seen.get("skip_count") is False
-    t2 = LakeTable.load(spark, root)
-    assert sorted(tuple(r) for r in t2.current().collect()) == expected
-
-
 def test_upsert_local_merge_matches_plan_merge(spark, tmp_path):
     """The per-bucket Arrow upsert merge must produce byte-identical state
     (including tombstones and meta columns) to the plan-based merge across
@@ -1359,6 +1420,134 @@ def test_upsert_local_merge_matches_plan_merge(spark, tmp_path):
             assert any("-merge" in f["path"] for f in t2.manifest["files"]), \
                 "local merge path was not taken"
     assert states["plan"] == states["local"]
+
+
+TS_SCHEMA = T.StructType([
+    T.StructField("k", T.StringType()),
+    T.StructField("updated_at", T.TimestampType()),
+    T.StructField("day", T.DateType()),
+    T.StructField("score", T.DoubleType()),
+    T.StructField("ver", T.LongType()),
+])
+
+
+def _ts_batch(spark, lo, hi, ver_base):
+    """Deterministic batch over keys k-(lo..hi) with timestamp/date/double
+    columns; ver encodes recency."""
+    return spark.range(lo, hi).selectExpr(
+        "concat('k-', id % 40) AS k",
+        "timestamp'2024-03-01 00:00:00' + make_interval(0,0,0,0,0,0,id) AS updated_at",
+        "date_add(date'2024-03-01', cast(id % 11 AS int)) AS day",
+        "CASE WHEN id % 7 = 3 THEN double('NaN') ELSE id * 0.5 END AS score",
+        f"id + {ver_base} AS ver",
+    )
+
+
+def test_local_merge_timestamp_date_matches_plan(spark, tmp_path):
+    """Verdict #4: tables with timestamp/date columns must take the
+    Arrow-local merge path and produce state identical to the plan merge."""
+    states = {}
+    took_local = {}
+    for label, props, strat in (
+        ("plan", {}, "plan"),
+        ("local", {"local_merge_min_rows": 0, "local_merge_min_bytes": 0}, "auto"),
+    ):
+        root = str(tmp_path / f"ts_{label}")
+        t = LakeTable.create(
+            spark, root, TS_SCHEMA, pk=["k"], version_cols=["ver"],
+            n_buckets=4, properties={"merge_mode": "upsert", **props},
+        )
+        for i in range(3):
+            t.merge(_ts_batch(spark, i * 200, (i + 1) * 200, 0), fence=("ts", i),
+                    strategy=strat)
+        t2 = LakeTable.load(spark, root)
+        states[label] = sorted(
+            str(tuple(r)) for r in t2.read(live_only=False, with_meta=True).collect()
+        )
+        took_local[label] = any("-merge" in f["path"] for f in t2.manifest["files"])
+    assert took_local["local"], "timestamp/date table did not take the local merge"
+    assert states["plan"] == states["local"]
+
+
+def test_local_merge_preserves_nan_in_data_column(spark, tmp_path):
+    """ADVICE r4: the old pandas round-trip silently converted NaN to NULL
+    in float/double data columns; applyInArrow must preserve it."""
+    root = str(tmp_path / "nan")
+    t = LakeTable.create(
+        spark, root, TS_SCHEMA, pk=["k"], version_cols=["ver"], n_buckets=2,
+        properties={"merge_mode": "upsert",
+                    "local_merge_min_rows": 0, "local_merge_min_bytes": 0},
+    )
+    t.merge(_ts_batch(spark, 0, 100, 0), fence=("n", 0))
+    t.merge(_ts_batch(spark, 100, 200, 0), fence=("n", 1))
+    t2 = LakeTable.load(spark, root)
+    assert any("-merge" in f["path"] for f in t2.manifest["files"])
+    cur = t2.current()
+    n_nan = cur.filter(F.isnan("score")).count()
+    n_null = cur.filter(F.col("score").isNull()).count()
+    # winners are ids 160..199 -> k-(0..39); NaN at id%7==3
+    assert n_nan == cur.filter(F.expr("(ver % 7) = 3")).count() and n_nan > 0
+    assert n_null == 0
+
+
+def test_float_version_col_falls_back_but_stays_correct(spark, tmp_path):
+    """Float/double VERSION columns order NaN differently in Arrow vs Spark:
+    both local paths must decline (fall back to plan) and results stay
+    correct."""
+    schema = T.StructType([
+        T.StructField("k", T.StringType()),
+        T.StructField("v", T.StringType()),
+        T.StructField("fver", T.DoubleType()),
+    ])
+    root = str(tmp_path / "fv")
+    t = LakeTable.create(
+        spark, root, schema, pk=["k"], version_cols=["fver"], n_buckets=2,
+        properties={"merge_mode": "upsert",
+                    "local_merge_min_rows": 0, "local_merge_min_bytes": 0},
+    )
+    mk = lambda lo, hi: spark.range(lo, hi).selectExpr(
+        "concat('k-', id % 20) AS k", "concat('v', id) AS v",
+        "cast(id AS double) AS fver",
+    )
+    t.merge(mk(0, 100), fence=("f", 0))
+    t.merge(mk(100, 200), fence=("f", 1))
+    t2 = LakeTable.load(spark, root)
+    assert not any("-merge" in f["path"] for f in t2.manifest["files"]), \
+        "float version col must not take the Arrow-local merge"
+    rows = {r["k"]: r["v"] for r in t2.current().collect()}
+    assert rows == {f"k-{i}": f"v{180 + i}" for i in range(20)}
+    # local compact must decline too (plan path still compacts correctly)
+    t2.compact()
+    t3 = LakeTable.load(spark, root)
+    assert {r["k"]: r["v"] for r in t3.current().collect()} == rows
+
+
+def test_local_merge_chunking_counts_batch_bytes(spark, tmp_path):
+    """ADVICE r4: a large batch merged into an EMPTY bucket must still be
+    chunked near target_file_bytes, not written as one oversized file."""
+    schema = T.StructType([
+        T.StructField("k", T.LongType()),
+        T.StructField("payload", T.StringType()),
+        T.StructField("ver", T.LongType()),
+    ])
+    root = str(tmp_path / "chunk")
+    t = LakeTable.create(
+        spark, root, schema, pk=["k"], version_cols=["ver"], n_buckets=1,
+        properties={"merge_mode": "upsert", "local_merge_min_rows": 0,
+                    "local_merge_min_bytes": 0, "target_file_bytes": 64 * 1024},
+    )
+    # seed one tiny file so the bucket exists, then merge a much larger batch
+    t.merge(spark.range(0, 10).selectExpr(
+        "id AS k", "repeat('x', 10) AS payload", "id AS ver"))
+    big = spark.range(0, 20000).selectExpr(
+        "id AS k", "concat(uuid(), uuid(), uuid()) AS payload", "id AS ver")
+    t.merge(big, fence=("c", 1))
+    t2 = LakeTable.load(spark, root)
+    merged = [f for f in t2.manifest["files"] if "-merge" in f["path"]]
+    assert merged, "local merge path was not taken"
+    assert len(merged) > 1, "oversized batch written as a single file"
+    # and no file grossly past the target (4x slack for estimate error)
+    assert max(f["bytes"] for f in merged) < 4 * 64 * 1024
 
 
 def _mk_drop_table(spark, tmp_path):
