@@ -179,33 +179,15 @@ MANIFEST_GZIP_MIN_BYTES = 1 << 20
 IS_DELETE = "_is_delete"
 OFFSET = "_offset"
 
-#: max in-batch rows for the broadcast upsert-merge plan (the batch side is
-#: bounded by the micro-batch caps — 30k msgs nominal in the reference —
-#: so this is generous; above it, the classic union+collapse shuffle runs)
-UPSERT_BROADCAST_ROWS = 4_000_000
-
-#: byte ceiling for any broadcast key/version relation: a row-count-only
-#: gate near the 4M cap could build a multi-GB broadcast from wide string
-#: PKs and fail the job instead of falling back — estimated bytes (row
-#: width from the pk/version column types) must also fit
-UPSERT_BROADCAST_BYTES = 256 << 20
+#: max purge key-set rows hinted as a broadcast in the anti-join that
+#: drops the purged keys from their buckets; above it the join shuffles
+PURGE_BROADCAST_KEYS = 4_000_000
 
 
-def _est_row_width(fields: Sequence[T.StructField]) -> int:
-    """Estimated in-memory bytes per broadcast row (UnsafeRow-ish): fixed
-    widths for numerics, a conservative average for strings/binary."""
-    w = 16  # row object + null bitmap overhead
-    for f in fields:
-        t = f.dataType.typeName()
-        if t in ("long", "double", "timestamp", "date", "integer", "float"):
-            w += 8
-        elif t == "boolean":
-            w += 1
-        elif t in ("string", "binary"):
-            w += 8 + 40  # offset word + average payload
-        else:
-            w += 24
-    return w
+def _null_filled(cols: Sequence[str]) -> dict:
+    """Commit-summary field naming the batch columns filled with NULL."""
+    return {"null_filled": list(cols)} if cols else {}
+
 
 def _arrow_pin_single_thread() -> None:
     """Per-task Arrow thread pinning: N concurrent Python workers each
@@ -1731,11 +1713,12 @@ class LakeTable:
         Input: logical columns (+ optional meta); missing meta filled."""
         if fence and self._fence_applied(fence):
             return MergeStats(skipped=True, version=self.version)
-        src = self._with_meta_defaults(df).withColumn("_bucket", self._bucket_expr())
+        src, filled = self._with_meta_defaults(df)
+        src = src.withColumn("_bucket", self._bucket_expr())
         shuffle_n = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
         # bootstrap snapshots carry one row per key by contract -> collapsed
         entries = self._write_txn(src, self._txn_name(), shuffle_n, collapsed=True)
-        m = self._next_manifest({"operation": "overwrite"})
+        m = self._next_manifest({"operation": "overwrite", **_null_filled(filled)})
         m["files"] = entries
         if fence:
             m["properties"][f"fence.{fence[0]}"] = int(fence[1])
@@ -1743,7 +1726,9 @@ class LakeTable:
         return MergeStats(skipped=False, version=self.version,
                           touched_buckets=self.n_buckets, total_buckets=self.n_buckets)
 
-    def _with_meta_defaults(self, df: DataFrame) -> DataFrame:
+    def _with_meta_defaults(self, df: DataFrame) -> tuple[DataFrame, list[str]]:
+        """``df`` aligned to the physical schema, and the names of the
+        columns it lacked and that were therefore filled with NULL."""
         out = df
         if IS_DELETE not in df.columns:
             out = out.withColumn(IS_DELETE, F.lit(False))
@@ -1759,7 +1744,8 @@ class LakeTable:
         # dying on an unresolved reference (found by the stateful model
         # check: replay of a pre-alter batch after alter_add_columns).
         # PK/version columns must exist: silently NULL-filling those would
-        # corrupt identity/ordering, so they still raise.
+        # corrupt identity/ordering, so they still raise. The filled names
+        # go back to the caller, which records them in the commit summary.
         have = set(out.columns)
         required = set(self.pk) | {v for v in self.version_cols if v != OFFSET}
         missing_required = sorted(required - have)
@@ -1767,11 +1753,12 @@ class LakeTable:
             raise ValueError(
                 f"merge batch is missing PK/version column(s) {missing_required}"
             )
+        filled = [f.name for f in cur.fields if f.name not in have]
         return out.select(*[
             (F.col(f.name) if f.name in have else F.lit(None))
             .cast(f.dataType).alias(f.name)
             for f in cur.fields
-        ])
+        ]), filled
 
     def _fence_applied(self, fence: tuple[str, int]) -> bool:
         job_id, batch_id = fence
@@ -1811,7 +1798,29 @@ class LakeTable:
 
         Default mode comes from the table property ``merge_mode`` (set at
         create; defaults to upsert).
+
+        ``strategy`` picks the upsert's physical plan, the same rule as
+        :meth:`compact`:
+
+        - ``"auto"`` (default): the per-bucket Arrow merge
+          (:meth:`_merge_local_entries`) whenever applicable; otherwise
+          the classic union + LWW collapse, with the reason
+          (:meth:`_local_fallback`) recorded as the commit summary's
+          ``fallback``;
+        - ``"local"``: force the per-bucket merge (error if inapplicable);
+        - ``"classic"``: the union + LWW collapse shuffle.
+
+        The commit summary's ``strategy`` records which one ran, and
+        ``null_filled`` the batch columns filled with NULL because the
+        batch lacked them (e.g. a replay from before an
+        ``alter_add_columns``). Append mode has a single plan and ignores
+        ``strategy``.
         """
+        if strategy not in ("auto", "local", "classic"):
+            raise ValueError(
+                f"unknown merge strategy {strategy!r} "
+                "(expected 'auto', 'local' or 'classic')"
+            )
         if fence and self._fence_applied(fence):
             return MergeStats(skipped=True, version=self.version)
         mode = mode or self.properties.get("merge_mode", "upsert")
@@ -1822,7 +1831,7 @@ class LakeTable:
             raise ValueError(
                 f"unknown merge mode {mode!r} (expected 'append' or 'upsert')"
             )
-        src = self._with_meta_defaults(source)
+        src, filled = self._with_meta_defaults(source)
         # in-batch collapse is required for upsert (one row per key before
         # the COW union) but OPTIONAL for append: the LWW read/compact
         # absorbs intra-batch duplicates, so the fast path is a single
@@ -1850,7 +1859,8 @@ class LakeTable:
             # rebases onto the latest manifest instead of crashing the
             # stream
             committed = self._commit_with_rebase(
-                {"operation": "append-merge", "touched_buckets": len(touched)},
+                {"operation": "append-merge", "touched_buckets": len(touched),
+                 **_null_filled(filled)},
                 set(), entries, props,
             )
             return MergeStats(
@@ -1889,51 +1899,30 @@ class LakeTable:
             # exactly the files whose content goes into the merge output —
             # the rebase-retry must drop these and ONLY these
             consumed = {f["path"] for f in files}
-            entries = None
-            route = {}
-            if strategy == "auto":
-                fallback = self._local_fallback(files)
-                # cost-model floor: a tiny micro-batch over a small target
-                # is cheaper through the broadcast plan than through
-                # len(touched) Python tasks' fixed overhead
-                if fallback is None and (
-                    sum(int(f.get("bytes") or 0) for f in files)
-                    < int(self.properties.get("local_merge_min_bytes", 64 << 20))
-                    and n_src < int(self.properties.get("local_merge_min_rows", 100_000))
-                ):
-                    fallback = "sub_floor"
-                if fallback is None:
-                    # per-bucket Arrow merge: the target never re-enters
-                    # Spark (no scan + union shuffle, no driver-serial
-                    # broadcast); handles multi-generation targets directly
-                    entries = self._merge_local_entries(files, src)
-                    route = {"strategy": "local"}
-                else:
-                    route = {"fallback": fallback}
-            if entries is None:
+            fallback = None if strategy == "classic" else self._local_fallback(files)
+            if strategy == "local" and fallback:
+                raise ValueError(
+                    f"local merge not applicable ({fallback}) — use strategy='auto'"
+                )
+            if strategy != "classic" and fallback is None:
+                # per-bucket Arrow merge: the target never re-enters Spark
+                # (no scan + union shuffle); handles multi-generation
+                # targets directly
+                entries = self._merge_local_entries(files, src)
+                route = {"strategy": "local"}
+            else:
                 target = self.read(
                     buckets=touched, live_only=False, with_meta=True, collapse=False
                 ).withColumn("_bucket", self._bucket_expr())
-                # broadcast path requires: batch small enough to broadcast
-                # AND a single-generation target (a needs_collapse table may
-                # hold several versions per key per bucket — only the
-                # classic collapse dedups those)
-                if (
-                    n_src <= UPSERT_BROADCAST_ROWS
-                    and n_src * self._kv_row_width() <= UPSERT_BROADCAST_BYTES
-                    and not self.properties.get("needs_collapse")
-                ):
-                    merged = self._merge_via_broadcast(target, src)
-                    route["strategy"] = "broadcast"
-                else:
-                    merged = lww_collapse(
-                        target.unionByName(src), self.pk, self.version_cols
-                    )
-                    route["strategy"] = "classic"
+                merged = lww_collapse(
+                    target.unionByName(src), self.pk, self.version_cols
+                )
                 n_parts = max(1, min(len(touched), self._n_write_parts()))
                 entries = self._write_txn(
                     merged, self._txn_name(), n_parts, collapsed=True
                 )
+                route = {"strategy": "classic",
+                         **({"fallback": fallback} if fallback else {})}
             props = dict(extra_properties or {})
             if fence:
                 props[f"fence.{fence[0]}"] = int(fence[1])
@@ -1943,6 +1932,7 @@ class LakeTable:
                     "source_rows": n_src,
                     "touched_buckets": len(touched),
                     **route,
+                    **_null_filled(filled),
                 },
                 consumed, entries, props,
             )
@@ -1959,68 +1949,11 @@ class LakeTable:
         finally:
             src.unpersist()
 
-    def _kv_row_width(self) -> int:
-        """Estimated broadcast bytes/row for this table's (pk, version)
-        relation — the payload the broadcast merge plan ships."""
-        names = set(self.pk) | set(self.version_cols)
-        fields = list(self.schema.fields) + META_FIELDS  # _offset may be a version col
-        return _est_row_width([f for f in fields if f.name in names])
-
-    def _merge_via_broadcast(self, target: DataFrame, src: DataFrame) -> DataFrame:
-        """Upsert merge without the wide union+collapse shuffle.
-
-        The classic plan shuffles EVERY row of the touched buckets (target
-        is bucket-complete: untouched keys ride the shuffle just to be
-        rewritten verbatim). Here only the BATCH side — bounded by the
-        micro-batch caps, never by table size — is broadcast, twice:
-
-        1. target keeps its row unless the batch carries the same key with
-           version >= its own (broadcast src-version left join + filter,
-           no shuffle of target);
-        2. the batch keeps its row unless the TARGET had a strictly larger
-           version — target versions for overlapping keys are found with a
-           second broadcast join against the target scan (output is
-           <= |batch| rows) and joined back to the batch.
-
-        Ties go to the batch: an at-least-once redelivery of the exact
-        stored row must converge, and equal version tuples imply equal
-        rows ((commit, offset) is unique per event).
-
-        The only wide shuffle left in the upsert is _write_txn's
-        (bucket, salt) repartition, which every path pays. src must be
-        in-batch collapsed (one row per key) — merge() guarantees it."""
-        pk, vc = self.pk, self.version_cols
-        sv = src.select(
-            *[F.col(c).alias(f"__k{i}") for i, c in enumerate(pk)],
-            F.struct(*vc).alias("__sv"),
-        )
-        def keyed(side: DataFrame):
-            cond = F.lit(True)
-            for i, c in enumerate(pk):
-                cond = cond & (side[c] == F.col(f"__k{i}"))
-            return cond
-
-        t_j = target.join(F.broadcast(sv), keyed(target), "left_outer")
-        t_keep = t_j.filter(
-            F.col("__sv").isNull() | (F.struct(*[target[c] for c in vc]) > F.col("__sv"))
-        ).drop(*[f"__k{i}" for i in range(len(pk))], "__sv")
-
-        # target versions for keys present in the batch (<= |batch| rows)
-        overlap = target.join(F.broadcast(sv), keyed(target), "inner").select(
-            *[F.col(f"__k{i}") for i in range(len(pk))],
-            F.struct(*[target[c] for c in vc]).alias("__tv"),
-        )
-        s_j = src.join(F.broadcast(overlap), keyed(src), "left_outer")
-        s_keep = s_j.filter(
-            F.col("__tv").isNull() | (F.struct(*[src[c] for c in vc]) >= F.col("__tv"))
-        ).drop(*[f"__k{i}" for i in range(len(pk))], "__tv")
-        return t_keep.unionByName(s_keep)
-
     def _merge_local_entries(self, files: Sequence[dict], src: DataFrame) -> list[dict]:
         """Shuffle-minimal per-bucket upsert merge — the COW twin of
         :meth:`_compact_local_entries`; the caller has checked
-        :meth:`_local_fallback` and the cost floor. Returns the new manifest
-        entries replacing ``files`` (the touched buckets' files).
+        :meth:`_local_fallback`. Returns the new manifest entries replacing
+        ``files`` (the touched buckets' files).
 
         The only shuffle is the batch's own bucket partitioning (any merge
         needs it); the TARGET side never re-enters Spark: each per-bucket
@@ -2028,7 +1961,7 @@ class LakeTable:
         current schema by :func:`_arrow_read_aligned`), appends the batch
         group, winner-selects on the light (pk, version) projection and
         writes the replacement file. Eliminates the target scan + union
-        shuffle / driver-serial broadcast build from the CoW path.
+        shuffle from the CoW path.
 
         Batch-side type fidelity: the group arrives as an Arrow table
         (applyInArrow — NO pandas round-trip), cast to the canonical
@@ -2889,7 +2822,7 @@ class LakeTable:
                 if self._bucket_match(f, set(buckets))
             }
             kdf = keys.drop("_bucket")
-            if n_keys <= UPSERT_BROADCAST_ROWS:
+            if n_keys <= PURGE_BROADCAST_KEYS:
                 kdf = F.broadcast(kdf)
             remain = (
                 self.read(buckets=buckets, live_only=False, with_meta=True)

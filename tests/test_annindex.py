@@ -6,11 +6,12 @@ serving scan must be file-pruned to the probe buckets.
 
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
+import pytest
 
 from cds_spark.lake.table import LakeTable
 from cds_spark.operators.annindex import ann_index_sync, ann_topk
 from cds_spark.operators.similarity import (
-    LSH_BITS, lsh_bucketed_topk, lsh_bucketed_topk_multiprobe,
+    LSH_BITS, _bucket_expr, lsh_bucketed_topk, lsh_bucketed_topk_multiprobe,
 )
 
 EMB_SCHEMA = T.StructType([
@@ -125,3 +126,129 @@ def test_ann_serving_scan_is_file_pruned(spark, tmp_path):
         src.current().select("vec_id", "embedding")).filter(
         F.col("query_id") == q.collect()[0].query_id)
     assert _rows(got) == _rows(want)
+
+
+def _distinct_bucket_embeddings(spark, n=3):
+    """n corpus embeddings whose LSH buckets are pairwise distinct."""
+    rows = (_emb(spark)
+            .withColumn("b", _bucket_expr(F.col("embedding"), 64))
+            .dropDuplicates(["b"]).limit(n).collect())
+    assert len(rows) == n
+    return [(list(r.embedding), int(r.b)) for r in rows]
+
+
+def test_ann_ghost_postings_reconciled_after_crash_between_merges(
+    spark, tmp_path, monkeypatch
+):
+    """Crash AFTER index.merge (fenced at v2) but BEFORE vecs.merge, then
+    the vector moves again before the retry: the crashed tick's posting
+    sits at a bucket neither the old-bucket lookup (vecs still at v1
+    state) nor the new upsert touches. The retry must detect the fence
+    asymmetry and tombstone the interim bucket — serving afterwards
+    equals a batch run on the final corpus."""
+    (e1, b1), (e2, b2), (e3, b3) = _distinct_bucket_embeddings(spark)
+    src = _mk_src(spark, tmp_path)
+    dst = str(tmp_path / "ann")
+    bg = (_emb(spark).filter(F.col("vec_id") < 40)
+          .withColumn("ver", F.lit(1).cast("long")))
+    src.merge(bg.unionByName(spark.createDataFrame(
+        [(-1, e1, 1)], EMB_SCHEMA)), fence=("i", 1))
+    assert not ann_index_sync(spark, src.root, dst, "aj")["skipped"]
+
+    src = LakeTable.load(spark, src.root)
+    src.merge(spark.createDataFrame([(-1, e2, 2)], EMB_SCHEMA),
+              fence=("i", 2))
+    src = LakeTable.load(spark, src.root)
+
+    orig = LakeTable.merge
+    state = {"armed": True}
+
+    def crashing(self, df, fence=None, **kw):
+        if state["armed"] and self.root.rstrip("/").endswith("/vecs"):
+            state["armed"] = False
+            raise RuntimeError("injected crash between index and vecs merge")
+        return orig(self, df, fence=fence, **kw)
+
+    monkeypatch.setattr(LakeTable, "merge", crashing)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ann_index_sync(spark, src.root, dst, "aj")
+    monkeypatch.setattr(LakeTable, "merge", orig)
+
+    # fence asymmetry on disk: index advanced, vecs (the cursor) did not
+    index_t = LakeTable.load(spark, f"{dst}/index")
+    vecs_t = LakeTable.load(spark, f"{dst}/vecs")
+    assert (int(index_t.properties["fence.aj"])
+            > int(vecs_t.properties["fence.aj"]))
+
+    # source advances again before the retry -> the v2 posting is a ghost
+    src.merge(spark.createDataFrame([(-1, e3, 3)], EMB_SCHEMA),
+              fence=("i", 3))
+    src = LakeTable.load(spark, src.root)
+    r = ann_index_sync(spark, src.root, dst, "aj")
+    assert r["reconciled"] and not r["refreshed"]
+
+    index_t = LakeTable.load(spark, f"{dst}/index")
+    mine = [(int(x.bucket),) for x in index_t.current()
+            .filter(F.col("vec_id") == -1).select("bucket").collect()]
+    assert mine == [(b3,)], f"expected only bucket {b3}, got {mine} " \
+                            f"(ghost at {b2}? old at {b1}?)"
+
+    q = (src.current().filter(F.col("vec_id").isin(5, 6, 7))
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("qv")))
+    got = ann_topk(spark, dst, q, k=10)
+    want = (lsh_bucketed_topk(src.current().select("vec_id", "embedding"),
+                              n_queries=8)
+            .filter(F.col("query_id").isin(5, 6, 7)))
+    assert _rows(got) == _rows(want)
+
+
+def test_ann_full_refresh_after_purge(spark, tmp_path):
+    """An unreadable change window (purge mutation) must full-refresh the
+    index instead of wedging, retiring postings of purged vectors."""
+    src = _mk_src(spark, tmp_path)
+    dst = str(tmp_path / "ann")
+    src.merge(_emb(spark).filter(F.col("vec_id") < 40)
+              .withColumn("ver", F.lit(1).cast("long")), fence=("i", 1))
+    ann_index_sync(spark, src.root, dst, "aj")
+
+    src = LakeTable.load(spark, src.root)
+    src.purge_where("vec_id < 5")
+    src = LakeTable.load(spark, src.root)
+    r = ann_index_sync(spark, src.root, dst, "aj")
+    assert r["refreshed"] and not r["skipped"]
+
+    index_t = LakeTable.load(spark, f"{dst}/index")
+    live = {int(x.vec_id) for x in
+            index_t.current().select("vec_id").collect()}
+    assert live == {int(x.vec_id) for x in
+                    src.current().select("vec_id").collect()}
+    q = (src.current().filter(F.col("vec_id").isin(5, 6, 7))
+         .select(F.col("vec_id").alias("query_id"),
+                 F.col("embedding").alias("qv")))
+    got = ann_topk(spark, dst, q, k=10)
+    want = (lsh_bucketed_topk(src.current().select("vec_id", "embedding"),
+                              n_queries=8)
+            .filter(F.col("query_id").isin(5, 6, 7)))
+    assert _rows(got) == _rows(want)
+
+
+def test_ann_bootstrap_never_lookups_empty_vecs(spark, tmp_path,
+                                                monkeypatch):
+    """The bootstrap tick must not route the whole corpus through
+    vecs.lookup (a driver-side key collect against a table known to be
+    empty)."""
+    src = _mk_src(spark, tmp_path)
+    src.merge(_emb(spark).filter(F.col("vec_id") < 40)
+              .withColumn("ver", F.lit(1).cast("long")), fence=("i", 1))
+
+    orig = LakeTable.lookup
+
+    def guarded(self, *a, **kw):
+        if self.root.rstrip("/").endswith("/vecs"):
+            raise AssertionError("bootstrap must not call vecs.lookup")
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(LakeTable, "lookup", guarded)
+    r = ann_index_sync(spark, src.root, str(tmp_path / "ann"), "aj")
+    assert not r["skipped"]

@@ -122,12 +122,7 @@ def test_local_merge_writes_blooms_and_lookup_stays_exact(spark, tmp_path):
     table = LakeTable.create(
         spark, root, REPO_SCHEMA, pk=["repo", "path"],
         version_cols=["commit", "_offset"], n_buckets=2,
-        properties={
-            "merge_mode": "upsert",
-            # force the local merge path on test-sized batches
-            "local_merge_min_bytes": 0,
-            "local_merge_min_rows": 0,
-        },
+        properties={"merge_mode": "upsert"},
     )
     feed = change_feed(spark, 800, n_repos=6, paths_per_repo=10, seed=11)
     events = decode_feed(feed, inject={"commit": "commit"})

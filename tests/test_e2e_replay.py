@@ -218,40 +218,33 @@ def test_pipeline_fused_path_matches_evolving_path(spark, feed, tmp_path):
 
 
 def test_upsert_broadcast_merge_matches_classic(spark, feed, oracle_state, tmp_path):
-    """The broadcast upsert-merge plan (batch-side broadcast, no wide
-    union+collapse shuffle) must converge to the same state as the classic
-    plan across multi-batch replay with duplicate delivery, including the
-    redelivery tie (batch wins on equal versions = idempotent)."""
-    from cds_spark.lake import table as tbl
-
+    """The default upsert merge (which replaced the broadcast upsert plan)
+    must converge to the same state as the classic plan across multi-batch
+    replay with duplicate delivery, including the redelivery tie (batch
+    wins on equal versions = idempotent)."""
     states = {}
-    for label, thresh in (("classic", 0), ("broadcast", 4_000_000)):
-        orig = tbl.UPSERT_BROADCAST_ROWS
-        tbl.UPSERT_BROADCAST_ROWS = thresh
-        try:
-            root = str(tmp_path / f"up_{label}")
-            t = LakeTable.create(
-                spark, root, REPO_SCHEMA, pk=["repo", "path"],
-                version_cols=["commit", "_offset"], n_buckets=16,
+    for label, strategy in (("classic", "classic"), ("auto", "auto")):
+        root = str(tmp_path / f"up_{label}")
+        t = LakeTable.create(
+            spark, root, REPO_SCHEMA, pk=["repo", "path"],
+            version_cols=["commit", "_offset"], n_buckets=16,
+        )
+        per = (N_EVENTS + 2) // 3
+        for i in range(3):
+            batch = feed.filter(
+                (F.col("offset") >= i * per) & (F.col("offset") < (i + 1) * per)
             )
-            per = (N_EVENTS + 2) // 3
-            for i in range(3):
-                batch = feed.filter(
-                    (F.col("offset") >= i * per) & (F.col("offset") < (i + 1) * per)
-                )
-                events = decode_feed(batch, inject={"commit": "commit"})
-                rows, _ = events_to_rows(events, t.schema, t.pk)
-                t.merge(rows, fence=(f"ub-{label}", i), mode="upsert")
-            # replay batch 1 with a fresh fence id (at-least-once redelivery)
-            batch = feed.filter(F.col("offset") < per)
             events = decode_feed(batch, inject={"commit": "commit"})
             rows, _ = events_to_rows(events, t.schema, t.pk)
-            t.merge(rows, fence=(f"ub2-{label}", 0), mode="upsert")
-        finally:
-            tbl.UPSERT_BROADCAST_ROWS = orig
+            t.merge(rows, fence=(f"ub-{label}", i), mode="upsert", strategy=strategy)
+        # replay batch 1 with a fresh fence id (at-least-once redelivery)
+        batch = feed.filter(F.col("offset") < per)
+        events = decode_feed(batch, inject={"commit": "commit"})
+        rows, _ = events_to_rows(events, t.schema, t.pk)
+        t.merge(rows, fence=(f"ub2-{label}", 0), mode="upsert", strategy=strategy)
         t2 = LakeTable.load(spark, root)
         states[label] = sorted(tuple(r) for r in t2.current().collect())
-    assert states["classic"] == states["broadcast"]
+    assert states["classic"] == states["auto"]
     assert len(states["classic"]) == len(oracle_state)
 
 

@@ -240,3 +240,61 @@ def test_pipeline_inloop_dedup(spark, tmp_path):
     recs = [_json.loads(l) for l in open(t.root + "/_lineage/j.jsonl")]
     ticks = [r["dedup"] for r in recs if r.get("dedup")]
     assert ticks and all(not d["skipped"] for d in ticks)
+
+
+def test_dedup_sync_full_refresh_after_purge(spark, tmp_path):
+    """purge_where makes changes() raise across the mutation snapshot;
+    the tick must full-refresh (refreshed=True), converge to the batch
+    result on the final corpus, and retire the purged doc's signature."""
+    src = _mk_src(spark, tmp_path)
+    dst = tmp_path / "dd"
+    src.merge(_rows(spark, [
+        ("a", BASE_A + "alpha", 1), ("b", BASE_A + "bravo", 1),
+        ("c", "an entirely different document about iceberg manifests "
+              "and zone map pruning strategies for bucketed tables", 1),
+    ]), fence=("i", 1))
+    r1 = dedup_sync(spark, src.root, str(dst), "dj")
+    assert not r1["skipped"] and not r1["refreshed"]
+    assert _live(spark, dst) == _batch(src)
+    assert ("a", "b") in _live(spark, dst)
+
+    src = LakeTable.load(spark, src.root)
+    src.purge_where("doc_id = 'b'")
+    src = LakeTable.load(spark, src.root)
+    with pytest.raises(ValueError):
+        src.changes(1, src.version)
+    r2 = dedup_sync(spark, src.root, str(dst), "dj")
+    assert r2["refreshed"] and not r2["skipped"]
+    assert _live(spark, dst) == _batch(src) == {}
+    sigs = LakeTable.load(spark, str(dst / "sigs"))
+    live_ids = {r.doc_id for r in sigs.current().select("doc_id").collect()}
+    assert live_ids == {"a", "c"}, live_ids
+
+    # the loop keeps ticking incrementally after the refresh
+    src.merge(_rows(spark, [("d", BASE_A + "delta", 3)]), fence=("i", 3))
+    src = LakeTable.load(spark, src.root)
+    r3 = dedup_sync(spark, src.root, str(dst), "dj")
+    assert not r3["refreshed"] and not r3["skipped"]
+    assert _live(spark, dst) == _batch(src)
+
+
+def test_dedup_sync_no_shingle_update_retires_signature(spark, tmp_path):
+    """Updating a doc's text to something shorter than SHINGLE_K must
+    tombstone its signature and invalidate its pairs — a batch run on the
+    final corpus never sees the doc, so neither may the increment."""
+    src = _mk_src(spark, tmp_path)
+    dst = tmp_path / "dd"
+    src.merge(_rows(spark, [
+        ("a", BASE_A + "alpha", 1), ("b", BASE_A + "bravo", 1),
+    ]), fence=("i", 1))
+    dedup_sync(spark, src.root, str(dst), "dj")
+    assert ("a", "b") in _live(spark, dst)
+
+    src = LakeTable.load(spark, src.root)
+    src.merge(_rows(spark, [("b", "x", 2)]), fence=("i", 2))
+    src = LakeTable.load(spark, src.root)
+    dedup_sync(spark, src.root, str(dst), "dj")
+    assert _live(spark, dst) == _batch(src) == {}
+    sigs = LakeTable.load(spark, str(dst / "sigs"))
+    live_ids = {r.doc_id for r in sigs.current().select("doc_id").collect()}
+    assert live_ids == {"a"}, live_ids

@@ -87,6 +87,11 @@ def _merge_batch(spark, table, rows, has_extra: bool):
         )
         data = [(k, v, val, d) for (k, v, val, _ex, d) in rows]
     table.merge(spark.createDataFrame(data, schema))
+    # an upsert runs the per-bucket Arrow merge, or classic with the
+    # reason recorded
+    summary = table.history()[-1]["summary"]
+    if summary.get("operation") == "merge":
+        assert summary["strategy"] == "local" or "fallback" in summary, summary
 
 
 def _check(table, state, has_extra: bool, step: str):

@@ -275,28 +275,6 @@ def test_read_empty_bucket_list_is_empty_mid_rebucket(spark, tmp_path):
     assert t2.read(buckets=[]).count() == 0
 
 
-def test_merge_stats_rows_written_counts_rows(spark, tmp_path):
-    t = _kv_table(spark, tmp_path, "rw", merge_mode="append")
-    st = t.merge(spark.range(0, 500).selectExpr(
-        "id AS k", "concat('v', id) AS v", "id AS ver"))
-    assert st.rows_written == 500
-    t2 = _kv_table(spark, tmp_path, "rw2", merge_mode="upsert")
-    st2 = t2.merge(spark.range(0, 300).selectExpr(
-        "id AS k", "concat('v', id) AS v", "id AS ver"))
-    assert st2.rows_written == 300
-
-
-def test_merge_rejects_unknown_mode(spark, tmp_path):
-    t = _kv_table(spark, tmp_path, "badmode")
-    batch = spark.range(0, 5).selectExpr(
-        "id AS k", "concat('v', id) AS v", "id AS ver")
-    with pytest.raises(ValueError, match="unknown merge mode"):
-        t.merge(batch, mode="appned")
-    t2 = _kv_table(spark, tmp_path, "badprop", merge_mode="Append")
-    with pytest.raises(ValueError, match="unknown merge mode"):
-        t2.merge(batch)
-
-
 def test_changes_from_zero_is_full_history(spark, tmp_path):
     t = _kv_table(spark, tmp_path, "ch0", merge_mode="append")
     t.merge(spark.range(0, 50).selectExpr(

@@ -561,29 +561,32 @@ def test_compact_and_merge_record_fallback_reason(spark, tmp_path):
         t2 = LakeTable.load(spark, t.root)
         assert sorted(tuple(r) for r in t2.current().collect()) == want
 
-    # upsert merges: sub-floor batches take the broadcast plan, disabled
-    # floors the local path, non-primitive columns the plan with its type
-    for name, fields, props, row, want in (
-        ("m_floor", [T.StructField("ver", T.LongType())], {},
-         lambda i, v: (f"k{i}", v), {"strategy": "broadcast", "fallback": "sub_floor"}),
+    # upsert merges: the per-bucket Arrow path unless a column has no
+    # Arrow mapping, which takes classic with the type as the reason
+    for name, fields, row, want in (
         ("m_local", [T.StructField("ver", T.LongType())],
-         {"local_merge_min_rows": 0, "local_merge_min_bytes": 0},
          lambda i, v: (f"k{i}", v), {"strategy": "local"}),
         ("m_arr", [T.StructField("ver", T.LongType()),
                    T.StructField("v", T.ArrayType(T.FloatType()))],
-         {"local_merge_min_rows": 0, "local_merge_min_bytes": 0},
          lambda i, v: (f"k{i}", v, [float(v)]),
-         {"strategy": "broadcast", "fallback": "type:array"}),
+         {"strategy": "classic", "fallback": "type:array"}),
     ):
-        t, sc = table(name, fields, props={"merge_mode": "upsert", **props})
+        t, sc = table(name, fields, props={"merge_mode": "upsert"})
         two_gens(t, sc, row)
         summary = t.history()[-1]["summary"]
         assert summary["operation"] == "merge"
         assert {k: summary.get(k) for k in want} == want
         assert ("fallback" in summary) == ("fallback" in want)
-    t.merge(spark.createDataFrame([("k0", 9, [1.0])], sc), strategy="plan")
+    batch = spark.createDataFrame([("k0", 9, [1.0])], sc)
+    with pytest.raises(ValueError, match=re.escape("type:array")):
+        t.merge(batch, strategy="local")
+    with pytest.raises(ValueError, match="unknown merge strategy"):
+        t.merge(batch, strategy="plan")
+    t.merge(batch, strategy="classic")
     summary = t.history()[-1]["summary"]
-    assert summary["strategy"] == "broadcast" and "fallback" not in summary
+    assert summary["strategy"] == "classic" and "fallback" not in summary
+    assert {h["summary"].get("strategy") for h in t.history()
+            if h["summary"].get("operation") == "merge"} == {"classic"}
 
 
 def test_manifest_records_file_rows(spark, tmp_path):
@@ -1388,23 +1391,18 @@ def test_schema_evolution_null_first_occurrence_infers_value_type(spark, tmp_pat
 
 def test_upsert_local_merge_matches_plan_merge(spark, tmp_path):
     """The per-bucket Arrow upsert merge must produce byte-identical state
-    (including tombstones and meta columns) to the plan-based merge across
-    multiple batches, and must actually take the local path when the cost
-    floor is disabled."""
+    (including tombstones and meta columns) to the classic plan merge
+    across multiple batches, and auto must actually take the local path."""
     from cds_spark.operators.decode import decode_feed_rows
-    from cds_spark.sources.feed import REPO_SCHEMA, change_feed
 
     feed = change_feed(spark, 3000, n_repos=10, paths_per_repo=15, seed=55)
     states = {}
-    for label, props, strat in (
-        ("plan", {}, "plan"),
-        ("local", {"local_merge_min_rows": 0, "local_merge_min_bytes": 0}, "auto"),
-    ):
+    for label, strat in (("classic", "classic"), ("local", "auto")):
         root = str(tmp_path / f"um_{label}")
         t = LakeTable.create(
             spark, root, REPO_SCHEMA, pk=["repo", "path"],
             version_cols=["commit", "_offset"], n_buckets=8,
-            properties={"merge_mode": "upsert", **props},
+            properties={"merge_mode": "upsert"},
         )
         for i in range(3):
             batch = feed.filter(
@@ -1419,7 +1417,7 @@ def test_upsert_local_merge_matches_plan_merge(spark, tmp_path):
         if label == "local":
             assert any("-merge" in f["path"] for f in t2.manifest["files"]), \
                 "local merge path was not taken"
-    assert states["plan"] == states["local"]
+    assert states["classic"] == states["local"]
 
 
 TS_SCHEMA = T.StructType([
@@ -1443,30 +1441,148 @@ def _ts_batch(spark, lo, hi, ver_base):
     )
 
 
-def test_local_merge_timestamp_date_matches_plan(spark, tmp_path):
-    """Verdict #4: tables with timestamp/date columns must take the
-    Arrow-local merge path and produce state identical to the plan merge."""
+ARR_SCHEMA = T.StructType([
+    T.StructField("k", T.StringType()),
+    T.StructField("ver", T.LongType()),
+    T.StructField("emb", T.ArrayType(T.FloatType())),
+    T.StructField("_is_delete", T.BooleanType()),
+])
+
+
+def _merge_matrix_case(spark, scenario):
+    """(create kwargs, batches, oracle) for one merge-matrix scenario.
+    Batches are merged in order, each under its own fence; ``oracle`` maps
+    each live key to its expected content, or is None."""
+    if scenario == "repo_feed":
+        from cds_spark.operators.decode import decode_feed_rows
+
+        feed = change_feed(spark, 3000, n_repos=10, paths_per_repo=15, seed=55)
+        feed = feed.persist()
+        batches = [
+            decode_feed_rows(
+                feed.filter((F.col("offset") >= i * 1000) & (F.col("offset") < (i + 1) * 1000)),
+                REPO_SCHEMA, ["repo", "path"], inject={"commit": "commit"})[0]
+            for i in range(3)
+        ]
+        # at-least-once redelivery of batch 0: every stored version ties
+        # or beats it, and a tie must converge to the same row
+        batches.append(batches[0])
+        oracle = {k: v["content"] for k, v in
+                  reference_replay_pandas([r.asDict() for r in feed.collect()]).items()}
+        kw = dict(schema=REPO_SCHEMA, pk=["repo", "path"],
+                  version_cols=["commit", "_offset"], n_buckets=8)
+        return kw, batches, oracle
+    if scenario == "timestamp":
+        # timestamp/date columns and NaN in a double data column; the last
+        # two batches touch half the keys, the last one with stale versions
+        batches = [_ts_batch(spark, lo, hi, 0)
+                   for lo, hi in ((0, 200), (200, 400), (400, 420), (100, 120))]
+        kw = dict(schema=TS_SCHEMA, pk=["k"], version_cols=["ver"], n_buckets=4)
+        return kw, batches, None
+    rows = [
+        [(f"k{i}", 1, [float(i), 0.5], False) for i in range(24)],
+        [(f"k{i}", 2, [float(i), 2.5], i % 5 == 0) for i in range(12, 36)],
+        [(f"k{i}", 0, [9.0], False) for i in range(0, 30, 3)],  # stale
+    ]
+    batches = [spark.createDataFrame(r, ARR_SCHEMA) for r in rows]
+    kw = dict(schema=T.StructType(ARR_SCHEMA.fields[:3]), pk=["k"],
+              version_cols=["ver"], n_buckets=4)
+    return kw, batches, None
+
+
+@pytest.mark.parametrize("scenario", ["repo_feed", "timestamp", "array"])
+def test_merge_strategy_matrix_matches_classic(spark, tmp_path, scenario):
+    """Upsert merge under classic / local / auto over several batches
+    (updates, deletes, stale rows, an at-least-once redelivery): every
+    strategy leaves the same rows, tombstones and meta columns as classic,
+    each commit records the plan it ran, and a column with no Arrow
+    mapping sends auto to classic with the type as the reason while
+    strategy='local' refuses."""
+    kw, batches, oracle = _merge_matrix_case(spark, scenario)
+    arr = scenario == "array"
     states = {}
-    took_local = {}
-    for label, props, strat in (
-        ("plan", {}, "plan"),
-        ("local", {"local_merge_min_rows": 0, "local_merge_min_bytes": 0}, "auto"),
-    ):
-        root = str(tmp_path / f"ts_{label}")
-        t = LakeTable.create(
-            spark, root, TS_SCHEMA, pk=["k"], version_cols=["ver"],
-            n_buckets=4, properties={"merge_mode": "upsert", **props},
-        )
-        for i in range(3):
-            t.merge(_ts_batch(spark, i * 200, (i + 1) * 200, 0), fence=("ts", i),
-                    strategy=strat)
-        t2 = LakeTable.load(spark, root)
-        states[label] = sorted(
-            str(tuple(r)) for r in t2.read(live_only=False, with_meta=True).collect()
-        )
-        took_local[label] = any("-merge" in f["path"] for f in t2.manifest["files"])
-    assert took_local["local"], "timestamp/date table did not take the local merge"
-    assert states["plan"] == states["local"]
+    for strategy in ("classic", "local", "auto"):
+        root = str(tmp_path / strategy)
+        t = LakeTable.create(spark, root, properties={"merge_mode": "upsert"}, **kw)
+        if arr and strategy == "local":
+            with pytest.raises(ValueError, match=re.escape("type:array")):
+                t.merge(batches[0], fence=("m", 0), strategy=strategy)
+            continue
+        for i, batch in enumerate(batches):
+            t.merge(batch, fence=(f"m{i}", 0), strategy=strategy)
+        t = LakeTable.load(spark, root)
+        merges = [h["summary"] for h in t.history()
+                  if h["summary"].get("operation") == "merge"]
+        assert len(merges) == len(batches)
+        if strategy == "classic":
+            want = {"strategy": "classic"}
+        elif arr:
+            want = {"strategy": "classic", "fallback": "type:array"}
+        else:
+            want = {"strategy": "local"}
+        for summary in merges:
+            assert {k: summary.get(k) for k in ("strategy", "fallback")
+                    if k in summary} == want
+        # str(): NaN != NaN would fail a tuple compare of equal rows
+        states[strategy] = sorted(
+            str(tuple(r)) for r in t.read(live_only=False, with_meta=True).collect())
+        if oracle is not None:
+            assert {(r.repo, r.path): r.content for r in t.current().collect()} == oracle
+    assert states["auto"] == states["classic"]
+    assert states.get("local", states["classic"]) == states["classic"]
+
+
+def _kv_table(spark, tmp_path, name, **props):
+    schema = T.StructType([
+        T.StructField("k", T.LongType(), False),
+        T.StructField("v", T.StringType()),
+        T.StructField("ver", T.LongType()),
+    ])
+    return LakeTable.create(
+        spark, str(tmp_path / name), schema, pk=["k"], version_cols=["ver"],
+        n_buckets=4, properties=props)
+
+
+def test_merge_stats_rows_written_counts_rows(spark, tmp_path):
+    t = _kv_table(spark, tmp_path, "rw", merge_mode="append")
+    st = t.merge(spark.range(0, 500).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver"))
+    assert st.rows_written == 500
+    t2 = _kv_table(spark, tmp_path, "rw2", merge_mode="upsert")
+    st2 = t2.merge(spark.range(0, 300).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver"))
+    assert st2.rows_written == 300
+
+
+def test_merge_rejects_unknown_mode(spark, tmp_path):
+    t = _kv_table(spark, tmp_path, "badmode")
+    batch = spark.range(0, 5).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver")
+    with pytest.raises(ValueError, match="unknown merge mode"):
+        t.merge(batch, mode="appned")
+    t2 = _kv_table(spark, tmp_path, "badprop", merge_mode="Append")
+    with pytest.raises(ValueError, match="unknown merge mode"):
+        t2.merge(batch)
+
+
+@pytest.mark.parametrize("mode", ["append", "upsert"])
+def test_merge_records_null_filled_columns(spark, tmp_path, mode):
+    """A batch that lacks a column — here a replay from before an
+    alter_add_columns — is NULL-filled, and the commit summary names the
+    filled columns; a batch carrying every column records none."""
+    t = _kv_table(spark, tmp_path, "nf", merge_mode=mode)
+    old = spark.range(0, 20).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver")
+    t.merge(old, fence=("a", 0))
+    assert "null_filled" not in t.history()[-1]["summary"]
+    t.alter_add_columns([T.StructField("extra", T.LongType())])
+    t.merge(old, fence=("replay", 0))
+    assert t.history()[-1]["summary"]["null_filled"] == ["extra"]
+    t.merge(old.withColumn("extra", F.col("k") * 10), fence=("b", 1))
+    assert "null_filled" not in t.history()[-1]["summary"]
+    t.overwrite(old.drop("v"))
+    assert t.history()[-1]["summary"]["null_filled"] == ["v", "extra"]
+    assert LakeTable.load(spark, t.root).current().filter("v IS NULL").count() == 20
 
 
 def test_local_merge_preserves_nan_in_data_column(spark, tmp_path):
@@ -1475,8 +1591,7 @@ def test_local_merge_preserves_nan_in_data_column(spark, tmp_path):
     root = str(tmp_path / "nan")
     t = LakeTable.create(
         spark, root, TS_SCHEMA, pk=["k"], version_cols=["ver"], n_buckets=2,
-        properties={"merge_mode": "upsert",
-                    "local_merge_min_rows": 0, "local_merge_min_bytes": 0},
+        properties={"merge_mode": "upsert"},
     )
     t.merge(_ts_batch(spark, 0, 100, 0), fence=("n", 0))
     t.merge(_ts_batch(spark, 100, 200, 0), fence=("n", 1))
@@ -1502,8 +1617,7 @@ def test_float_version_col_falls_back_but_stays_correct(spark, tmp_path):
     root = str(tmp_path / "fv")
     t = LakeTable.create(
         spark, root, schema, pk=["k"], version_cols=["fver"], n_buckets=2,
-        properties={"merge_mode": "upsert",
-                    "local_merge_min_rows": 0, "local_merge_min_bytes": 0},
+        properties={"merge_mode": "upsert"},
     )
     mk = lambda lo, hi: spark.range(lo, hi).selectExpr(
         "concat('k-', id % 20) AS k", "concat('v', id) AS v",
@@ -1533,8 +1647,7 @@ def test_local_merge_chunking_counts_batch_bytes(spark, tmp_path):
     root = str(tmp_path / "chunk")
     t = LakeTable.create(
         spark, root, schema, pk=["k"], version_cols=["ver"], n_buckets=1,
-        properties={"merge_mode": "upsert", "local_merge_min_rows": 0,
-                    "local_merge_min_bytes": 0, "target_file_bytes": 64 * 1024},
+        properties={"merge_mode": "upsert", "target_file_bytes": 64 * 1024},
     )
     # seed one tiny file so the bucket exists, then merge a much larger batch
     t.merge(spark.range(0, 10).selectExpr(
