@@ -405,6 +405,36 @@ def _physical(schema: T.StructType) -> T.StructType:
     return T.StructType(list(schema.fields) + META_FIELDS)
 
 
+def local_frame(spark: SparkSession, rows: Sequence[tuple], schema) -> DataFrame:
+    """A DataFrame over driver-side rows, shipped as Arrow so Spark plans
+    it as a ``LocalRelation``: projections over it fold on the driver and
+    a collect runs no Spark job (``createDataFrame(list)`` parallelizes an
+    RDD — one job per action). For driver-sized row sets only.
+
+    ``schema``: a StructType, or the column names, whose types are then
+    inferred from the values. Naive datetimes are read as local time, the
+    rule PySpark's own row conversion applies."""
+    import datetime
+
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    def _norm(v):
+        if isinstance(v, datetime.datetime) and v.tzinfo is None:
+            return v.astimezone(datetime.timezone.utc)
+        return v
+
+    names = schema.names if isinstance(schema, T.StructType) else list(schema)
+    cols = [[_norm(r[i]) for r in rows] for i in range(len(names))]
+    if not isinstance(schema, T.StructType):
+        tbl = pa.Table.from_arrays([pa.array(c) for c in cols], names=names)
+        return spark.createDataFrame(tbl)
+    asch = to_arrow_schema(schema)
+    tbl = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, asch)], schema=asch)
+    return spark.createDataFrame(tbl, schema=schema)
+
+
 @dataclass
 class MergeStats:
     skipped: bool
@@ -875,7 +905,7 @@ class LakeTable:
         columns cast, missing columns NULL-filled — one ``spark.read`` per
         distinct historical schema, so the scan still gets footer pushdown."""
         if not files:
-            return self.spark.createDataFrame([], phys_cur)
+            return local_frame(self.spark, [], phys_cur)
         by_schema: dict[str, list[str]] = {}
         for f in files:
             by_schema.setdefault(str(f["schema_id"]), []).append(
@@ -945,9 +975,16 @@ class LakeTable:
         100 TB a PK fetch must NOT scan the table: the owning bucket of
         each key is computed with the same ``xxhash64 % n_buckets``
         expression the writer uses, the manifest prunes every other
-        bucket's files, and the (tiny) key set is broadcast for the final
-        semi join. Cost is O(|keys| buckets' files), independent of table
+        bucket's files (then zone maps and bloom sidecars prune inside the
+        bucket), and the surviving files are filtered by the key set as
+        literals. Cost is O(|keys| buckets' files), independent of table
         size.
+
+        One bounded collect of ``(bucket, PK cast to the table's types)``
+        per key, deduplicated on the driver, plans everything: a list key
+        set is shipped as a local (Arrow) relation, so that collect runs
+        no Spark job; a DataFrame key set runs its lineage exactly once,
+        in that collect. Everything else is the returned read itself.
 
         ``keys``: list of dicts keyed by the PK columns, list of tuples in
         PK order, or a DataFrame containing the PK columns."""
@@ -960,10 +997,8 @@ class LakeTable:
                 tuple(k[c] for c in pk) if isinstance(k, dict) else tuple(k)
                 for k in keys
             ]
-            if not rows:  # empty key set: empty result, right schema
-                return self.read(buckets=[], live_only=live_only)
             # infer from the given values (CLI hands strings for any type)
-            kdf = self.spark.createDataFrame(rows, list(pk))
+            kdf = local_frame(self.spark, rows, pk)
         # cast to the TABLE's PK types before hashing: a mistyped key
         # would hash to the wrong bucket and silently return nothing
         # try_cast: under ANSI SQL (Spark 4 default) a plain cast THROWS
@@ -971,11 +1006,9 @@ class LakeTable:
         # below turns into a clear error
         kdf = kdf.select(
             *[F.col(f.name).try_cast(f.dataType).alias(f.name) for f in pk_fields]
-        ).distinct()
-        # bounded collect: bucket id + key values per distinct key
-        krows = kdf.select(
-            self._bucket_expr().alias("_b"), *[F.col(c) for c in pk]
-        ).distinct().collect()
+        )
+        # the bounded collect: bucket id + cast key values per key, O(|keys|)
+        krows = kdf.select(self._bucket_expr().alias("_b"), *pk).collect()
         bad = [r for r in krows if any(r[c] is None for c in pk)]
         if bad:
             # an uncastable key became NULL in the PK type — reject with a
@@ -985,8 +1018,16 @@ class LakeTable:
                 f"lookup: {len(bad)} key(s) not castable to the table PK "
                 f"types {[(f.name, f.dataType.simpleString()) for f in pk_fields]}"
             )
-        buckets = sorted({r["_b"] for r in krows})
-        keyvals = [tuple(r[c] for c in pk) for r in krows]
+        # (binary keys collect as unhashable bytearrays)
+        distinct = dict.fromkeys(
+            (r["_b"], tuple(bytes(v) if isinstance(v, bytearray) else v
+                            for v in r[1:]))
+            for r in krows
+        )
+        if not distinct:  # empty key set: empty result, right schema
+            return self.read(buckets=[], live_only=live_only)
+        buckets = sorted({b for b, _ in distinct})
+        keyvals = [kv for _, kv in distinct]
 
         from cds_spark.lake import bloom as _bloom
 
@@ -1036,7 +1077,20 @@ class LakeTable:
             return bloom_hit(entry)
 
         df = self.read(buckets=buckets, live_only=live_only, file_pred=in_range)
-        return df.join(F.broadcast(kdf), on=pk, how="left_semi")
+        # the key set as literals of the PK types: a filter on the pruned
+        # scan (pushed below the LWW collapse, which partitions by the PK),
+        # no join and no second run of the key lineage
+        if len(pk) == 1:
+            key = F.col(pk[0])
+            lits = [F.lit(kv[0]).cast(pk_fields[0].dataType) for kv in keyvals]
+        else:
+            key = F.struct(*[F.col(c) for c in pk])
+            lits = [
+                F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
+                           for v, f in zip(kv, pk_fields)])
+                for kv in keyvals
+            ]
+        return df.filter(key.isin(*lits))
 
     @staticmethod
     def _range_overlaps(st: list, lower, upper, lower_inclusive: bool) -> bool:
@@ -1455,8 +1509,9 @@ class LakeTable:
                     )
             deltas.append(delta.withColumn("_change_version", F.lit(v).cast("long")))
         if not deltas:
-            return self.spark.createDataFrame(
-                [], T.StructType(phys.fields + [T.StructField("_change_version", T.LongType())])
+            return local_frame(
+                self.spark, [],
+                T.StructType(phys.fields + [T.StructField("_change_version", T.LongType())])
             )
         out = deltas[0]
         for d in deltas[1:]:
@@ -1499,27 +1554,9 @@ class LakeTable:
         except Exception:
             return default_n
 
-    def _write_txn(
-        self,
-        df: DataFrame,
-        txn_name: str,
-        n_partitions: int,
-        collapsed: bool = False,
-        n_buckets_hint: int | None = None,
-    ) -> list[dict]:
-        """Write df (must contain ``_bucket``) partitioned by bucket under a
-        fresh txn dir; return manifest file entries.
-
-        The shuffle key is (bucket, salt): hashing bare bucket ids into
-        n_partitions leaves ~1/e of partitions empty and piles 2-3 buckets
-        on others (balls-into-bins), capping parallelism. The salt hashes
-        the ROW (offset + pk), not the pk alone: a single hot key — one row
-        updated in 50% of events, the classic CDC skew case — would
-        otherwise land its entire volume in ONE shuffle partition. Row-salt
-        spreads it across salt_n partitions; the same key then spans
-        several files within its bucket, which merge-on-read LWW (and
-        compact) absorb by design. salt_n targets ~4 shuffle keys per write
-        partition, so file count stays bounded."""
+    def _write_salt(self, df: DataFrame, n_partitions: int,
+                    n_buckets_hint: int | None):
+        """The second shuffle key of :meth:`_write_txn` (see there)."""
         n_partitions = max(1, n_partitions)
         # salt relative to the buckets PRESENT in df (n_buckets_hint): an
         # incremental compact of 3 buckets from a 64-bucket table would
@@ -1562,14 +1599,43 @@ class LakeTable:
                 F.xxhash64(F.lit(1), F.col(OFFSET), *[F.col(c) for c in self.pk]),
                 F.lit(salt_n),
             )
+        return salt
+
+    def _write_txn(
+        self,
+        df: DataFrame,
+        txn_name: str,
+        n_partitions: int,
+        collapsed: bool = False,
+        n_buckets_hint: int | None = None,
+    ) -> list[dict]:
+        """Write df (must contain ``_bucket``) partitioned by bucket under a
+        fresh txn dir; return manifest file entries.
+
+        The shuffle key is (bucket, salt): hashing bare bucket ids into
+        n_partitions leaves ~1/e of partitions empty and piles 2-3 buckets
+        on others (balls-into-bins), capping parallelism. The salt hashes
+        the ROW (offset + pk), not the pk alone: a single hot key — one row
+        updated in 50% of events, the classic CDC skew case — would
+        otherwise land its entire volume in ONE shuffle partition. Row-salt
+        spreads it across salt_n partitions; the same key then spans
+        several files within its bucket, which merge-on-read LWW (and
+        compact) absorb by design. salt_n targets ~4 shuffle keys per write
+        partition, so file count stays bounded."""
         txn_rel = os.path.join(DATA_DIR, txn_name)
         txn_dir = os.path.join(self.root, txn_rel)
-        (
-            df.repartition(n_partitions, F.col("_bucket"), salt)
-            .sortWithinPartitions(*self.pk)
-            .write.partitionBy("_bucket")
-            .parquet(txn_dir, mode="errorifexists")
-        )
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        if all(leaves.apply(i).nodeName() == "LocalRelation"
+               for i in range(leaves.size())):
+            # driver-built rows (a maintenance tick's merge input): ONE
+            # task sorts and writes them, one file per bucket — a shuffle
+            # would only add a stage job to a write of driver-sized data
+            out = df.coalesce(1).sortWithinPartitions("_bucket", *self.pk)
+        else:
+            salt = self._write_salt(df, n_partitions, n_buckets_hint)
+            out = (df.repartition(max(1, n_partitions), F.col("_bucket"), salt)
+                   .sortWithinPartitions(*self.pk))
+        out.write.partitionBy("_bucket").parquet(txn_dir, mode="errorifexists")
         targets = []
         for bdir in sorted(os.listdir(txn_dir)):
             if not bdir.startswith("_bucket="):

@@ -12,15 +12,19 @@ their probe buckets. Same cursor-fenced tail discipline as
   files → the manifest's leading-PK zone maps prune a query to O(probe
   buckets) files (the lake-native IVF/LSH posting-list layout).
 
-Per tick (``ann_index_sync``, D = changed vectors):
+Per tick (``ann_index_sync``, D = changed vectors; the bootstrap and a
+full refresh run one Spark plan over the live corpus instead):
 
-1. delta = ``changes(cursor, v2)`` collapsed per key — O(D).
+1. delta = ``changes(cursor, v2)`` collapsed per key and collected once
+   on the driver: O(D) rows of (id, vector, delete flag, new bucket).
 2. new bucket = the SAME deterministic hyperplane signs the batch
    operators and the SQL oracle use (similarity._bucket_expr), so the
    maintained index serves answers byte-equal to a batch run.
-3. old buckets point-fetched via the vecs table's bucket-pruned lookup —
-   a bucket MOVE (or delete) tombstones the stale (old_bucket, vec_id)
-   index row; an in-place update just LWW-overwrites.
+3. old buckets from one list-key ``vecs.lookup`` (bucket-pruned point
+   reads, O(D) rows) — a bucket MOVE (or delete) tombstones the stale
+   (old_bucket, vec_id) index row; an in-place update just
+   LWW-overwrites. Both merge inputs are built on the driver from these
+   two collects, so no piece of the tick's lineage runs twice.
 4. fenced merges: index first, vecs last — the cursor is the vecs fence.
    A crash between the two merges leaves the index fence AHEAD of the
    cursor; if the source advanced again before the retry, the crashed
@@ -51,7 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cds_spark.functions import cosine
-from cds_spark.lake.table import IS_DELETE, LakeTable, OFFSET
+from cds_spark.lake.table import IS_DELETE, LakeTable, OFFSET, local_frame
 from cds_spark.operators.dedup import lww_collapse
 from cds_spark.operators.similarity import LSH_BITS, TOP_K, _bucket_expr
 
@@ -148,28 +152,55 @@ def ann_index_sync(
             refreshed = True
 
     if from_v == 0 or refreshed:
-        # bootstrap / full refresh: the live corpus is the upsert delta;
-        # a refresh additionally tombstones every indexed key no longer
-        # in the corpus (via vecs, the identity table)
-        delta = (src.current()
-                 .select(F.col(id_col).alias("vec_id"),
-                         F.col(vec_col).alias("v"))
-                 .withColumn(IS_DELETE, F.lit(False)))
-        if refreshed:
-            gone = (vecs.current().select("vec_id")
-                    .join(delta.select("vec_id"), "vec_id", "left_anti")
-                    .withColumn("v", F.lit(None).cast(VEC_T))
-                    .withColumn(IS_DELETE, F.lit(True))
-                    .select("vec_id", "v", IS_DELETE))
-            delta = delta.unionByName(gone)
+        istats, vstats = _full_sync(
+            src, vecs, index, id_col, vec_col, dim, refreshed,
+            from_v == 0 and not index.manifest["files"], job_id, v2)
     else:
         vcols = ["_change_version"] + [
             c for c in list(src.version_cols) + [OFFSET] if c in ch.columns]
-        ch = lww_collapse(ch, [id_col], vcols)
-        delta = ch.select(F.col(id_col).alias("vec_id"),
-                          F.col(vec_col).alias("v"),
-                          F.coalesce(F.col(IS_DELETE), F.lit(False))
-                           .alias(IS_DELETE))
+        delta = lww_collapse(ch, [id_col], vcols).select(
+            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"),
+            F.coalesce(F.col(IS_DELETE), F.lit(False)).alias(IS_DELETE))
+        istate = None
+        if interim is not None:
+            ivcols = ["_change_version"] + [
+                c for c in list(src.version_cols) + [OFFSET]
+                if c in interim.columns]
+            istate = (
+                lww_collapse(interim, [id_col], ivcols)
+                .filter(~F.coalesce(F.col(IS_DELETE), F.lit(False)))
+                .select(F.col(id_col).alias("vec_id"),
+                        _bucket_expr(F.col(vec_col), dim)
+                         .alias("interim_bucket")))
+        istats, vstats = _delta_sync(
+            vecs, index, delta, istate, dim, job_id, v2)
+    index.compact(max_generations=8)
+    vecs.compact(max_generations=8)
+    return {"applied": int(vstats.rows_written),
+            "index_rows_written": int(istats.rows_written),
+            "from": from_v, "to": v2, "skipped": False,
+            "refreshed": refreshed, "reconciled": interim is not None,
+            "duration_s": round(time.time() - t0, 3)}
+
+
+def _full_sync(src, vecs, index, id_col, vec_col, dim, refreshed, clean,
+               job_id, v2):
+    """Bootstrap / full refresh, as one Spark plan over the live corpus
+    (the upsert delta); a refresh additionally tombstones every indexed
+    key no longer in the corpus (via vecs, the identity table). ``clean``:
+    a bootstrap into an empty index. Returns the index and vecs merge
+    stats."""
+    delta = (src.current()
+             .select(F.col(id_col).alias("vec_id"),
+                     F.col(vec_col).alias("v"))
+             .withColumn(IS_DELETE, F.lit(False)))
+    if refreshed:
+        gone = (vecs.current().select("vec_id")
+                .join(delta.select("vec_id"), "vec_id", "left_anti")
+                .withColumn("v", F.lit(None).cast(VEC_T))
+                .withColumn(IS_DELETE, F.lit(True))
+                .select("vec_id", "v", IS_DELETE))
+        delta = delta.unionByName(gone)
     delta = delta.withColumn(
         "new_bucket",
         F.when(~F.col(IS_DELETE), _bucket_expr(F.col("v"), dim))
@@ -180,78 +211,80 @@ def ann_index_sync(
                .select(F.col("new_bucket").alias("bucket"), "vec_id",
                        F.col("v").alias("embedding"), ver.alias("ver"),
                        F.lit(False).alias(IS_DELETE)))
-
-    def _tomb(df: DataFrame) -> DataFrame:
-        return df.select(
-            "bucket", "vec_id", F.lit(None).cast(VEC_T).alias("embedding"),
-            ver.alias("ver"), F.lit(True).alias(IS_DELETE))
-
-    if from_v == 0 and not index.manifest["files"]:
-        # clean bootstrap: no old postings to retire — skip the old-bucket
-        # lookup entirely (it would collect the WHOLE corpus's keys to the
-        # driver to prune buckets of a table known to hold nothing)
-        tombs = None
-    elif from_v == 0 or refreshed:
+    if clean:
+        # no old postings to retire — and no old-bucket lookup (it would
+        # collect the WHOLE corpus's keys to the driver to prune buckets
+        # of a table known to hold nothing)
+        rows = upserts
+    else:
         # rebuild over a non-empty index (full refresh, or a bootstrap
         # retry after a crash mid-first-tick): retire EVERY live posting
         # the rebuild does not reassert — one O(index) anti-join that
         # also clears any ghost postings, since no incremental window
         # read is available to reconcile them exactly
-        tombs = _tomb(
+        rows = upserts.unionByName(
             index.current().select("bucket", "vec_id")
             .join(upserts.select("bucket", "vec_id"),
-                  ["bucket", "vec_id"], "left_anti"))
-    else:
-        # old bucket of every changed key: bucket-pruned point fetch, O(D)
-        old = (vecs.lookup(delta.select("vec_id"))
-               .select("vec_id", F.col("bucket").alias("old_bucket")))
-        moved = delta.join(old, "vec_id")   # inner: keys the index knows
-        # a delete, or an update whose vector crossed a hyperplane, leaves
-        # a stale posting at the OLD bucket — tombstone exactly those
-        tombs = _tomb(
-            moved.filter(F.col(IS_DELETE)
-                         | (F.col("old_bucket") != F.col("new_bucket")))
-            .select(F.col("old_bucket").alias("bucket"), "vec_id"))
-        if interim is not None:
-            # ghost reconciliation: the crashed tick wrote postings at the
-            # buckets of the vi-state of these keys; recompute that state
-            # (O(delta), same changes read) and tombstone any interim
-            # bucket that differs from the bucket being asserted now.
-            # Every interim key is in delta ((from_v, vi] ⊆ (from_v, v2]),
-            # and interim_bucket != new_bucket keeps ghost tombstones
-            # PK-disjoint from the upserts (no same-version LWW tie).
-            ivcols = ["_change_version"] + [
-                c for c in list(src.version_cols) + [OFFSET]
-                if c in interim.columns]
-            istate = (
-                lww_collapse(interim, [id_col], ivcols)
-                .filter(~F.coalesce(F.col(IS_DELETE), F.lit(False)))
-                .select(F.col(id_col).alias("vec_id"),
-                        _bucket_expr(F.col(vec_col), dim)
-                         .alias("interim_bucket")))
-            ghost = (delta.join(istate, "vec_id")
-                     .filter(F.col("new_bucket").isNull()
-                             | (F.col("interim_bucket")
-                                != F.col("new_bucket")))
-                     .select(F.col("interim_bucket").alias("bucket"),
-                             "vec_id"))
-            tombs = tombs.unionByName(_tomb(ghost))
-
-    rows = upserts if tombs is None else upserts.unionByName(tombs)
+                  ["bucket", "vec_id"], "left_anti")
+            .select("bucket", "vec_id",
+                    F.lit(None).cast(VEC_T).alias("embedding"),
+                    ver.alias("ver"), F.lit(True).alias(IS_DELETE)))
     istats = index.merge(rows, fence=(job_id, v2))
-
-    vec_rows = (delta.select(
+    vstats = vecs.merge(delta.select(
         "vec_id", F.col("new_bucket").alias("bucket"), ver.alias("ver"),
-        F.col(IS_DELETE)))
-    vstats = vecs.merge(vec_rows, fence=(job_id, v2))   # cursor advance
-    index.compact(max_generations=8)
-    vecs.compact(max_generations=8)
+        F.col(IS_DELETE)), fence=(job_id, v2))   # cursor advance
     delta.unpersist()
-    return {"applied": int(vstats.rows_written),
-            "index_rows_written": int(istats.rows_written),
-            "from": from_v, "to": v2, "skipped": False,
-            "refreshed": refreshed, "reconciled": interim is not None,
-            "duration_s": round(time.time() - t0, 3)}
+    return istats, vstats
+
+
+def _delta_sync(vecs, index, delta, istate, dim, job_id, v2):
+    """The incremental tick over ``delta`` (one row per changed key:
+    vec_id, v, _is_delete). The delta is collected once — O(D) rows of
+    (id, vector, delete flag, new bucket) — the old buckets come from one
+    list-key ``vecs.lookup`` (O(D) rows), and both merge inputs are built
+    on the driver from those two collects. ``istate`` (vec_id,
+    interim_bucket): the crashed tick's live state, for ghost
+    reconciliation; collected too, O(D). Returns the index and vecs merge
+    stats."""
+    spark = vecs.spark
+    rows = delta.select(
+        "vec_id", "v", IS_DELETE,
+        F.when(~F.col(IS_DELETE), _bucket_expr(F.col("v"), dim))
+         .alias("new_bucket")).collect()
+    # old bucket of every changed key the index knows: bucket-pruned
+    # point fetch, O(D)
+    old = {r["vec_id"]: r["bucket"] for r in
+           vecs.lookup([(r["vec_id"],) for r in rows])
+           .select("vec_id", "bucket").collect()} if rows else {}
+    postings = [(r["new_bucket"], r["vec_id"], r["v"], v2, False)
+                for r in rows if not r[IS_DELETE]]
+    # a delete, or an update whose vector crossed a hyperplane, leaves a
+    # stale posting at the OLD bucket — tombstone exactly those
+    postings += [(old[r["vec_id"]], r["vec_id"], None, v2, True)
+                 for r in rows if r["vec_id"] in old
+                 and (r[IS_DELETE] or old[r["vec_id"]] != r["new_bucket"])]
+    if istate is not None:
+        # ghost reconciliation: the crashed tick wrote postings at the
+        # buckets of the vi-state of these keys; recompute that state
+        # (O(delta), same changes read) and tombstone any interim bucket
+        # that differs from the bucket being asserted now. Every interim
+        # key is in delta ((from_v, vi] ⊆ (from_v, v2]), and
+        # interim_bucket != new_bucket keeps ghost tombstones PK-disjoint
+        # from the upserts (no same-version LWW tie).
+        new = {r["vec_id"]: r["new_bucket"] for r in rows}
+        postings += [(r["interim_bucket"], r["vec_id"], None, v2, True)
+                     for r in istate.collect() if r["vec_id"] in new
+                     and new[r["vec_id"]] != r["interim_bucket"]]
+    meta = [T.StructField(IS_DELETE, T.BooleanType())]
+    istats = index.merge(
+        local_frame(spark, postings, T.StructType(index.schema.fields + meta)),
+        fence=(job_id, v2))
+    vstats = vecs.merge(   # cursor advance
+        local_frame(spark, [(r["vec_id"], r["new_bucket"], v2, r[IS_DELETE])
+                            for r in rows],
+                    T.StructType(vecs.schema.fields + meta)),
+        fence=(job_id, v2))
+    return istats, vstats
 
 
 def ann_topk(

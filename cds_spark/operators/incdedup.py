@@ -15,23 +15,30 @@ lake tables under one root —
   at, so :func:`live_pairs` can invalidate pairs whose endpoint has since
   changed or vanished WITHOUT any re-verification scan.
 
-Per increment (``dedup_sync``):
+Per increment (``dedup_sync``): the bootstrap and a full refresh run one
+Spark plan over the whole corpus; an incremental tick runs
 
 1. delta = ``src.changes(cursor, v2)`` collapsed to the latest row per
-   key — O(changed docs), never O(corpus).
-2. MinHash signatures for the upserted docs only (same hash family,
-   band count and threshold as the batch operators, so incremental
-   discovery equals the batch result by construction).
-3. Candidates = delta band keys equi-joined against the post-state
-   signature view (current sigs minus delta keys, plus the new sigs).
-   The delta side is broadcast; the corpus side is a single scan of the
-   sigs table with NO shuffle — at 10^10 docs the sigs projection is
+   key and materialised ONCE on the driver — O(changed docs), never
+   O(corpus). The same pass computes each upserted doc's hashed shingle
+   set and, from it, its MinHash signature and band keys: the row-level
+   twins of the batch operators' expressions (same shingles, hash
+   family, band count and threshold), so incremental discovery equals
+   the batch result by construction.
+2. Candidates = delta band keys matched against the post-state
+   signature view (current sigs minus delta keys, plus the new sigs):
+   one scan of the sigs table, filtered by the delta's band keys as
+   literals, collects the partner signatures — O(candidates) — and the
+   band match runs on the driver. At 10^10 docs the sigs projection is
    ~200 B/doc, a dimension-table scan, which prices this as a periodic
    maintenance tick (minutes cadence), not a per-micro-batch stage.
-4. Exact-Jaccard verification fetches ONLY the candidate partners'
-   texts through ``src.lookup`` — bucket-pruned point reads, O(candidates).
-5. ``pairs.merge(..., fence=(job_id, v2))`` then
-   ``sigs.merge(..., fence=(job_id, v2))``: the cursor is the sigs
+3. Exact-Jaccard verification fetches ONLY the candidate partners'
+   texts, through one list-key ``src.lookup`` (bucket-pruned point
+   reads, O(candidates)), and scores pairs with the batch operator's
+   Jaccard expression.
+4. ``pairs.merge(..., fence=(job_id, v2))`` then
+   ``sigs.merge(..., fence=(job_id, v2))``, both from inputs built on
+   the driver out of the three collects above: the cursor is the sigs
    table's fence property, advanced atomically with the signature
    upsert. A crash at ANY point replays idempotently: the pairs merge
    is fence-skipped, the candidate set recomputes identically because
@@ -52,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cds_spark.lake.table import IS_DELETE, LakeTable, OFFSET
+from cds_spark.lake.table import IS_DELETE, LakeTable, OFFSET, local_frame
 from cds_spark.operators.dedup import lww_collapse
 from cds_spark.operators.textdedup import (
     JACCARD_THRESHOLD,
@@ -60,7 +67,9 @@ from cds_spark.operators.textdedup import (
     N_HASHES,
     _band_key,
     jaccard_expr,
+    minhash_exprs,
     minhash_signatures,
+    shingle_set_expr,
     shingle_sets,
 )
 
@@ -96,21 +105,26 @@ def _pair_schema(id_type: T.DataType) -> T.StructType:
     ])
 
 
-def _sig_rows(docs: DataFrame) -> DataFrame:
-    """(doc_id, sig_md5, bands): the same MinHash family / banding as the
-    batch operators — incremental and batch discovery MUST agree key-for-key
-    (the equivalence the tests pin)."""
-    sig = minhash_signatures(docs)
+def _sig_cols() -> list:
+    """(sig_md5, bands) over the mh_* columns: the same MinHash family /
+    banding as the batch operators — incremental and batch discovery MUST
+    agree key-for-key (the equivalence the tests pin)."""
     bands = F.array(*[_band_key(j) for j in range(N_BANDS)])
     digest = F.md5(F.concat_ws(
         ",", *[F.col(f"mh_{j}").cast("string") for j in range(N_HASHES)]))
-    return sig.select("doc_id", digest.alias("sig_md5"), bands.alias("bands"))
+    return [digest.alias("sig_md5"), bands.alias("bands")]
 
 
-# exact-Jaccard verify inputs: textdedup.shingle_sets / jaccard_expr — the
-# SAME functions the batch operator uses, so incremental==batch holds by
-# construction (no parallel-maintained hashing/scoring copies here)
-_ssets = shingle_sets
+def _verify_schema(id_type: T.DataType) -> T.StructType:
+    """A candidate pair with both hashed shingle sets and both digests."""
+    return T.StructType([
+        T.StructField("doc_a", id_type, False),
+        T.StructField("doc_b", id_type, False),
+        T.StructField("sa", T.ArrayType(T.LongType()), True),
+        T.StructField("sb", T.ArrayType(T.LongType()), True),
+        T.StructField("sig_a", T.StringType(), True),
+        T.StructField("sig_b", T.StringType(), True),
+    ])
 
 
 def _validated_pairs(sigs: LakeTable, pairs: LakeTable) -> DataFrame:
@@ -234,36 +248,58 @@ def dedup_sync(
             # Without this, every later tick re-raises forever and the
             # in-loop pipeline call kills the ingest stream.
             refreshed = True
-    if from_v == 0 or refreshed:
-        # bootstrap / full refresh: the live corpus is the upsert delta;
-        # a refresh additionally tombstones every signed doc no longer in
-        # the corpus (a bootstrap has no prior signatures to retire)
-        live = (src.current()
-                .select(identity.alias("doc_id"), *key_sel,
-                        F.col(text_col).alias("text"))
-                .withColumn(IS_DELETE, F.lit(False)))
-        if refreshed:
-            gone = (sigs.current().select("doc_id", *kcols)
-                    .join(live.select("doc_id"), "doc_id", "left_anti")
-                    .withColumn("text", F.lit(None).cast("string"))
-                    .withColumn(IS_DELETE, F.lit(True))
-                    .select("doc_id", *kcols, "text", IS_DELETE))
-            delta = live.unionByName(gone)
-        else:
-            delta = live
+    if ch is None or refreshed:
+        pstats, sstats = _full_sync(
+            src, sigs, pairs, identity, key_sel, kcols, text_col, refreshed,
+            job_id, v2)
     else:
         vcols = ["_change_version"] + [
             c for c in list(src.version_cols) + [OFFSET] if c in ch.columns]
-        ch = lww_collapse(ch, pk, vcols)
-        delta = ch.select(identity.alias("doc_id"), *key_sel,
-                          F.col(text_col).alias("text"),
-                          F.coalesce(F.col(IS_DELETE), F.lit(False))
-                           .alias(IS_DELETE))
+        delta = lww_collapse(ch, pk, vcols).select(
+            identity.alias("doc_id"), *key_sel,
+            F.coalesce(F.col(IS_DELETE), F.lit(False)).alias(IS_DELETE),
+            F.col(text_col).alias("text"))
+        pstats, sstats = _delta_sync(
+            src, sigs, pairs, delta, identity, id_type, kcols, text_col,
+            job_id, v2)
+    # bound read amplification: rewrite only buckets that accumulated
+    # generations (O(dirty buckets), a no-op manifest scan otherwise)
+    sigs.compact(max_generations=8)
+    pairs.compact(max_generations=8)
+    return {
+        "applied": int(sstats.rows_written), "pairs_written": int(pstats.rows_written),
+        "from": from_v, "to": v2, "skipped": False, "refreshed": refreshed,
+        "duration_s": round(time.time() - t0, 3),
+    }
+
+
+def _full_sync(src, sigs, pairs, identity, key_sel, kcols, text_col,
+               refreshed, job_id, v2):
+    """Bootstrap / full refresh: the live corpus is the upsert delta, run
+    as one Spark plan (shuffle joins, no driver-side state); a refresh
+    additionally tombstones every signed doc no longer in the corpus (a
+    bootstrap has no prior signatures to retire). Returns the pairs and
+    sigs merge stats."""
+    pk = list(src.pk)
+    live = (src.current()
+            .select(identity.alias("doc_id"), *key_sel,
+                    F.col(text_col).alias("text"))
+            .withColumn(IS_DELETE, F.lit(False)))
+    if refreshed:
+        gone = (sigs.current().select("doc_id", *kcols)
+                .join(live.select("doc_id"), "doc_id", "left_anti")
+                .withColumn("text", F.lit(None).cast("string"))
+                .withColumn(IS_DELETE, F.lit(True))
+                .select("doc_id", *kcols, "text", IS_DELETE))
+        delta = live.unionByName(gone)
+    else:
+        delta = live
 
     delta = delta.persist()
     ups = delta.filter(~F.col(IS_DELETE)).select(
         "doc_id", *kcols, "text").persist()
-    new_sigs = (_sig_rows(ups.select("doc_id", "text"))
+    new_sigs = (minhash_signatures(ups.select("doc_id", "text"))
+                .select("doc_id", *_sig_cols())
                 .join(ups.select("doc_id", *kcols), "doc_id")
                 .select("doc_id", *kcols, "sig_md5", "bands")
                 .persist())
@@ -280,24 +316,20 @@ def dedup_sync(
     # merge below, so candidate generation matches a batch run on v2 state.
     # Persisted: four downstream consumers (band explode, partner-key
     # fetch, both digest joins) would otherwise each re-run the sigs scan
-    # + LWW collapse + anti-join — the dominant per-tick corpus term.
+    # + LWW collapse + anti-join.
     delta_keys = delta.select("doc_id").distinct()
     post = (sigs.current().select("doc_id", *kcols, "sig_md5", "bands")
             .join(delta_keys, "doc_id", "left_anti")
             .unionByName(new_sigs)
             .persist())
 
+    # the "delta" IS the corpus: no broadcast (it would ship the whole
+    # band set to every executor) — the planner shuffle-joins instead
     nb_ = new_sigs.select(
         "doc_id", F.posexplode("bands").alias("band_id", "band_key"))
     pb = post.select(
         F.col("doc_id").alias("p_id"),
         F.posexplode("bands").alias("band_id", "band_key"))
-    # incremental tick: the delta side is small — broadcast it so the
-    # corpus side is a single scan with no shuffle. Bootstrap / refresh:
-    # the "delta" IS the corpus — a broadcast would ship the whole band
-    # set to every executor; let the planner shuffle-join instead.
-    if not (from_v == 0 or refreshed):
-        nb_ = F.broadcast(nb_)
     cand = (
         nb_
         .join(pb, ["band_id", "band_key"])
@@ -319,7 +351,7 @@ def dedup_sync(
     fetched = (src.lookup(need_keys)
                .select(identity.alias("doc_id"),
                        F.col(text_col).alias("text")))
-    ss = _ssets(ups.select("doc_id", "text").unionByName(fetched))
+    ss = shingle_sets(ups.select("doc_id", "text").unionByName(fetched))
     new_pairs = (
         cand
         .join(ss.select(F.col("doc_id").alias("doc_a"),
@@ -355,15 +387,99 @@ def dedup_sync(
     )
     # the cursor advance: fence.{job_id}=v2 commits atomically with this merge
     sstats = sigs.merge(sig_rows, fence=(job_id, v2))
-    # bound read amplification: rewrite only buckets that accumulated
-    # generations (O(dirty buckets), a no-op manifest scan otherwise)
-    sigs.compact(max_generations=8)
-    pairs.compact(max_generations=8)
-
     for df in (cand, post, new_sigs, ups, delta):
         df.unpersist()
-    return {
-        "applied": int(sstats.rows_written), "pairs_written": int(pstats.rows_written),
-        "from": from_v, "to": v2, "skipped": False, "refreshed": refreshed,
-        "duration_s": round(time.time() - t0, 3),
-    }
+    return pstats, sstats
+
+
+def _delta_sync(src, sigs, pairs, delta, identity, id_type, kcols, text_col,
+                job_id, v2):
+    """The incremental tick over ``delta`` (one row per changed doc:
+    doc_id, k_*, _is_delete, text). Every piece of its lineage runs once:
+    the delta, the partner signatures and the partner texts are each
+    collected once, and both merge inputs are built on the driver from
+    those collects. Returns the pairs and sigs merge stats."""
+    spark = src.spark
+    # (1) the delta, with each doc's hashed shingle set and signature from
+    # one shingling pass: O(changed docs) rows, shingle sets capped at
+    # PREFIX shingles each
+    rows = (delta
+            .select("doc_id", *kcols, IS_DELETE,
+                    shingle_set_expr(F.col("text")).alias("sset"))
+            .select("*", *minhash_exprs(F.col("sset")))
+            .select("doc_id", *kcols, IS_DELETE, "sset", *_sig_cols())
+            .collect())
+    # a delete, or an upsert whose new text yields NO shingles (shorter
+    # than the shingle width, or NULL), TOMBSTONES the doc's signature:
+    # leaving a stale digest live would keep its old pairs valid forever
+    # and diverge from a batch run on the v2 corpus (which drops the doc)
+    signed = {r["doc_id"]: r for r in rows
+              if not r[IS_DELETE] and r["sset"] is not None}
+
+    # (2) partner signatures: live sigs outside the delta sharing a band
+    # key with a new signature — O(candidates) rows
+    partners = []
+    if signed:
+        hit = None
+        for j in range(N_BANDS):
+            keys = sorted({r["bands"][j] for r in signed.values()})
+            cond = F.col("bands")[j].isin(*keys)
+            hit = cond if hit is None else hit | cond
+        partners = (sigs.current()
+                    .filter(~F.col("doc_id").isin(*[r["doc_id"] for r in rows])
+                            & hit)
+                    .select("doc_id", *kcols, "sig_md5", "bands")
+                    .collect())
+
+    # candidates against the post-state signature view (current sigs
+    # minus every delta key, plus the new signatures) — exactly what the
+    # sigs table holds after the merge below, so candidate generation
+    # matches a batch run on v2 state
+    post = {r["doc_id"]: r for r in partners}
+    post.update(signed)
+    by_band: dict = {}
+    for d, r in post.items():
+        for j, key in enumerate(r["bands"]):
+            by_band.setdefault((j, key), []).append(d)
+    cand = set()
+    for d, r in signed.items():
+        for j, key in enumerate(r["bands"]):
+            for p in by_band[(j, key)]:
+                if p != d:
+                    cand.add((d, p) if d < p else (p, d))
+
+    # (3) exact verify on current texts: delta docs carry their shingle
+    # sets; partners are point-fetched bucket-pruned (their source PK
+    # tuples ride in the signature rows, so no key parsing)
+    ssets = {d: r["sset"] for d, r in signed.items()}
+    need = sorted({d for pair in cand for d in pair} - ssets.keys())
+    if need:
+        fetched = (src.lookup([tuple(post[d][k] for k in kcols) for d in need])
+                   .select(identity.alias("doc_id"),
+                           shingle_set_expr(F.col(text_col)).alias("sset"))
+                   .collect())
+        ssets.update((r["doc_id"], r["sset"]) for r in fetched
+                     if r["sset"] is not None)
+    verify = [(a, b, ssets[a], ssets[b], post[a]["sig_md5"], post[b]["sig_md5"])
+              for a, b in sorted(cand) if a in ssets and b in ssets]
+    new_pairs = (
+        local_frame(spark, verify, _verify_schema(id_type))
+        .withColumn("jaccard", jaccard_expr("sa", "sb"))
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", "jaccard", "sig_a", "sig_b",
+                F.lit(v2).cast("long").alias("ver"))
+    )
+    pstats = pairs.merge(new_pairs, fence=(job_id, v2))
+
+    sig_rows = [
+        (r["doc_id"], *[r[k] for k in kcols],
+         *((r["sig_md5"], r["bands"], v2, False) if r["doc_id"] in signed
+           else (None, None, v2, True)))
+        for r in rows
+    ]
+    sig_schema = T.StructType(
+        sigs.schema.fields + [T.StructField(IS_DELETE, T.BooleanType())])
+    # the cursor advance: fence.{job_id}=v2 commits atomically with this merge
+    sstats = sigs.merge(local_frame(spark, sig_rows, sig_schema),
+                        fence=(job_id, v2))
+    return pstats, sstats

@@ -78,15 +78,20 @@ def _spread(df: DataFrame, factor: int = 1, force: bool = False) -> DataFrame:
     up to cluster parallelism when the input has fewer partitions; no-op
     on an already-parallel scan (the 100TB case: thousands of files).
 
-    ``force`` skips the partition-count guard: for mid-plan spots (after a
-    join/agg) the pre-AQE partition count lies — AQE will coalesce those
-    small shuffles to ~1 task at runtime, so an explicit user repartition
-    (which AQE respects and never coalesces) is the only reliable lever."""
+    The decision is read from the plan, never by running it. A plan with
+    an exchange (a shuffle or a broadcast) is repartitioned unprobed, as
+    under ``force``: asking it for its partition count runs every upstream
+    shuffle stage under AQE, and the pre-AQE count lies anyway — AQE
+    coalesces small shuffles to ~1 task at runtime, so an explicit user
+    repartition (which AQE respects and never coalesces) is the only
+    reliable lever. Exchange-free plans (file scans, cached scans) report
+    their split count without a job."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * factor
     if not force:
         try:
-            if df.rdd.getNumPartitions() >= target:
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            if "Exchange" not in plan and df.rdd.getNumPartitions() >= target:
                 return df
         except Exception:
             pass
@@ -108,20 +113,56 @@ def _stable_hash_sql(expr: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, shingle) — distinct k-char shingles of lower(prefix(text)).
-    JVM-only: sequence+transform+array_distinct+explode."""
-    t = F.lower(F.substring(F.col(text_col), 1, PREFIX))
-    arr = F.array_distinct(
+def _shingle_array(text: F.Column) -> F.Column:
+    """Distinct k-char shingles of lower(prefix(text)), as one array: the
+    single shingling expression of the batch operators and the incremental
+    tick (JVM-only: sequence+transform+array_distinct)."""
+    t = F.lower(F.substring(text, 1, PREFIX))
+    return F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.length(t) - (SHINGLE_K - 1), F.lit(0))),
             lambda i: t.substr(i, F.lit(SHINGLE_K)),
         )
     )
+
+
+def _shingle_hash(s: F.Column) -> F.Column:
+    return F.pmod(_stable_hash_expr(s), F.lit(MINHASH_P))
+
+
+def _minhash(j: int, h: F.Column) -> F.Column:
+    """The j-th universal hash of a shingle hash."""
+    return F.pmod(F.lit(MINHASH_A[j]) * h + F.lit(MINHASH_B[j]), F.lit(MINHASH_P))
+
+
+def shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+    """(doc_id, shingle) — distinct k-char shingles of lower(prefix(text))."""
     return (
         _spread(docs.filter(F.length(text_col) >= SHINGLE_K))
-        .select(F.col(id_col).alias("doc_id"), F.explode(arr).alias("s"))
+        .select(F.col(id_col).alias("doc_id"),
+                F.explode(_shingle_array(F.col(text_col))).alias("s"))
     )
+
+
+def shingle_set_expr(text: F.Column) -> F.Column:
+    """One row's hashed shingle set: the row-level twin of
+    :func:`shingle_sets` (same shingles, same hash, same set), for inputs
+    small enough to need no shuffle. NULL for a text shorter than
+    SHINGLE_K, which :func:`shingles` drops."""
+    return F.when(
+        F.length(text) >= SHINGLE_K,
+        F.array_distinct(F.transform(_shingle_array(text), _shingle_hash)),
+    )
+
+
+def minhash_exprs(sset: F.Column) -> list[F.Column]:
+    """mh_0..mh_{N_HASHES-1} of one row's hashed shingle set: the row-level
+    twin of :func:`minhash_signatures` (the same minima over the same
+    hashes)."""
+    return [
+        F.array_min(F.transform(sset, lambda h: _minhash(j, h))).alias(f"mh_{j}")
+        for j in range(N_HASHES)
+    ]
 
 
 _SHINGLES_SQL = f"""
@@ -180,13 +221,8 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, mh_0..mh_{N_HASHES-1}): universal-hash minima over shingle
     hashes. Single groupBy with N_HASHES min() aggs — map-side combine makes
     the shuffle O(docs), not O(shingles)."""
-    sh = shingles(docs)
-    h = F.pmod(_stable_hash_expr(F.col("s")), F.lit(MINHASH_P)).alias("h")
-    hashed = sh.select("doc_id", h)
-    aggs = [
-        F.min(F.pmod(F.lit(MINHASH_A[j]) * F.col("h") + F.lit(MINHASH_B[j]), F.lit(MINHASH_P))).alias(f"mh_{j}")
-        for j in range(N_HASHES)
-    ]
+    hashed = shingles(docs).select("doc_id", _shingle_hash(F.col("s")).alias("h"))
+    aggs = [F.min(_minhash(j, F.col("h"))).alias(f"mh_{j}") for j in range(N_HASHES)]
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
@@ -254,7 +290,7 @@ def shingle_sets(docs: DataFrame) -> DataFrame:
     cross-engine because the SQL oracle hashes identically."""
     return (
         shingles(docs)
-        .select("doc_id", F.pmod(_stable_hash_expr(F.col("s")), F.lit(MINHASH_P)).alias("h"))
+        .select("doc_id", _shingle_hash(F.col("s")).alias("h"))
         .groupBy("doc_id")
         .agg(F.collect_set("h").alias("sset"))
     )

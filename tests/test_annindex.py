@@ -4,6 +4,8 @@ answers equal to a batch lsh_bucketed_topk over the final corpus, and the
 serving scan must be file-pruned to the probe buckets.
 """
 
+import os
+
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 import pytest
@@ -252,3 +254,90 @@ def test_ann_bootstrap_never_lookups_empty_vecs(spark, tmp_path,
     monkeypatch.setattr(LakeTable, "lookup", guarded)
     r = ann_index_sync(spark, src.root, str(tmp_path / "ann"), "aj")
     assert not r["skipped"]
+
+
+def test_ann_index_sync_half_created_dst_recovers(spark, tmp_path):
+    """Same crash shape for the ANN index: vecs exists, index missing."""
+    from cds_spark.operators.annindex import (_vecs_schema, ann_index_sync,
+                                              ann_topk)
+
+    schema = T.StructType([
+        T.StructField("vec_id", T.LongType(), False),
+        T.StructField("embedding", T.ArrayType(T.FloatType())),
+        T.StructField("ver", T.LongType()),
+    ])
+    src_root = str(tmp_path / "vecsrc")
+    t = LakeTable.create(spark, src_root, schema, pk=["vec_id"],
+                         version_cols=["ver"], n_buckets=4)
+    vecs = spark.range(0, 50).selectExpr(
+        "id AS vec_id",
+        "transform(sequence(0, 7), j -> cast(sin(id * 0.7 + j) AS float))"
+        " AS embedding",
+        "id AS ver",
+    )
+    t.merge(vecs)
+
+    half = str(tmp_path / "annhalf")
+    LakeTable.create(
+        spark, os.path.join(half, "vecs"), _vecs_schema(T.LongType()),
+        pk=["vec_id"], version_cols=["ver"], n_buckets=4,
+        properties={"merge_mode": "append"})
+    res = ann_index_sync(spark, src_root, half, "j1", dim=8)
+    assert not res["skipped"] and res["applied"] > 0
+
+    clean = str(tmp_path / "annclean")
+    ann_index_sync(spark, src_root, clean, "j1", dim=8)
+    q = spark.range(3, 6).selectExpr(
+        "id AS query_id",
+        "transform(sequence(0, 7), j -> cast(sin(id * 0.7 + j) AS float))"
+        " AS qv")
+
+    def topk(root):
+        return sorted(
+            (r.query_id, r.neighbor_id, r.cos_sim)
+            for r in ann_topk(spark, root, q, k=3, dim=8).collect())
+
+    assert topk(half) == topk(clean) and topk(half)
+
+
+#: Spark jobs of a 5 % change tick: the delta read (the change read's
+#: broadcast anti-join, the LWW collapse shuffle, the collect), the vecs
+#: lookup (collapse shuffle, collect), and one write per merge
+ANN_TICK_JOBS = 7
+
+
+def test_ann_tick_job_budget(spark, tmp_path, count_jobs):
+    """A 5 % change (3 of 60 vectors: a bucket move, an in-place update
+    and a delete) runs within the tick's job budget — an extra Spark
+    action in the tick fails this — and the index stays exact."""
+    emb = _emb(spark).filter(F.col("vec_id") < 60)
+    src = _mk_src(spark, tmp_path)
+    dst = str(tmp_path / "ann")
+    src.merge(emb.withColumn("ver", F.lit(1).cast("long")), fence=("i", 1))
+    ann_index_sync(spark, src.root, dst, "aj")
+
+    src = LakeTable.load(spark, src.root)
+    neg = F.transform("embedding", lambda x: -x).cast("array<float>")
+    scaled = F.transform("embedding", lambda x: x * 2).cast("array<float>")
+    change = (emb.filter(F.col("vec_id").isin(4, 9))
+              .select("vec_id",
+                      F.when(F.col("vec_id") == 4, neg).otherwise(scaled)
+                       .alias("embedding"))
+              .withColumn("ver", F.lit(2).cast("long"))
+              .withColumn("_is_delete", F.lit(False))
+              .unionByName(spark.createDataFrame([(11, None, 2)], EMB_SCHEMA)
+                           .withColumn("_is_delete", F.lit(True))))
+    src.merge(change, fence=("i", 2))
+    n, res = count_jobs(lambda: ann_index_sync(spark, src.root, dst, "aj"))
+    assert not res["skipped"] and res["from"] > 0
+    # the move and the delete each retire an old posting
+    assert res["index_rows_written"] == 2 + 2
+    assert n <= ANN_TICK_JOBS, n
+    index_t = LakeTable.load(spark, f"{dst}/index")
+    want = sorted((int(r["bucket"]), r["vec_id"], list(r["embedding"])) for r in
+                  src.current().select(
+                      _bucket_expr(F.col("embedding"), 64).alias("bucket"),
+                      "vec_id", "embedding").collect())
+    got = sorted((r["bucket"], r["vec_id"], list(r["embedding"]))
+                 for r in index_t.current().collect())
+    assert got == want

@@ -4,6 +4,8 @@ corpus — through adds, text updates (pair invalidation + re-discovery) and
 deletes — and the cursor/fence discipline must make re-runs no-ops.
 """
 
+import os
+
 import pyspark.sql.functions as F
 import pyspark.sql.types as T
 import pytest
@@ -298,3 +300,83 @@ def test_dedup_sync_no_shingle_update_retires_signature(spark, tmp_path):
     sigs = LakeTable.load(spark, str(dst / "sigs"))
     live_ids = {r.doc_id for r in sigs.current().select("doc_id").collect()}
     assert live_ids == {"a"}, live_ids
+
+
+def _doc_table(spark, tmp_path, name="docs"):
+    schema = T.StructType([
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("text", T.StringType()),
+        T.StructField("ver", T.LongType()),
+    ])
+    root = str(tmp_path / name)
+    t = LakeTable.create(spark, root, schema, pk=["doc_id"],
+                         version_cols=["ver"], n_buckets=4)
+    docs = spark.range(0, 60).selectExpr(
+        "id AS doc_id",
+        "concat_ws(' ', transform(sequence(0, 30), "
+        "  j -> concat('w', pmod(id, 5), '-', j))) AS text",
+        "id AS ver",
+    )
+    t.merge(docs)
+    return root
+
+
+def test_dedup_sync_half_created_dst_recovers(spark, tmp_path):
+    """Crash between the sigs and pairs creates: sigs exists (empty, no
+    fence), pairs missing. The next tick must create pairs and complete —
+    and produce the same result as an unbroken bootstrap."""
+    from cds_spark.operators.incdedup import (_sig_schema, dedup_sync,
+                                              live_pairs)
+
+    src_root = _doc_table(spark, tmp_path)
+    src = LakeTable.load(spark, src_root)
+    pk_fields = [f for f in src.schema.fields if f.name == "doc_id"]
+    # simulate the half-created destination
+    half = str(tmp_path / "half")
+    LakeTable.create(
+        spark, os.path.join(half, "sigs"),
+        _sig_schema(T.LongType(), pk_fields), pk=["doc_id"],
+        version_cols=["ver"], n_buckets=4,
+        properties={"merge_mode": "append"})
+    res = dedup_sync(spark, src_root, half, "j1", text_col="text")
+    assert not res["skipped"] and res["applied"] > 0
+
+    clean = str(tmp_path / "clean")
+    dedup_sync(spark, src_root, clean, "j1", text_col="text")
+
+    def pairs_of(root):
+        s = LakeTable.load(spark, os.path.join(root, "sigs"))
+        p = LakeTable.load(spark, os.path.join(root, "pairs"))
+        return sorted((r.doc_a, r.doc_b, r.jaccard)
+                      for r in live_pairs(s, p).collect())
+
+    assert pairs_of(half) == pairs_of(clean) and pairs_of(half)
+
+
+#: Spark jobs of a 5 % change tick on a small corpus: the delta read (the
+#: change read's broadcast anti-join, the LWW collapse shuffle, the
+#: collect), the sigs partner scan (collapse shuffle, collect), the
+#: partner-text read, and one write per merge
+DEDUP_TICK_JOBS = 8
+
+
+def test_dedup_tick_job_budget(spark, tmp_path, count_jobs):
+    """A 5 % change (2 of 40 docs: an update that forms a new near-dup
+    pair with an unchanged doc, and a delete) runs within the tick's job
+    budget — an extra Spark action in the tick fails this — and still
+    equals the batch result."""
+    src = _mk_src(spark, tmp_path)
+    dst = tmp_path / "dd"
+    words = BASE_B.split()
+    src.merge(_rows(spark, [
+        (f"d{i:02d}", " ".join(words[i % 7:] + words[:i % 7]) + f" n{i}", 1)
+        for i in range(40)]), fence=("ing", 1))
+    dedup_sync(spark, src.root, str(dst), "j")
+
+    src = LakeTable.load(spark, src.root)
+    src.merge(_rows(spark, [("d03", " ".join(words) + " tail", 2)],
+                    deletes=[("d17", 2)]), fence=("ing", 2))
+    n, res = count_jobs(lambda: dedup_sync(spark, src.root, str(dst), "j"))
+    assert not res["skipped"] and res["from"] > 0 and res["pairs_written"] > 0
+    assert n <= DEDUP_TICK_JOBS, n
+    assert _live(spark, dst) == _batch(src)

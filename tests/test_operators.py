@@ -50,6 +50,51 @@ def test_simhash_similar_docs_have_small_hamming(spark):
     assert d12 < d13
 
 
+def test_spread_reads_the_plan_without_running_it(spark, count_jobs, tmp_path):
+    """A plan with an exchange is repartitioned unprobed (asking it for a
+    partition count would run its shuffle stages under AQE); a wide
+    enough file scan is left as it is."""
+    import pyspark.sql.functions as F
+
+    from cds_spark.operators.textdedup import _spread
+
+    agg = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+    n, out = count_jobs(lambda: _spread(agg))
+    assert n == 0
+    assert out._jdf.queryExecution().logical().toString().startswith("Repartition ")
+    path = str(tmp_path / "wide")
+    spark.range(1000).repartition(16).write.parquet(path)
+    scan = spark.read.parquet(path)
+    n, out = count_jobs(lambda: _spread(scan))
+    assert n == 0 and out is scan
+
+
+def test_row_level_twins_equal_batch_shingle_sets_and_minhashes(spark):
+    """The incremental tick's one-pass row-level shingle set and MinHash
+    equal the batch operators' explode + groupBy results doc for doc
+    (texts shorter than the shingle width drop out of both)."""
+    import pyspark.sql.functions as F
+
+    from cds_spark.operators.textdedup import (
+        N_HASHES, minhash_exprs, minhash_signatures, shingle_set_expr,
+        shingle_sets)
+
+    docs = _docs(spark).limit(60).select("doc_id", "text").unionByName(
+        spark.createDataFrame([(-1, "abc"), (-2, None), (-3, "ÀÉÎ Õü ÀÉÎ Õü")],
+                              "doc_id long, text string"))
+    batch_sets = {r.doc_id: sorted(r.sset) for r in shingle_sets(docs).collect()}
+    batch_mh = {r.doc_id: tuple(r[f"mh_{j}"] for j in range(N_HASHES))
+                for r in minhash_signatures(docs).collect()}
+    rows = (docs.select("doc_id", shingle_set_expr(F.col("text")).alias("sset"))
+            .select("doc_id", "sset", *minhash_exprs(F.col("sset")))
+            .collect())
+    row_sets = {r.doc_id: sorted(r.sset) for r in rows if r.sset is not None}
+    row_mh = {r.doc_id: tuple(r[f"mh_{j}"] for j in range(N_HASHES))
+              for r in rows if r.sset is not None}
+    assert row_sets == batch_sets and -1 not in row_sets and -2 not in row_sets
+    assert row_mh == batch_mh
+
+
 def test_brute_force_topk_matches_numpy(spark):
     import numpy as np
 

@@ -144,101 +144,6 @@ def test_auto_rebucket_clamp_stays_power_of_two_multiple(spark, tmp_path):
     assert t.n_buckets % 3 == 0
 
 
-def _doc_table(spark, tmp_path, name="docs"):
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("text", T.StringType()),
-        T.StructField("ver", T.LongType()),
-    ])
-    root = str(tmp_path / name)
-    t = LakeTable.create(spark, root, schema, pk=["doc_id"],
-                         version_cols=["ver"], n_buckets=4)
-    docs = spark.range(0, 60).selectExpr(
-        "id AS doc_id",
-        "concat_ws(' ', transform(sequence(0, 30), "
-        "  j -> concat('w', pmod(id, 5), '-', j))) AS text",
-        "id AS ver",
-    )
-    t.merge(docs)
-    return root
-
-
-def test_dedup_sync_half_created_dst_recovers(spark, tmp_path):
-    """Crash between the sigs and pairs creates: sigs exists (empty, no
-    fence), pairs missing. The next tick must create pairs and complete —
-    and produce the same result as an unbroken bootstrap."""
-    from cds_spark.operators.incdedup import (_sig_schema, dedup_sync,
-                                              live_pairs)
-
-    src_root = _doc_table(spark, tmp_path)
-    src = LakeTable.load(spark, src_root)
-    pk_fields = [f for f in src.schema.fields if f.name == "doc_id"]
-    # simulate the half-created destination
-    half = str(tmp_path / "half")
-    LakeTable.create(
-        spark, os.path.join(half, "sigs"),
-        _sig_schema(T.LongType(), pk_fields), pk=["doc_id"],
-        version_cols=["ver"], n_buckets=4,
-        properties={"merge_mode": "append"})
-    res = dedup_sync(spark, src_root, half, "j1", text_col="text")
-    assert not res["skipped"] and res["applied"] > 0
-
-    clean = str(tmp_path / "clean")
-    dedup_sync(spark, src_root, clean, "j1", text_col="text")
-
-    def pairs_of(root):
-        s = LakeTable.load(spark, os.path.join(root, "sigs"))
-        p = LakeTable.load(spark, os.path.join(root, "pairs"))
-        return sorted((r.doc_a, r.doc_b, r.jaccard)
-                      for r in live_pairs(s, p).collect())
-
-    assert pairs_of(half) == pairs_of(clean) and pairs_of(half)
-
-
-def test_ann_index_sync_half_created_dst_recovers(spark, tmp_path):
-    """Same crash shape for the ANN index: vecs exists, index missing."""
-    from cds_spark.operators.annindex import (_vecs_schema, ann_index_sync,
-                                              ann_topk)
-
-    schema = T.StructType([
-        T.StructField("vec_id", T.LongType(), False),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        T.StructField("ver", T.LongType()),
-    ])
-    src_root = str(tmp_path / "vecsrc")
-    t = LakeTable.create(spark, src_root, schema, pk=["vec_id"],
-                         version_cols=["ver"], n_buckets=4)
-    vecs = spark.range(0, 50).selectExpr(
-        "id AS vec_id",
-        "transform(sequence(0, 7), j -> cast(sin(id * 0.7 + j) AS float))"
-        " AS embedding",
-        "id AS ver",
-    )
-    t.merge(vecs)
-
-    half = str(tmp_path / "annhalf")
-    LakeTable.create(
-        spark, os.path.join(half, "vecs"), _vecs_schema(T.LongType()),
-        pk=["vec_id"], version_cols=["ver"], n_buckets=4,
-        properties={"merge_mode": "append"})
-    res = ann_index_sync(spark, src_root, half, "j1", dim=8)
-    assert not res["skipped"] and res["applied"] > 0
-
-    clean = str(tmp_path / "annclean")
-    ann_index_sync(spark, src_root, clean, "j1", dim=8)
-    q = spark.range(3, 6).selectExpr(
-        "id AS query_id",
-        "transform(sequence(0, 7), j -> cast(sin(id * 0.7 + j) AS float))"
-        " AS qv")
-
-    def topk(root):
-        return sorted(
-            (r.query_id, r.neighbor_id, r.cos_sim)
-            for r in ann_topk(spark, root, q, k=3, dim=8).collect())
-
-    assert topk(half) == topk(clean) and topk(half)
-
-
 # ---- table.py deep-review fixes ------------------------------------------
 
 def _kv_table(spark, tmp_path, name, **props):
