@@ -618,6 +618,32 @@ class LakeTable:
         return cls(spark, root, cls._read_manifest(root, v))
 
     @classmethod
+    def load_or_create(
+        cls,
+        spark: SparkSession,
+        root: str,
+        schema: T.StructType,
+        pk: Sequence[str],
+        version_cols: Sequence[str],
+        n_buckets: int = 64,
+        properties: dict | None = None,
+    ) -> "LakeTable":
+        """Load the table at ``root``, or create it from ``schema`` — the one
+        create-if-missing rule of the full syncs and the lake-to-lake
+        tailers. Callers holding several tables apply it PER TABLE, so a
+        crash between two creates leaves nothing a later run cannot load.
+        ``schema`` may carry the meta columns (a source exported from
+        another lake table); they are dropped from the LOGICAL schema, or
+        the physical layout would duplicate ``_is_delete``/``_offset``."""
+        if cls.exists(root):
+            return cls.load(spark, root)
+        logical = T.StructType(
+            [f for f in schema.fields if f.name not in (IS_DELETE, OFFSET)])
+        return cls.create(spark, root, logical, pk=pk,
+                          version_cols=version_cols, n_buckets=n_buckets,
+                          properties=properties)
+
+    @classmethod
     def exists(cls, root: str) -> bool:
         meta = os.path.join(os.path.abspath(root), META_DIR)
         if os.path.exists(os.path.join(meta, "_current")):
@@ -1518,6 +1544,19 @@ class LakeTable:
             out = out.unionByName(d)
         return out.select(*out_cols)
 
+    def latest_changes(self, from_version: int,
+                       to_version: int | None = None) -> DataFrame:
+        """:meth:`changes` collapsed to the latest row per key — ordered by
+        ``_change_version``, then the version columns, then ``_offset`` —
+        with ``_is_delete`` never NULL: the one delta read of the
+        lake-to-lake tailers. Raises where :meth:`changes` raises."""
+        vcols = ["_change_version", *dict.fromkeys(
+            [*self.version_cols, OFFSET])]
+        return (lww_collapse(self.changes(from_version, to_version),
+                             self.pk, vcols)
+                .withColumn(IS_DELETE,
+                            F.coalesce(F.col(IS_DELETE), F.lit(False))))
+
     # ------------------------------------------------------------- write
     def _auto_salt_n(self, df: DataFrame, default_n: int, n_partitions: int) -> int:
         """write.salt="auto": size the row-salt spread to the batch's
@@ -1826,10 +1865,31 @@ class LakeTable:
             for f in cur.fields
         ]), filled
 
-    def _fence_applied(self, fence: tuple[str, int]) -> bool:
-        job_id, batch_id = fence
+    def fence(self, job_id: str, tail: bool = False) -> int | None:
+        """Job ``job_id``'s cursor on this table: the last batch id or
+        source version it committed here (the ``fence.<job_id>`` property,
+        advanced atomically with the commit), or None if it never did.
+
+        ``tail=True`` is the lake-to-lake tailers' rule (cascade, dedup and
+        ANN sync): a table with no data and no fence reads 0 (bootstrap —
+        also after a crash between create and the first merge), and a
+        table that holds data without the fence raises ValueError: its
+        rows were not written by this job, and a guessed cursor would
+        skip or replay upstream snapshots."""
         last = self.properties.get(f"fence.{job_id}")
-        return last is not None and int(last) >= int(batch_id)
+        if last is not None:
+            return int(last)
+        if not tail:
+            return None
+        if self.manifest["files"]:
+            raise ValueError(
+                f"{self.root} exists with data but no fence.{job_id} — it "
+                f"was not built by this job; refusing to guess a cursor")
+        return 0
+
+    def _fence_applied(self, fence: tuple[str, int]) -> bool:
+        last = self.fence(fence[0])
+        return last is not None and last >= int(fence[1])
 
     def merge(
         self,

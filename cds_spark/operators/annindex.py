@@ -15,8 +15,10 @@ their probe buckets. Same cursor-fenced tail discipline as
 Per tick (``ann_index_sync``, D = changed vectors; the bootstrap and a
 full refresh run one Spark plan over the live corpus instead):
 
-1. delta = ``changes(cursor, v2)`` collapsed per key and collected once
-   on the driver: O(D) rows of (id, vector, delete flag, new bucket).
+1. delta = ``src.latest_changes(cursor, v2)`` (``changes()`` collapsed
+   per key) collected once on the driver: O(D) rows of (id, vector,
+   delete flag, new bucket). The cursor is the vecs table's
+   ``fence.<job_id>``, read by ``LakeTable.fence(job_id, tail=True)``.
 2. new bucket = the SAME deterministic hyperplane signs the batch
    operators and the SQL oracle use (similarity._bucket_expr), so the
    maintained index serves answers byte-equal to a batch run.
@@ -55,8 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cds_spark.functions import cosine
-from cds_spark.lake.table import IS_DELETE, LakeTable, OFFSET, local_frame
-from cds_spark.operators.dedup import lww_collapse
+from cds_spark.lake.table import IS_DELETE, LakeTable, local_frame
 from cds_spark.operators.similarity import LSH_BITS, TOP_K, _bucket_expr
 
 VEC_T = T.ArrayType(T.FloatType())
@@ -97,34 +98,19 @@ def ann_index_sync(
                          f"{src_root} has pk={src.pk}")
     id_col = src.pk[0]
     id_type = next(f.dataType for f in src.schema.fields if f.name == id_col)
-    vecs_root = os.path.join(dst_root, "vecs")
-    index_root = os.path.join(dst_root, "index")
     nb = n_buckets or src.n_buckets
-    # create-if-missing PER TABLE: a crash between the two creates must
-    # not leave a half-bootstrapped destination that every later tick
-    # crashes loading. merge-on-read append (see incdedup): a tick
-    # appends O(batch) postings; reads LWW-collapse and compact() amortizes
-    if not LakeTable.exists(vecs_root):
-        vecs = LakeTable.create(
-            spark, vecs_root, _vecs_schema(id_type), pk=["vec_id"],
-            version_cols=["ver"], n_buckets=nb,
-            properties={"merge_mode": "append"})
-    else:
-        vecs = LakeTable.load(spark, vecs_root)
-    if not LakeTable.exists(index_root):
-        index = LakeTable.create(
-            spark, index_root, _index_schema(id_type),
-            pk=["bucket", "vec_id"], version_cols=["ver"], n_buckets=nb,
-            properties={"merge_mode": "append"})
-    else:
-        index = LakeTable.load(spark, index_root)
+    # merge-on-read append (see incdedup): a tick appends O(batch)
+    # postings; reads LWW-collapse and compact() amortizes
+    vecs = LakeTable.load_or_create(
+        spark, os.path.join(dst_root, "vecs"), _vecs_schema(id_type),
+        pk=["vec_id"], version_cols=["ver"], n_buckets=nb,
+        properties={"merge_mode": "append"})
+    index = LakeTable.load_or_create(
+        spark, os.path.join(dst_root, "index"), _index_schema(id_type),
+        pk=["bucket", "vec_id"], version_cols=["ver"], n_buckets=nb,
+        properties={"merge_mode": "append"})
 
-    last = vecs.properties.get(f"fence.{job_id}")
-    if last is None and vecs.manifest["files"]:
-        raise ValueError(
-            f"{vecs_root} exists with data but no fence.{job_id} — not "
-            f"built by this job; refusing to guess a cursor")
-    from_v = int(last) if last is not None else 0
+    from_v = vecs.fence(job_id, tail=True)
     v2 = src.version
     if from_v >= v2:
         return {"applied": 0, "from": from_v, "to": v2, "skipped": True}
@@ -133,16 +119,22 @@ def ann_index_sync(
     # vi) and the vecs merge (cursor still from_v) leaves postings the
     # vecs table doesn't know about — "ghosts" if the vector moved again
     # before the retry. vi > from_v means exactly that happened.
-    vi_raw = index.properties.get(f"fence.{job_id}")
-    vi = int(vi_raw) if vi_raw is not None else from_v
+    vi = index.fence(job_id) or from_v
 
     refreshed = False
-    ch = interim = None
+    delta = istate = None
     if from_v > 0:
         try:
-            ch = src.changes(from_v, v2)
+            delta = src.latest_changes(from_v, v2).select(
+                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"),
+                IS_DELETE)
             if vi > from_v:
-                interim = src.changes(from_v, vi)
+                istate = (
+                    src.latest_changes(from_v, vi)
+                    .filter(~F.col(IS_DELETE))
+                    .select(F.col(id_col).alias("vec_id"),
+                            _bucket_expr(F.col(vec_col), dim)
+                             .alias("interim_bucket")))
         except ValueError:
             # mutation snapshot (purge/update/overwrite) or expired window
             # in (from_v, v2]: incremental reads are impossible — full
@@ -156,22 +148,6 @@ def ann_index_sync(
             src, vecs, index, id_col, vec_col, dim, refreshed,
             from_v == 0 and not index.manifest["files"], job_id, v2)
     else:
-        vcols = ["_change_version"] + [
-            c for c in list(src.version_cols) + [OFFSET] if c in ch.columns]
-        delta = lww_collapse(ch, [id_col], vcols).select(
-            F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"),
-            F.coalesce(F.col(IS_DELETE), F.lit(False)).alias(IS_DELETE))
-        istate = None
-        if interim is not None:
-            ivcols = ["_change_version"] + [
-                c for c in list(src.version_cols) + [OFFSET]
-                if c in interim.columns]
-            istate = (
-                lww_collapse(interim, [id_col], ivcols)
-                .filter(~F.coalesce(F.col(IS_DELETE), F.lit(False)))
-                .select(F.col(id_col).alias("vec_id"),
-                        _bucket_expr(F.col(vec_col), dim)
-                         .alias("interim_bucket")))
         istats, vstats = _delta_sync(
             vecs, index, delta, istate, dim, job_id, v2)
     index.compact(max_generations=8)
@@ -179,7 +155,7 @@ def ann_index_sync(
     return {"applied": int(vstats.rows_written),
             "index_rows_written": int(istats.rows_written),
             "from": from_v, "to": v2, "skipped": False,
-            "refreshed": refreshed, "reconciled": interim is not None,
+            "refreshed": refreshed, "reconciled": istate is not None,
             "duration_s": round(time.time() - t0, 3)}
 
 

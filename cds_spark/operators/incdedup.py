@@ -15,16 +15,24 @@ lake tables under one root —
   at, so :func:`live_pairs` can invalidate pairs whose endpoint has since
   changed or vanished WITHOUT any re-verification scan.
 
-Per increment (``dedup_sync``): the bootstrap and a full refresh run one
-Spark plan over the whole corpus; an incremental tick runs
+Per increment (``dedup_sync``): the cursor is the sigs table's
+``fence.<job_id>`` (read by ``LakeTable.fence(job_id, tail=True)``, the
+rule ``cascade_sync`` and ``ann_index_sync`` share). The bootstrap and a
+full refresh (the change window is unreadable: a purge/update/overwrite
+snapshot, or an expired one) run the BATCH plan over the live corpus:
+the corpus is signed once with ``minhash_signatures`` and paired by the
+batch operator's own band join and exact verify (``textdedup.lsh_pairs``,
+the function ``minhash_lsh_pairs`` calls), so the pairs equal a batch run
+by construction; a refresh also tombstones every signed doc that has
+left the corpus. An incremental tick runs
 
-1. delta = ``src.changes(cursor, v2)`` collapsed to the latest row per
-   key and materialised ONCE on the driver — O(changed docs), never
-   O(corpus). The same pass computes each upserted doc's hashed shingle
-   set and, from it, its MinHash signature and band keys: the row-level
-   twins of the batch operators' expressions (same shingles, hash
-   family, band count and threshold), so incremental discovery equals
-   the batch result by construction.
+1. delta = ``src.latest_changes(cursor, v2)`` (``changes()`` collapsed
+   to the latest row per key) materialised ONCE on the driver —
+   O(changed docs), never O(corpus). The same pass computes each
+   upserted doc's hashed shingle set and, from it, its MinHash signature
+   and band keys: the row-level twins of the batch operators'
+   expressions (same shingles, hash family, band count and threshold),
+   so incremental discovery equals the batch result by construction.
 2. Candidates = delta band keys matched against the post-state
    signature view (current sigs minus delta keys, plus the new sigs):
    one scan of the sigs table, filtered by the delta's band keys as
@@ -59,14 +67,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cds_spark.lake.table import IS_DELETE, LakeTable, OFFSET, local_frame
-from cds_spark.operators.dedup import lww_collapse
+from cds_spark.lake.table import IS_DELETE, LakeTable, local_frame
 from cds_spark.operators.textdedup import (
     JACCARD_THRESHOLD,
     N_BANDS,
     N_HASHES,
     _band_key,
     jaccard_expr,
+    lsh_pairs,
     minhash_exprs,
     minhash_signatures,
     shingle_set_expr,
@@ -199,48 +207,34 @@ def dedup_sync(
         identity = F.concat_ws(
             UNIT_SEP, *[F.col(c).cast("string") for c in pk])
     kcols = [f"k_{c}" for c in pk]
-    sigs_root = os.path.join(dst_root, "sigs")
-    pairs_root = os.path.join(dst_root, "pairs")
 
     nb = n_buckets or src.n_buckets
-    # create-if-missing PER TABLE (not all-or-nothing on sigs existing):
-    # a crash between the two creates must not leave a half-bootstrapped
-    # destination that every later tick crashes loading. merge-on-read
-    # append, like the main CDC ingest: a tick APPENDS O(batch) rows
-    # instead of copy-on-write-rewriting every touched bucket of the
-    # (growing) derived tables; reads apply the LWW window and the
-    # generation-bounded compact below amortizes it
-    if not LakeTable.exists(sigs_root):
-        sigs = LakeTable.create(
-            spark, sigs_root, _sig_schema(id_type, pk_fields), pk=["doc_id"],
-            version_cols=["ver"], n_buckets=nb,
-            properties={"merge_mode": "append"})
-    else:
-        sigs = LakeTable.load(spark, sigs_root)
-    if not LakeTable.exists(pairs_root):
-        pairs = LakeTable.create(
-            spark, pairs_root, _pair_schema(id_type), pk=["doc_a", "doc_b"],
-            version_cols=["ver"], n_buckets=nb,
-            properties={"merge_mode": "append"})
-    else:
-        pairs = LakeTable.load(spark, pairs_root)
+    # merge-on-read append, like the main CDC ingest: a tick APPENDS
+    # O(batch) rows instead of copy-on-write-rewriting every touched
+    # bucket of the (growing) derived tables; reads apply the LWW window
+    # and the generation-bounded compact below amortizes it
+    sigs = LakeTable.load_or_create(
+        spark, os.path.join(dst_root, "sigs"), _sig_schema(id_type, pk_fields),
+        pk=["doc_id"], version_cols=["ver"], n_buckets=nb,
+        properties={"merge_mode": "append"})
+    pairs = LakeTable.load_or_create(
+        spark, os.path.join(dst_root, "pairs"), _pair_schema(id_type),
+        pk=["doc_a", "doc_b"], version_cols=["ver"], n_buckets=nb,
+        properties={"merge_mode": "append"})
 
-    last = sigs.properties.get(f"fence.{job_id}")
-    if last is None and sigs.manifest["files"]:
-        raise ValueError(
-            f"{sigs_root} exists with data but no fence.{job_id} — it was "
-            f"not built by this job; refusing to guess a cursor")
-    from_v = int(last) if last is not None else 0
+    from_v = sigs.fence(job_id, tail=True)
     v2 = src.version
     if from_v >= v2:
         return {"applied": 0, "from": from_v, "to": v2, "skipped": True}
 
     key_sel = [F.col(c).alias(f"k_{c}") for c in pk]
     refreshed = False
-    ch = None
+    delta = None
     if from_v > 0:
         try:
-            ch = src.changes(from_v, v2)
+            delta = src.latest_changes(from_v, v2).select(
+                identity.alias("doc_id"), *key_sel, IS_DELETE,
+                F.col(text_col).alias("text"))
         except ValueError:
             # mutation snapshot (purge/update/overwrite) or expired window
             # in (from_v, v2]: incremental reads are impossible — fall back
@@ -248,17 +242,11 @@ def dedup_sync(
             # Without this, every later tick re-raises forever and the
             # in-loop pipeline call kills the ingest stream.
             refreshed = True
-    if ch is None or refreshed:
+    if delta is None:
         pstats, sstats = _full_sync(
             src, sigs, pairs, identity, key_sel, kcols, text_col, refreshed,
             job_id, v2)
     else:
-        vcols = ["_change_version"] + [
-            c for c in list(src.version_cols) + [OFFSET] if c in ch.columns]
-        delta = lww_collapse(ch, pk, vcols).select(
-            identity.alias("doc_id"), *key_sel,
-            F.coalesce(F.col(IS_DELETE), F.lit(False)).alias(IS_DELETE),
-            F.col(text_col).alias("text"))
         pstats, sstats = _delta_sync(
             src, sigs, pairs, delta, identity, id_type, kcols, text_col,
             job_id, v2)
@@ -275,120 +263,50 @@ def dedup_sync(
 
 def _full_sync(src, sigs, pairs, identity, key_sel, kcols, text_col,
                refreshed, job_id, v2):
-    """Bootstrap / full refresh: the live corpus is the upsert delta, run
-    as one Spark plan (shuffle joins, no driver-side state); a refresh
-    additionally tombstones every signed doc no longer in the corpus (a
-    bootstrap has no prior signatures to retire). Returns the pairs and
-    sigs merge stats."""
-    pk = list(src.pk)
-    live = (src.current()
-            .select(identity.alias("doc_id"), *key_sel,
-                    F.col(text_col).alias("text"))
-            .withColumn(IS_DELETE, F.lit(False)))
-    if refreshed:
-        gone = (sigs.current().select("doc_id", *kcols)
-                .join(live.select("doc_id"), "doc_id", "left_anti")
-                .withColumn("text", F.lit(None).cast("string"))
-                .withColumn(IS_DELETE, F.lit(True))
-                .select("doc_id", *kcols, "text", IS_DELETE))
-        delta = live.unionByName(gone)
-    else:
-        delta = live
-
-    delta = delta.persist()
-    ups = delta.filter(~F.col(IS_DELETE)).select(
-        "doc_id", *kcols, "text").persist()
-    new_sigs = (minhash_signatures(ups.select("doc_id", "text"))
-                .select("doc_id", *_sig_cols())
-                .join(ups.select("doc_id", *kcols), "doc_id")
-                .select("doc_id", *kcols, "sig_md5", "bands")
-                .persist())
-
-    # an upserted doc whose new text yields NO shingles (shorter than the
-    # shingle width, or NULL) must TOMBSTONE its old signature: leaving
-    # the stale digest live would keep its old pairs valid forever and
-    # diverge from a batch run on the v2 corpus (which drops the doc)
-    no_sig = (ups.select("doc_id", *kcols)
-              .join(new_sigs.select("doc_id"), "doc_id", "left_anti"))
-
-    # post-state signature view: current sigs minus every delta key, plus
-    # the new signatures — exactly what the sigs table will hold after the
-    # merge below, so candidate generation matches a batch run on v2 state.
-    # Persisted: four downstream consumers (band explode, partner-key
-    # fetch, both digest joins) would otherwise each re-run the sigs scan
-    # + LWW collapse + anti-join.
-    delta_keys = delta.select("doc_id").distinct()
-    post = (sigs.current().select("doc_id", *kcols, "sig_md5", "bands")
-            .join(delta_keys, "doc_id", "left_anti")
-            .unionByName(new_sigs)
-            .persist())
-
-    # the "delta" IS the corpus: no broadcast (it would ship the whole
-    # band set to every executor) — the planner shuffle-joins instead
-    nb_ = new_sigs.select(
-        "doc_id", F.posexplode("bands").alias("band_id", "band_key"))
-    pb = post.select(
-        F.col("doc_id").alias("p_id"),
-        F.posexplode("bands").alias("band_id", "band_key"))
-    cand = (
-        nb_
-        .join(pb, ["band_id", "band_key"])
-        .filter(F.col("doc_id") != F.col("p_id"))
-        .select(F.least("doc_id", "p_id").alias("doc_a"),
-                F.greatest("doc_id", "p_id").alias("doc_b"))
-        .distinct()
-        .persist()
-    )
-
-    # exact verify on current texts: delta docs carry theirs; candidate
-    # partners outside the delta are point-fetched bucket-pruned (their
-    # source PK tuples ride in the signature rows, so no key parsing)
-    cand_ids = (cand.select(F.col("doc_a").alias("doc_id"))
-                .union(cand.select("doc_b")).distinct())
-    need = cand_ids.join(ups.select("doc_id"), "doc_id", "left_anti")
-    need_keys = need.join(post, "doc_id").select(
-        *[F.col(f"k_{c}").alias(c) for c in pk])
-    fetched = (src.lookup(need_keys)
-               .select(identity.alias("doc_id"),
-                       F.col(text_col).alias("text")))
-    ss = shingle_sets(ups.select("doc_id", "text").unionByName(fetched))
+    """Bootstrap / full refresh: the batch plan over the live corpus. The
+    corpus is signed once (``minhash_signatures``) and paired by the
+    batch operator's own band join and exact verify (``lsh_pairs``), so
+    the pairs equal ``minhash_lsh_pairs`` on the v2 corpus by
+    construction. Live docs with no shingles (text shorter than the
+    shingle width, or NULL) tombstone any old signature; a refresh also
+    tombstones every signed doc that has left the corpus. Returns the
+    pairs and sigs merge stats."""
+    live = src.current().select(identity.alias("doc_id"), *key_sel,
+                                F.col(text_col).alias("text")).persist()
+    docs = live.select("doc_id", "text")
+    new_sigs = (minhash_signatures(docs).select("*", *_sig_cols())
+                .join(live.select("doc_id", *kcols), "doc_id").persist())
+    digest = new_sigs.select("doc_id", "sig_md5")
+    ver = F.lit(v2).cast("long").alias("ver")
     new_pairs = (
-        cand
-        .join(ss.select(F.col("doc_id").alias("doc_a"),
-                        F.col("sset").alias("sa")), "doc_a")
-        .join(ss.select(F.col("doc_id").alias("doc_b"),
-                        F.col("sset").alias("sb")), "doc_b")
-        .withColumn("jaccard", jaccard_expr("sa", "sb"))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .join(post.select(F.col("doc_id").alias("doc_a"),
-                          F.col("sig_md5").alias("sig_a")), "doc_a")
-        .join(post.select(F.col("doc_id").alias("doc_b"),
-                          F.col("sig_md5").alias("sig_b")), "doc_b")
-        .select("doc_a", "doc_b", "jaccard", "sig_a", "sig_b")
-        .withColumn("ver", F.lit(v2).cast("long"))
+        lsh_pairs(new_sigs, shingle_sets(docs))
+        .join(digest.toDF("doc_a", "sig_a"), "doc_a")
+        .join(digest.toDF("doc_b", "sig_b"), "doc_b")
+        .select("doc_a", "doc_b", "jaccard", "sig_a", "sig_b", ver)
     )
     pstats = pairs.merge(new_pairs, fence=(job_id, v2))
 
-    tomb_sel = [
-        F.lit(None).cast("string").alias("sig_md5"),
-        F.lit(None).cast(T.ArrayType(T.StringType())).alias("bands"),
-        F.lit(v2).cast("long").alias("ver"),
-        F.lit(True).alias(IS_DELETE),
-    ]
+    # leaving a stale digest live would keep the doc's old pairs valid
+    # forever and diverge from a batch run on the v2 corpus
+    retired = live.select("doc_id", *kcols)
+    if refreshed:
+        retired = retired.unionByName(
+            sigs.current().select("doc_id", *kcols)
+            .join(live.select("doc_id"), "doc_id", "left_anti"))
     sig_rows = (
-        new_sigs.withColumn("ver", F.lit(v2).cast("long"))
-        .withColumn(IS_DELETE, F.lit(False))
+        new_sigs.select("doc_id", *kcols, "sig_md5", "bands", ver,
+                        F.lit(False).alias(IS_DELETE))
         .unionByName(
-            delta.filter(F.col(IS_DELETE))
-            .select("doc_id", *kcols, *tomb_sel))
-        # no-shingle upserts retire their old signature (see no_sig above);
-        # disjoint from the delete tombstones (delete rows are not in ups)
-        .unionByName(no_sig.select("doc_id", *kcols, *tomb_sel))
+            retired.join(new_sigs.select("doc_id"), "doc_id", "left_anti")
+            .select("doc_id", *kcols,
+                    F.lit(None).cast("string").alias("sig_md5"),
+                    F.lit(None).cast(T.ArrayType(T.StringType())).alias("bands"),
+                    ver, F.lit(True).alias(IS_DELETE)))
     )
     # the cursor advance: fence.{job_id}=v2 commits atomically with this merge
     sstats = sigs.merge(sig_rows, fence=(job_id, v2))
-    for df in (cand, post, new_sigs, ups, delta):
-        df.unpersist()
+    new_sigs.unpersist()
+    live.unpersist()
     return pstats, sstats
 
 

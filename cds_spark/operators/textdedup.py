@@ -231,23 +231,25 @@ def _band_key(j: int) -> F.Column:
     return F.md5(F.concat_ws(",", *cols))
 
 
-def minhash_band_buckets(docs: DataFrame) -> DataFrame:
-    """(band_id, band_key, doc_id) — LSH bucket assignment."""
-    sig = minhash_signatures(docs)
-    bands = F.array(
-        *[F.struct(F.lit(j).alias("band_id"), _band_key(j).alias("band_key")) for j in range(N_BANDS)]
-    )
-    return sig.select("doc_id", F.explode(bands).alias("b")).select(
-        F.col("b.band_id").alias("band_id"), F.col("b.band_key").alias("band_key"), "doc_id"
-    )
-
-
 def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
     """Candidate pairs sharing >=1 LSH band, verified by exact Jaccard.
 
     This is the 100TB dedup path: bucket-join candidate generation (linear
     in corpus + bucket sizes), exact verify only on candidates."""
-    buckets = minhash_band_buckets(docs)
+    return lsh_pairs(minhash_signatures(docs), shingle_sets(docs))
+
+
+def lsh_pairs(sigs: DataFrame, ssets: DataFrame) -> DataFrame:
+    """(doc_a < doc_b, jaccard): the band join of ``sigs`` (doc_id,
+    mh_0..) and the exact verify over ``ssets`` (doc_id, sset) — the pair
+    plan of :func:`minhash_lsh_pairs` and of ``dedup_sync``'s bootstrap /
+    refresh, which signs the corpus once and keeps the signatures."""
+    bands = F.array(
+        *[F.struct(F.lit(j).alias("band_id"), _band_key(j).alias("band_key")) for j in range(N_BANDS)]
+    )
+    buckets = sigs.select("doc_id", F.explode(bands).alias("b")).select(
+        F.col("b.band_id").alias("band_id"), F.col("b.band_key").alias("band_key"), "doc_id"
+    )
     a = buckets.alias("a")
     b = buckets.alias("b")
     cand = (
@@ -261,9 +263,9 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
         .distinct()
     )
     pairs = (
-        cand.join(shingle_sets(docs).withColumnRenamed("doc_id", "doc_a")
+        cand.join(ssets.withColumnRenamed("doc_id", "doc_a")
                   .withColumnRenamed("sset", "sa"), "doc_a")
-        .join(shingle_sets(docs).withColumnRenamed("doc_id", "doc_b")
+        .join(ssets.withColumnRenamed("doc_id", "doc_b")
               .withColumnRenamed("sset", "sb"), "doc_b")
     )
     # the O(|set|) per-pair intersection hot loop parallelizes via the
@@ -278,10 +280,11 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
 
 def shingle_sets(docs: DataFrame) -> DataFrame:
     """(doc_id, sset): STABLE-HASHED shingle sets — the canonical input of
-    every exact-Jaccard verify. Batch (:func:`minhash_lsh_pairs`) and
-    incremental (:mod:`cds_spark.operators.incdedup`) share this one
-    function so their incremental==batch equivalence holds by
-    construction, not by parallel-maintained copies.
+    every exact-Jaccard verify. Batch (:func:`minhash_lsh_pairs`) and the
+    ``dedup_sync`` bootstrap / refresh share this one function (the
+    incremental tick uses its row-level twin, :func:`shingle_set_expr`),
+    so their incremental==batch equivalence holds by construction, not by
+    parallel-maintained copies.
 
     Hashing note: long array_intersect is ~2x cheaper than UTF8String
     (measured 7.8s -> 4.2s on the sf0.1 verify join). A ~250-shingle doc

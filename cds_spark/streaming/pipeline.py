@@ -627,35 +627,6 @@ def bootstrap_jdbc(
     )
 
 
-def _load_or_create(
-    spark: SparkSession,
-    table_root: str,
-    source_schema,
-    pk: list[str],
-    version_cols: list[str],
-    n_buckets: int,
-    properties: dict | None = None,
-) -> LakeTable:
-    """The one load-or-create rule every full-sync entry point shares
-    (bootstrap / full_sync_windowed): a source may legitimately carry the
-    meta columns (e.g. exported from another lake table), and the LOGICAL
-    schema must exclude them or the physical layout would duplicate
-    _is_delete/_offset."""
-    import pyspark.sql.types as T
-
-    from cds_spark.lake.table import IS_DELETE, OFFSET
-
-    if LakeTable.exists(table_root):
-        return LakeTable.load(spark, table_root)
-    logical = T.StructType(
-        [f for f in source_schema.fields if f.name not in (IS_DELETE, OFFSET)]
-    )
-    return LakeTable.create(
-        spark, table_root, logical, pk=pk, version_cols=version_cols,
-        n_buckets=n_buckets, properties=properties,
-    )
-
-
 def _hour_in_window(hour: int, start_hour: int, end_hour: int) -> bool:
     """The reference's execution-window rule (mongo2clickhouse.go:99-103):
     (0, 0) = no window (always allowed); start <= end is the in-day
@@ -717,7 +688,7 @@ def full_sync_windowed(
 
     kc = keyset_col or pk[0]
 
-    table = _load_or_create(
+    table = LakeTable.load_or_create(
         spark, table_root, source.schema, pk, version_cols, n_buckets,
         properties={"merge_mode": "append"},
     )
@@ -773,9 +744,7 @@ def full_sync_windowed(
     else:
         import pyspark.sql.types as _T
 
-        fence_advanced = (
-            table.properties.get(f"fence.fullsync.{job_id}") is not None
-        )
+        fence_advanced = table.fence(f"fullsync.{job_id}") is not None
         key_numeric = isinstance(source.schema[kc].dataType, _T.NumericType)
         if key_numeric and (start_chunk > 0 or fence_advanced):
             raise RuntimeError(
@@ -869,7 +838,7 @@ def bootstrap(
     (cmd/dm/data/mysql2clickhouse.go:31-119), Spark parallelizes the scan;
     incremental overlap after bootstrap converges by the same LWW rule
     (doc/CDS中ClickHouse使用的建表方案.md:87)."""
-    table = _load_or_create(
+    table = LakeTable.load_or_create(
         spark, table_root, source.schema, pk, version_cols, n_buckets)
     table.overwrite(source)
     return table
@@ -908,10 +877,15 @@ def cascade_sync(
     manifest CAS). Re-running after any crash point replays an
     already-applied delta into an LWW merge — convergent — or skips via
     the fence. Per tick the work is O(upstream delta), never O(table).
+    The cursor rule is ``LakeTable.fence(job_id, tail=True)``, shared with
+    ``dedup_sync`` / ``ann_index_sync``: a destination holding data
+    without the fence is refused.
 
     First call bootstraps: full upstream state (tombstones included, so a
     later compact purge stays consistent) seeds the destination, fenced at
-    the upstream's current version. Returns {applied, from, to, skipped}.
+    the upstream's current version — also into an empty destination left
+    by a crash between create and the first merge. Returns {applied,
+    from, to, skipped}.
 
     ``transform`` (optional) maintains a DERIVED VIEW instead of a copy: a
     ROW-WISE DataFrame -> DataFrame function (quality scores, token
@@ -958,67 +932,55 @@ def cascade_sync(
         import pyspark.sql.types as _T
         return _T.StructType(fields)
 
-    if not LakeTable.exists(dst_root):
-        raw = src.read(live_only=False, with_meta=True, collapse=True)
-        full = tf(raw)
-        dst = LakeTable.create(
-            spark, dst_root, _dst_schema(full, raw.columns), pk=src.pk,
-            version_cols=src.version_cols,
-            n_buckets=n_buckets or src.n_buckets,
-            properties={"merge_mode": src.properties.get("merge_mode", "upsert")},
-        )
-        dst.merge(full, fence=(job_id, src.version), precollapsed=True)
-        rec = {"applied": "bootstrap", "from": 0, "to": src.version,
-               "skipped": False}
-        _log(dst_root, rec)
-        return rec
-    dst = LakeTable.load(spark, dst_root)
-    last = dst.properties.get(f"fence.{job_id}")
-    if last is None:
-        if not dst.manifest["files"]:
-            # first run crashed between create() and the bootstrap merge:
-            # the empty destination is safe to (re-)bootstrap
-            raw = src.read(live_only=False, with_meta=True, collapse=True)
-            full = tf(raw)
-            _dst_schema(full, raw.columns)  # validate before the merge
-            dst.merge(full, fence=(job_id, src.version), precollapsed=True)
-            rec = {"applied": "bootstrap", "from": 0, "to": src.version,
-                   "skipped": False}
-            _log(dst_root, rec)
-            return rec
-        raise ValueError(
-            f"destination {dst_root} exists with data but no fence.{job_id} — "
-            f"it was not created by this cascade; refusing to guess a cursor"
-        )
-    from_v = int(last)
-    if from_v >= src.version:
-        return {"applied": 0, "from": from_v, "to": src.version, "skipped": True}  # no-op: not logged
-    try:
-        # raises ValueError when the incremental read is impossible:
-        # cursor fell off the retained-snapshot window, or the window
-        # contains a mutation snapshot (purge/update/overwrite) whose
-        # removals can't be expressed as change rows. ONLY changes() is
-        # guarded — a merge failure must propagate, not masquerade as a
-        # refresh trigger
-        delta = src.changes(from_v, src.version).drop("_change_version")
-    except ValueError:
-        # Iceberg-style full refresh: overwrite with the current upstream
-        # state, tombstones included — also how upstream purges/updates
-        # reach the destination
+    v2 = src.version
+    # the destination schema is the transform's output over the upstream's
+    # columns, taken from an empty bucket selection: it indexes no file,
+    # where the full read below indexes every one (bootstrap/refresh only)
+    shape = src.read(buckets=[], live_only=False, with_meta=True,
+                     collapse=False)
+    dst = LakeTable.load_or_create(
+        spark, dst_root, _dst_schema(tf(shape), shape.columns), pk=src.pk,
+        version_cols=src.version_cols, n_buckets=n_buckets or src.n_buckets,
+        properties={"merge_mode": src.properties.get("merge_mode", "upsert")},
+    )
+    from_v = dst.fence(job_id, tail=True)
+    if from_v >= v2:
+        return {"applied": 0, "from": from_v, "to": v2, "skipped": True}  # no-op: not logged
+    delta = None
+    if from_v:
+        try:
+            # raises ValueError when the incremental read is impossible:
+            # cursor fell off the retained-snapshot window, or the window
+            # contains a mutation snapshot (purge/update/overwrite) whose
+            # removals can't be expressed as change rows. ONLY changes()
+            # is guarded — a merge failure must propagate, not masquerade
+            # as a refresh trigger
+            delta = src.changes(from_v, v2).drop("_change_version")
+        except ValueError:
+            pass
+    if delta is None:
+        # bootstrap, or an Iceberg-style full refresh (an overwrite — also
+        # how upstream purges/updates reach the destination): the
+        # upstream's full state, tombstones included, so a later compact
+        # purge stays consistent
         raw = src.read(live_only=False, with_meta=True, collapse=True)
         full = tf(raw)
         _evolve_to(dst, _dst_schema(full, raw.columns))
-        stats = dst.overwrite(full, fence=(job_id, src.version))
-        applied: int | str = "full-refresh"
+        if from_v:
+            stats = dst.overwrite(full, fence=(job_id, v2))
+            applied: int | str = "full-refresh"
+        else:
+            stats = dst.merge(full, fence=(job_id, v2), precollapsed=True)
+            applied = "bootstrap"
     else:
         tdelta = tf(delta)
         # propagate upstream schema evolution (column add / widen) before
         # apply — diffed on the TRANSFORMED delta, so it works identically
         # for plain copies and derived views
         _evolve_to(dst, _dst_schema(tdelta, delta.columns))
-        stats = dst.merge(tdelta, fence=(job_id, src.version))
+        stats = dst.merge(tdelta, fence=(job_id, v2))
         applied = stats.rows_written
-    rec = {"applied": applied, "from": from_v, "to": src.version,
+    rec = {"applied": applied, "from": from_v, "to": v2,
            "skipped": stats.skipped}
     _log(dst_root, rec)
     return rec

@@ -28,6 +28,16 @@ def test_hour_window_rule():
     assert not _hour_in_window(6, 1, 5)
 
 
+def test_hour_window_wraps_midnight():
+    assert _hour_in_window(23, 22, 5) and _hour_in_window(3, 22, 5)
+    assert _hour_in_window(22, 22, 5) and _hour_in_window(5, 22, 5)
+    assert not _hour_in_window(12, 22, 5)
+    # in-day window unchanged
+    assert _hour_in_window(10, 9, 17) and not _hour_in_window(8, 9, 17)
+    # (0, 0) = no window
+    assert _hour_in_window(0, 0, 0) and _hour_in_window(13, 0, 0)
+
+
 class FakeClock:
     """Yields a scripted sequence of hours, then repeats the last one."""
 

@@ -380,3 +380,38 @@ def test_dedup_tick_job_budget(spark, tmp_path, count_jobs):
     assert not res["skipped"] and res["from"] > 0 and res["pairs_written"] > 0
     assert n <= DEDUP_TICK_JOBS, n
     assert _live(spark, dst) == _batch(src)
+
+
+#: Spark jobs of a dedup bootstrap on a small corpus, and of the full
+#: refresh that follows a purge (it also reads the sigs table to retire
+#: the purged doc): the batch plan's shuffle and broadcast stages (the
+#: corpus signed once, shingle sets, band join, verify, digest joins),
+#: then one write per merge
+DEDUP_BOOTSTRAP_JOBS = 23
+DEDUP_REFRESH_JOBS = 26
+
+
+def test_dedup_bootstrap_and_refresh_job_budget(spark, tmp_path, count_jobs):
+    """The bootstrap and a refresh after a purge run within their job
+    budgets — an extra Spark action in the batch plan fails this — and
+    both equal the batch result."""
+    src = _mk_src(spark, tmp_path)
+    dst = tmp_path / "dd"
+    words = BASE_B.split()
+    src.merge(_rows(spark, [
+        (f"d{i:02d}", " ".join(words[i % 7:] + words[:i % 7]) + f" n{i}", 1)
+        for i in range(40)] + [("short", "x", 1)]), fence=("ing", 1))
+    n, res = count_jobs(lambda: dedup_sync(spark, src.root, str(dst), "j"))
+    assert not res["skipped"] and not res["refreshed"], res
+    assert n <= DEDUP_BOOTSTRAP_JOBS, n
+    assert _live(spark, dst) == _batch(src) != {}
+
+    src = LakeTable.load(spark, src.root)
+    src.purge_where("doc_id = 'd17'")
+    src = LakeTable.load(spark, src.root)
+    n, res = count_jobs(lambda: dedup_sync(spark, src.root, str(dst), "j"))
+    assert res["refreshed"] and not res["skipped"], res
+    assert n <= DEDUP_REFRESH_JOBS, n
+    assert _live(spark, dst) == _batch(src)
+    sigs = LakeTable.load(spark, str(dst / "sigs"))
+    assert "d17" not in {r.doc_id for r in sigs.current().collect()}

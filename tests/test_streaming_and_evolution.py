@@ -953,6 +953,56 @@ def test_run_many_syncs_two_tables_one_session(spark, tmp_path):
         run_many(spark, [specs[0], specs[0]])
 
 
+def test_run_many_once_isolates_failures_and_reports(spark, tmp_path):
+    """One job's mid-batch failure (unknown merge_mode raises inside
+    foreachBatch) must not kill the sibling's drain: run_many returns
+    {failed_job_id: error} and the healthy table is fully synced."""
+    from cds_spark.streaming.pipeline import run_many
+
+    specs = []
+    for i, mode in enumerate(("append", "bogus-mode")):
+        feed = change_feed(spark, 300, n_repos=4, paths_per_repo=6,
+                           seed=40 + i)
+        topic = str(tmp_path / f"topic{i}")
+        write_feed_files(feed, topic, 2)
+        root = str(tmp_path / f"tbl{i}")
+        LakeTable.create(spark, root, REPO_SCHEMA, pk=["repo", "path"],
+                         version_cols=["commit", "_offset"], n_buckets=4,
+                         properties={"merge_mode": "append"})
+        specs.append(JobSpec(job_id=f"f{i}", table_root=root,
+                             source_dir=topic,
+                             checkpoint_dir=str(tmp_path / f"ck{i}"),
+                             merge_mode=mode, max_files_per_trigger=1))
+    failures = run_many(spark, specs)
+    assert set(failures) == {"f1"}, failures
+    assert "bogus-mode" in failures["f1"]
+    healthy = LakeTable.load(spark, str(tmp_path / "tbl0"))
+    assert healthy.current().count() > 0
+    assert "fence.f0" in healthy.properties
+
+
+def test_run_many_guard_normalizes_roots(spark, tmp_path):
+    from cds_spark.streaming.pipeline import run_many
+
+    root = str(tmp_path / "t")
+    LakeTable.create(spark, root, REPO_SCHEMA, pk=["repo", "path"],
+                     version_cols=["commit", "_offset"], n_buckets=2)
+    mk = lambda r, j: JobSpec(job_id=j, table_root=r,
+                              source_dir=str(tmp_path / "topic"),
+                              checkpoint_dir=str(tmp_path / f"ck-{j}"))
+    # trailing slash
+    with pytest.raises(ValueError, match="distinct table_root"):
+        run_many(spark, [mk(root, "a"), mk(root + "/", "b")])
+    # ${ENV} expansion
+    os.environ["CDS_TEST_ROOT_R5"] = str(tmp_path)
+    try:
+        with pytest.raises(ValueError, match="distinct table_root"):
+            run_many(spark, [mk(root, "a"),
+                             mk("${CDS_TEST_ROOT_R5}/t", "b")])
+    finally:
+        del os.environ["CDS_TEST_ROOT_R5"]
+
+
 def test_validate_invariants(spark, tmp_path):
     t = LakeTable.create(
         spark, str(tmp_path / "val"), REPO_SCHEMA, pk=["repo", "path"],
@@ -1332,40 +1382,65 @@ def test_jdbc_keyset_scan_nonnumeric_pk_falls_back(spark, monkeypatch):
     assert calls[-1]["column"] is None
 
 
-def test_cascade_recovers_half_created_destination(spark, tmp_path):
-    """First cascade run crashed between create() and the bootstrap merge:
-    the empty destination is re-bootstrapped, not wedged."""
+TAIL_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType()),
+    T.StructField("text", T.StringType()),
+    T.StructField("embedding", T.ArrayType(T.FloatType())),
+    T.StructField("ver", T.LongType()),
+])
+
+
+@pytest.mark.parametrize(
+    "tailer", ["cascade_sync", "dedup_sync", "ann_index_sync"])
+def test_tailer_bootstraps_empty_destination_refuses_unfenced_data(
+        spark, tmp_path, monkeypatch, tailer):
+    """The lake-to-lake tailers share one cursor rule
+    (``LakeTable.fence(job_id, tail=True)``): a first run that crashed
+    between create() and its first merge leaves an empty destination,
+    which the next run bootstraps (to the state of an unbroken run); a
+    destination that holds data without the job's fence is refused."""
+    from cds_spark.operators.annindex import ann_index_sync
+    from cds_spark.operators.incdedup import dedup_sync
     from cds_spark.streaming.pipeline import cascade_sync
 
-    src_root, dst_root = str(tmp_path / "hcs"), str(tmp_path / "hcd")
-    t = LakeTable.create(
-        spark, src_root, REPO_SCHEMA, pk=["repo", "path"],
-        version_cols=["commit", "_offset"], n_buckets=4,
-    )
-    feed = change_feed(spark, 300, n_repos=3, paths_per_repo=5, seed=83)
-    rows, _ = events_to_rows(
-        decode_feed(feed, inject={"commit": "commit"}), t.schema, t.pk
-    )
-    t.merge(rows, fence=("h", 0))
-    # simulate the crash: destination created, bootstrap merge never ran
-    LakeTable.create(
-        spark, dst_root, REPO_SCHEMA, pk=["repo", "path"],
-        version_cols=["commit", "_offset"], n_buckets=4,
-    )
-    r = cascade_sync(spark, src_root, dst_root, "hc")
-    assert r["applied"] == "bootstrap"
-    d = LakeTable.load(spark, dst_root)
-    assert d.current().count() == t.current().count()
-    # but a NON-empty foreign table still refuses
-    import pytest as _pytest
-    foreign = str(tmp_path / "hcf")
-    f = LakeTable.create(
-        spark, foreign, REPO_SCHEMA, pk=["repo", "path"],
-        version_cols=["commit", "_offset"], n_buckets=4,
-    )
-    f.merge(rows, fence=("other", 0))
-    with _pytest.raises(ValueError, match="refusing"):
-        cascade_sync(spark, src_root, foreign, "hc")
+    sync, cursor = {
+        "cascade_sync": (cascade_sync, ""),
+        "dedup_sync": (dedup_sync, "sigs"),
+        "ann_index_sync": (ann_index_sync, "vecs"),
+    }[tailer]
+    src = LakeTable.create(spark, str(tmp_path / "src"), TAIL_SCHEMA,
+                           pk=["doc_id"], version_cols=["ver"], n_buckets=4)
+    src.merge(spark.createDataFrame([
+        (i, f"document {i % 4} about bucketed lake tables and their zone "
+            f"maps, revision {i}",
+         [float((i * 7 + j) % 11 - 5) for j in range(64)], 1)
+        for i in range(12)], TAIL_SCHEMA), fence=("up", 1))
+    src = LakeTable.load(spark, src.root)
+
+    half = str(tmp_path / "half")
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before the first merge")
+
+    monkeypatch.setattr(LakeTable, "merge", crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        sync(spark, src.root, half, "j")
+    monkeypatch.undo()
+    assert not LakeTable.load(spark, os.path.join(half, cursor)).manifest["files"]
+    res = sync(spark, src.root, half, "j")
+    assert not res["skipped"] and res["from"] == 0 and res["to"] == src.version
+
+    clean = str(tmp_path / "clean")
+    sync(spark, src.root, clean, "j")
+    got, want = (LakeTable.load(spark, os.path.join(r, cursor))
+                 for r in (half, clean))
+    assert got.fence("j") == want.fence("j") == src.version
+    assert sorted(map(tuple, got.current().collect())) == sorted(
+        map(tuple, want.current().collect())) != []
+
+    # data without this job's fence: refused, not guessed
+    with pytest.raises(ValueError, match="refusing"):
+        sync(spark, src.root, half, "other")
 
 
 def test_schema_evolution_null_first_occurrence_infers_value_type(spark, tmp_path):
@@ -1808,3 +1883,32 @@ def test_cascade_sync_transform_derived_view(spark, tmp_path):
     with pytest.raises(ValueError):
         cascade_sync(spark, src_root, str(tmp_path / "bad"), "tv2",
                      transform=lambda df: df.drop("path"))
+
+
+KV_SCHEMA = T.StructType([
+    T.StructField("k", T.LongType()),
+    T.StructField("v", T.StringType()),
+    T.StructField("ver", T.LongType()),
+])
+
+
+def test_cascade_rejects_transform_dropping_meta_columns(spark, tmp_path):
+    """A --select list that forgets _is_delete must fail LOUDLY at
+    validation, not silently turn upstream deletes into resurrected
+    rows via the meta-default fill."""
+    from cds_spark.streaming.pipeline import cascade_sync
+
+    src_root = str(tmp_path / "src")
+    src = LakeTable.create(spark, src_root, KV_SCHEMA, pk=["k"],
+                           version_cols=["ver"], n_buckets=2,
+                           properties={"merge_mode": "upsert"})
+    src.merge(spark.createDataFrame([(1, "a", 1), (2, "b", 1)], KV_SCHEMA)
+              .withColumn("_is_delete", F.lit(False)))
+
+    def bad_tf(df):
+        keep = [c for c in df.columns if c not in ("_is_delete", "_offset")]
+        return df.select(*keep)
+
+    with pytest.raises(ValueError, match="_is_delete"):
+        cascade_sync(spark, src_root, str(tmp_path / "dst"), "cj",
+                     transform=bad_tf)
