@@ -55,7 +55,6 @@ HEADLINE = [
     "dedup_embedding_lsh",
     "dedup_simhash_signatures",
     "ann_cosine_topk",
-    "ann_cosine_topk_lsh",
     "ann_cosine_topk_lsh_multiprobe",
     "ann_cosine_topk_ivf",
     "text_quality_scores",
@@ -66,7 +65,6 @@ HEADLINE = [
     "text_holdout_split",
     "text_weighted_sample",
     "multimodal_features",
-    "multimodal_features_digest",
     "multimodal_real_features",
     "asof_error_context",
     "event_sessions",

@@ -71,8 +71,7 @@ from cds_spark.lake.table import IS_DELETE, LakeTable, local_frame
 from cds_spark.operators.textdedup import (
     JACCARD_THRESHOLD,
     N_BANDS,
-    N_HASHES,
-    _band_key,
+    _bands_expr,
     jaccard_expr,
     lsh_pairs,
     minhash_exprs,
@@ -114,13 +113,11 @@ def _pair_schema(id_type: T.DataType) -> T.StructType:
 
 
 def _sig_cols() -> list:
-    """(sig_md5, bands) over the mh_* columns: the same MinHash family /
-    banding as the batch operators — incremental and batch discovery MUST
-    agree key-for-key (the equivalence the tests pin)."""
-    bands = F.array(*[_band_key(j) for j in range(N_BANDS)])
-    digest = F.md5(F.concat_ws(
-        ",", *[F.col(f"mh_{j}").cast("string") for j in range(N_HASHES)]))
-    return [digest.alias("sig_md5"), bands.alias("bands")]
+    """(sig_md5, bands) over the ``mh`` signature column: the same MinHash
+    family / banding as the batch operators — incremental and batch
+    discovery MUST agree key-for-key (the equivalence the tests pin)."""
+    digest = F.expr("md5(concat_ws(',', CAST(mh AS ARRAY<STRING>)))")
+    return [digest.alias("sig_md5"), _bands_expr().alias("bands")]
 
 
 def _verify_schema(id_type: T.DataType) -> T.StructType:
@@ -278,8 +275,10 @@ def _full_sync(src, sigs, pairs, identity, key_sel, kcols, text_col,
                 .join(live.select("doc_id", *kcols), "doc_id").persist())
     digest = new_sigs.select("doc_id", "sig_md5")
     ver = F.lit(v2).cast("long").alias("ver")
+    # both verify sides read the shingle sets: one shingling pass, not two
+    ssets = shingle_sets(docs).persist()
     new_pairs = (
-        lsh_pairs(new_sigs, shingle_sets(docs))
+        lsh_pairs(new_sigs, ssets)
         .join(digest.toDF("doc_a", "sig_a"), "doc_a")
         .join(digest.toDF("doc_b", "sig_b"), "doc_b")
         .select("doc_a", "doc_b", "jaccard", "sig_a", "sig_b", ver)
@@ -305,6 +304,7 @@ def _full_sync(src, sigs, pairs, identity, key_sel, kcols, text_col,
     )
     # the cursor advance: fence.{job_id}=v2 commits atomically with this merge
     sstats = sigs.merge(sig_rows, fence=(job_id, v2))
+    ssets.unpersist()
     new_sigs.unpersist()
     live.unpersist()
     return pstats, sstats
@@ -338,14 +338,16 @@ def _delta_sync(src, sigs, pairs, delta, identity, id_type, kcols, text_col,
     # key with a new signature — O(candidates) rows
     partners = []
     if signed:
-        hit = None
-        for j in range(N_BANDS):
-            keys = sorted({r["bands"][j] for r in signed.values()})
-            cond = F.col("bands")[j].isin(*keys)
-            hit = cond if hit is None else hit | cond
+        # band keys are md5 hex digests, safe to inline as SQL text: the
+        # whole key set crosses to the JVM in one command, not one per key
+        hit = " OR ".join(
+            f"bands[{j}] IN ("
+            + ", ".join(f"'{k}'" for k in sorted({r["bands"][j]
+                                                  for r in signed.values()}))
+            + ")" for j in range(N_BANDS))
         partners = (sigs.current()
                     .filter(~F.col("doc_id").isin(*[r["doc_id"] for r in rows])
-                            & hit)
+                            & F.expr(hit))
                     .select("doc_id", *kcols, "sig_md5", "bands")
                     .collect())
 

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from cds_spark.functions import cosine
-from cds_spark.operators.textdedup import _guard_quadratic, _spread
+from cds_spark.operators.textdedup import _array_sql, _guard_quadratic, _spread
 
 N_QUERIES = 5  # vec_id < N_QUERIES are the query vectors
 TOP_K = 10
@@ -118,32 +118,32 @@ PAIR_BANDS = 8
 BITS_PER_BAND = PAIR_BITS // PAIR_BANDS
 
 
-def _dot_expr(vec: F.Column, hp: list[float]) -> F.Column:
+def _dot_expr(vec: F.Column, hp: F.Column) -> F.Column:
     return F.aggregate(
-        F.zip_with(
-            vec,
-            F.array(*[F.lit(x) for x in hp]),
-            lambda a, b: a.cast("double") * b,
-        ),
+        F.zip_with(vec, hp, lambda a, b: a.cast("double") * b),
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
 
 
+def _sign_code(vec: F.Column, planes: F.Column) -> F.Column:
+    """sum_j 2^j * [vec . planes[j] > 0] as a long: one dot product per
+    plane (the left fold of :func:`_dot_expr`), the sign bits folded
+    high bit first. A NULL vector, or one with a NULL component or fewer
+    components than a plane, has NULL dot products, so every bit is 0."""
+    bits = F.transform(
+        planes, lambda hp: F.when(_dot_expr(vec, hp) > 0, 1).otherwise(0))
+    return F.aggregate(F.reverse(bits), F.lit(0).cast("long"),
+                       lambda acc, b: acc * 2 + b)
+
+
 def _band_array_expr(vec: F.Column, dim: int) -> F.Column:
     """array<int> of PAIR_BANDS band keys (BITS_PER_BAND sign bits each)."""
     hps = hyperplanes(dim, PAIR_BITS)
-    bits = [
-        F.when(_dot_expr(vec, hps[j]) > 0, F.lit(1)).otherwise(F.lit(0))
-        for j in range(PAIR_BITS)
-    ]
-    bands = []
-    for b in range(PAIR_BANDS):
-        val = F.lit(0)
-        for i in range(BITS_PER_BAND):
-            val = val + bits[b * BITS_PER_BAND + i] * F.lit(2**i)
-        bands.append(val.cast("int"))
-    return F.array(*bands)
+    bands = [hps[b * BITS_PER_BAND:(b + 1) * BITS_PER_BAND]
+             for b in range(PAIR_BANDS)]
+    return F.transform(F.expr(_array_sql(bands)),
+                       lambda planes: _sign_code(vec, planes)).cast("array<int>")
 
 
 def lsh_near_dup_pairs(emb: DataFrame, threshold: float = NEAR_DUP_COS, dim: int = 64) -> DataFrame:
@@ -224,13 +224,7 @@ def _bucket_expr(vec: F.Column, dim: int) -> F.Column:
     definition (:func:`_dot_expr`) — the fold must stay bit-identical with
     the band/bucket exprs and the SQL oracles for cross-engine sign parity,
     so there is exactly one copy to keep right."""
-    hps = hyperplanes(dim)
-    bucket = F.lit(0).cast("long")
-    for j in range(LSH_BITS):
-        bucket = bucket + (
-            F.when(_dot_expr(vec, hps[j]) > 0, F.lit(2**j).cast("long"))
-            .otherwise(F.lit(0).cast("long")))
-    return bucket
+    return _sign_code(vec, F.expr(_array_sql(hyperplanes(dim))))
 
 
 def lsh_bucketed_topk(
@@ -406,8 +400,7 @@ def _ivf_best_structs(vec, cents: list[tuple[int, list[float]]]):
     compare (the file-wide cross-engine convention)."""
     structs = []
     for cid, cv in cents:
-        lit = F.array(*[F.lit(x) for x in cv])
-        score = F.round(cosine(vec, lit), 6)
+        score = F.round(cosine(vec, F.expr(_array_sql(cv))), 6)
         structs.append(F.struct(score.alias("s"), F.lit(-cid).cast("long").alias("nc")))
     return F.array(*structs)
 

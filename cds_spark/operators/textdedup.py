@@ -130,11 +130,6 @@ def _shingle_hash(s: F.Column) -> F.Column:
     return F.pmod(_stable_hash_expr(s), F.lit(MINHASH_P))
 
 
-def _minhash(j: int, h: F.Column) -> F.Column:
-    """The j-th universal hash of a shingle hash."""
-    return F.pmod(F.lit(MINHASH_A[j]) * h + F.lit(MINHASH_B[j]), F.lit(MINHASH_P))
-
-
 def shingles(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """(doc_id, shingle) — distinct k-char shingles of lower(prefix(text))."""
     return (
@@ -155,14 +150,28 @@ def shingle_set_expr(text: F.Column) -> F.Column:
     )
 
 
+def _array_sql(x) -> str:
+    """SQL text of a constant (nested) list of ints or doubles, so the
+    vector reaches the JVM as ONE ``F.expr`` command: ``F.array(F.lit(x),
+    ...)`` (or ``F.lit`` of a list) costs one py4j command per element.
+    Ints become bigint literals; ``repr`` round-trips each double exactly
+    and the ``D`` suffix keeps it a double, not a decimal."""
+    if isinstance(x, list):
+        return "array(" + ", ".join(_array_sql(v) for v in x) + ")"
+    return f"{x}L" if isinstance(x, int) else f"{x!r}D"
+
+
 def minhash_exprs(sset: F.Column) -> list[F.Column]:
-    """mh_0..mh_{N_HASHES-1} of one row's hashed shingle set: the row-level
-    twin of :func:`minhash_signatures` (the same minima over the same
-    hashes)."""
-    return [
-        F.array_min(F.transform(sset, lambda h: _minhash(j, h))).alias(f"mh_{j}")
-        for j in range(N_HASHES)
-    ]
+    """The signature column ``mh`` (array<bigint>, N_HASHES minima) of one
+    row's hashed shingle set: the row-level twin of
+    :func:`minhash_signatures` (the same minima over the same hashes),
+    the universal hashes zipped from one MINHASH_A and one MINHASH_B
+    literal. NULL minima for a NULL set."""
+    return [F.zip_with(
+        F.expr(_array_sql(MINHASH_A)), F.expr(_array_sql(MINHASH_B)),
+        lambda a, b: F.array_min(F.transform(
+            sset, lambda h: F.pmod(a * h + b, F.lit(MINHASH_P)))),
+    ).alias("mh")]
 
 
 _SHINGLES_SQL = f"""
@@ -218,17 +227,24 @@ WHERE round(len(list_intersect(a.sset, b.sset))::DOUBLE /
 
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:
-    """(doc_id, mh_0..mh_{N_HASHES-1}): universal-hash minima over shingle
-    hashes. Single groupBy with N_HASHES min() aggs — map-side combine makes
-    the shuffle O(docs), not O(shingles)."""
+    """(doc_id, mh): universal-hash minima over shingle hashes, ``mh`` an
+    array<bigint> of N_HASHES. Single groupBy with N_HASHES min() aggs —
+    map-side combine makes the shuffle O(docs), not O(shingles). The aggs
+    are one SQL text, so the constants cross to the JVM in one command."""
     hashed = shingles(docs).select("doc_id", _shingle_hash(F.col("s")).alias("h"))
-    aggs = [F.min(_minhash(j, F.col("h"))).alias(f"mh_{j}") for j in range(N_HASHES)]
-    return hashed.groupBy("doc_id").agg(*aggs)
+    mins = ", ".join(f"min(pmod({a}L * h + {b}L, {MINHASH_P}L))"
+                     for a, b in zip(MINHASH_A, MINHASH_B))
+    return hashed.groupBy("doc_id").agg(F.expr(f"array({mins})").alias("mh"))
 
 
-def _band_key(j: int) -> F.Column:
-    cols = [F.col(f"mh_{i}").cast("string") for i in range(j * ROWS_PER_BAND, (j + 1) * ROWS_PER_BAND)]
-    return F.md5(F.concat_ws(",", *cols))
+def _bands_expr() -> F.Column:
+    """array<string> of the N_BANDS LSH band keys of the ``mh`` column:
+    the md5 of each band's ROWS_PER_BAND minima as comma-joined decimals
+    (the SQL oracle's ``md5(concat_ws(',', ...))``)."""
+    return F.expr(
+        f"transform(sequence(0, {N_BANDS - 1}), j -> md5(concat_ws(',', "
+        f"CAST(slice(mh, j * {ROWS_PER_BAND} + 1, {ROWS_PER_BAND}) "
+        f"AS ARRAY<STRING>))))")
 
 
 def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
@@ -240,16 +256,12 @@ def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
 
 
 def lsh_pairs(sigs: DataFrame, ssets: DataFrame) -> DataFrame:
-    """(doc_a < doc_b, jaccard): the band join of ``sigs`` (doc_id,
-    mh_0..) and the exact verify over ``ssets`` (doc_id, sset) — the pair
+    """(doc_a < doc_b, jaccard): the band join of ``sigs`` (doc_id, mh)
+    and the exact verify over ``ssets`` (doc_id, sset) — the pair
     plan of :func:`minhash_lsh_pairs` and of ``dedup_sync``'s bootstrap /
     refresh, which signs the corpus once and keeps the signatures."""
-    bands = F.array(
-        *[F.struct(F.lit(j).alias("band_id"), _band_key(j).alias("band_key")) for j in range(N_BANDS)]
-    )
-    buckets = sigs.select("doc_id", F.explode(bands).alias("b")).select(
-        F.col("b.band_id").alias("band_id"), F.col("b.band_key").alias("band_key"), "doc_id"
-    )
+    buckets = sigs.select(
+        "doc_id", F.posexplode(_bands_expr()).alias("band_id", "band_key"))
     a = buckets.alias("a")
     b = buckets.alias("b")
     cand = (

@@ -229,19 +229,6 @@ FROM (
 """
 
 
-def q_cdc_keyset_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Keyset-ordered pagination (mysql2clickhouse.go:69-90 `WHERE pk>?
-    ORDER BY pk LIMIT n`): page of the collapsed state after user_id 50."""
-    ch = _changes(spark, sf_dir).select("user_id", "event_id", "ts")
-    last = lww_collapse(ch, ["user_id"], ["ts", "event_id"])
-    return (
-        last.filter(F.col("user_id") > 50)
-        .orderBy("user_id")
-        .limit(25)
-        .select("user_id", F.col("event_id").alias("last_event_id"))
-    )
-
-
 ORACLE_KEYSET = """
 SELECT user_id, event_id AS last_event_id
 FROM (
@@ -253,10 +240,11 @@ ORDER BY user_id LIMIT 25
 
 
 def q_cdc_keyset_page_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same keyset page served THROUGH the lake with zone-map file
-    skipping (mysql2clickhouse.go:69-90 pages the source off MySQL's PK
-    index; `LakeTable.keyset_page` is that read over our manifest's
-    per-file PK bounds): ingest the events feed into a lake table
+    """Keyset-ordered pagination (mysql2clickhouse.go:69-90 `WHERE pk>?
+    ORDER BY pk LIMIT n`): the page of the collapsed state after user_id
+    50, served THROUGH the lake with zone-map file skipping (the reference
+    pages the source off MySQL's PK index; `LakeTable.keyset_page` is that
+    read over our manifest's per-file PK bounds): ingest the events feed into a lake table
     (pk=user_id, version=(ts, event_id)), compact into the pk-sorted
     multi-chunk layout, then page `user_id > 50 LIMIT 25` reading only
     the candidate PK slice — O(page) files, not O(table)."""
@@ -1096,12 +1084,6 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brute_force_topk(load(spark, sf_dir, "embeddings"))
 
 
-def q_ann_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cds_spark.operators.similarity import lsh_bucketed_topk
-
-    return lsh_bucketed_topk(load(spark, sf_dir, "embeddings"))
-
-
 def q_ann_topk_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ANN index maintenance (operators/annindex.py): the
     embeddings arrive as TWO CDC increments — the first delivers 60% with
@@ -1247,10 +1229,12 @@ FROM documents
 
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Arrow-batched mapInPandas feature-extraction path (stub decoder).
-    FULLY oracle-checked since round 3: every output column (including
-    feat_mean, a digest-derived double whose single IEEE divide is
-    bit-identical in Python and DuckDB) is a deterministic function of the
-    payload bytes, so the full Python row hash-matches pure SQL."""
+    FULLY oracle-checked: every output column is a deterministic function
+    of the payload bytes, so the full Python row hash-matches pure SQL —
+    n_bytes / digest / n_frames_sampled prove the Arrow plumbing (batch
+    shape, binary transfer, schema) delivers exactly the source bytes to
+    Python, and feat_mean is a digest-derived double whose single IEEE
+    divide is bit-identical in Python and DuckDB."""
     from cds_spark.operators.multimodal import extract_features, synth_media
 
     feats = extract_features(synth_media(load(spark, sf_dir, "documents")))
@@ -1264,40 +1248,12 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_multimodal_features_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ORACLE-CHECKED slice of the Python feature path: n_bytes /
-    digest / n_frames_sampled are deterministic functions of the payload
-    bytes, so the mapInPandas output is hash-compared against pure SQL —
-    proving the Arrow plumbing (batch shape, binary transfer, schema)
-    delivers exactly the source bytes to Python."""
-    from cds_spark.operators.multimodal import extract_features, synth_media
-
-    feats = extract_features(synth_media(load(spark, sf_dir, "documents")))
-    return feats.select(
-        "media_id",
-        "media_type",
-        "n_bytes",
-        "digest",
-        F.col("n_frames_sampled").cast("long").alias("n_frames_sampled"),
-    )
-
-
 ORACLE_MULTIMODAL_FEATURES = """
 SELECT doc_id AS media_id,
        CASE doc_id % 3 WHEN 0 THEN 'image/png' WHEN 1 THEN 'audio/wav' ELSE 'video/mp4' END AS media_type,
        CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
        sha256(text) AS digest,
        CAST(concat('0x', substr(sha256(text), 1, 8)) AS BIGINT) / 4294967295.0 AS feat_mean,
-       CAST(octet_length(encode(text)) % 7 + 1 AS BIGINT) AS n_frames_sampled
-FROM documents
-"""
-
-
-ORACLE_MULTIMODAL_DIGEST = """
-SELECT doc_id AS media_id,
-       CASE doc_id % 3 WHEN 0 THEN 'image/png' WHEN 1 THEN 'audio/wav' ELSE 'video/mp4' END AS media_type,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-       sha256(text) AS digest,
        CAST(octet_length(encode(text)) % 7 + 1 AS BIGINT) AS n_frames_sampled
 FROM documents
 """
@@ -1465,7 +1421,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "cdc_snapshot_asof": q_cdc_snapshot_asof,
     "cdc_inbatch_collapse": q_cdc_inbatch_collapse,
     "cdc_pk_semi_lookup": q_cdc_pk_semi_lookup,
-    "cdc_keyset_page": q_cdc_keyset_page,
     "cdc_keyset_page_pruned": q_cdc_keyset_page_pruned,
     "cdc_changed_since": q_cdc_changed_since,
     "cdc_json_payload_stats": q_cdc_json_payload_stats,
@@ -1495,7 +1450,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "dedup_embedding_cosine": q_embedding_near_dup,
     "dedup_embedding_lsh": q_embedding_near_dup_lsh,
     "ann_cosine_topk": q_ann_topk,
-    "ann_cosine_topk_lsh": q_ann_topk_lsh,
     "ann_cosine_topk_indexed": q_ann_topk_indexed,
     "ann_cosine_topk_lsh_multiprobe": q_ann_topk_lsh_multiprobe,
     "ann_cosine_topk_ivf": q_ann_topk_ivf,
@@ -1507,7 +1461,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "text_fingerprints": q_fingerprints,
     "multimodal_manifest": q_multimodal_manifest,
     "multimodal_features": q_multimodal_features,
-    "multimodal_features_digest": q_multimodal_features_digest,
     "multimodal_real_features": q_multimodal_real_features,
 }
 
@@ -1521,7 +1474,6 @@ ORACLES: dict[str, str] = {
     "cdc_snapshot_asof": ORACLE_ASOF,
     "cdc_inbatch_collapse": ORACLE_INBATCH,
     "cdc_pk_semi_lookup": ORACLE_SEMI,
-    "cdc_keyset_page": ORACLE_KEYSET,
     "cdc_keyset_page_pruned": ORACLE_KEYSET,
     "cdc_changed_since": ORACLE_CHANGED_SINCE,
     "cdc_json_payload_stats": ORACLE_JSON_STATS,
@@ -1560,7 +1512,6 @@ def _training_oracles() -> dict[str, str]:
         "dedup_embedding_cosine": similarity.NEAR_DUP_SQL,
         "dedup_embedding_lsh": similarity.lsh_near_dup_pairs_sql(),
         "ann_cosine_topk": similarity.BRUTE_TOPK_SQL,
-        "ann_cosine_topk_lsh": similarity.lsh_bucketed_topk_sql(),
         # the maintained index converges to the batch bucketing by
         # construction (same deterministic hyperplanes); the oracle is the
         # SAME batch SQL, blind to the add/bucket-move/delete history
@@ -1579,7 +1530,6 @@ def _training_oracles() -> dict[str, str]:
         "text_weighted_sample": textstats.WEIGHTED_SAMPLE_SQL,
         "multimodal_manifest": ORACLE_MULTIMODAL,
         "multimodal_features": ORACLE_MULTIMODAL_FEATURES,
-        "multimodal_features_digest": ORACLE_MULTIMODAL_DIGEST,
         "multimodal_real_features": ORACLE_MULTIMODAL_REAL,
     }
 

@@ -37,3 +37,31 @@ def count_jobs(spark):
         return sum(1 for i in ids if i >= start), result
 
     return run
+
+
+@pytest.fixture
+def count_gateway_calls(spark):
+    """``count_gateway_calls(fn) -> (commands, fn())``: the py4j commands
+    ``fn`` sent to the JVM. Object-release commands (py4j's ``m``
+    memory commands, sent when Python proxies are garbage-collected) are
+    not counted: when they go out depends on GC timing, not on ``fn``."""
+    client = spark.sparkContext._gateway._gateway_client
+
+    def run(fn):
+        n = 0
+        send = client.send_command
+
+        def counted(command, *args, **kwargs):
+            nonlocal n
+            if not command.startswith("m\n"):
+                n += 1
+            return send(command, *args, **kwargs)
+
+        client.send_command = counted
+        try:
+            result = fn()
+        finally:
+            client.send_command = send
+        return n, result
+
+    return run

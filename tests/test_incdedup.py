@@ -360,11 +360,10 @@ def test_dedup_sync_half_created_dst_recovers(spark, tmp_path):
 DEDUP_TICK_JOBS = 8
 
 
-def test_dedup_tick_job_budget(spark, tmp_path, count_jobs):
-    """A 5 % change (2 of 40 docs: an update that forms a new near-dup
-    pair with an unchanged doc, and a delete) runs within the tick's job
-    budget — an extra Spark action in the tick fails this — and still
-    equals the batch result."""
+def _tick_corpus(spark, tmp_path):
+    """A 40-doc corpus with its dedup index built, then a 5 % change (2
+    docs: an update that forms a new near-dup pair with an unchanged doc,
+    and a delete) merged into the source: (src, dst) ready for one tick."""
     src = _mk_src(spark, tmp_path)
     dst = tmp_path / "dd"
     words = BASE_B.split()
@@ -376,19 +375,45 @@ def test_dedup_tick_job_budget(spark, tmp_path, count_jobs):
     src = LakeTable.load(spark, src.root)
     src.merge(_rows(spark, [("d03", " ".join(words) + " tail", 2)],
                     deletes=[("d17", 2)]), fence=("ing", 2))
+    return src, dst
+
+
+def test_dedup_tick_job_budget(spark, tmp_path, count_jobs):
+    """A 5 % change tick runs within the tick's job budget — an extra
+    Spark action in the tick fails this — and still equals the batch
+    result."""
+    src, dst = _tick_corpus(spark, tmp_path)
     n, res = count_jobs(lambda: dedup_sync(spark, src.root, str(dst), "j"))
     assert not res["skipped"] and res["from"] > 0 and res["pairs_written"] > 0
     assert n <= DEDUP_TICK_JOBS, n
     assert _live(spark, dst) == _batch(src)
 
 
+#: py4j commands of the same tick (object releases not counted): planning
+#: the delta, partner and verify reads and the two merges. An expression
+#: builder that sends a command per constant (the MinHash coefficients,
+#: the 32 per-column casts of the signature) or PySpark's per-call
+#: call-site capture multiplies this: 8 758 with both. Measured 2 027 -
+#: 2 039; the spread depends on what ran earlier in the session.
+DEDUP_TICK_GATEWAY_CALLS = 2060
+
+
+def test_dedup_tick_gateway_budget(spark, tmp_path, count_gateway_calls):
+    """The tick's driver-to-JVM traffic stays within its budget."""
+    src, dst = _tick_corpus(spark, tmp_path)
+    n, res = count_gateway_calls(
+        lambda: dedup_sync(spark, src.root, str(dst), "j"))
+    assert not res["skipped"] and res["pairs_written"] > 0
+    assert n <= DEDUP_TICK_GATEWAY_CALLS, n
+
+
 #: Spark jobs of a dedup bootstrap on a small corpus, and of the full
 #: refresh that follows a purge (it also reads the sigs table to retire
 #: the purged doc): the batch plan's shuffle and broadcast stages (the
-#: corpus signed once, shingle sets, band join, verify, digest joins),
-#: then one write per merge
-DEDUP_BOOTSTRAP_JOBS = 23
-DEDUP_REFRESH_JOBS = 26
+#: corpus signed once, shingle sets persisted once for both verify
+#: sides, band join, verify, digest joins), then one write per merge
+DEDUP_BOOTSTRAP_JOBS = 21
+DEDUP_REFRESH_JOBS = 24
 
 
 def test_dedup_bootstrap_and_refresh_job_budget(spark, tmp_path, count_jobs):

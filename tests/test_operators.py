@@ -76,23 +76,108 @@ def test_row_level_twins_equal_batch_shingle_sets_and_minhashes(spark):
     import pyspark.sql.functions as F
 
     from cds_spark.operators.textdedup import (
-        N_HASHES, minhash_exprs, minhash_signatures, shingle_set_expr,
-        shingle_sets)
+        minhash_exprs, minhash_signatures, shingle_set_expr, shingle_sets)
 
     docs = _docs(spark).limit(60).select("doc_id", "text").unionByName(
         spark.createDataFrame([(-1, "abc"), (-2, None), (-3, "ÀÉÎ Õü ÀÉÎ Õü")],
                               "doc_id long, text string"))
     batch_sets = {r.doc_id: sorted(r.sset) for r in shingle_sets(docs).collect()}
-    batch_mh = {r.doc_id: tuple(r[f"mh_{j}"] for j in range(N_HASHES))
-                for r in minhash_signatures(docs).collect()}
+    batch_mh = {r.doc_id: r.mh for r in minhash_signatures(docs).collect()}
     rows = (docs.select("doc_id", shingle_set_expr(F.col("text")).alias("sset"))
             .select("doc_id", "sset", *minhash_exprs(F.col("sset")))
             .collect())
     row_sets = {r.doc_id: sorted(r.sset) for r in rows if r.sset is not None}
-    row_mh = {r.doc_id: tuple(r[f"mh_{j}"] for j in range(N_HASHES))
-              for r in rows if r.sset is not None}
+    row_mh = {r.doc_id: r.mh for r in rows if r.sset is not None}
     assert row_sets == batch_sets and -1 not in row_sets and -2 not in row_sets
     assert row_mh == batch_mh
+
+
+def test_lsh_bucket_and_band_builders_match_numpy_fold(spark):
+    """``_bucket_expr`` and ``_band_array_expr`` against an independent
+    float64 left fold over ``hyperplanes(dim)``: bit j is the sign of the
+    j-th dot product, weighted 2^j within the bucket (LSH_BITS planes) or
+    within its band (PAIR_BITS planes, BITS_PER_BAND per band). A zero
+    vector, a NULL vector, a NULL component and a 63-element vector have
+    no positive dot product, so every bit is 0."""
+    from functools import reduce
+
+    import numpy as np
+
+    from cds_spark.operators.similarity import (
+        BITS_PER_BAND, LSH_BITS, PAIR_BANDS, PAIR_BITS, _band_array_expr,
+        _bucket_expr, hyperplanes)
+
+    dim = 64
+    rng = np.random.default_rng(11)
+    vecs = {i: [float(x) for x in rng.standard_normal(dim).astype(np.float32)]
+            for i in range(40)}
+    vecs[40] = [0.0] * dim
+    vecs[41] = None
+    vecs[42] = vecs[0][:7] + [None] + vecs[0][8:]
+    vecs[43] = vecs[1][:dim - 1]
+
+    def bits(v, planes):
+        if v is None or None in v or len(v) != dim:
+            return [0] * len(planes)
+        dots = [reduce(lambda acc, xc: acc + np.float64(xc[0]) * np.float64(xc[1]),
+                       zip(v, hp), np.float64(0.0)) for hp in planes]
+        return [int(d > 0) for d in dots]
+
+    def weigh(bs):
+        return sum(b << j for j, b in enumerate(bs))
+
+    want = {}
+    for i, v in vecs.items():
+        pb = bits(v, hyperplanes(dim, PAIR_BITS))
+        want[i] = (weigh(bits(v, hyperplanes(dim, LSH_BITS))),
+                   [weigh(pb[b * BITS_PER_BAND:(b + 1) * BITS_PER_BAND])
+                    for b in range(PAIR_BANDS)])
+    df = spark.createDataFrame(list(vecs.items()), "id long, v array<float>")
+    got = {r.id: (r.bucket, list(r.bands)) for r in df.select(
+        "id", _bucket_expr(F.col("v"), dim).alias("bucket"),
+        _band_array_expr(F.col("v"), dim).alias("bands")).collect()}
+    assert got == want
+    assert len({b for b, _ in want.values()}) > 10
+    assert all(want[i] == (0, [0] * PAIR_BANDS) for i in (40, 41, 42, 43))
+
+
+def test_minhash_signature_builders_match_pure_python(spark):
+    """``minhash_exprs`` + the dedup index's ``_sig_cols`` (sig_md5 and
+    the band keys) against pure Python: shingles hashed with hashlib.md5,
+    the minima of (a * h + b) mod p over MINHASH_A / MINHASH_B /
+    MINHASH_P, and the md5 of the comma-joined decimal minima (all of
+    them for the digest, each band's ROWS_PER_BAND for a band key). A NULL
+    shingle set digests the empty string."""
+    from cds_spark.operators.incdedup import _sig_cols
+    from cds_spark.operators.textdedup import (
+        MINHASH_A, MINHASH_B, MINHASH_P, N_BANDS, PREFIX, ROWS_PER_BAND,
+        SHINGLE_K, minhash_exprs, shingle_set_expr)
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    texts = {1: "The quick brown fox jumps over the lazy dog",
+             2: "the quick brown fox jumps over the lazy dog!",
+             3: "x" * 300 + " tail beyond the shingle prefix",
+             4: "abcde",
+             5: "abc"}
+    want = {}
+    for d, text in texts.items():
+        t = text.lower()[:PREFIX]
+        sset = {int(md5(t[i:i + SHINGLE_K])[:15], 16) % MINHASH_P
+                for i in range(len(t) - SHINGLE_K + 1)}
+        mh = [str(min((a * h + b) % MINHASH_P for h in sset))
+              for a, b in zip(MINHASH_A, MINHASH_B)] if sset else []
+        want[d] = (md5(",".join(mh)),
+                   [md5(",".join(mh[j * ROWS_PER_BAND:(j + 1) * ROWS_PER_BAND]))
+                    for j in range(N_BANDS)])
+    df = spark.createDataFrame(list(texts.items()), "id long, text string")
+    got = {r.id: (r.sig_md5, list(r.bands)) for r in (
+        df.select("id", shingle_set_expr(F.col("text")).alias("sset"))
+        .select("id", *minhash_exprs(F.col("sset")))
+        .select("id", *_sig_cols()).collect())}
+    assert got == want
+    assert want[5] == (md5(""), [md5("")] * N_BANDS)
 
 
 def test_brute_force_topk_matches_numpy(spark):
@@ -823,6 +908,27 @@ def test_multiprobe_lsh_recall_on_planted_neighbors(spark):
         qv, nv = vecs[r.query_id], vecs[r.neighbor_id]
         e = float(np.dot(qv, nv) / (np.linalg.norm(qv) * np.linalg.norm(nv)))
         assert math.isclose(r.cos_sim, round(e, 6), abs_tol=2e-6)
+
+
+def test_multiprobe_topk_dominates_home_bucket_topk(spark):
+    """Multi-probe searches the home bucket plus its Hamming-1 ball, so
+    each query's multi-probe top-k dominates the home-bucket top-k: every
+    home-bucket answer is returned by multi-probe with the same cosine, or
+    ranks below multi-probe's k-th answer (cos desc, neighbor asc). This
+    is why the single-bucket variant needs no oracle row of its own."""
+    from cds_spark.operators.similarity import (
+        TOP_K, lsh_bucketed_topk, lsh_bucketed_topk_multiprobe)
+
+    emb = _emb(spark)
+    home = lsh_bucketed_topk(emb).collect()
+    multi: dict = {}
+    for r in lsh_bucketed_topk_multiprobe(emb).collect():
+        multi.setdefault(r.query_id, []).append((-r.cos_sim, r.neighbor_id))
+    assert home
+    for r in home:
+        ranked = sorted(multi[r.query_id])
+        key = (-r.cos_sim, r.neighbor_id)
+        assert key in ranked or (len(ranked) == TOP_K and ranked[-1] < key), r
 
 
 def test_decode_canal_batch_same_pk_rows_stay_lww_distinct(spark):
