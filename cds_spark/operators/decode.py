@@ -45,25 +45,27 @@ CANAL_BATCH_STRIDE = 4096
 NORMALIZED_FIELDS = ["op", "data", "exists", "_partition", "_offset"]
 
 # op whitelists — canalsyncmodel.go:71-88, connectormongomodel.go:74-101,
-# debeziumsyncmodel.go:150-151 ('r' snapshot reads dropped)
-_OP_NORMALIZE = {
-    "insert": "c",
-    "INSERT": "c",
-    "replace": "c",
-    "create": "c",
-    "c": "c",
-    "update": "u",
-    "UPDATE": "u",
-    "u": "u",
-    "delete": "d",
-    "DELETE": "d",
-    "d": "d",
-}
+# debeziumsyncmodel.go:150-151 ('r' snapshot reads dropped). ONE SQL map
+# literal: F.create_map of F.lit pairs costs a py4j command per key and value
+_OP_MAP_SQL = (
+    "map('insert', 'c', 'INSERT', 'c', 'replace', 'c', 'create', 'c', 'c', 'c',"
+    " 'update', 'u', 'UPDATE', 'u', 'u', 'u', 'delete', 'd', 'DELETE', 'd', 'd', 'd')"
+)
 
 
 def _norm_op(col):
-    mapping = F.create_map(*[F.lit(x) for kv in _OP_NORMALIZE.items() for x in kv])
-    return mapping[col]
+    return F.expr(_OP_MAP_SQL)[col]
+
+
+def pk_valid(parsed: F.Column, pk_values: Sequence[F.Column]) -> F.Column:
+    """The one DLQ split rule (events_to_rows, decode_feed_checked, the
+    pipeline's batch summary), on the RAW wire values before coercion
+    (parse.go:141-144): the payload parsed, and every PK value is
+    present, non-null and non-empty (an absent key reads as NULL)."""
+    ok = parsed
+    for v in pk_values:
+        ok = ok & v.isNotNull() & (v != "")
+    return ok
 
 
 def _materialize(df: DataFrame, keep: Sequence[str], **exprs) -> DataFrame:
@@ -416,7 +418,21 @@ def decode_feed(
     return _finish(p, partition_col, offset_col, keep_cols)
 
 
-def decode_feed_rows(
+def split_dead_letters(checked: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(rows, dlq)`` of typed rows + ``_raw`` + the pk_valid flag
+    ``__keep``: the valid rows without ``_raw``, the dead letters with it."""
+    dlq = checked.filter(~F.col("__keep")).drop("__keep")
+    good = checked.filter(F.col("__keep")).drop("__keep", "_raw")
+    return good, dlq
+
+
+def decode_feed_rows(df: DataFrame, table_schema: T.StructType,
+                     pk: Sequence[str], **kw) -> tuple[DataFrame, DataFrame]:
+    """:func:`decode_feed_checked` split into ``(rows, dlq)``."""
+    return split_dead_letters(decode_feed_checked(df, table_schema, pk, **kw))
+
+
+def decode_feed_checked(
     df: DataFrame,
     table_schema: T.StructType,
     pk: Sequence[str],
@@ -425,10 +441,11 @@ def decode_feed_rows(
     partition_col: str | None = "partition",
     offset_col: str | None = "offset",
     inject: dict[str, str] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Fused feed decode -> typed rows: the row-LWW replay hot path.
+) -> DataFrame:
+    """Fused feed decode -> typed rows, unsplit (split_dead_letters), so one
+    persist feeds the rows, the dead letters and the pipeline's summary.
 
-    Semantically equivalent to ``decode_feed(...)`` + ``events_to_rows(...)``
+    Split, semantically equivalent to ``decode_feed`` + ``events_to_rows``
     for row-mode merges (asserted on adversarial payloads by
     test_fused_decode_matches_two_stage) but ~2.8x faster at 2M events:
     one ``from_json`` straight into ``struct<col:string, ...>`` instead of
@@ -453,7 +470,7 @@ def decode_feed_rows(
     if offset_col is None:
         raise ValueError("decode requires offset_col (stable unique per event)")
     if not pk:
-        raise ValueError("decode_feed_rows requires a non-empty pk")
+        raise ValueError("decode_feed_checked requires a non-empty pk")
     inject = inject or {}
     unknown = set(inject) - {f.name for f in table_schema.fields}
     if unknown:
@@ -500,12 +517,9 @@ def decode_feed_rows(
         .alias(f.name)
         for f in table_schema.fields
     ]
-    # PK presence on the RAW wire values (parse.go:141-144), pre-coercion
-    keep = F.lit(True)
-    for k in pk:
-        v = _rawv(k)
-        keep = keep & v.isNotNull() & (v != "")
-    full = staged.select(
+    # PK presence on the RAW wire values, pre-coercion
+    keep = pk_valid(F.col("__j").isNotNull(), [_rawv(k) for k in pk])
+    return staged.select(
         *sel,
         F.col("op").alias("_op"),
         (F.col("op") == "d").alias("_is_delete"),
@@ -514,9 +528,6 @@ def decode_feed_rows(
         keep.alias("__keep"),
         F.col("_raw"),
     )
-    dlq = full.filter(~F.col("__keep")).drop("__keep")
-    good = full.filter(F.col("__keep")).drop("__keep", "_raw")
-    return good, dlq
 
 
 # ---------------------------------------------------------------------------
@@ -584,20 +595,11 @@ def events_to_rows(
         .alias(f.name)
         for i, f in enumerate(fields)
     ]
-    # PK presence is checked on the RAW event values (the reference tests
-    # the wire event, parse.go:141-144, not the coerced row) — also keeps
-    # the split filter to O(1) struct-field reads instead of re-running
-    # the coercion trees inside the predicate
+    # PK presence on the RAW event values (pk_valid) — also keeps the
+    # split filter to O(1) struct-field reads instead of re-running the
+    # coercion trees inside the predicate
     idx = {f.name: i for i, f in enumerate(fields)}
-    keep = F.coalesce(F.col("__e.ok"), F.lit(False))
-    for k in pk:
-        i = idx[k]
-        keep = (
-            keep
-            & F.coalesce(F.col(f"__e.h{i}"), F.lit(False))
-            & F.col(f"__e.v{i}").isNotNull()
-            & (F.col(f"__e.v{i}") != "")
-        )
+    keep = pk_valid(F.col("__e.ok"), [F.col(f"__e.v{idx[k]}") for k in pk])
     full = staged.select(
         *sel,
         F.col("op").alias("_op"),
@@ -607,6 +609,4 @@ def events_to_rows(
         keep.alias("__keep"),
         F.col("_raw"),
     )
-    dlq = full.filter(~F.col("__keep")).drop("__keep")
-    good = full.filter(F.col("__keep")).drop("__keep", "_raw")
-    return good, dlq
+    return split_dead_letters(full)

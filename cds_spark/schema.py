@@ -170,15 +170,17 @@ def lenient_double(c: Column) -> Column:
     return F.coalesce(c.try_cast("double"), ext.try_cast("double"), F.lit(0.0))
 
 
-#: timestamp_millis multiplies ms -> micros with Math.multiplyExact: a
-#: garbage numeric beyond this overflows long and throws regardless of
-#: ANSI mode. Beyond the guard the value falls through to the epoch
-#: fallback (never-fail, debeziumsyncdatatype.go:156-170).
-_MS_ABS_MAX = (1 << 63) // 1000 - 1
+#: epoch seconds of 0001-01-02 .. 9999-12-31 UTC, the range Python's datetime
+#: holds: a wider Spark timestamp raises on every PySpark read, so a garbage
+#: epoch number beyond it takes the epoch fallback (never-fail,
+#: debeziumsyncdatatype.go:156-170); in ms it also keeps timestamp_millis'
+#: micros multiplyExact, which throws even off ANSI, from overflowing.
+_EPOCH_S_MIN, _EPOCH_S_MAX = -62135510400, 253402214400
 
 
 def _safe_ms(num: Column) -> Column:
-    return F.when(F.abs(num) <= F.lit(_MS_ABS_MAX), F.timestamp_millis(num))
+    return F.when(num.between(_EPOCH_S_MIN * 1000, _EPOCH_S_MAX * 1000),
+                  F.timestamp_millis(num))
 
 
 def lenient_timestamp(c: Column) -> Column:
@@ -202,7 +204,7 @@ def lenient_timestamp(c: Column) -> Column:
     epoch_like = F.when(
         num.isNotNull(),
         F.when(F.abs(num) >= F.lit(10**12), _safe_ms(num)).otherwise(
-            F.timestamp_seconds(num)
+            F.when(num.between(_EPOCH_S_MIN, _EPOCH_S_MAX), F.timestamp_seconds(num))
         ),
     )
     return F.coalesce(*candidates, date_ts, epoch_like, F.lit(EPOCH).cast("timestamp"))

@@ -8,12 +8,15 @@ Reference DAG (cmd/rtu, SURVEY.md §3.1)::
 Spark-first realization::
 
     file/kafka readStream -> foreachBatch(
-        decode (from_json, JVM)               # parse.go:109-134
-        -> DLQ split (missing PK/unparseable) # kfks.go:53-58, parse.go:141-144
-        -> schema evolution (diff + ALTER)    # parse.go:169-265
+        decode (from_json, JVM), persisted    # parse.go:109-134
+        -> batch summary, ONE aggregation:
+           schema evolution (diff + ALTER)    # parse.go:169-265
+           per-partition offsets (lineage)
+           dead-letter count (missing PK / unparseable, parse.go:141-144)
+        -> DLQ write, when non-empty          # kfks.go:53-58
         -> in-batch LWW collapse              # parse.go:268-306
         -> LakeTable.merge (bucketed upsert, offset-fenced)  # ckgroup exec
-        -> lineage metrics append             # per-partition counts
+        -> lineage record append
     ) with checkpointLocation
 
 Offsets are committed by Spark's checkpoint only after foreachBatch returns
@@ -33,7 +36,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cds_spark.lake.table import LakeTable
-from cds_spark.operators.decode import decode_feed, decode_feed_rows, events_to_rows
+from cds_spark.operators.decode import (decode_feed, decode_feed_checked, events_to_rows,
+                                        pk_valid, split_dead_letters)
 from cds_spark.schema import infer_json_type
 from cds_spark.sources.feed import FEED_SCHEMA
 
@@ -105,60 +109,79 @@ class JobSpec:
     auto_rebucket_groups_per_tick: int = 8
 
 
+def _batch_summary(staged: DataFrame) -> tuple[dict, list[dict], int]:
+    """ONE aggregation over a persisted decode -> ``(samples, partitions,
+    n_dlq)``: a sample payload per unknown key, the per-partition
+    ``n_events`` / ``min_offset`` / ``max_offset`` of PK-valid events
+    (sorted; a partition of dead letters only is absent), the DLQ count.
+
+    ``staged`` has a row per event and unknown key ``k`` (NULL for none):
+    ``_partition``, ``_offset``, ``_ok`` (pk_valid), ``_first`` (only the
+    event's first row counts) and ``_sample``. The groups are a handful,
+    so it runs in ONE task (coalesce(1): no shuffle, so no map-stage job);
+    the decode is not serialised, as adaptive execution materialises the
+    persisted input first, in its own parallel job."""
+    groups = staged.coalesce(1).groupBy("_partition", "k").agg(*[F.expr(e) for e in (
+        "count_if(_first AND _ok) AS n_events",
+        "min(IF(_first AND _ok, _offset, NULL)) AS min_offset",
+        "max(IF(_first AND _ok, _offset, NULL)) AS max_offset",
+        "count_if(_first AND NOT _ok) AS n_dlq",
+        "first(_sample, true) AS sample",
+    )]).collect()
+    samples: dict = {}
+    parts: dict = {}
+    for r in groups:
+        if r["k"] is not None and samples.get(r["k"]) is None:
+            samples[r["k"]] = r["sample"]
+        if r["n_events"]:
+            parts.setdefault(r["_partition"], []).append(r)
+    partitions = [
+        {"_partition": p, "n_events": sum(r["n_events"] for r in rs),
+         "min_offset": min(r["min_offset"] for r in rs),
+         "max_offset": max(r["max_offset"] for r in rs)}
+        for p, rs in sorted(parts.items(), key=lambda kv: (kv[0] is None, kv[0] or 0))
+    ]
+    return samples, partitions, sum(r["n_dlq"] for r in groups)
+
+
 def discover_and_evolve(
     table: LakeTable, events: DataFrame, payload_col: str = "payload"
-) -> list[str]:
-    """Per-batch schema evolution (parse.go:169-265), FUSED with decode:
-    new keys come from the already-parsed ``data`` map of the decoded
-    events (decode_feed(keep_cols=[payload])), not a second
-    json_object_keys scan of every payload — previously each micro-batch
-    paid an extra decode-weight pass plus one ``first()`` job per new
-    column just to find columns that are rare by construction.
+) -> tuple[list[str], list[dict], int]:
+    """Per-batch schema evolution (parse.go:169-265) and the batch's one
+    summary, ``(added columns, lineage partitions, n_dlq)``, from ONE
+    _batch_summary over the persisted decode_feed(keep_cols=[payload]).
 
-    ONE job total: unknown-key explode -> groupBy(key).first(payload);
-    types inferred driver-side from the sampled raw payload (JSON value
-    typing, parse.go:190-207: int->long, fraction->double, str->string,
-    nested->json string). ALTER ADD COLUMN, return added names."""
+    Each unknown key of ``data`` is typed from a raw payload whose VALUE
+    for it is non-null (parse.go:190-207: int->long, fraction->double,
+    str->string, nested->json string): a first JSON null would type it
+    string forever (ALTER ADD is sticky). Evolution never adds a PK
+    column, so the PK-valid flag is final before the ALTER."""
     import pyspark.sql.types as T
 
     known = [f.name for f in table.schema.fields]
-    unknown_keys = F.filter(
-        F.map_keys(F.col("data")), lambda k: ~k.isin(*known)
-    )
-    samples = (
-        events.select(
-            F.col(payload_col).alias("_p"),
-            F.col("data").alias("_d"),
-            unknown_keys.alias("_ks"),
-        )
-        .filter(F.size("_ks") > 0)
-        .select("_p", "_d", F.explode("_ks").alias("k"))
-        .groupBy("k")
-        # sample a payload whose VALUE for k is non-null — the first
-        # occurrence may carry JSON null, which would mis-infer the new
-        # column as string forever (ALTER ADD is sticky)
-        .agg(
-            F.first(
-                F.when(F.element_at(F.col("_d"), F.col("k")).isNotNull(),
-                       F.col("_p")),
-                ignorenulls=True,
-            ).alias("sample")
-        )
-        .collect()
-    )
-    if not samples:
-        return []
+    data = F.col("data")
+    staged = events.select(
+        "_partition", "_offset",
+        pk_valid(data.isNotNull(), [data[k] for k in table.pk]).alias("_ok"),
+        F.col(payload_col).alias("_p"),
+        data.alias("_d"),
+        F.posexplode_outer(
+            F.filter(F.map_keys(data), lambda k: ~k.isin(*known))
+        ).alias("_pos", "k"),
+    ).selectExpr("_partition", "_offset", "_ok", "k", "coalesce(_pos = 0, true) AS _first",
+                 "IF(element_at(_d, k) IS NOT NULL, _p, NULL) AS _sample")
+    samples, partitions, n_dlq = _batch_summary(staged)
     fields = []
-    for r in sorted(samples, key=lambda r: r["k"]):
+    for k in sorted(samples):
         dt = T.StringType()
-        if r["sample"] is not None:
+        if samples[k] is not None:
             try:
-                dt = infer_json_type(json.loads(r["sample"]).get(r["k"]))
+                dt = infer_json_type(json.loads(samples[k]).get(k))
             except (ValueError, TypeError):
                 pass
-        fields.append(T.StructField(r["k"], dt, True))
+        fields.append(T.StructField(k, dt, True))
     table.alter_add_columns(fields)
-    return [f.name for f in fields]
+    return [f.name for f in fields], partitions, n_dlq
 
 
 def parse_kafka_envelope(raw: DataFrame) -> DataFrame:
@@ -219,66 +242,41 @@ class IncrementalSync:
             rec = {"batch_id": batch_id, "skipped": True, "ts": time.time()}
             self._append_lineage(rec)
             return rec
-        # Two decode shapes, same semantics (equivalence-tested):
-        # - evolve_schema on: map-form decode, persisted so the evolution
-        #   probe, lineage agg, DLQ split and merge all reuse one parse
-        #   (micro-batches are bounded by maxFilesPerTrigger /
-        #   maxOffsetsPerTrigger, so the cache is small);
-        # - evolve_schema off: the fused struct-parse fast path
-        #   (decode_feed_rows, ~2.8x cheaper) — no unknown-key discovery
-        #   needed, so nothing ever looks at the map form.
-        events = None
+        # Two decode shapes, same semantics (equivalence-tested), each
+        # persisted ONCE (micro-batches are bounded by maxFilesPerTrigger /
+        # maxOffsetsPerTrigger): the batch summary, the DLQ write and the
+        # merge read the cache.
+        # - evolve_schema on: the map form, with the raw payload riding
+        #   along (keep_cols) so unknown keys can be typed;
+        # - evolve_schema off: the fused struct parse (~2.8x cheaper).
         if self.spec.evolve_schema:
-            # the raw payload rides along (keep_cols) so the evolution
-            # probe can sample types for unknown keys
-            events = decode_feed(
+            cached = decode_feed(
                 batch, inject=self.spec.version_inject, keep_cols=("payload",)
             ).persist()
-        jvm_cached: list = []
+        else:
+            cached = decode_feed_checked(
+                batch, table.schema, table.pk, inject=self.spec.version_inject
+            ).persist()
         try:
-            if events is not None:
-                added = discover_and_evolve(table, events)
-                rows, dlq = events_to_rows(events, table.schema, table.pk)
+            if self.spec.evolve_schema:
+                added, lineage_rows, n_dlq = discover_and_evolve(table, cached)
+                rows, dlq = events_to_rows(cached, table.schema, table.pk)
             else:
                 added = []
-                rows, dlq = decode_feed_rows(
-                    batch, table.schema, table.pk, inject=self.spec.version_inject
-                )
-                # same invariant as the evolve branch: the fused
-                # parse feeds the lineage agg, the DLQ count AND the
-                # merge — without a persist the from_json re-runs per
-                # action, eroding the path's whole speed advantage
-                rows = rows.persist()
-                jvm_cached.append(rows)
-                if self.spec.dlq_dir:
-                    dlq = dlq.persist()
-                    jvm_cached.append(dlq)
-            # per-partition lineage BEFORE merge collapses rows (one small agg)
-            lineage_rows = [
-                r.asDict()
-                for r in rows.groupBy("_partition")
-                .agg(
-                    F.count("*").alias("n_events"),
-                    F.min("_offset").alias("min_offset"),
-                    F.max("_offset").alias("max_offset"),
-                )
-                .collect()
-            ]
-            n_dlq = 0
-            if self.spec.dlq_dir:
-                dlq_out = dlq.withColumn("_batch_id", F.lit(batch_id)).persist()
-                n_dlq = dlq_out.count()
-                if n_dlq:
-                    dlq_out.write.mode("append").parquet(self.spec.dlq_dir)
-                dlq_out.unpersist()
+                _, lineage_rows, n_dlq = _batch_summary(cached.selectExpr(
+                    "_partition", "_offset", "__keep AS _ok", "true AS _first",
+                    "CAST(NULL AS string) AS k", "CAST(NULL AS string) AS _sample"))
+                rows, dlq = split_dead_letters(cached)
+            # the dead letters are durable before the merge's fence commit:
+            # a crash between the two cannot lose them
+            if n_dlq and self.spec.dlq_dir:
+                dlq.withColumn("_batch_id", F.lit(batch_id)).write.mode(
+                    "append").parquet(self.spec.dlq_dir)
             stats = table.merge(
                 rows, fence=(self.spec.job_id, batch_id), mode=self.spec.merge_mode
             )
         finally:
-            if events is not None:
-                events.unpersist()
-            for df in jvm_cached:
-                df.unpersist()
+            cached.unpersist()
         maintained: dict | None = None
         every = self.spec.maintenance_every_batches
         if every and not stats.skipped and (batch_id + 1) % every == 0:

@@ -8,7 +8,7 @@ import random
 
 import pyspark.sql.types as T
 from pyspark.sql import functions as F
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from cds_spark.schema import is_widening, widen
 
@@ -422,6 +422,9 @@ def test_deltalog_random_commit_sequences_materialize_exactly(
                          '{"$date": {"$numberLong": "-99999999999999999"}}']),
     ),
     min_size=1, max_size=60))
+# epoch numbers Spark turns into timestamps outside Python's years 1..9999
+@example(["-70000000000", "300000000000", "999999999999999",
+          '{"$date": 999999999999999}'])
 def test_coerce_never_raises_on_arbitrary_strings(spark, values):
     """The never-fail contract, fuzzed: coercing ARBITRARY strings to every
     numeric/temporal/bool target must never throw (Spark 4 ANSI mode made

@@ -3,6 +3,8 @@ readers and concurrent ingest consistent throughout — the operation a
 sharded ClickHouse cluster cannot do online (resharding
 pkg/ckgroup/ckgroup.go:12-47 is manual copy + cutover)."""
 
+import json
+import os
 import sys
 from pathlib import Path
 
@@ -288,3 +290,191 @@ def test_stats_over_cap_is_per_modulus_mid_rebucket(spark, tmp_path):
     st = t3.stats()
     assert st["n_over_cap_buckets"] == 0, st
     assert "rebucket_suggested_n" not in st, st
+
+
+def _kv_table(spark, tmp_path, name, **props):
+    schema = T.StructType([
+        T.StructField("k", T.LongType(), False),
+        T.StructField("v", T.StringType()),
+        T.StructField("ver", T.LongType()),
+    ])
+    return LakeTable.create(
+        spark, str(tmp_path / name), schema, pk=["k"], version_cols=["ver"],
+        n_buckets=4, properties=props)
+
+
+def test_stats_withholds_hint_right_after_rebucket_begin(spark, tmp_path):
+    """After rebucket-begin (or a crash before the first rewrite) EVERY
+    file carries one legacy modulus != n_buckets; stats() must treat that
+    as an in-flight rebucket and withhold rebucket_suggested_n — emitting
+    it would make auto_rebucket escalate the modulus on every resume."""
+    schema = T.StructType([
+        T.StructField("k", T.LongType()),
+        T.StructField("v", T.StringType()),
+        T.StructField("ver", T.LongType()),
+    ])
+    root = str(tmp_path / "mb")
+    t = LakeTable.create(
+        spark, root, schema, pk=["k"], version_cols=["ver"], n_buckets=2,
+        properties={"merge_mode": "append",
+                    "local_compact_max_bucket_bytes": 1_000},
+    )
+    t.merge(spark.range(0, 2000).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver"))
+    st = t.stats()
+    assert st["n_over_cap_buckets"] > 0 and st.get("rebucket_suggested_n")
+    # replicate exactly phase 1 of rebucket(): stamp mods, flip n_buckets
+    m = t._next_manifest({"operation": "rebucket-begin",
+                          "from_buckets": 2, "to_buckets": 8})
+    for f in m["files"]:
+        f.setdefault("mod", 2)
+    m["n_buckets"] = 8
+    t._commit(m)
+    st2 = LakeTable.load(spark, root).stats()
+    assert "rebucket_suggested_n" not in st2, st2
+    assert "in progress" in (st2.get("rebucket_hint") or "")
+
+
+def test_bucket_overlap_empty_want_matches_nothing():
+    from cds_spark.lake.table import _bucket_overlap
+
+    # unrelated moduli used to fall through to the conservative True,
+    # turning a read of ZERO buckets into a full-table scan mid-rebucket
+    assert _bucket_overlap(3, 4, set(), 6) is False
+    assert _bucket_overlap(3, 4, set(), 4) is False
+    assert _bucket_overlap(3, 4, set(), 8) is False
+
+
+def test_read_empty_bucket_list_is_empty_mid_rebucket(spark, tmp_path):
+    t = _kv_table(spark, tmp_path, "er", merge_mode="append")
+    t.merge(spark.range(0, 200).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver"))
+    m = t._next_manifest({"operation": "rebucket-begin"})
+    for f in m["files"]:
+        f.setdefault("mod", 4)
+    m["n_buckets"] = 6  # non-dividing vs 4: the conservative-overlap case
+    t._commit(m)
+    t2 = LakeTable.load(spark, t.root)
+    assert t2.read(buckets=[]).count() == 0
+
+
+def test_validate_no_false_dups_mid_rebucket_nondividing(spark, tmp_path):
+    """Mid-rebucket between non-dividing moduli, the clean-bucket dup audit
+    used to pull dirty legacy files in through the conservative overlap and
+    report duplicate keys on a healthy table."""
+    t = _kv_table(spark, tmp_path, "vdup", merge_mode="append",
+                  append_inbatch_collapse=True)
+    batch = spark.range(0, 400).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver")
+    t.merge(batch)
+    # a second generation for bucket 0 ONLY -> bucket 0 dirty, others clean
+    t.merge(batch.filter(F.pmod(F.xxhash64("k"), F.lit(4)) == 0)
+            .selectExpr("k", "concat('w', k) AS v", "ver + 1000 AS ver"))
+    m = t._next_manifest({"operation": "rebucket-begin"})
+    for f in m["files"]:
+        f.setdefault("mod", 4)
+    m["n_buckets"] = 6  # 4 vs 6: neither divides the other
+    t._commit(m)
+    res = LakeTable.load(spark, t.root).validate()
+    assert res["dup_collapsed_keys"] == 0, res
+    assert res["ok"], res
+
+
+def _begin_crash_state(spark, t, to_n):
+    """Replicate a crash right after rebucket-begin: mods stamped,
+    n_buckets flipped, zero rewrites done."""
+    m = t._next_manifest({"operation": "rebucket-begin",
+                          "from_buckets": t.n_buckets, "to_buckets": to_n})
+    old = t.n_buckets
+    m["files"] = [f if "mod" in f else {**f, "mod": old} for f in m["files"]]
+    m["n_buckets"] = to_n
+    t._commit(m)
+    return LakeTable.load(spark, t.root)
+
+
+def test_rebucket_same_target_resumes_after_begin_crash(spark, tmp_path):
+    """rebucket(current n_buckets) with legacy files left must RESUME the
+    interrupted migration, not early-return as a no-op (the documented
+    crash remedy was broken)."""
+    t = _kv_table(spark, tmp_path, "resume", merge_mode="upsert")
+    t.merge(spark.range(0, 400).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver"))
+    before = {r.k: r.v for r in t.current().collect()}
+    t = _begin_crash_state(spark, t, 16)
+    assert t.stats()["rebucket_in_progress"]
+    res = t.rebucket(16)  # same target: resume
+    assert res["done"] and res["rewritten_files"] > 0
+    t = LakeTable.load(spark, t.root)
+    assert {t._file_mod(f) for f in t.manifest["files"]} == {16}
+    assert {r.k: r.v for r in t.current().collect()} == before
+    assert not t.stats()["rebucket_in_progress"]
+    # and a true no-op stays a no-op
+    assert t.rebucket(16) == {"rewritten_files": 0, "commits": 0,
+                              "done": True, "n_buckets": 16,
+                              "version": t.version}
+
+
+def test_rebucket_max_groups_bounds_one_call(spark, tmp_path):
+    t = _kv_table(spark, tmp_path, "bounded", merge_mode="upsert")
+    t.merge(spark.range(0, 400).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver"))
+    before = {r.k: r.v for r in t.current().collect()}
+    res = t.rebucket(16, group=1, max_groups=1)
+    assert not res["done"]  # 4 old buckets, only 1 rewritten
+    t = LakeTable.load(spark, t.root)
+    assert t.stats()["rebucket_in_progress"]
+    assert {r.k: r.v for r in t.current().collect()} == before  # mid-state reads exact
+    rounds = 0
+    while not t.rebucket(16, group=1, max_groups=1)["done"]:
+        rounds += 1
+        assert rounds < 10
+    t = LakeTable.load(spark, t.root)
+    assert {t._file_mod(f) for f in t.manifest["files"]} == {16}
+    assert {r.k: r.v for r in t.current().collect()} == before
+
+
+def test_pipeline_auto_rebucket_resumes_interrupted(spark, tmp_path):
+    """A sync job pointed at a table left mid-rebucket by a crashed driver
+    must finish the migration from its maintenance ticks."""
+    from cds_spark.streaming.pipeline import IncrementalSync, JobSpec
+    from cds_spark.sources.feed import (REPO_SCHEMA, change_feed,
+                                        write_feed_files,
+                                        reference_replay_pandas)
+
+    feed = change_feed(spark, 1200, n_repos=10, paths_per_repo=20, seed=9)
+    oracle = reference_replay_pandas([r.asDict() for r in feed.collect()])
+    topic = str(tmp_path / "topic")
+    write_feed_files(feed, topic, 3)
+    t = LakeTable.create(
+        spark, str(tmp_path / "repos"), REPO_SCHEMA, pk=["repo", "path"],
+        version_cols=["commit", "_offset"], n_buckets=2)
+    # pre-crash data written under the OLD modulus — these are the legacy
+    # files the interrupted migration must finish rewriting
+    seed = spark.range(0, 80).selectExpr(
+        "'seedrepo' AS repo", "concat('f', id) AS path",
+        "'c0' AS commit", "'py' AS lang", "concat('body', id) AS content",
+        "cast(id AS long) AS _offset")
+    t.merge(seed)
+    t = _begin_crash_state(spark, t, 8)  # crashed mid-migration
+    assert t.stats()["rebucket_in_progress"]
+    # compact_max_generations high: the tick's compact must NOT be what
+    # drains the legacy files (at scale cold buckets never trip it) — the
+    # resume branch has to do it
+    spec = JobSpec(job_id="rz", table_root=t.root, source_dir=topic,
+                   checkpoint_dir=str(tmp_path / "ckpt"),
+                   max_files_per_trigger=1, merge_mode="append",
+                   maintenance_every_batches=1, compact_max_generations=100,
+                   auto_rebucket=True)
+    IncrementalSync(spark, spec).run_available()
+    t = LakeTable.load(spark, t.root)
+    assert {t._file_mod(f) for f in t.manifest["files"]} <= {t.n_buckets}
+    live = {(r.repo, r.path): r.content for r in t.current().collect()}
+    seed_keys = {("seedrepo", f"f{i}") for i in range(80)}
+    assert len(live) == len(oracle) + len(seed_keys)
+    assert all(live[k] == v["content"] for k, v in oracle.items())
+    assert all(k in live for k in seed_keys)
+    recs = [json.loads(l) for l in open(
+        os.path.join(t.root, "_lineage", "rz.jsonl"))]
+    rbs = [r["maintenance"]["rebucket"] for r in recs
+           if r.get("maintenance") and r["maintenance"].get("rebucket")]
+    assert any(rb.get("resumed") for rb in rbs), rbs

@@ -1464,6 +1464,134 @@ def test_schema_evolution_null_first_occurrence_infers_value_type(spark, tmp_pat
     assert types["stars"] == "long", types
 
 
+#: (op, repo, path, payload, partition) of one micro-batch: partitions 0
+#: and 1 hold valid events and dead letters, partition 2 only dead letters
+#: (missing / JSON-null / empty PK, malformed and non-object payloads); the
+#: new column ``stars`` first occurs as JSON null; 'r' (a snapshot read)
+#: is not a change and is dropped before anything counts it.
+SUMMARY_EVENTS = [
+    ("c", "r1", "p1", '{"repo":"r1","path":"p1","lang":"py","stars":null}', 0),
+    ("c", "r1", "p2", '{"repo":"r1","path":"p2","content":"a","stars":7}', 0),
+    ("u", "r1", "p1", '{"repo":"r1","path":"p1","content":"b"}', 0),
+    ("c", "r1", "p3", '{"repo":"r1","content":"no path"}', 0),
+    ("d", "r1", "p2", '{"repo":"r1","path":"p2"}', 0),
+    ("c", "r2", "p1", '{"repo":"r2","path":"p1","lang":"go"}', 1),
+    ("c", "r2", "p2", '{"repo":"r2","path":"","stars":1}', 1),
+    ("u", "r2", "p1", "not-json{{", 1),
+    ("r", "r2", "p9", '{"repo":"r2","path":"p9"}', 1),
+    ("c", "r2", "p3", '{"repo":"r2","path":"p3","stars":3}', 1),
+    ("c", "r3", "p1", '{"repo":"r3"}', 2),
+    ("u", "r3", "p2", '{"repo":null,"path":"p2"}', 2),
+    ("c", "r3", "p3", "[1,2]", 2),
+]
+
+
+def _summary_batch(spark, events=SUMMARY_EVENTS):
+    return spark.createDataFrame(
+        [(op, repo, path, f"{i:06d}", 100 + i, payload, part)
+         for i, (op, repo, path, payload, part) in enumerate(events)],
+        "op string, repo string, path string, commit string, offset long, "
+        "payload string, partition int",
+    )
+
+
+def _summary_oracle(events, known, pk=("repo", "path")):
+    """Pure-Python replay of one batch's summary: per-partition counts and
+    offset range over PK-valid events, dead letters, and each new key's
+    first non-null value."""
+    parts, n_dlq, first_value = {}, 0, {}
+    for i, (op, _repo, _path, payload, part) in enumerate(events):
+        if op not in ("c", "u", "d"):
+            continue
+        try:
+            data = json.loads(payload)
+        except ValueError:
+            data = None
+        if not isinstance(data, dict):
+            n_dlq += 1
+            continue
+        for k, v in data.items():
+            if k not in known and first_value.get(k) is None:
+                first_value[k] = v
+        if any(data.get(k) in (None, "") for k in pk):
+            n_dlq += 1
+            continue
+        n, lo, hi = parts.get(part, (0, 100 + i, 100 + i))
+        parts[part] = (n + 1, min(lo, 100 + i), max(hi, 100 + i))
+    partitions = [{"_partition": p, "n_events": n, "min_offset": lo, "max_offset": hi}
+                  for p, (n, lo, hi) in sorted(parts.items())]
+    return partitions, n_dlq, first_value
+
+
+def _summary_sync(spark, tmp_path, name, evolve):
+    table = _mk_table(spark, tmp_path, name)
+    spec = JobSpec(job_id=name, table_root=table.root, source_dir="unused",
+                   checkpoint_dir="unused", evolve_schema=evolve,
+                   dlq_dir=str(tmp_path / f"{name}_dlq"),
+                   maintenance_every_batches=0)
+    return IncrementalSync(spark, spec)
+
+
+@pytest.mark.parametrize("evolve", [True, False], ids=["evolve", "fused"])
+def test_batch_summary_matches_python_replay(spark, tmp_path, evolve):
+    """The lineage partitions, the dead-letter count and the evolved
+    schema of one micro-batch equal a pure-Python replay of its events: a
+    partition of dead letters only is absent from ``partitions``, and a
+    new column whose first occurrence is JSON null is still typed by its
+    first non-null value."""
+    sync = _summary_sync(spark, tmp_path, "summ", evolve)
+    known = [f.name for f in sync.table.schema.fields]
+    rec = sync.process_batch(_summary_batch(spark), 0)
+    partitions, n_dlq, first_value = _summary_oracle(SUMMARY_EVENTS, known)
+    assert [p["_partition"] for p in partitions] == [0, 1]
+    assert sorted(rec["partitions"], key=lambda p: p["_partition"]) == partitions
+    assert rec["n_dlq"] == n_dlq == 6
+    dlq = spark.read.parquet(sync.spec.dlq_dir)
+    assert dlq.count() == n_dlq
+    assert {r["_batch_id"] for r in dlq.select("_batch_id").collect()} == {0}
+    types = {f.name: f.dataType.typeName()
+             for f in LakeTable.load(spark, sync.table.root).schema.fields}
+    if evolve:
+        assert first_value == {"stars": 7}
+        assert rec["schema_added"] == ["stars"]
+        assert types["stars"] == "long", types
+    else:
+        assert rec["schema_added"] == []
+        assert "stars" not in types
+
+
+#: Spark jobs / py4j commands of one micro-batch, maintenance off, on the
+#: SUMMARY_EVENTS batch (a new column, dead letters written): the batch
+#: summary (cache build + one aggregation), the DLQ write and the merge.
+#: Measured 9 / 9 jobs and 1 373 / 1 006 commands (evolve / fused).
+BATCH_JOBS = {True: 9, False: 9}
+BATCH_GATEWAY_CALLS = {True: 1390, False: 1020}
+
+
+def _budget_batch(spark, tmp_path, name, evolve, counter):
+    batch = _summary_batch(spark)
+    sync = _summary_sync(spark, tmp_path, name, evolve)
+    n, rec = counter(lambda: sync.process_batch(batch, 0))
+    assert not rec["skipped"] and rec["n_dlq"] == 6
+    assert rec["partitions"] == sorted(rec["partitions"], key=lambda p: p["_partition"])
+    return n
+
+
+@pytest.mark.parametrize("evolve", [True, False], ids=["evolve", "fused"])
+def test_micro_batch_job_budget(spark, tmp_path, evolve, count_jobs):
+    """One micro-batch runs its evolution probe, lineage and dead-letter
+    count as ONE aggregation over the persisted decode, writes the dead
+    letters straight from the cache, and merges: no job per question."""
+    n = _budget_batch(spark, tmp_path, "jobs", evolve, count_jobs)
+    assert n <= BATCH_JOBS[evolve], n
+
+
+@pytest.mark.parametrize("evolve", [True, False], ids=["evolve", "fused"])
+def test_micro_batch_gateway_budget(spark, tmp_path, evolve, count_gateway_calls):
+    n = _budget_batch(spark, tmp_path, "calls", evolve, count_gateway_calls)
+    assert n <= BATCH_GATEWAY_CALLS[evolve], n
+
+
 def test_upsert_local_merge_matches_plan_merge(spark, tmp_path):
     """The per-bucket Arrow upsert merge must produce byte-identical state
     (including tombstones and meta columns) to the classic plan merge
