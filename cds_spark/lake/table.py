@@ -189,6 +189,30 @@ def _null_filled(cols: Sequence[str]) -> dict:
     return {"null_filled": list(cols)} if cols else {}
 
 
+def _sql_ident(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _sql_type(dt: T.DataType) -> str:
+    """SQL text of ``dt`` for a CAST (struct field names quoted)."""
+    if isinstance(dt, T.StructType):
+        return f"struct<{','.join(f'{_sql_ident(f.name)}:{_sql_type(f.dataType)}' for f in dt)}>"
+    if isinstance(dt, T.ArrayType):
+        return f"array<{_sql_type(dt.elementType)}>"
+    if isinstance(dt, T.MapType):
+        return f"map<{_sql_type(dt.keyType)},{_sql_type(dt.valueType)}>"
+    return dt.simpleString()
+
+
+def _project_sql(df: DataFrame, cols: Sequence[tuple[str, str]]) -> DataFrame:
+    """``df`` projected onto ``(name, SQL expression)`` pairs as ONE SQL
+    expression, a struct the optimizer inlines: a handful of py4j gateway
+    commands, where a ``Column`` per expression costs a few each."""
+    body = ", ".join("'" + n.replace("\\", "\\\\").replace("'", "\\'") + f"', {e}"
+                     for n, e in cols)
+    return df.select(F.expr(f"named_struct({body})").alias("__p")).select("__p.*")
+
+
 def _arrow_pin_single_thread() -> None:
     """Per-task Arrow thread pinning: N concurrent Python workers each
     spinning Arrow's default (ncpu-wide) pool oversubscribe the box N-fold
@@ -939,14 +963,12 @@ class LakeTable:
             )
         parts = []
         for sid, paths in by_schema.items():
-            part = self.spark.read.schema(self._file_schema(sid)).parquet(*paths)
             carried = self._carried_columns(sid)
-            sel = [
-                (F.col(f.name).cast(f.dataType) if f.name in carried
-                 else F.lit(None).cast(f.dataType)).alias(f.name)
-                for f in phys_cur.fields
-            ]
-            parts.append(part.select(*sel))
+            parts.append(_project_sql(
+                self.spark.read.schema(self._file_schema(sid)).parquet(*paths),
+                [(f.name, f"CAST({_sql_ident(f.name) if f.name in carried else 'NULL'}"
+                          f" AS {_sql_type(f.dataType)})")
+                 for f in phys_cur.fields]))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -1463,6 +1485,13 @@ class LakeTable:
         Raises if a needed manifest was expired (``expire_snapshots``) —
         incremental reads require the retained-snapshot window, the
         Iceberg contract."""
+        return self._changes(from_version, to_version)[0]
+
+    def _changes(self, from_version: int,
+                 to_version: int | None) -> tuple[DataFrame, bool]:
+        """:meth:`changes`, and whether it holds one row per key: one
+        snapshot contributes rows, from files all written collapsed (every
+        ``merge``; an ``append-merge`` with the in-batch collapse)."""
         to_version = self.version if to_version is None else int(to_version)
         if not from_version <= to_version <= self.version:
             raise ValueError(
@@ -1487,6 +1516,7 @@ class LakeTable:
                 ) from None
 
         deltas: list[DataFrame] = []
+        collapsed = True
         prev = _manifest(from_version)
         for v in range(from_version + 1, to_version + 1):
             m = _manifest(v)
@@ -1504,6 +1534,7 @@ class LakeTable:
                 )
             if op not in ("append-merge", "merge") or not added:
                 continue
+            collapsed = collapsed and all(f.get("collapsed") for f in added)
             delta = self._read_entries(added, phys)
             if op == "merge":
                 touched = {f["bucket"] for f in added}
@@ -1538,24 +1569,25 @@ class LakeTable:
             return local_frame(
                 self.spark, [],
                 T.StructType(phys.fields + [T.StructField("_change_version", T.LongType())])
-            )
+            ), True
         out = deltas[0]
         for d in deltas[1:]:
             out = out.unionByName(d)
-        return out.select(*out_cols)
+        return out.select(*out_cols), len(deltas) == 1 and collapsed
 
     def latest_changes(self, from_version: int,
                        to_version: int | None = None) -> DataFrame:
         """:meth:`changes` collapsed to the latest row per key — ordered by
         ``_change_version``, then the version columns, then ``_offset`` —
         with ``_is_delete`` never NULL: the one delta read of the
-        lake-to-lake tailers. Raises where :meth:`changes` raises."""
-        vcols = ["_change_version", *dict.fromkeys(
-            [*self.version_cols, OFFSET])]
-        return (lww_collapse(self.changes(from_version, to_version),
-                             self.pk, vcols)
-                .withColumn(IS_DELETE,
-                            F.coalesce(F.col(IS_DELETE), F.lit(False))))
+        lake-to-lake tailers; without the collapse shuffle where the window
+        already holds one row per key (:meth:`_changes`). Raises where
+        :meth:`changes` raises."""
+        out, one_per_key = self._changes(from_version, to_version)
+        if not one_per_key:
+            out = lww_collapse(out, self.pk, [
+                "_change_version", *dict.fromkeys([*self.version_cols, OFFSET])])
+        return out.withColumn(IS_DELETE, F.coalesce(F.col(IS_DELETE), F.lit(False)))
 
     # ------------------------------------------------------------- write
     def _auto_salt_n(self, df: DataFrame, default_n: int, n_partitions: int) -> int:
@@ -1593,21 +1625,16 @@ class LakeTable:
         except Exception:
             return default_n
 
-    def _write_salt(self, df: DataFrame, n_partitions: int,
-                    n_buckets_hint: int | None):
-        """The second shuffle key of :meth:`_write_txn` (see there)."""
-        n_partitions = max(1, n_partitions)
-        # salt relative to the buckets PRESENT in df (n_buckets_hint): an
-        # incremental compact of 3 buckets from a 64-bucket table would
-        # otherwise get salt_n=1 -> 3 shuffle keys -> 3 tasks no matter how
-        # many cores or how big the buckets
-        n_in_df = n_buckets_hint or self.n_buckets
+    def _write_salt(self, df: DataFrame, n_partitions: int):
+        """The second shuffle key of :meth:`_write_txn`'s uncollapsed write
+        (see there)."""
         # write.salt_n overrides the spread: the default formula targets ~4
         # shuffle keys per write partition (file-count bound), which caps the
         # hot-key spread at salt_n partitions — a workload where one key
         # carries >10% of a batch wants a wider spread and accepts the extra
         # files (compact absorbs them); tools/bench_skew.py measures the trade
-        default_salt_n = max(1, (4 * n_partitions + n_in_df - 1) // n_in_df)
+        nb = self.n_buckets
+        default_salt_n = max(1, (4 * n_partitions + nb - 1) // nb)
         try:
             salt_n = max(1, int(self.properties.get("write.salt_n", default_salt_n)))
         except (TypeError, ValueError):
@@ -1644,37 +1671,58 @@ class LakeTable:
         self,
         df: DataFrame,
         txn_name: str,
-        n_partitions: int,
+        n_partitions: int | None = None,
         collapsed: bool = False,
-        n_buckets_hint: int | None = None,
+        drop_tombstones: bool = False,
     ) -> list[dict]:
         """Write df (must contain ``_bucket``) partitioned by bucket under a
-        fresh txn dir; return manifest file entries.
+        fresh txn dir over ``n_partitions`` tasks (default: the shuffle
+        partitions); return manifest file entries.
 
-        The shuffle key is (bucket, salt): hashing bare bucket ids into
-        n_partitions leaves ~1/e of partitions empty and piles 2-3 buckets
-        on others (balls-into-bins), capping parallelism. The salt hashes
-        the ROW (offset + pk), not the pk alone: a single hot key — one row
-        updated in 50% of events, the classic CDC skew case — would
-        otherwise land its entire volume in ONE shuffle partition. Row-salt
-        spreads it across salt_n partitions; the same key then spans
-        several files within its bucket, which merge-on-read LWW (and
-        compact) absorb by design. salt_n targets ~4 shuffle keys per write
-        partition, so file count stays bounded."""
+        ``collapsed``: the LWW collapse runs here, over ONE hash exchange
+        on ``_bucket`` that also serves the (``_bucket``, pk) aggregate,
+        then drops tombstones if ``drop_tombstones``. A bucket is one
+        task's PK-sorted run (spilling when it outgrows memory), cut by
+        row count into PK-disjoint files of about ``target_file_bytes`` at
+        the manifest's mean bytes per row.
+
+        Otherwise the shuffle key is (bucket, salt): bare bucket ids pile
+        2-3 buckets on some of n_partitions tasks (balls-into-bins), and a
+        single hot key — one row updated in 50% of events, the classic CDC
+        skew case — would land its entire volume in ONE task. The salt
+        hashes the ROW (offset + pk) into salt_n (~4 shuffle keys per
+        task, so file count stays bounded); the same key then spans files
+        of its bucket, which merge-on-read LWW (and compact) absorb.
+
+        Driver-built rows (a maintenance tick's merge input) take neither
+        exchange: ONE task writes them, one file per bucket."""
+        n_partitions = max(1, n_partitions or self._n_write_parts())
         txn_rel = os.path.join(DATA_DIR, txn_name)
         txn_dir = os.path.join(self.root, txn_rel)
         leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-        if all(leaves.apply(i).nodeName() == "LocalRelation"
-               for i in range(leaves.size())):
-            # driver-built rows (a maintenance tick's merge input): ONE
-            # task sorts and writes them, one file per bucket — a shuffle
-            # would only add a stage job to a write of driver-sized data
+        local = all(leaves.apply(i).nodeName() == "LocalRelation"
+                    for i in range(leaves.size()))
+        opts = {}
+        if collapsed:
+            df = lww_collapse(
+                df.coalesce(1) if local else df.repartition(n_partitions, "_bucket"),
+                ["_bucket", *self.pk], self.version_cols)
+            if drop_tombstones:
+                df = df.filter(~F.coalesce(F.col(IS_DELETE), F.lit(False)))
+            out = df.sortWithinPartitions("_bucket", *self.pk)
+            sized = [f for f in self.manifest["files"] if f.get("rows") and f.get("bytes")]
+            if sized:
+                target = int(self.properties.get("target_file_bytes", 128 << 20))
+                opts["maxRecordsPerFile"] = max(1, target * sum(
+                    f["rows"] for f in sized) // sum(f["bytes"] for f in sized))
+        elif local:
             out = df.coalesce(1).sortWithinPartitions("_bucket", *self.pk)
         else:
-            salt = self._write_salt(df, n_partitions, n_buckets_hint)
-            out = (df.repartition(max(1, n_partitions), F.col("_bucket"), salt)
+            salt = self._write_salt(df, n_partitions)
+            out = (df.repartition(n_partitions, F.col("_bucket"), salt)
                    .sortWithinPartitions(*self.pk))
-        out.write.partitionBy("_bucket").parquet(txn_dir, mode="errorifexists")
+        out.write.options(**opts).partitionBy("_bucket").parquet(
+            txn_dir, mode="errorifexists")
         targets = []
         for bdir in sorted(os.listdir(txn_dir)):
             if not bdir.startswith("_bucket="):
@@ -1820,9 +1868,7 @@ class LakeTable:
             return MergeStats(skipped=True, version=self.version)
         src, filled = self._with_meta_defaults(df)
         src = src.withColumn("_bucket", self._bucket_expr())
-        shuffle_n = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        # bootstrap snapshots carry one row per key by contract -> collapsed
-        entries = self._write_txn(src, self._txn_name(), shuffle_n, collapsed=True)
+        entries = self._write_txn(src, self._txn_name(), collapsed=True)
         m = self._next_manifest({"operation": "overwrite", **_null_filled(filled)})
         m["files"] = entries
         if fence:
@@ -1834,13 +1880,6 @@ class LakeTable:
     def _with_meta_defaults(self, df: DataFrame) -> tuple[DataFrame, list[str]]:
         """``df`` aligned to the physical schema, and the names of the
         columns it lacked and that were therefore filled with NULL."""
-        out = df
-        if IS_DELETE not in df.columns:
-            out = out.withColumn(IS_DELETE, F.lit(False))
-        else:
-            out = out.withColumn(IS_DELETE, F.coalesce(F.col(IS_DELETE), F.lit(False)))
-        if OFFSET not in out.columns:
-            out = out.withColumn(OFFSET, F.lit(0).cast("long"))
         cur = _physical(self.schema)
         # column alignment + default fill (parse.go:137-166): a batch whose
         # schema predates an ALTER ADD COLUMN — an at-least-once replay
@@ -1851,19 +1890,21 @@ class LakeTable:
         # PK/version columns must exist: silently NULL-filling those would
         # corrupt identity/ordering, so they still raise. The filled names
         # go back to the caller, which records them in the commit summary.
-        have = set(out.columns)
+        have = set(df.columns)
         required = set(self.pk) | {v for v in self.version_cols if v != OFFSET}
         missing_required = sorted(required - have)
         if missing_required:
             raise ValueError(
                 f"merge batch is missing PK/version column(s) {missing_required}"
             )
-        filled = [f.name for f in cur.fields if f.name not in have]
-        return out.select(*[
-            (F.col(f.name) if f.name in have else F.lit(None))
-            .cast(f.dataType).alias(f.name)
-            for f in cur.fields
-        ]), filled
+        filled = [f.name for f in cur.fields if f.name not in have | {IS_DELETE, OFFSET}]
+        defaults = {IS_DELETE: "false", OFFSET: "0"}
+        sel = []
+        for f in cur.fields:
+            e = _sql_ident(f.name) if f.name in have else defaults.get(f.name, "NULL")
+            e = f"CAST({e} AS {_sql_type(f.dataType)})"
+            sel.append((f.name, f"coalesce({e}, false)" if f.name == IS_DELETE else e))
+        return _project_sql(df, sel), filled
 
     def fence(self, job_id: str, tail: bool = False) -> int | None:
         """Job ``job_id``'s cursor on this table: the last batch id or
@@ -1916,11 +1957,13 @@ class LakeTable:
           This is the 10^10-events/day ingest path — per-batch work is
           O(batch), never O(table).
 
-        ``source``: logical columns + ``_is_delete`` + ``_offset``. Rows are
-        collapsed to one per PK in-batch (parse.go:268-306) unless
-        ``precollapsed``. An incoming row only replaces the stored row if
-        its version tuple is larger — at-least-once replay and out-of-order
-        delivery converge to the same state.
+        ``source``: logical columns + ``_is_delete`` + ``_offset``. Only an
+        append collapses in-batch (parse.go:268-306, in its write's one
+        exchange), when ``append_inbatch_collapse`` is set or the caller
+        passes ``precollapsed``; an upsert's plans collapse target ∪ batch.
+        An incoming row only replaces the stored row if its version tuple
+        is larger — at-least-once replay and out-of-order delivery
+        converge to the same state. ``source_rows``: the distinct keys.
 
         Default mode comes from the table property ``merge_mode`` (set at
         create; defaults to upsert).
@@ -1934,7 +1977,8 @@ class LakeTable:
           (:meth:`_local_fallback`) recorded as the commit summary's
           ``fallback``;
         - ``"local"``: force the per-bucket merge (error if inapplicable);
-        - ``"classic"``: the union + LWW collapse shuffle.
+        - ``"classic"``: target ∪ batch, LWW-collapsed and written over one
+          exchange (the collapsed write of :meth:`_write_txn`).
 
         The commit summary's ``strategy`` records which one ran, and
         ``null_filled`` the batch columns filled with NULL because the
@@ -1958,28 +2002,22 @@ class LakeTable:
                 f"unknown merge mode {mode!r} (expected 'append' or 'upsert')"
             )
         src, filled = self._with_meta_defaults(source)
-        # in-batch collapse is required for upsert (one row per key before
-        # the COW union) but OPTIONAL for append: the LWW read/compact
-        # absorbs intra-batch duplicates, so the fast path is a single
-        # shuffle (the reference likewise wrote an in-batch merge and
-        # disabled it — cmd/rtu/handle/parse.go:267 "note not use")
-        batch_collapsed = precollapsed or (
-            mode != "append" or self.properties.get("append_inbatch_collapse", False)
-        )
-        if not precollapsed and batch_collapsed:
-            src = lww_collapse(src, self.pk, self.version_cols)
         src = src.withColumn("_bucket", self._bucket_expr())
+        props = dict(extra_properties or {})
+        if fence:
+            props[f"fence.{fence[0]}"] = int(fence[1])
 
         if mode == "append":
-            # one pass: collapse + bucket + write; bucket stats read back
-            # from the written files (no extra job over the source)
-            entries = self._write_txn(
-                src, self._txn_name(), self._n_write_parts(), collapsed=batch_collapsed
-            )
+            # one pass: bucket + write (collapsed in the write's exchange
+            # when the table asks for an in-batch collapse; OPTIONAL here:
+            # the LWW read/compact absorbs intra-batch duplicates — the
+            # reference likewise wrote an in-batch merge and disabled it,
+            # cmd/rtu/handle/parse.go:267 "note not use"); bucket stats
+            # read back from the written files (no extra job over the
+            # source)
+            entries = self._write_txn(src, self._txn_name(), collapsed=precollapsed or bool(
+                self.properties.get("append_inbatch_collapse", False)))
             touched = sorted({e["bucket"] for e in entries})
-            props = dict(extra_properties or {})
-            if fence:
-                props[f"fence.{fence[0]}"] = int(fence[1])
             # purely additive: consumed nothing, so a CAS race with
             # maintenance (or another table's job sharing the session)
             # rebases onto the latest manifest instead of crashing the
@@ -1999,12 +2037,16 @@ class LakeTable:
                 ),
             )
 
-        # upsert (copy-on-write): need src twice (bucket discovery + merge)
+        # upsert (copy-on-write): both plans collapse target ∪ batch, so no
+        # in-batch collapse; touched buckets and distinct keys from ONE
+        # single-task aggregation (coalesce(1): no map-stage job).
         src = src.persist()
         try:
-            bucket_counts = src.groupBy("_bucket").count().collect()
-            touched = sorted(int(r["_bucket"]) for r in bucket_counts)
-            n_src = sum(int(r["count"]) for r in bucket_counts)
+            key_counts = src.coalesce(1).groupBy("_bucket").agg(
+                F.expr(f"count(DISTINCT struct({', '.join(map(_sql_ident, self.pk))}))"
+                       ).alias("n")).collect()
+            touched = sorted(int(r["_bucket"]) for r in key_counts)
+            n_src = sum(int(r["n"]) for r in key_counts)
             if not touched:
                 # an empty batch must still RECORD a passed fence (append
                 # mode commits one anyway): otherwise cascade_sync on an
@@ -2040,18 +2082,10 @@ class LakeTable:
                 target = self.read(
                     buckets=touched, live_only=False, with_meta=True, collapse=False
                 ).withColumn("_bucket", self._bucket_expr())
-                merged = lww_collapse(
-                    target.unionByName(src), self.pk, self.version_cols
-                )
-                n_parts = max(1, min(len(touched), self._n_write_parts()))
                 entries = self._write_txn(
-                    merged, self._txn_name(), n_parts, collapsed=True
-                )
+                    target.unionByName(src), self._txn_name(), collapsed=True)
                 route = {"strategy": "classic",
                          **({"fallback": fallback} if fallback else {})}
-            props = dict(extra_properties or {})
-            if fence:
-                props[f"fence.{fence[0]}"] = int(fence[1])
             committed = self._commit_with_rebase(
                 {
                     "operation": "merge",
@@ -2688,7 +2722,8 @@ class LakeTable:
           reason (:meth:`_local_fallback`) recorded as the commit
           summary's ``fallback``;
         - ``"local"``: force the per-bucket rewrite (error if inapplicable);
-        - ``"classic"``: the single full-shuffle LWW collapse.
+        - ``"classic"``: the LWW collapse and write over one exchange (the
+          collapsed write of :meth:`_write_txn`).
 
         The commit summary's ``strategy`` records which one ran."""
         if strategy not in ("auto", "local", "classic"):
@@ -2720,57 +2755,32 @@ class LakeTable:
         input_paths = {f["path"] for f in sel_files}
         summary = {"operation": "compact", "purged": purge_tombstones,
                    "buckets": len(sel)}
-        if strategy != "classic":
-            fallback = self._local_fallback(sel_files)
-            if fallback is None:
-                target_b = int(self.properties.get("target_file_bytes", 128 << 20))
-                entries = self._compact_local_entries(
-                    sel_files, purge_tombstones, target_b
-                )
-                self._commit_with_rebase(
-                    {**summary, "strategy": "local"}, input_paths, entries, {},
-                )
-                return sel
-            if strategy == "local":
-                raise ValueError(
-                    f"local compaction not applicable ({fallback}) — "
-                    "use strategy='auto'"
-                )
-            summary["fallback"] = fallback
-        df = self.read(buckets=sel, live_only=False, with_meta=True)
-        df = df.withColumn("_bucket", self._bucket_expr())
-        if purge_tombstones:
-            # null-safe: read() serves _is_delete=NULL rows as LIVE
-            # (coalesce to false) and the Arrow path fill_nulls the same
-            # way — a bare ~NULL here would silently drop them instead
-            df = df.filter(~F.coalesce(F.col(IS_DELETE), F.lit(False)))
-        # size-aware write width: at scale the rewrite must bound OUTPUT
-        # file size (a 10GB bucket as one file breaks task-level
-        # parallelism for every later read), so the partition count also
-        # scales with the selected bytes / target_file_bytes — estimated
-        # from manifest stats, an upper bound since collapse only shrinks
-        def _fsize(f: dict) -> int:
-            if f.get("bytes"):
-                return int(f["bytes"])
-            try:  # entries from before byte stats were recorded
-                return os.path.getsize(os.path.join(self.root, f["path"]))
-            except OSError:
-                return 0
-
-        est_bytes = sum(_fsize(f) for f in sel_files)
-        target = int(self.properties.get("target_file_bytes", 128 << 20))
-        size_parts = (est_bytes + target - 1) // target if est_bytes else 1
-        n_parts = max(1, min(len(sel), self._n_write_parts()), size_parts)
-        entries = self._write_txn(
-            df, self._txn_name("-compact"), n_parts, collapsed=True,
-            n_buckets_hint=len(sel),
-        )
+        fallback = None if strategy == "classic" else self._local_fallback(sel_files)
+        if strategy == "local" and fallback:
+            raise ValueError(
+                f"local compaction not applicable ({fallback}) — use strategy='auto'"
+            )
+        if strategy != "classic" and fallback is None:
+            entries = self._compact_local_entries(
+                sel_files, purge_tombstones,
+                int(self.properties.get("target_file_bytes", 128 << 20)),
+            )
+            summary["strategy"] = "local"
+        else:
+            # each bucket is one task of the collapsed write, which spills
+            # where a bucket over the local cap does not fit in memory;
+            # tombstones purged null-safely after the collapse (read()
+            # serves _is_delete=NULL rows as LIVE, as the Arrow path does)
+            df = self.read(buckets=sel, live_only=False, with_meta=True,
+                           collapse=False).withColumn("_bucket", self._bucket_expr())
+            entries = self._write_txn(df, self._txn_name("-compact"), collapsed=True,
+                                      drop_tombstones=purge_tombstones)
+            summary.update({**({"fallback": fallback} if fallback else {}),
+                            "strategy": "classic"})
         # maintenance must never block (or be blocked by) the ingest
         # writer — the ClickHouse background-merge contract; see
         # _commit_with_rebase for why the rebase is safe
-        self._commit_with_rebase(
-            {**summary, "strategy": "classic"}, input_paths, entries, {},
-        )
+        self._commit_with_rebase(summary, input_paths, entries, {})
         return sel
 
     def rebucket(self, new_n_buckets: int, group: int = 8,
@@ -2873,10 +2883,7 @@ class LakeTable:
                 "_bucket", self._bucket_expr()
             )
             n_parts = max(1, min(len(batch_keys) * 4, self._n_write_parts()))
-            entries = self._write_txn(
-                df, self._txn_name("-rebucket"), n_parts,
-                collapsed=False,
-            )
+            entries = self._write_txn(df, self._txn_name("-rebucket"), n_parts)
             self._commit_with_rebase(
                 {"operation": "rebucket", "old_buckets": len(batch_keys)},
                 {f["path"] for f in batch}, entries, {},
@@ -2951,15 +2958,12 @@ class LakeTable:
             if n_keys <= PURGE_BROADCAST_KEYS:
                 kdf = F.broadcast(kdf)
             remain = (
-                self.read(buckets=buckets, live_only=False, with_meta=True)
+                self.read(buckets=buckets, live_only=False, with_meta=True,
+                          collapse=False)
                 .join(kdf, on=self.pk, how="left_anti")
                 .withColumn("_bucket", self._bucket_expr())
             )
-            n_parts = max(1, min(len(buckets), self._n_write_parts()))
-            entries = self._write_txn(
-                remain, self._txn_name("-purge"), n_parts, collapsed=True,
-                n_buckets_hint=len(buckets),
-            )
+            entries = self._write_txn(remain, self._txn_name("-purge"), collapsed=True)
             # strict commit: CommitConflict propagates to _mutate_with_retry,
             # which re-runs the whole attempt against the fresh state
             self._commit(self._build_commit_manifest(
@@ -3071,11 +3075,7 @@ class LakeTable:
         out = flagged.select(*sel).drop("_match").withColumn(
             "_bucket", self._bucket_expr()
         )
-        n_parts = max(1, min(len(buckets), self._n_write_parts()))
-        entries = self._write_txn(
-            out, self._txn_name("-update"), n_parts, collapsed=True,
-            n_buckets_hint=len(buckets),
-        )
+        entries = self._write_txn(out, self._txn_name("-update"), collapsed=True)
         self._commit(self._build_commit_manifest(
             {"operation": "update", "rows": n_updated, "buckets": len(buckets)},
             consumed, entries,

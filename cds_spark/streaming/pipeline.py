@@ -268,9 +268,9 @@ class IncrementalSync:
                     "CAST(NULL AS string) AS k", "CAST(NULL AS string) AS _sample"))
                 rows, dlq = split_dead_letters(cached)
             # the dead letters are durable before the merge's fence commit:
-            # a crash between the two cannot lose them
+            # a crash between the two cannot lose them; one file per batch
             if n_dlq and self.spec.dlq_dir:
-                dlq.withColumn("_batch_id", F.lit(batch_id)).write.mode(
+                dlq.withColumn("_batch_id", F.lit(batch_id)).coalesce(1).write.mode(
                     "append").parquet(self.spec.dlq_dir)
             stats = table.merge(
                 rows, fence=(self.spec.job_id, batch_id), mode=self.spec.merge_mode

@@ -287,3 +287,14 @@ def test_keyset_page_composite_pk_tuple_cursor(spark, tmp_path):
         t.keyset_page("r1", 10)
     with pytest.raises(ValueError, match="does not match pk"):
         t.keyset_page(("r1",), 10)
+
+
+def test_cli_cursor_parser_temporal():
+    from cds_spark.cli import _parse_into_column_domain
+
+    assert _parse_into_column_domain("timestamp", "2024-03-01T00:10:00") == \
+        datetime.datetime(2024, 3, 1, 0, 10, 0)
+    assert _parse_into_column_domain("date", "2024-03-01") == \
+        datetime.date(2024, 3, 1)
+    assert _parse_into_column_domain("long", "42") == 42
+    assert _parse_into_column_domain("string", "abc") == "abc"

@@ -698,7 +698,7 @@ def test_pipeline_auto_rebucket(spark, tmp_path):
     LakeTable.create(
         spark, str(tmp_path / "repos"), REPO_SCHEMA, pk=["repo", "path"],
         version_cols=["commit", "_offset"], n_buckets=2,
-        properties={"local_compact_max_bucket_bytes": 8_000},
+        properties={"local_compact_max_bucket_bytes": 5_000},
     )
     spec = JobSpec(job_id="ar", table_root=str(tmp_path / "repos"),
                    source_dir=topic, checkpoint_dir=str(tmp_path / "ckpt"),
@@ -1562,10 +1562,12 @@ def test_batch_summary_matches_python_replay(spark, tmp_path, evolve):
 
 #: Spark jobs / py4j commands of one micro-batch, maintenance off, on the
 #: SUMMARY_EVENTS batch (a new column, dead letters written): the batch
-#: summary (cache build + one aggregation), the DLQ write and the merge.
-#: Measured 9 / 9 jobs and 1 373 / 1 006 commands (evolve / fused).
-BATCH_JOBS = {True: 9, False: 9}
-BATCH_GATEWAY_CALLS = {True: 1390, False: 1020}
+#: summary (cache build + one aggregation), the DLQ write and the merge
+#: (the batch persisted, its touched buckets from one single-task
+#: aggregation, then the per-bucket merge's exchange and collect).
+#: Measured 7 / 7 jobs and 1 178 / 831 commands (evolve / fused).
+BATCH_JOBS = {True: 7, False: 7}
+BATCH_GATEWAY_CALLS = {True: 1195, False: 845}
 
 
 def _budget_batch(spark, tmp_path, name, evolve, counter):
@@ -1621,6 +1623,116 @@ def test_upsert_local_merge_matches_plan_merge(spark, tmp_path):
             assert any("-merge" in f["path"] for f in t2.manifest["files"]), \
                 "local merge path was not taken"
     assert states["classic"] == states["local"]
+
+
+@pytest.mark.parametrize("evolve", [True, False], ids=["evolve", "fused"])
+def test_dead_letters_one_file_per_batch(spark, tmp_path, evolve):
+    """Each micro-batch writes its dead letters as ONE file, however many
+    partitions of the decode hold them."""
+    sync = _summary_sync(spark, tmp_path, "dlq1", evolve)
+    batch = _summary_batch(spark)
+    dead = {3, 6, 7, 10, 11, 12}  # SUMMARY_EVENTS indexes routed to the DLQ
+    pids = {r["pid"] for r in batch.select(
+        F.col("offset"), F.spark_partition_id().alias("pid")).collect()
+        if r["offset"] - 100 in dead}
+    assert len(pids) > 1, pids  # the premise: they span partitions
+    for batch_id in (0, 1):
+        assert sync.process_batch(batch, batch_id)["n_dlq"] == len(dead)
+    files = sorted(f for f in os.listdir(sync.spec.dlq_dir) if f.endswith(".parquet"))
+    assert len(files) == 2, files
+    per_file = sorted(
+        sorted({r["_batch_id"] for r in spark.read.parquet(
+            os.path.join(sync.spec.dlq_dir, f)).collect()}) for f in files)
+    assert per_file == [[0], [1]]
+    assert spark.read.parquet(sync.spec.dlq_dir).count() == 2 * len(dead)
+
+
+#: Spark jobs of an upsert merge of a small batch, by plan: the batch
+#: summary (the persisted batch's cache build, then touched buckets and
+#: distinct keys from one single-task aggregation), then the local plan's
+#: per-bucket Arrow merge (its exchange's map stage, the collect) or the
+#: classic plan's collapsed write (its one exchange's map stage, the
+#: write). With an in-batch collapse and a salted write they ran 6 and 7.
+UPSERT_MERGE_JOBS = {"local": 4, "classic": 4}
+
+
+@pytest.mark.parametrize("strategy", ["local", "classic"])
+def test_upsert_merge_job_budget(spark, tmp_path, strategy, count_jobs):
+    """An upsert merge takes its touched buckets and distinct keys from
+    one aggregation and has no in-batch collapse: the plan collapses
+    target ∪ batch once. In-batch duplicates still resolve by version."""
+    t = _kv_table(spark, tmp_path, f"ub_{strategy}", merge_mode="upsert")
+    t.merge(spark.range(0, 200).selectExpr(
+        "id AS k", "concat('v', id) AS v", "1L AS ver"))
+    t = LakeTable.load(spark, t.root)
+    # 30 events over 10 keys: three versions each, the middle one newest
+    batch = spark.range(0, 30).selectExpr(
+        "id % 10 * 17 AS k", "concat('w', id) AS v",
+        "CAST(2 + (id DIV 10 + 1) % 3 AS long) AS ver")
+    n, st = count_jobs(lambda: t.merge(batch, strategy=strategy))
+    assert n <= UPSERT_MERGE_JOBS[strategy], n
+    assert st.source_rows == 10 and st.touched_buckets > 0
+    t = LakeTable.load(spark, t.root)
+    assert t.manifest["summary"]["strategy"] == strategy
+    want = {k: f"v{k}" for k in range(200)}
+    want.update({i % 10 * 17: f"w{i}" for i in range(30) if i // 10 == 1})
+    assert {r["k"]: r["v"] for r in t.current().collect()} == want
+
+
+def _one_per_key(df) -> bool:
+    return "Aggregate" not in df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_latest_changes_equals_collapsed_changes(spark, tmp_path):
+    """``latest_changes`` equals ``lww_collapse(changes())`` on every kind
+    of window, and skips the collapse exactly where the window already
+    holds one row per key: one data snapshot written collapsed."""
+    from cds_spark.operators.dedup import lww_collapse
+
+    def batch(lo, hi, ver, dup=False):
+        rows = spark.range(lo, hi).selectExpr(
+            "id AS k", f"concat('v{ver}-', id) AS v", f"{ver}L AS ver")
+        if dup:  # each key twice in the batch, the later offset wins
+            rows = rows.unionByName(rows.withColumn("v", F.concat("v", F.lit("+"))))
+        return rows.withColumn("_offset", F.monotonically_increasing_id())
+
+    def check(t, v0, skips):
+        t = LakeTable.load(spark, t.root)
+        got = t.latest_changes(v0)
+        want = lww_collapse(t.changes(v0), t.pk,
+                            ["_change_version", "ver", "_offset"])
+        rows = lambda df: sorted(  # noqa: E731
+            tuple(r) for r in df.select(*sorted(df.columns)).collect())
+        assert rows(got) == rows(want) and rows(got)
+        assert _one_per_key(got) == skips
+
+    up = _kv_table(spark, tmp_path, "lc_up", merge_mode="upsert")
+    up.merge(batch(0, 40, 1))
+    up = LakeTable.load(spark, up.root)
+    v0 = up.version
+    up.merge(batch(20, 30, 2, dup=True))
+    check(up, v0, True)  # one copy-on-write merge
+    up = LakeTable.load(spark, up.root)
+    up.merge(batch(25, 35, 3))
+    check(up, v0, False)  # two data snapshots
+    up = LakeTable.load(spark, up.root)
+    v1 = up.version
+    up.merge(batch(30, 45, 4))
+    LakeTable.load(spark, up.root).compact(buckets=[0, 1])
+    check(up, v1, True)  # a merge, then a compact
+
+    ca = _kv_table(spark, tmp_path, "lc_ca", merge_mode="append",
+                   append_inbatch_collapse=True)
+    ca.merge(batch(0, 30, 1, dup=True))
+    check(ca, 1, True)  # one collapsed append
+
+    ua = _kv_table(spark, tmp_path, "lc_ua", merge_mode="append")
+    ua.merge(batch(0, 30, 1, dup=True))
+    ua = LakeTable.load(spark, ua.root)
+    assert ua.changes(1).count() == 60
+    check(ua, 1, False)  # in-batch duplicates: still collapsed
+    ua.compact()
+    check(ua, 1, False)  # the compact adds no rows
 
 
 TS_SCHEMA = T.StructType([
@@ -2040,3 +2152,102 @@ def test_cascade_rejects_transform_dropping_meta_columns(spark, tmp_path):
     with pytest.raises(ValueError, match="_is_delete"):
         cascade_sync(spark, src_root, str(tmp_path / "dst"), "cj",
                      transform=bad_tf)
+
+
+def test_auto_rebucket_clamp_stays_power_of_two_multiple(spark, tmp_path):
+    """When the suggested modulus exceeds auto_rebucket_max_n, the clamp
+    must HALVE (staying n_buckets * 2^k) rather than min() to the cap —
+    with n_buckets=3 and max_n=8 the target must land on 6, never 8."""
+    from cds_spark.streaming.pipeline import IncrementalSync, JobSpec
+    from cds_spark.sources.feed import (REPO_SCHEMA, change_feed,
+                                        write_feed_files)
+
+    feed = change_feed(spark, 1500, n_repos=10, paths_per_repo=20, seed=7)
+    topic = str(tmp_path / "topic")
+    write_feed_files(feed, topic, 2)
+    LakeTable.create(
+        spark, str(tmp_path / "repos"), REPO_SCHEMA, pk=["repo", "path"],
+        version_cols=["commit", "_offset"], n_buckets=3,
+        properties={"local_compact_max_bucket_bytes": 2_000},
+    )
+    spec = JobSpec(job_id="cl", table_root=str(tmp_path / "repos"),
+                   source_dir=topic, checkpoint_dir=str(tmp_path / "ckpt"),
+                   max_files_per_trigger=1, merge_mode="append",
+                   maintenance_every_batches=1, compact_max_generations=1,
+                   auto_rebucket=True, auto_rebucket_max_n=8)
+    IncrementalSync(spark, spec).run_available()
+    t = LakeTable.load(spark, str(tmp_path / "repos"))
+    assert t.n_buckets == 6, t.n_buckets
+    assert t.n_buckets % 3 == 0
+
+
+def test_auto_rebucket_negative_max_n_does_not_hang(spark, tmp_path):
+    """auto_rebucket_max_n=-1 (a jobs.json 'disable' guess) used to spin
+    the clamp loop forever inside foreachBatch."""
+    from cds_spark.streaming.pipeline import IncrementalSync, JobSpec
+    from cds_spark.sources.feed import REPO_SCHEMA, change_feed, write_feed_files
+
+    feed = change_feed(spark, 600, n_repos=5, paths_per_repo=10, seed=3)
+    topic = str(tmp_path / "topic")
+    write_feed_files(feed, topic, 2)
+    LakeTable.create(
+        spark, str(tmp_path / "repos"), REPO_SCHEMA, pk=["repo", "path"],
+        version_cols=["commit", "_offset"], n_buckets=2,
+        properties={"local_compact_max_bucket_bytes": 1_000})
+    spec = JobSpec(job_id="ng", table_root=str(tmp_path / "repos"),
+                   source_dir=topic, checkpoint_dir=str(tmp_path / "ckpt"),
+                   max_files_per_trigger=1, merge_mode="append",
+                   maintenance_every_batches=1, compact_max_generations=1,
+                   auto_rebucket=True, auto_rebucket_max_n=-1)
+    IncrementalSync(spark, spec).run_available()  # completes = no hang
+    t = LakeTable.load(spark, str(tmp_path / "repos"))
+    assert t.n_buckets == 2  # heal blocked by the cap, recorded not executed
+    recs = [json.loads(l) for l in open(
+        os.path.join(t.root, "_lineage", "ng.jsonl"))]
+    blocked = [r["maintenance"]["rebucket"] for r in recs
+               if r.get("maintenance") and r["maintenance"].get("rebucket")]
+    assert blocked and all(b.get("blocked") for b in blocked)
+
+
+def test_changes_from_zero_is_full_history(spark, tmp_path):
+    t = _kv_table(spark, tmp_path, "ch0", merge_mode="append")
+    t.merge(spark.range(0, 50).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver"))
+    t.merge(spark.range(50, 80).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver"))
+    got = {r.k for r in t.changes(0).collect()}
+    assert got == set(range(80))
+
+
+def test_exists_true_without_current_pointer(spark, tmp_path):
+    t = _kv_table(spark, tmp_path, "ex")
+    cur = os.path.join(t.root, "_meta", "_current")
+    os.remove(cur)  # crash window between manifest write and pointer write
+    assert LakeTable.exists(t.root)
+    assert LakeTable.load(spark, t.root).version >= 1
+    assert not LakeTable.exists(str(tmp_path / "never_created"))
+
+
+def test_compact_purge_keeps_null_is_delete_rows(spark, tmp_path):
+    """read() serves _is_delete=NULL rows as live; purge compaction must
+    not silently drop them (non-null-safe ~NULL used to)."""
+    import pyarrow.parquet as pq
+    import pyarrow as pa
+
+    t = _kv_table(spark, tmp_path, "nulldel", merge_mode="append")
+    t.merge(spark.range(0, 120).selectExpr(
+        "id AS k", "concat('v', id) AS v", "id AS ver"))
+    live_before = t.current().count()
+    # rewrite one data file with _is_delete := NULL (legacy/external writer)
+    f0 = t.manifest["files"][0]
+    path = os.path.join(t.root, f0["path"])
+    tbl = pq.read_table(path)
+    i = tbl.schema.get_field_index("_is_delete")
+    tbl = tbl.set_column(i, tbl.schema.field(i),
+                         pa.nulls(len(tbl), pa.bool_()))
+    pq.write_table(tbl, path)
+    t = LakeTable.load(spark, t.root)
+    assert t.current().count() == live_before  # read() coalesces NULL->live
+    t.compact(purge_tombstones=True, strategy="classic")
+    t = LakeTable.load(spark, t.root)
+    assert t.current().count() == live_before, "purge dropped NULL-flag rows"
