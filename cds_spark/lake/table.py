@@ -933,6 +933,14 @@ class LakeTable:
             self.n_buckets if want_mod is None else want_mod,
         )
 
+    def _bucket_files(self, buckets: Sequence[int] | None) -> list[dict]:
+        """The manifest entries that can hold a key of ``buckets`` (every
+        entry for None): the input set of a bucket read or rewrite."""
+        if buckets is None:
+            return self.manifest["files"]
+        want = {int(b) for b in buckets}
+        return [f for f in self.manifest["files"] if self._bucket_match(f, want)]
+
     def _file_schema(self, sid) -> T.StructType:
         """Physical schema of the files written under schema ``sid``."""
         return _physical(T.StructType.fromJson(self.manifest["schemas"][str(sid)]))
@@ -994,10 +1002,7 @@ class LakeTable:
         ``collapse`` applies the LWW window (ClickHouse ``FINAL`` analog)
         so readers always see one row per key. Callers that collapse
         downstream anyway (merge itself) pass collapse=False."""
-        files = self.manifest["files"]
-        if buckets is not None:
-            want = set(int(b) for b in buckets)
-            files = [f for f in files if self._bucket_match(f, want)]
+        files = self._bucket_files(buckets)
         if file_pred is not None:
             files = [f for f in files if file_pred(f)]
         phys_cur = _physical(self.schema)
@@ -1968,15 +1973,17 @@ class LakeTable:
         Default mode comes from the table property ``merge_mode`` (set at
         create; defaults to upsert).
 
-        ``strategy`` picks the upsert's physical plan, the same rule as
-        :meth:`compact`:
+        ``strategy`` picks the upsert's physical plan by the rule
+        :meth:`compact` uses too (:meth:`_rewrite_buckets`): an upsert is
+        a compaction of the touched buckets with the batch added.
 
-        - ``"auto"`` (default): the per-bucket Arrow merge
-          (:meth:`_merge_local_entries`) whenever applicable; otherwise
-          the classic union + LWW collapse, with the reason
+        - ``"auto"`` (default): the per-bucket Arrow rewrite
+          (:meth:`_local_rewrite`; the batch moves to its bucket in one
+          exchange, the target is read in-task) whenever applicable;
+          otherwise the classic plan, with the reason
           (:meth:`_local_fallback`) recorded as the commit summary's
           ``fallback``;
-        - ``"local"``: force the per-bucket merge (error if inapplicable);
+        - ``"local"``: force the per-bucket rewrite (error if inapplicable);
         - ``"classic"``: target ∪ batch, LWW-collapsed and written over one
           exchange (the collapsed write of :meth:`_write_txn`).
 
@@ -1984,13 +1991,9 @@ class LakeTable:
         ``null_filled`` the batch columns filled with NULL because the
         batch lacked them (e.g. a replay from before an
         ``alter_add_columns``). Append mode has a single plan and ignores
-        ``strategy``.
+        ``strategy``; so does an upsert of an empty batch, which picks no
+        plan.
         """
-        if strategy not in ("auto", "local", "classic"):
-            raise ValueError(
-                f"unknown merge strategy {strategy!r} "
-                "(expected 'auto', 'local' or 'classic')"
-            )
         if fence and self._fence_applied(fence):
             return MergeStats(skipped=True, version=self.version)
         mode = mode or self.properties.get("merge_mode", "upsert")
@@ -2060,32 +2063,8 @@ class LakeTable:
                     )
                 return MergeStats(skipped=False, version=self.version, source_rows=0,
                                   total_buckets=self.n_buckets)
-            files = [
-                f for f in self.manifest["files"]
-                if self._bucket_match(f, set(touched))
-            ]
-            # exactly the files whose content goes into the merge output —
-            # the rebase-retry must drop these and ONLY these
-            consumed = {f["path"] for f in files}
-            fallback = None if strategy == "classic" else self._local_fallback(files)
-            if strategy == "local" and fallback:
-                raise ValueError(
-                    f"local merge not applicable ({fallback}) — use strategy='auto'"
-                )
-            if strategy != "classic" and fallback is None:
-                # per-bucket Arrow merge: the target never re-enters Spark
-                # (no scan + union shuffle); handles multi-generation
-                # targets directly
-                entries = self._merge_local_entries(files, src)
-                route = {"strategy": "local"}
-            else:
-                target = self.read(
-                    buckets=touched, live_only=False, with_meta=True, collapse=False
-                ).withColumn("_bucket", self._bucket_expr())
-                entries = self._write_txn(
-                    target.unionByName(src), self._txn_name(), collapsed=True)
-                route = {"strategy": "classic",
-                         **({"fallback": fallback} if fallback else {})}
+            files = self._bucket_files(touched)
+            entries, route = self._rewrite_buckets(files, strategy, src=src)
             committed = self._commit_with_rebase(
                 {
                     "operation": "merge",
@@ -2094,7 +2073,9 @@ class LakeTable:
                     **route,
                     **_null_filled(filled),
                 },
-                consumed, entries, props,
+                # exactly the files whose content went into the merge
+                # output — the rebase-retry must drop these and ONLY these
+                {f["path"] for f in files}, entries, props,
             )
             if not committed:
                 return MergeStats(skipped=True, version=self.version)
@@ -2108,80 +2089,6 @@ class LakeTable:
             )
         finally:
             src.unpersist()
-
-    def _merge_local_entries(self, files: Sequence[dict], src: DataFrame) -> list[dict]:
-        """Shuffle-minimal per-bucket upsert merge — the COW twin of
-        :meth:`_compact_local_entries`; the caller has checked
-        :meth:`_local_fallback`. Returns the new manifest entries replacing
-        ``files`` (the touched buckets' files).
-
-        The only shuffle is the batch's own bucket partitioning (any merge
-        needs it); the TARGET side never re-enters Spark: each per-bucket
-        task reads its bucket's parquet directly (pyarrow, aligned to the
-        current schema by :func:`_arrow_read_aligned`), appends the batch
-        group, winner-selects on the light (pk, version) projection and
-        writes the replacement file. Eliminates the target scan + union
-        shuffle from the CoW path.
-
-        Batch-side type fidelity: the group arrives as an Arrow table
-        (applyInArrow — NO pandas round-trip), cast to the canonical
-        physical Arrow schema (:func:`_arrow_type_for`): a long column with
-        NULLs stays int64, float NaN stays NaN (pandas would silently turn
-        it into null), timestamps are us/UTC end-to-end."""
-        phys = _physical(self.schema)
-        arrow_schema = self._arrow_schema(phys)
-        reads_by_b = self._bucket_reads(files, arrow_schema.names)
-        txn_rel = os.path.join(DATA_DIR, self._txn_name("-merge"))
-        txn_dir = os.path.join(self.root, txn_rel)
-        os.makedirs(txn_dir, exist_ok=False)
-        root = self.root
-        pk, vcols = list(self.pk), list(self.version_cols)
-        pk_types = self._pk_type_names(phys)
-        stats_cols = self._stats_cols()
-        schema_names = arrow_schema.names
-        sid_i = self.manifest["schema_id"]
-        n_buckets = self.n_buckets
-        target_file_bytes = int(self.properties.get("target_file_bytes", 128 << 20))
-
-        def fn(key, tbl_in):
-            import json as _json
-            import os as _os
-
-            import pyarrow as _pa
-
-            _arrow_pin_single_thread()
-            b = int(key[0].as_py())
-            batch = (
-                tbl_in.select(schema_names).cast(arrow_schema)
-                .replace_schema_metadata(None)
-            )
-            reads, in_bytes = reads_by_b.get(b, ([], 0))
-            parts = [
-                _arrow_read_aligned(_os.path.join(root, p), carried, arrow_schema)
-                for p, carried in reads
-            ]
-            tbl = _pa.concat_tables(parts + [batch]) if parts else batch
-            tbl = _arrow_lww_collapse(tbl, pk, vcols, False)
-            # output chunking must see the BATCH's bytes too, not just the
-            # existing files': a large batch merged into an empty/small
-            # bucket would otherwise emit one file arbitrarily past
-            # target_file_bytes. Arrow in-memory bytes run ~3x the
-            # zstd-parquet footprint — scale before summing.
-            est_bytes = int(in_bytes) + batch.nbytes // 3
-            n_chunks = max(
-                1, (est_bytes + target_file_bytes - 1) // target_file_bytes
-            )
-            entries = _arrow_write_bucket(
-                tbl, txn_dir, txn_rel, b, n_chunks, pk, sid_i, n_buckets,
-                pk_types, stats_cols,
-            )
-            return _pa.table(
-                {"entry": _pa.array([_json.dumps(e) for e in entries],
-                                    type=_pa.string())}
-            )
-
-        res = src.groupBy("_bucket").applyInArrow(fn, "entry string")
-        return [json.loads(r["entry"]) for r in res.collect()]
 
     def _n_write_parts(self) -> int:
         return int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -2349,11 +2256,7 @@ class LakeTable:
         df = self.read(
             buckets=buckets, live_only=False, with_meta=True, collapse=False
         )
-        sel = set(int(b) for b in buckets) if buckets is not None else None
-        files = [
-            f for f in self.manifest["files"]
-            if sel is None or self._bucket_match(f, sel)
-        ]
+        files = self._bucket_files(buckets)
         # placement is judged under the modulus each file was WRITTEN with
         # (mid-rebucket a manifest legitimately holds two moduli); a
         # CASE over the file path maps every row to its own modulus
@@ -2483,45 +2386,6 @@ class LakeTable:
         uncollapsed = {int(f["bucket"]) for f in fl if not f.get("collapsed")}
         return {b for b, g in gens.items() if g > 1} | uncollapsed
 
-    def _float_version_cols(self, phys: T.StructType) -> bool:
-        """True when any VERSION column is float/double — the one type whose
-        ordering the Arrow-local winner select cannot reproduce: Spark sorts
-        NaN ABOVE every value, Arrow groups NaN with nulls under
-        ``null_placement`` (measured: NaN lands at_start), so a NaN version
-        would pick a different winner. Data columns may be float (values
-        only ride along); version columns force the plan-based paths."""
-        vc = set(self.version_cols)
-        return any(
-            f.dataType.typeName() in ("float", "double")
-            for f in phys.fields if f.name in vc
-        )
-
-    @staticmethod
-    def _arrow_schema(phys: T.StructType):
-        """Canonical Arrow schema of the physical columns (every type must
-        have an :func:`_arrow_type_for` mapping)."""
-        import pyarrow as pa
-
-        return pa.schema([
-            (f.name, _arrow_type_for(f.dataType.typeName())) for f in phys.fields
-        ])
-
-    def _bucket_reads(self, files: Sequence[dict], names: Sequence[str]) -> dict:
-        """bucket -> ([(path, carried column names)], bytes) for the
-        per-bucket Arrow tasks: each file's columns that carry current
-        values, in schema order (see :meth:`_carried_columns`)."""
-        carried: dict[str, list[str]] = {}
-        out: dict[int, tuple[list, int]] = {}
-        for f in files:
-            sid = str(f["schema_id"])
-            if sid not in carried:
-                have = self._carried_columns(sid)
-                carried[sid] = [c for c in names if c in have]
-            reads, nbytes = out.get(int(f["bucket"]), ([], 0))
-            reads.append((f["path"], carried[sid]))
-            out[int(f["bucket"])] = (reads, nbytes + int(f.get("bytes") or 0))
-        return out
-
     def _local_fallback(self, files: Sequence[dict]) -> str | None:
         """Why the per-bucket Arrow path cannot rewrite ``files``, or None
         when it can. Compact and upsert-merge commits record the reason as
@@ -2529,8 +2393,12 @@ class LakeTable:
 
         - ``type:<name>``: a column with no Arrow mapping (array, map,
           struct, decimal);
-        - ``float_version``: a float/double version column
-          (:meth:`_float_version_cols`);
+        - ``float_version``: a float/double VERSION column — the one type
+          whose ordering the Arrow winner select cannot reproduce: Spark
+          sorts NaN ABOVE every value, Arrow groups NaN with nulls under
+          ``null_placement`` (measured: NaN lands at_start), so a NaN
+          version would pick a different winner (data columns may be
+          float: their values only ride along);
         - ``widen:<from>->string``: a file's column was widened to string
           since it was written — the value rendering is Spark's cast, which
           Arrow's does not reproduce (numeric widenings and date ->
@@ -2543,7 +2411,8 @@ class LakeTable:
         for f in phys.fields:
             if _arrow_type_for(f.dataType.typeName()) is None:
                 return f"type:{f.dataType.typeName()}"
-        if self._float_version_cols(phys):
+        if any(f.dataType.typeName() in ("float", "double")
+               for f in phys.fields if f.name in self.version_cols):
             return "float_version"
         cur = {f.name: f.dataType.typeName() for f in phys.fields}
         for sid in {str(f["schema_id"]) for f in files}:
@@ -2562,29 +2431,76 @@ class LakeTable:
             return "bucket_over_cap"
         return None
 
-    def _compact_local_entries(
+    def _rewrite_buckets(
         self,
         files: Sequence[dict],
+        strategy: str,
+        src: DataFrame | None = None,
+        purge_tombstones: bool = False,
+    ) -> tuple[list[dict], dict]:
+        """The part merge of the buckets ``files`` cover: an upsert merge of
+        the batch ``src`` (with ``_bucket``) or, without one, a compaction.
+        ``strategy`` (see :meth:`compact`) picks the per-bucket Arrow
+        rewrite (:meth:`_local_rewrite`) or the classic plan, the collapsed
+        :meth:`_write_txn` of the files (∪ the batch). Returns the new
+        manifest entries and the summary's ``strategy``/``fallback``."""
+        op = "compact" if src is None else "merge"
+        if strategy not in ("auto", "local", "classic"):
+            raise ValueError(
+                f"unknown {op} strategy {strategy!r} "
+                "(expected 'auto', 'local' or 'classic')"
+            )
+        fallback = None if strategy == "classic" else self._local_fallback(files)
+        if strategy == "local" and fallback:
+            raise ValueError(
+                f"local {op} not applicable ({fallback}) — use strategy='auto'"
+            )
+        if fallback is None and strategy != "classic":
+            return (self._local_rewrite(files, src, purge_tombstones),
+                    {"strategy": "local"})
+        # each bucket is one task of the collapsed write, which spills
+        # where a bucket over the local cap does not fit in memory;
+        # tombstones purged null-safely after the collapse (read()
+        # serves _is_delete=NULL rows as LIVE, as the Arrow path does)
+        df = self._read_entries(files, _physical(self.schema)).withColumn(
+            "_bucket", self._bucket_expr())
+        if src is not None:
+            df = df.unionByName(src)
+        entries = self._write_txn(
+            df, self._txn_name("-compact" if src is None else ""), collapsed=True,
+            drop_tombstones=purge_tombstones)
+        return entries, {"strategy": "classic",
+                         **({"fallback": fallback} if fallback else {})}
+
+    def _local_rewrite(
+        self,
+        files: Sequence[dict],
+        src: DataFrame | None,
         purge_tombstones: bool,
-        target_file_bytes: int,
     ) -> list[dict]:
-        """Shuffle-free, broadcast-free per-bucket compaction of ``files``
-        (the selected buckets' files; the caller has checked
-        :meth:`_local_fallback`). Returns the new manifest entries.
+        """Per-bucket Arrow rewrite of the buckets ``files`` cover, with
+        the upsert batch ``src`` added when given; the caller has checked
+        :meth:`_local_fallback`. Returns the new manifest entries.
 
         The table layout already guarantees that ALL generations of a key
         live inside one bucket's files — so collapsing a bucket needs no
-        data movement at all: one task per bucket reads that bucket's
-        parquet files (pyarrow, each aligned to the current schema by
+        data movement: one task per bucket reads that bucket's parquet
+        files (pyarrow, each aligned to the current schema by
         :func:`_arrow_read_aligned` — files from before an
         alter_add_columns / widen / drop-then-re-add read exactly as
-        :meth:`_read_entries` serves them), picks the max-version row per
-        key, drops tombstones, sorts by PK and writes the replacement
-        file(s) directly. Zero shuffle, zero driver-side broadcast build —
-        the two costs that cap N->4N scaling in the plan-based paths. This
-        is how lakehouse compaction services rewrite partitions: an
-        embarrassingly parallel per-partition job, wall-clock = slowest
-        single bucket, scaling linearly with executors at any table size.
+        :meth:`_read_entries` serves them), appends the batch's group,
+        picks the max-version row per key, drops tombstones when
+        ``purge_tombstones``, and writes the replacement file(s) directly.
+        The target never re-enters Spark (no scan, no union shuffle, no
+        driver-side broadcast build) — how lakehouse compaction services
+        rewrite partitions: an embarrassingly parallel per-partition job,
+        wall-clock = slowest single bucket.
+
+        Only the launch differs. An upsert moves the batch to its buckets
+        in one exchange (any merge needs it): ``applyInArrow`` over
+        ``src`` grouped by ``_bucket``. A compaction moves nothing: one
+        RDD partition per bucket, each carrying only its own bucket's read
+        list — one Spark job, no shuffle, no pandas.
 
         Ordering fidelity: the winner rule must equal lww_collapse's
         ``max(struct(version_cols))``. Arrow's multi-key ascending sort
@@ -2592,95 +2508,110 @@ class LakeTable:
         equals code-point order, so string comparison agrees), and taking
         the LAST row per key after that sort is the struct max — selected
         by an Arrow C++ group_by argmax over row positions
-        (:func:`_arrow_lww_collapse`); nothing round-trips through pandas,
-        so integer columns with NULLs can never degrade to float64. The one
-        ordering divergence is float/double VERSION columns: Spark sorts
-        NaN above every value, Arrow groups NaN with nulls under
-        ``null_placement`` — those tables take the classic plan."""
-        if not files:
-            return []
+        (:func:`_arrow_lww_collapse`). Float version columns, where the two
+        orders part, take the classic plan (:meth:`_local_fallback`).
+
+        Type fidelity: nothing round-trips through pandas. The batch group
+        arrives as an Arrow table, cast to the canonical physical Arrow
+        schema (:func:`_arrow_type_for`): a long column with NULLs stays
+        int64, float NaN stays NaN (pandas would silently turn it into
+        null), timestamps are us/UTC end-to-end."""
+        import pyarrow as pa
+
         phys = _physical(self.schema)
-        arrow_schema = self._arrow_schema(phys)
-        txn_rel = os.path.join(DATA_DIR, self._txn_name("-compact"))
+        arrow_schema = pa.schema([
+            (f.name, _arrow_type_for(f.dataType.typeName())) for f in phys.fields
+        ])
+        # bucket -> ([(path, the file's columns that carry current values,
+        # in schema order — see _carried_columns)], bytes)
+        carried: dict[str, list[str]] = {}
+        reads_by_b: dict[int, tuple[list, int]] = {}
+        for f in files:
+            sid = str(f["schema_id"])
+            if sid not in carried:
+                have = self._carried_columns(sid)
+                carried[sid] = [c for c in arrow_schema.names if c in have]
+            reads, nbytes = reads_by_b.get(int(f["bucket"]), ([], 0))
+            reads.append((f["path"], carried[sid]))
+            reads_by_b[int(f["bucket"])] = (reads, nbytes + int(f.get("bytes") or 0))
+        txn_rel = os.path.join(
+            DATA_DIR, self._txn_name("-compact" if src is None else "-merge"))
         txn_dir = os.path.join(self.root, txn_rel)
         os.makedirs(txn_dir, exist_ok=False)
         root = self.root
         pk, vcols = list(self.pk), list(self.version_cols)
         pk_types = self._pk_type_names(phys)
         stats_cols = self._stats_cols()
-        # cluster_by: re-sort each collapsed bucket by this column before
-        # chunking, so the bucket's chunk files carry DISJOINT value ranges
-        # and scan_where prunes to O(matching chunks) — the Iceberg
-        # sort-order / ClickHouse ORDER BY analog, applied at compaction
-        # (the merge generations stay pk-sorted; compact is the clusterer).
-        # Trade-off: chunk files are no longer PK-sorted, so keyset_page's
-        # adaptive slice reads more files on clustered tables — choose the
-        # layout per table by its dominant read. PK tie-breaker keeps the
-        # sort total, so reruns are byte-deterministic.
-        cluster_col = self.properties.get("cluster_by")
-        n_buckets = self.n_buckets
         sid_i = self.manifest["schema_id"]
-        tasks = [
-            (int(b), json.dumps(reads), int(nbytes))
-            for b, (reads, nbytes) in sorted(
-                self._bucket_reads(files, arrow_schema.names).items()
+        n_buckets = self.n_buckets
+        target_file_bytes = int(self.properties.get("target_file_bytes", 128 << 20))
+        # cluster_by: a compaction re-sorts each collapsed bucket by this
+        # column before chunking, so the bucket's chunk files carry
+        # DISJOINT value ranges and scan_where prunes to O(matching chunks)
+        # — the Iceberg sort-order / ClickHouse ORDER BY analog (merge
+        # generations stay pk-sorted; compact is the clusterer). Trade-off:
+        # chunk files are no longer PK-sorted, so keyset_page's adaptive
+        # slice reads more files on clustered tables — choose the layout
+        # per table by its dominant read. PK tie-breaker keeps the sort
+        # total, so reruns are byte-deterministic. Every Arrow-mapped type
+        # sorts.
+        cluster_col = self.properties.get("cluster_by") if src is None else None
+
+        def rewrite(b: int, reads: list, in_bytes: int, batch=None) -> list[dict]:
+            import pyarrow as _pa
+            import pyarrow.compute as _pc
+
+            parts = [
+                _arrow_read_aligned(os.path.join(root, p), cols, arrow_schema)
+                for p, cols in reads
+            ]
+            if batch is not None:
+                parts.append(batch)
+                # output chunking must see the BATCH's bytes too, not just
+                # the existing files': a large batch merged into an
+                # empty/small bucket would otherwise emit one file
+                # arbitrarily past target_file_bytes. Arrow in-memory bytes
+                # run ~3x the zstd-parquet footprint — scale before summing.
+                in_bytes += batch.nbytes // 3
+            tbl = _arrow_lww_collapse(
+                _pa.concat_tables(parts), pk, vcols, purge_tombstones)
+            if cluster_col in tbl.schema.names and tbl.num_rows:
+                tbl = tbl.take(_pc.sort_indices(
+                    tbl,
+                    sort_keys=[(c, "ascending") for c in [cluster_col, *pk]],
+                    null_placement="at_start",
+                ))
+            n_chunks = max(1, (in_bytes + target_file_bytes - 1) // target_file_bytes)
+            return _arrow_write_bucket(
+                tbl, txn_dir, txn_rel, b, n_chunks, pk, sid_i, n_buckets,
+                pk_types, stats_cols,
             )
-        ]
 
-        def run(batches):
-            import json as _json
-            import os as _os
+        if src is None:
+            def run(tasks):
+                _arrow_pin_single_thread()
+                for b, reads, in_bytes in tasks:
+                    yield from rewrite(b, reads, in_bytes)
 
-            import pandas as _pd
+            tasks = [(b, reads, nbytes)
+                     for b, (reads, nbytes) in sorted(reads_by_b.items())]
+            return (self.spark.sparkContext.parallelize(tasks, len(tasks))
+                    .mapPartitions(run).collect())
+
+        def fn(key, tbl_in):
             import pyarrow as _pa
 
             _arrow_pin_single_thread()
-            for pdf_in in batches:
-                out = []
-                for b, reads_j, in_bytes in zip(
-                    pdf_in["bucket"], pdf_in["reads"], pdf_in["in_bytes"]
-                ):
-                    tbl = _pa.concat_tables([
-                        _arrow_read_aligned(
-                            _os.path.join(root, p), carried, arrow_schema
-                        )
-                        for p, carried in _json.loads(reads_j)
-                    ])
-                    tbl = _arrow_lww_collapse(tbl, pk, vcols, purge_tombstones)
-                    if cluster_col and cluster_col in tbl.schema.names and tbl.num_rows:
-                        import pyarrow.compute as _pc
+            b = int(key[0].as_py())
+            batch = (tbl_in.select(arrow_schema.names).cast(arrow_schema)
+                     .replace_schema_metadata(None))
+            reads, in_bytes = reads_by_b.get(b, ([], 0))
+            entries = rewrite(b, reads, in_bytes, batch)
+            return _pa.table({"entry": _pa.array(
+                [json.dumps(e) for e in entries], type=_pa.string())})
 
-                        try:
-                            tbl = tbl.take(_pc.sort_indices(
-                                tbl,
-                                sort_keys=[(cluster_col, "ascending")]
-                                + [(c, "ascending") for c in pk],
-                                null_placement="at_start",
-                            ))
-                        except Exception:
-                            # un-sortable cluster column (array/struct/...):
-                            # keep the pk-sorted collapse — clustering is a
-                            # layout optimization, never a compact failure
-                            pass
-                    n_chunks = max(
-                        1, (int(in_bytes) + target_file_bytes - 1)
-                        // target_file_bytes,
-                    )
-                    out.extend(_arrow_write_bucket(
-                        tbl, txn_dir, txn_rel, int(b), n_chunks,
-                        pk, sid_i, n_buckets, pk_types, stats_cols,
-                    ))
-                yield _pd.DataFrame(
-                    {"entry": [_json.dumps(e) for e in out]}
-                )
-
-        tdf = self.spark.createDataFrame(
-            tasks, "bucket int, reads string, in_bytes long"
-        )
-        # round-robin to one task per partition: hashing bucket ids into
-        # len(tasks) partitions would leave ~1/e of them empty
-        result = tdf.repartition(len(tasks)).mapInPandas(run, "entry string")
-        return [json.loads(r["entry"]) for r in result.collect()]
+        res = src.groupBy("_bucket").applyInArrow(fn, "entry string")
+        return [json.loads(r["entry"]) for r in res.collect()]
 
     def compact(
         self,
@@ -2713,24 +2644,21 @@ class LakeTable:
         purge (found by the stateful model check, seed 9129). Returns the
         buckets rewritten.
 
-        ``strategy`` picks the physical plan:
+        ``strategy`` picks the physical plan, by the rule an upsert
+        :meth:`merge` uses too (:meth:`_rewrite_buckets`):
 
-        - ``"auto"`` (default): the shuffle-free per-bucket Arrow rewrite
-          (:meth:`_compact_local_entries`) whenever applicable — it has no
-          wide shuffle and no driver-serial broadcast build, so it scales
-          linearly with executors; otherwise the classic plan, with the
-          reason (:meth:`_local_fallback`) recorded as the commit
-          summary's ``fallback``;
+        - ``"auto"`` (default): the per-bucket Arrow rewrite
+          (:meth:`_local_rewrite`) whenever applicable — one Spark job
+          with one task per bucket, no shuffle and no driver-serial
+          broadcast build, so it scales linearly with executors; otherwise
+          the classic plan, with the reason (:meth:`_local_fallback`)
+          recorded as the commit summary's ``fallback``;
         - ``"local"``: force the per-bucket rewrite (error if inapplicable);
         - ``"classic"``: the LWW collapse and write over one exchange (the
           collapsed write of :meth:`_write_txn`).
 
-        The commit summary's ``strategy`` records which one ran."""
-        if strategy not in ("auto", "local", "classic"):
-            raise ValueError(
-                f"unknown compact strategy {strategy!r} "
-                "(expected 'auto', 'local' or 'classic')"
-            )
+        The commit summary's ``strategy`` records which one ran. A
+        selection that holds no files commits nothing and returns ``[]``."""
         gens = self.bucket_generations()
         uncollapsed = {
             int(f["bucket"]) for f in self.manifest["files"] if not f.get("collapsed")
@@ -2744,43 +2672,20 @@ class LakeTable:
             sel = sorted(b for b, g in eff.items() if g > max_generations)
         else:
             sel = sorted(gens)
-        if not sel:
+        sel_files = self._bucket_files(sel)
+        if not sel_files:
             return []
-        sel_files = [
-            f for f in self.manifest["files"] if self._bucket_match(f, set(sel))
-        ]
-        # exactly the files this compact consumes — the rebase-retry below
-        # must drop these (and ONLY these) from whatever manifest is
-        # current at commit time
-        input_paths = {f["path"] for f in sel_files}
-        summary = {"operation": "compact", "purged": purge_tombstones,
-                   "buckets": len(sel)}
-        fallback = None if strategy == "classic" else self._local_fallback(sel_files)
-        if strategy == "local" and fallback:
-            raise ValueError(
-                f"local compaction not applicable ({fallback}) — use strategy='auto'"
-            )
-        if strategy != "classic" and fallback is None:
-            entries = self._compact_local_entries(
-                sel_files, purge_tombstones,
-                int(self.properties.get("target_file_bytes", 128 << 20)),
-            )
-            summary["strategy"] = "local"
-        else:
-            # each bucket is one task of the collapsed write, which spills
-            # where a bucket over the local cap does not fit in memory;
-            # tombstones purged null-safely after the collapse (read()
-            # serves _is_delete=NULL rows as LIVE, as the Arrow path does)
-            df = self.read(buckets=sel, live_only=False, with_meta=True,
-                           collapse=False).withColumn("_bucket", self._bucket_expr())
-            entries = self._write_txn(df, self._txn_name("-compact"), collapsed=True,
-                                      drop_tombstones=purge_tombstones)
-            summary.update({**({"fallback": fallback} if fallback else {}),
-                            "strategy": "classic"})
+        entries, route = self._rewrite_buckets(
+            sel_files, strategy, purge_tombstones=purge_tombstones)
         # maintenance must never block (or be blocked by) the ingest
         # writer — the ClickHouse background-merge contract; see
-        # _commit_with_rebase for why the rebase is safe
-        self._commit_with_rebase(summary, input_paths, entries, {})
+        # _commit_with_rebase for why the rebase is safe. The rebase-retry
+        # drops exactly the files this compact consumed (and ONLY these)
+        # from whatever manifest is current at commit time.
+        self._commit_with_rebase(
+            {"operation": "compact", "purged": purge_tombstones,
+             "buckets": len(sel), **route},
+            {f["path"] for f in sel_files}, entries, {})
         return sel
 
     def rebucket(self, new_n_buckets: int, group: int = 8,
@@ -2950,10 +2855,7 @@ class LakeTable:
             if not buckets:
                 return {"keys_purged": 0, "buckets_rewritten": 0,
                         "version": self.version}
-            consumed = {
-                f["path"] for f in self.manifest["files"]
-                if self._bucket_match(f, set(buckets))
-            }
+            consumed = {f["path"] for f in self._bucket_files(buckets)}
             kdf = keys.drop("_bucket")
             if n_keys <= PURGE_BROADCAST_KEYS:
                 kdf = F.broadcast(kdf)
@@ -3018,10 +2920,7 @@ class LakeTable:
         if not buckets:
             return {"rows_updated": 0, "buckets_rewritten": 0,
                     "version": self.version}
-        consumed = {
-            f["path"] for f in self.manifest["files"]
-            if self._bucket_match(f, set(buckets))
-        }
+        consumed = {f["path"] for f in self._bucket_files(buckets)}
         cur = self.read(buckets=buckets, live_only=False, with_meta=True)
         types = {f.name: f.dataType for f in self.schema.fields}
         # guard against silent erasure: a non-null RHS that does not cast

@@ -1679,6 +1679,47 @@ def test_upsert_merge_job_budget(spark, tmp_path, strategy, count_jobs):
     assert {r["k"]: r["v"] for r in t.current().collect()} == want
 
 
+#: Spark jobs of a compaction of a two-generation table of 42 files, by
+#: plan: the local plan's per-bucket rewrite (one task per bucket, no
+#: shuffle), or the classic plan's file listing (Spark lists more than 32
+#: read paths in a job), its exchange's map stage and its write. Launched
+#: as a pandas UDF behind a round-robin repartition, the local plan ran 2.
+COMPACT_JOBS = {"local": 1, "classic": 3}
+
+
+@pytest.mark.parametrize("strategy", ["local", "classic"])
+def test_compact_job_budget(spark, tmp_path, strategy, count_jobs):
+    """A local compaction launches one task per bucket in one Spark job;
+    either plan leaves one generation per bucket holding the newest rows."""
+    t = _kv_table(spark, tmp_path, f"cb_{strategy}", merge_mode="append")
+    for ver in (1, 2):
+        t.merge(spark.range(0, 200).selectExpr(
+            "id AS k", f"concat('v{ver}-', id) AS v", f"{ver}L AS ver"))
+    t = LakeTable.load(spark, t.root)
+    n, done = count_jobs(lambda: t.compact(strategy=strategy))
+    assert n <= COMPACT_JOBS[strategy], n
+    t = LakeTable.load(spark, t.root)
+    assert done == [0, 1, 2, 3]
+    assert t.manifest["summary"]["strategy"] == strategy
+    assert set(t.bucket_generations().values()) == {1}
+    assert {r["k"]: r["v"] for r in t.current().collect()} == {
+        k: f"v2-{k}" for k in range(200)}
+
+
+@pytest.mark.parametrize("strategy", ["auto", "classic"])
+def test_compact_of_empty_buckets_commits_nothing(spark, tmp_path, strategy):
+    """compact(buckets=...) over buckets that hold no files rewrites
+    nothing: no snapshot is committed and no bucket is reported."""
+    t = _kv_table(spark, tmp_path, f"ce_{strategy}", merge_mode="append")
+    t.merge(spark.range(0, 1).selectExpr("id AS k", "'v' AS v", "1L AS ver"))
+    t = LakeTable.load(spark, t.root)
+    (held,) = {f["bucket"] for f in t.manifest["files"]}
+    empty = [b for b in range(t.n_buckets) if b != held]
+    v = t.version
+    assert t.compact(buckets=empty, strategy=strategy) == []
+    assert LakeTable.load(spark, t.root).version == v
+
+
 def _one_per_key(df) -> bool:
     return "Aggregate" not in df._jdf.queryExecution().optimizedPlan().toString()
 
