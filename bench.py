@@ -107,7 +107,7 @@ def cdc_replay(
     per micro-batch, collapse amortized in compact); upsert = copy-on-write
     MERGE INTO shape (O(touched buckets) per batch)."""
     from cds_spark.lake.table import LakeTable
-    from cds_spark.operators.decode import decode_feed_rows
+    from cds_spark.operators.decode import decode_feed, events_to_rows
     from cds_spark.sources.feed import FEED_SCHEMA, REPO_SCHEMA, materialize_feed
 
     import uuid
@@ -136,7 +136,8 @@ def cdc_replay(
             properties={"merge_mode": mode},
         )
         wfeed = spark.read.schema(FEED_SCHEMA).parquet(wpaths[0])
-        wrows, _ = decode_feed_rows(wfeed, wt.schema, wt.pk, inject={"commit": "commit"})
+        wrows, _ = events_to_rows(decode_feed(wfeed, inject={"commit": "commit"}),
+                                  wt.schema, wt.pk)
         wt.merge(wrows, fence=("warm", 0))
         if mode == "append" and compact:
             wt.compact(purge_tombstones=True)
@@ -153,8 +154,8 @@ def cdc_replay(
     for i, p in enumerate(feed_paths):
         tb = time.time()
         feed = spark.read.schema(FEED_SCHEMA).parquet(p)
-        rows, _dlq = decode_feed_rows(
-            feed, table.schema, table.pk, inject={"commit": "commit"}
+        rows, _dlq = events_to_rows(
+            decode_feed(feed, inject={"commit": "commit"}), table.schema, table.pk
         )
         table.merge(rows, fence=("bench", i))
         batch_secs.append(round(time.time() - tb, 2))

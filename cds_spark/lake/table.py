@@ -2657,8 +2657,10 @@ class LakeTable:
         - ``"classic"``: the LWW collapse and write over one exchange (the
           collapsed write of :meth:`_write_txn`).
 
-        The commit summary's ``strategy`` records which one ran. A
-        selection that holds no files commits nothing and returns ``[]``."""
+        The commit summary's ``strategy`` records which one ran. The
+        return value and the summary's ``buckets`` count only selected
+        buckets that hold files; a selection that holds none commits
+        nothing and returns ``[]``."""
         gens = self.bucket_generations()
         uncollapsed = {
             int(f["bucket"]) for f in self.manifest["files"] if not f.get("collapsed")
@@ -2673,7 +2675,13 @@ class LakeTable:
         else:
             sel = sorted(gens)
         sel_files = self._bucket_files(sel)
-        if not sel_files:
+        # report only the buckets some selected file can hold a key of;
+        # a file under the table's modulus holds its own bucket only
+        held = {int(f["bucket"]) for f in sel_files if self._file_mod(f) == self.n_buckets}
+        other = [f for f in sel_files if self._file_mod(f) != self.n_buckets]
+        sel = [b for b in sel
+               if b in held or any(self._bucket_match(f, {b}) for f in other)]
+        if not sel:
             return []
         entries, route = self._rewrite_buckets(
             sel_files, strategy, purge_tombstones=purge_tombstones)

@@ -22,9 +22,11 @@ Normalized output schema (one row per change):
                                      (partial-update mask, common.go:49-56)
     _partition  int/long    source partition (lineage)
     _offset     long        source offset (version tiebreak + lineage)
+    _raw        string      the wire payload, verbatim
 
-Unparseable messages are split to a DLQ, mirroring the `{topic}-failed`
-producer (pkg/tube/kfks.go:53-58, 201-211).
+Unparseable messages are split to a DLQ with their ``_raw`` payload,
+mirroring the verbatim `{topic}-failed` producer (pkg/tube/kfks.go:53-58,
+201-211).
 """
 
 from __future__ import annotations
@@ -42,7 +44,7 @@ MAP_SS = T.MapType(T.StringType(), T.StringType())
 #: well under this; message offsets stay distinct up to 2^51 messages.
 CANAL_BATCH_STRIDE = 4096
 
-NORMALIZED_FIELDS = ["op", "data", "exists", "_partition", "_offset"]
+NORMALIZED_FIELDS = ["op", "data", "exists", "_partition", "_offset", "_raw"]
 
 # op whitelists — canalsyncmodel.go:71-88, connectormongomodel.go:74-101,
 # debeziumsyncmodel.go:150-151 ('r' snapshot reads dropped). ONE SQL map
@@ -58,8 +60,8 @@ def _norm_op(col):
 
 
 def pk_valid(parsed: F.Column, pk_values: Sequence[F.Column]) -> F.Column:
-    """The one DLQ split rule (events_to_rows, decode_feed_checked, the
-    pipeline's batch summary), on the RAW wire values before coercion
+    """The one DLQ split rule (events_to_rows and the pipeline's batch
+    summary), on the RAW wire values before coercion
     (parse.go:141-144): the payload parsed, and every PK value is
     present, non-null and non-empty (an absent key reads as NULL)."""
     ok = parsed
@@ -88,7 +90,7 @@ def _finish(
     df: DataFrame,
     partition_col: str | None,
     offset_col: str | None,
-    keep_cols: Sequence[str] = (),
+    raw_col: str,
 ) -> DataFrame:
     if offset_col is None:
         # A monotonically_increasing_id() fallback would be partition-layout-
@@ -104,7 +106,7 @@ def _finish(
         "exists",
         part.cast("long").alias("_partition"),
         off.cast("long").alias("_offset"),
-        *[F.col(c) for c in keep_cols],
+        F.col(raw_col).alias("_raw"),
     )
 
 
@@ -132,11 +134,7 @@ def decode_canal(
             T.StructField("old", T.ArrayType(MAP_SS)),
         ]
     )
-    # the raw payload is not needed past the parse: carrying it through
-    # the Generate would copy the widest column per row (and re-run the
-    # caller's value expression if it is computed)
-    keep = [c for c in df.columns if c != value_col]
-    p = _materialize(df, keep, _e=F.from_json(F.col(value_col), schema))
+    p = _materialize(df, df.columns, _e=F.from_json(F.col(value_col), schema))
     p = p.withColumn("op", _norm_op(F.col("_e.type"))).filter(F.col("op").isNotNull())
     p = p.select("*", F.posexplode_outer(F.col("_e.data")).alias("_rowpos", "data"))
     # one canal message holds a BATCH of rows: every row needs a DISTINCT
@@ -150,7 +148,7 @@ def decode_canal(
         F.col(offset_col).cast("long") * F.lit(CANAL_BATCH_STRIDE)
         + F.coalesce(F.col("_rowpos").cast("long"), F.lit(0)))
     p = p.withColumn("exists", F.map_keys(F.col("data")))
-    return _finish(p, partition_col, "__off")
+    return _finish(p, partition_col, "__off", value_col)
 
 
 def decode_debezium_mysql(
@@ -175,11 +173,7 @@ def decode_debezium_mysql(
             )
         ]
     )
-    # the raw payload is not needed past the parse: carrying it through
-    # the Generate would copy the widest column per row (and re-run the
-    # caller's value expression if it is computed)
-    keep = [c for c in df.columns if c != value_col]
-    p = _materialize(df, keep, _e=F.from_json(F.col(value_col), schema))
+    p = _materialize(df, df.columns, _e=F.from_json(F.col(value_col), schema))
     p = p.withColumn("op", _norm_op(F.col("_e.payload.op"))).filter(F.col("op").isNotNull())
     p = p.withColumn(
         "data",
@@ -188,7 +182,7 @@ def decode_debezium_mysql(
         ),
     )
     p = p.withColumn("exists", F.map_keys(F.col("data")))
-    return _finish(p, partition_col, offset_col)
+    return _finish(p, partition_col, offset_col, value_col)
 
 
 def decode_connector_mongo(
@@ -227,11 +221,7 @@ def decode_connector_mongo(
             ),
         ]
     )
-    # the raw payload is not needed past the parse: carrying it through
-    # the Generate would copy the widest column per row (and re-run the
-    # caller's value expression if it is computed)
-    keep = [c for c in df.columns if c != value_col]
-    p = _materialize(df, keep, _e=F.from_json(F.col(value_col), schema))
+    p = _materialize(df, df.columns, _e=F.from_json(F.col(value_col), schema))
     p = p.withColumn("op", _norm_op(F.col("_e.operationType"))).filter(F.col("op").isNotNull())
     removed = F.coalesce(
         F.col("_e.updateDescription.removedFields"),
@@ -251,7 +241,7 @@ def decode_connector_mongo(
         .otherwise(F.col("_e.documentKey")),
     )
     p = p.withColumn("exists", F.map_keys(F.col("data")))
-    return _finish(p, partition_col, offset_col)
+    return _finish(p, partition_col, offset_col, value_col)
 
 
 def _mongoize_parts(m, set_obj, id_obj, empty_map):
@@ -337,9 +327,7 @@ def decode_debezium_mongo(
     # then the three member-map parses, then the nested $set/_id parses —
     # every from_json runs once per row, all downstream references are
     # O(1) struct/attribute reads.
-    # raw payload dropped at the first barrier (widest column; see the
-    # other dialects)
-    base_keep = [c for c in df.columns if c != value_col]
+    base_keep = df.columns
     p = _materialize(df, base_keep, _env=F.from_json(F.col(value_col), schema))
     p = p.withColumn("op", _norm_op(F.col("_env.payload.op"))).filter(F.col("op").isNotNull())
     keep = base_keep + ["op"]
@@ -383,7 +371,7 @@ def decode_debezium_mongo(
     # not free either); drop the intermediate parses and the envelope here
     p = _materialize(p, base_keep + ["op"], data=data)
     p = p.withColumn("exists", F.map_keys(F.col("data")))
-    return _finish(p, partition_col, offset_col)
+    return _finish(p, partition_col, offset_col, value_col)
 
 
 def decode_feed(
@@ -393,7 +381,6 @@ def decode_feed(
     partition_col: str | None = "partition",
     offset_col: str | None = "offset",
     inject: dict[str, str] | None = None,
-    keep_cols: Sequence[str] = (),
 ) -> DataFrame:
     """The fixture F2 feed (FIXTURES.md): op given, payload = flat JSON
     after-image for c/u, key-only for d — a simplified Debezium envelope.
@@ -401,10 +388,7 @@ def decode_feed(
     ``inject`` maps data keys to envelope columns merged under the payload
     (payload wins on conflict — requires mapKeyDedupPolicy=LAST_WIN, set by
     :func:`cds_spark.session.get_spark`). Used to carry the envelope version
-    column (``commit``) into delete events whose payload is key-only.
-
-    ``keep_cols`` passes raw envelope columns through (e.g. ``payload`` for
-    the fused schema-evolution discovery — one decode scan per batch)."""
+    column (``commit``) into delete events whose payload is key-only."""
     p = df.withColumn("op", _norm_op(F.col(op_col))).filter(F.col("op").isNotNull())
     p = p.withColumn("data", F.from_json(F.col(payload_col), MAP_SS))
     if inject:
@@ -415,119 +399,7 @@ def decode_feed(
             "data", F.when(F.col("data").isNotNull(), F.map_concat(env, F.col("data")))
         )
     p = p.withColumn("exists", F.map_keys(F.col("data")))
-    return _finish(p, partition_col, offset_col, keep_cols)
-
-
-def split_dead_letters(checked: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """``(rows, dlq)`` of typed rows + ``_raw`` + the pk_valid flag
-    ``__keep``: the valid rows without ``_raw``, the dead letters with it."""
-    dlq = checked.filter(~F.col("__keep")).drop("__keep")
-    good = checked.filter(F.col("__keep")).drop("__keep", "_raw")
-    return good, dlq
-
-
-def decode_feed_rows(df: DataFrame, table_schema: T.StructType,
-                     pk: Sequence[str], **kw) -> tuple[DataFrame, DataFrame]:
-    """:func:`decode_feed_checked` split into ``(rows, dlq)``."""
-    return split_dead_letters(decode_feed_checked(df, table_schema, pk, **kw))
-
-
-def decode_feed_checked(
-    df: DataFrame,
-    table_schema: T.StructType,
-    pk: Sequence[str],
-    payload_col: str = "payload",
-    op_col: str = "op",
-    partition_col: str | None = "partition",
-    offset_col: str | None = "offset",
-    inject: dict[str, str] | None = None,
-) -> DataFrame:
-    """Fused feed decode -> typed rows, unsplit (split_dead_letters), so one
-    persist feeds the rows, the dead letters and the pipeline's summary.
-
-    Split, semantically equivalent to ``decode_feed`` + ``events_to_rows``
-    for row-mode merges (asserted on adversarial payloads by
-    test_fused_decode_matches_two_stage) but ~2.8x faster at 2M events:
-    one ``from_json`` straight into ``struct<col:string, ...>`` instead of
-    ``map<string,string>`` + ``map_keys`` + per-column ``getItem`` /
-    ``array_contains`` — no map materialization, no exists array, one less
-    full-row copy. Spark renders nested objects, duplicate keys (last
-    wins), and numeric literals identically in both parse modes.
-
-    What this path deliberately does NOT produce is the ``exists``
-    partial-update mask: JSON-absent and JSON-null are both struct-null.
-    Row-mode LWW (the reference's ReplacingMergeTree shape) replaces the
-    whole row per version so the distinction is immaterial; column-wise
-    merges and schema-evolution discovery need the map form — use the
-    two-stage path there (pipeline does, when evolve_schema=True).
-
-    DLQ parity: a malformed / non-object payload parses to an all-null
-    struct, so it fails the raw-PK presence test exactly like the map
-    path's null-map ``ok`` flag (pk is never empty for a lake table).
-    ``_raw`` on the DLQ is the original payload string — closer to the
-    reference's verbatim `{topic}-failed` producer (pkg/tube/kfks.go:53-58)
-    than the re-rendered map."""
-    if offset_col is None:
-        raise ValueError("decode requires offset_col (stable unique per event)")
-    if not pk:
-        raise ValueError("decode_feed_checked requires a non-empty pk")
-    inject = inject or {}
-    unknown = set(inject) - {f.name for f in table_schema.fields}
-    if unknown:
-        raise ValueError(f"inject keys must be table columns, got {sorted(unknown)}")
-    from cds_spark.schema import coerce
-
-    ss = T.StructType([T.StructField(f.name, T.StringType()) for f in table_schema.fields])
-    p = df.withColumn("op", _norm_op(F.col(op_col))).filter(F.col("op").isNotNull())
-    part = F.col(partition_col).cast("long") if partition_col else F.lit(0).cast("long")
-    # explode(array(from_json)) = the same load-bearing Generate barrier as
-    # events_to_rows: the CodegenFallback parse runs ONCE per row and no
-    # downstream projection/predicate can inline or push through it
-    staged = p.select(
-        F.col("op"),
-        part.alias("_partition"),
-        F.col(offset_col).alias("_offset"),
-        F.col(payload_col).alias("_raw"),
-        *[F.col(src).cast("string").alias(f"__inj_{k}") for k, src in inject.items()],
-        F.explode(F.array(F.from_json(F.col(payload_col), ss))).alias("__j"),
-    )
-
-    def _rawv(name: str) -> F.Column:
-        v = F.col(f"__j.{name}")
-        if name not in inject:
-            return v
-        # payload wins over the injected envelope column (LAST_WIN parity
-        # with decode_feed's map_concat(env, data)) — but ONLY when the
-        # payload actually parsed: the map path applies inject on
-        # data.isNotNull(), and without the same gate an injected PK
-        # column would defeat the DLQ split for malformed payloads
-        return F.when(F.col("__j").isNotNull(),
-                      F.coalesce(v, F.col(f"__inj_{name}")))
-
-    # coerce only carried values; a struct-null means key-absent in the
-    # overwhelmingly common case (key-only deletes, partial updates) and
-    # must land as NULL like the map path. The one undecidable edge — a key
-    # present with an explicit JSON null — also lands NULL here, where the
-    # map path applies the type default ('' / 0); flat CDC after-images
-    # don't emit explicit nulls for carried columns, and the equivalence
-    # test pins every other case.
-    sel = [
-        F.when(_rawv(f.name).isNotNull(), coerce(_rawv(f.name), f.dataType))
-        .otherwise(F.lit(None).cast(f.dataType))
-        .alias(f.name)
-        for f in table_schema.fields
-    ]
-    # PK presence on the RAW wire values, pre-coercion
-    keep = pk_valid(F.col("__j").isNotNull(), [_rawv(k) for k in pk])
-    return staged.select(
-        *sel,
-        F.col("op").alias("_op"),
-        (F.col("op") == "d").alias("_is_delete"),
-        F.col("_partition"),
-        F.col("_offset"),
-        keep.alias("__keep"),
-        F.col("_raw"),
-    )
+    return _finish(p, partition_col, offset_col, payload_col)
 
 
 # ---------------------------------------------------------------------------
@@ -548,7 +420,8 @@ def events_to_rows(
       lineage/version passthrough. Missing cells -> NULL (the lake keeps
       NULL; reads can substitute type defaults) — parse.go:150-157.
     - dlq: events rejected for missing PK (parse.go:141-144,
-      insert.go:13-14) or undecodable payload.
+      insert.go:13-14) or undecodable payload, with the same columns and
+      ``_raw``, the verbatim wire payload the failed topic forwards.
 
     Physical shape (hard-won; see test_plans + the bench): the raw value
     and exists-flag of every column are evaluated ONCE per row inside a
@@ -584,7 +457,7 @@ def events_to_rows(
         F.col("op"),
         F.col("_partition"),
         F.col("_offset"),
-        F.col("data").alias("_raw"),
+        F.col("_raw"),
         # array(struct) always has exactly one element, so explode is a
         # 1:1 row mapping — it exists purely as the optimization barrier
         F.explode(F.array(packed)).alias("__e"),
@@ -609,4 +482,5 @@ def events_to_rows(
         keep.alias("__keep"),
         F.col("_raw"),
     )
-    return split_dead_letters(full)
+    dlq = full.filter(~F.col("__keep")).drop("__keep")
+    return full.filter(F.col("__keep")).drop("__keep", "_raw"), dlq

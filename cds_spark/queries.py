@@ -705,17 +705,18 @@ FROM events WHERE event_type <> 'purchase'
 
 
 def q_decode_feed_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fused struct-parse hot path (decode_feed_rows — what bench.py's
-    replay and the non-evolving pipeline execute) under the driver's hash
-    gate: envelope round-trip exercising op normalization + whitelist
-    ('purchase'->TRUNCATE dropped), missing-pk DLQ split ('view' events
-    omit the pk), injected-vs-payload version precedence ('signup' carries
-    its own commit, which wins), key-only deletes (absent columns -> NULL),
-    and the lenient coercion matrix incl. the Mongo $numberLong unwrap
-    (k), double round-trip (val) and multi-layout timestamp (seen)."""
+    """The feed decode of the pipeline and bench.py's replay
+    (``events_to_rows(decode_feed(...))``; the row id predates the single
+    decoder) under the oracle hash gate: envelope round-trip exercising
+    op normalization + whitelist ('purchase'->TRUNCATE dropped), missing-pk
+    DLQ split ('view' events omit the pk), injected-vs-payload version
+    precedence ('signup' carries its own commit, which wins), key-only
+    deletes (absent columns -> NULL), and the lenient coercion matrix incl.
+    the Mongo $numberLong unwrap (k), double round-trip (val) and
+    multi-layout timestamp (seen)."""
     from pyspark.sql import types as T
 
-    from cds_spark.operators.decode import decode_feed_rows
+    from cds_spark.operators.decode import decode_feed, events_to_rows
 
     schema = T.StructType(
         [
@@ -758,7 +759,7 @@ def q_decode_feed_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod("user_id", F.lit(8)).cast("int").alias("partition"),
         payload.alias("payload"),
     )
-    rows, _dlq = decode_feed_rows(wire, schema, pk=["uid"], inject={"commit": "commit"})
+    rows, _dlq = events_to_rows(decode_feed(wire, inject={"commit": "commit"}), schema, ["uid"])
     return rows.select(
         "uid",
         "ev",

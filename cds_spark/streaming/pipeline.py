@@ -13,8 +13,7 @@ Spark-first realization::
            schema evolution (diff + ALTER)    # parse.go:169-265
            per-partition offsets (lineage)
            dead-letter count (missing PK / unparseable, parse.go:141-144)
-        -> DLQ write, when non-empty          # kfks.go:53-58
-        -> in-batch LWW collapse              # parse.go:268-306
+        -> DLQ write of the wire payloads, when non-empty  # kfks.go:53-58
         -> LakeTable.merge (bucketed upsert, offset-fenced)  # ckgroup exec
         -> lineage record append
     ) with checkpointLocation
@@ -36,8 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cds_spark.lake.table import LakeTable
-from cds_spark.operators.decode import (decode_feed, decode_feed_checked, events_to_rows,
-                                        pk_valid, split_dead_letters)
+from cds_spark.operators.decode import decode_feed, events_to_rows, pk_valid
 from cds_spark.schema import infer_json_type
 from cds_spark.sources.feed import FEED_SCHEMA
 
@@ -109,25 +107,35 @@ class JobSpec:
     auto_rebucket_groups_per_tick: int = 8
 
 
-def _batch_summary(staged: DataFrame) -> tuple[dict, list[dict], int]:
-    """ONE aggregation over a persisted decode -> ``(samples, partitions,
-    n_dlq)``: a sample payload per unknown key, the per-partition
-    ``n_events`` / ``min_offset`` / ``max_offset`` of PK-valid events
-    (sorted; a partition of dead letters only is absent), the DLQ count.
+def _batch_summary(table: LakeTable, events: DataFrame) -> tuple[dict, list[dict], int]:
+    """ONE aggregation over a persisted decode_feed -> ``(samples,
+    partitions, n_dlq)``: a raw payload per key of ``data`` the table does
+    not know, chosen among those whose VALUE for it is non-null (None when
+    all are null), the per-partition ``n_events`` / ``min_offset`` /
+    ``max_offset`` of PK-valid events (sorted; a partition of dead letters
+    only is absent), and the DLQ count.
 
-    ``staged`` has a row per event and unknown key ``k`` (NULL for none):
-    ``_partition``, ``_offset``, ``_ok`` (pk_valid), ``_first`` (only the
-    event's first row counts) and ``_sample``. The groups are a handful,
-    so it runs in ONE task (coalesce(1): no shuffle, so no map-stage job);
-    the decode is not serialised, as adaptive execution materialises the
-    persisted input first, in its own parallel job."""
-    groups = staged.coalesce(1).groupBy("_partition", "k").agg(*[F.expr(e) for e in (
-        "count_if(_first AND _ok) AS n_events",
-        "min(IF(_first AND _ok, _offset, NULL)) AS min_offset",
-        "max(IF(_first AND _ok, _offset, NULL)) AS max_offset",
-        "count_if(_first AND NOT _ok) AS n_dlq",
-        "first(_sample, true) AS sample",
-    )]).collect()
+    An event has a row per unknown key (one for none), and only its first
+    row counts. The groups are a handful, so it runs in ONE task
+    (coalesce(1): no shuffle, so no map-stage job); the decode is not
+    serialised, as adaptive execution materialises the persisted input
+    first, in its own parallel job."""
+    known = [f.name for f in table.schema.fields]
+    data = F.col("data")
+    groups = events.select(
+        "_partition", "_offset", "_raw", data.alias("_d"),
+        pk_valid(data.isNotNull(), [data[k] for k in table.pk]).alias("_ok"),
+        F.posexplode_outer(
+            F.filter(F.map_keys(data), lambda k: ~k.isin(*known))
+        ).alias("_pos", "k"),
+    ).selectExpr("*", "coalesce(_pos = 0, true) AS _first").coalesce(1).groupBy(
+        "_partition", "k").agg(*[F.expr(e) for e in (
+            "count_if(_first AND _ok) AS n_events",
+            "min(IF(_first AND _ok, _offset, NULL)) AS min_offset",
+            "max(IF(_first AND _ok, _offset, NULL)) AS max_offset",
+            "count_if(_first AND NOT _ok) AS n_dlq",
+            "first(IF(element_at(_d, k) IS NOT NULL, _raw, NULL), true) AS sample",
+        )]).collect()
     samples: dict = {}
     parts: dict = {}
     for r in groups:
@@ -144,12 +152,10 @@ def _batch_summary(staged: DataFrame) -> tuple[dict, list[dict], int]:
     return samples, partitions, sum(r["n_dlq"] for r in groups)
 
 
-def discover_and_evolve(
-    table: LakeTable, events: DataFrame, payload_col: str = "payload"
-) -> tuple[list[str], list[dict], int]:
+def discover_and_evolve(table: LakeTable, events: DataFrame) -> tuple[list[str], list[dict], int]:
     """Per-batch schema evolution (parse.go:169-265) and the batch's one
     summary, ``(added columns, lineage partitions, n_dlq)``, from ONE
-    _batch_summary over the persisted decode_feed(keep_cols=[payload]).
+    _batch_summary over the persisted decode.
 
     Each unknown key of ``data`` is typed from a raw payload whose VALUE
     for it is non-null (parse.go:190-207: int->long, fraction->double,
@@ -158,19 +164,7 @@ def discover_and_evolve(
     column, so the PK-valid flag is final before the ALTER."""
     import pyspark.sql.types as T
 
-    known = [f.name for f in table.schema.fields]
-    data = F.col("data")
-    staged = events.select(
-        "_partition", "_offset",
-        pk_valid(data.isNotNull(), [data[k] for k in table.pk]).alias("_ok"),
-        F.col(payload_col).alias("_p"),
-        data.alias("_d"),
-        F.posexplode_outer(
-            F.filter(F.map_keys(data), lambda k: ~k.isin(*known))
-        ).alias("_pos", "k"),
-    ).selectExpr("_partition", "_offset", "_ok", "k", "coalesce(_pos = 0, true) AS _first",
-                 "IF(element_at(_d, k) IS NOT NULL, _p, NULL) AS _sample")
-    samples, partitions, n_dlq = _batch_summary(staged)
+    samples, partitions, n_dlq = _batch_summary(table, events)
     fields = []
     for k in sorted(samples):
         dt = T.StringType()
@@ -242,31 +236,18 @@ class IncrementalSync:
             rec = {"batch_id": batch_id, "skipped": True, "ts": time.time()}
             self._append_lineage(rec)
             return rec
-        # Two decode shapes, same semantics (equivalence-tested), each
-        # persisted ONCE (micro-batches are bounded by maxFilesPerTrigger /
-        # maxOffsetsPerTrigger): the batch summary, the DLQ write and the
-        # merge read the cache.
-        # - evolve_schema on: the map form, with the raw payload riding
-        #   along (keep_cols) so unknown keys can be typed;
-        # - evolve_schema off: the fused struct parse (~2.8x cheaper).
-        if self.spec.evolve_schema:
-            cached = decode_feed(
-                batch, inject=self.spec.version_inject, keep_cols=("payload",)
-            ).persist()
-        else:
-            cached = decode_feed_checked(
-                batch, table.schema, table.pk, inject=self.spec.version_inject
-            ).persist()
+        # ONE decode, persisted ONCE (micro-batches are bounded by
+        # maxFilesPerTrigger / maxOffsetsPerTrigger): the batch summary,
+        # the DLQ write and the merge read the cache. With evolve_schema
+        # off the summary runs the same, only the ALTER is skipped.
+        cached = decode_feed(batch, inject=self.spec.version_inject).persist()
         try:
             if self.spec.evolve_schema:
                 added, lineage_rows, n_dlq = discover_and_evolve(table, cached)
-                rows, dlq = events_to_rows(cached, table.schema, table.pk)
             else:
                 added = []
-                _, lineage_rows, n_dlq = _batch_summary(cached.selectExpr(
-                    "_partition", "_offset", "__keep AS _ok", "true AS _first",
-                    "CAST(NULL AS string) AS k", "CAST(NULL AS string) AS _sample"))
-                rows, dlq = split_dead_letters(cached)
+                _, lineage_rows, n_dlq = _batch_summary(table, cached)
+            rows, dlq = events_to_rows(cached, table.schema, table.pk)
             # the dead letters are durable before the merge's fence commit:
             # a crash between the two cannot lose them; one file per batch
             if n_dlq and self.spec.dlq_dir:

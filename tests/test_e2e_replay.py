@@ -162,30 +162,8 @@ def test_append_mode_replay_matches_oracle(spark, feed, oracle_state, tmp_path):
     assert table.properties.get("needs_collapse") is False
 
 
-def test_fused_decode_replay_matches_oracle(spark, feed, oracle_state, tmp_path):
-    """The fused struct-parse hot path (decode_feed_rows, what bench.py and
-    the non-evolving pipeline run) must converge to the same final state as
-    the two-stage path — sha256(content) invariant vs the pandas oracle."""
-    from cds_spark.operators.decode import decode_feed_rows
-
-    root = str(tmp_path / "fused_table")
-    table = LakeTable.create(
-        spark, root, REPO_SCHEMA, pk=["repo", "path"], version_cols=["commit", "_offset"],
-        n_buckets=16,
-    )
-    per = (N_EVENTS + 1) // 2
-    for i in range(2):
-        batch = feed.filter(
-            (F.col("offset") >= i * per) & (F.col("offset") < (i + 1) * per)
-        )
-        rows, dlq = decode_feed_rows(batch, table.schema, table.pk, inject={"commit": "commit"})
-        assert dlq.count() == 0
-        table.merge(rows, fence=("fused", i))
-    _assert_matches_oracle(table, oracle_state)
-
-
 def test_pipeline_fused_path_matches_evolving_path(spark, feed, tmp_path):
-    """IncrementalSync with evolve_schema=False (fused decode) produces the
+    """IncrementalSync with evolve_schema=False (no ALTER) produces the
     same final table state as the default evolving pipeline on the same
     batches."""
     from cds_spark.streaming.pipeline import IncrementalSync, JobSpec

@@ -461,6 +461,7 @@ def test_decode_debezium_mongo_dialect(spark):
     assert out[2].op == "u" and out[2].data == {"_id": "abc", "val": "2.5", "weird": "w"}
     assert out[3].op == "d" and out[3].data == {"_id": "abc"}
     assert out[5].data is None  # -> DLQ via events_to_rows
+    assert out[5]._raw == rows[4][0]  # the verbatim message, for the DLQ
     assert out[6].data == {"_id": "7", "k": '{"$numberLong":"5"}'}
     assert out[7].data == {"numberLong": "5"}  # reference's $-strip behavior
 
@@ -570,55 +571,61 @@ def test_quadratic_baselines_refuse_large_inputs(spark):
 
 
 def test_fused_decode_matches_two_stage(spark):
-    """decode_feed_rows (struct-parse fast path) must agree with
-    decode_feed + events_to_rows on good rows AND the DLQ split, including
-    adversarial payloads: nested objects, duplicate keys, explicit-null /
-    missing / empty pk, malformed JSON, non-object JSON, extended-JSON
-    wrapped values, numeric literals, non-DML ops, injected commit."""
-    from cds_spark.operators.decode import decode_feed, decode_feed_rows, events_to_rows
+    """The feed decode (decode_feed + events_to_rows) pinned to literal
+    rows and dead letters on adversarial payloads: nested objects,
+    duplicate keys, explicit-null / missing / empty pk, malformed JSON,
+    non-object JSON, extended-JSON wrapped values, numeric literals,
+    non-DML ops, injected commit, an explicit-null cell. A dead letter
+    keeps its verbatim wire payload. (The test name predates the single
+    decoder.)"""
+    from cds_spark.operators.decode import decode_feed, events_to_rows
     from cds_spark.sources.feed import REPO_SCHEMA
 
-    rows = [
-        # (op, commit, offset, partition, payload)
-        ("c", "000000000001", 1, 0, '{"repo":"r1","path":"p1","lang":"py","content":"x"}'),
-        ("u", "000000000002", 2, 0, '{"repo":"r1","path":"p1","content":"y"}'),        # partial
-        ("d", "000000000003", 3, 1, '{"repo":"r1","path":"p1"}'),                       # key-only
-        ("u", "000000000004", 4, 1, '{"repo":"r2","path":"p2","commit":"inpayload"}'),  # payload commit wins
-        ("c", "000000000005", 5, 0, '{"repo":"r3","path":"p3","meta":{"a":1}}'),        # nested object extra key
-        ("c", "000000000006", 6, 0, '{"repo":"r4","path":"p4","repo":"r5"}'),           # duplicate key
-        ("c", "000000000007", 7, 0, '{"repo":"r6","path":null}'),                       # explicit-null pk -> DLQ
-        ("c", "000000000008", 8, 0, '{"repo":"r7"}'),                                   # missing pk -> DLQ
-        ("c", "000000000009", 9, 0, '{"repo":"","path":"p"}'),                          # empty pk -> DLQ
-        ("c", "000000000010", 10, 0, "not json"),                                       # malformed -> DLQ
-        ("c", "000000000011", 11, 0, "[1,2]"),                                          # non-object -> DLQ
-        ("TRUNCATE", "000000000012", 12, 0, '{"repo":"r8","path":"p8"}'),               # non-DML dropped
-        ("c", "000000000013", 13, 0,
-         '{"repo":{"$oid":"abc123"},"path":"p9","content":{"$numberLong":"42"}}'),      # ext-JSON
-        ("c", "000000000014", 14, 0, '{"repo":"r9","path":"p10","content":1.50}'),      # numeric literal
+    payloads = [
+        # (op, payload); event i has offset i + 1, commit i + 1 (12 digits)
+        ("c", '{"repo":"r1","path":"p1","lang":"py","content":"x"}'),
+        ("u", '{"repo":"r1","path":"p1","content":"y"}'),        # partial
+        ("d", '{"repo":"r1","path":"p1"}'),                       # key-only
+        ("u", '{"repo":"r2","path":"p2","commit":"inpayload"}'),  # payload commit wins
+        ("c", '{"repo":"r3","path":"p3","meta":{"a":1}}'),        # nested object extra key
+        ("c", '{"repo":"r4","path":"p4","repo":"r5"}'),           # duplicate key
+        ("c", '{"repo":"r6","path":null}'),                       # explicit-null pk -> DLQ
+        ("c", '{"repo":"r7"}'),                                   # missing pk -> DLQ
+        ("c", '{"repo":"","path":"p"}'),                          # empty pk -> DLQ
+        ("c", "not json"),                                        # malformed -> DLQ
+        ("c", "[1,2]"),                                           # non-object -> DLQ
+        ("TRUNCATE", '{"repo":"r8","path":"p8"}'),                # non-DML dropped
+        ("c", '{"repo":{"$oid":"abc123"},"path":"p9","content":{"$numberLong":"42"}}'),
+        ("c", '{"repo":"r9","path":"p10","content":1.50}'),      # numeric literal
+        ("c", '{"repo":"r10","path":"p11","lang":null}'),         # explicit-null cell
     ]
     feed = spark.createDataFrame(
-        rows, "op string, commit string, offset long, partition int, payload string"
+        [(op, f"{i + 1:012d}", i + 1, 1 if i + 1 in (3, 4) else 0, p)
+         for i, (op, p) in enumerate(payloads)],
+        "op string, commit string, offset long, partition int, payload string",
     )
-    events = decode_feed(feed, inject={"commit": "commit"})
-    good2, dlq2 = events_to_rows(events, REPO_SCHEMA, ["repo", "path"])
-    good1, dlq1 = decode_feed_rows(feed, REPO_SCHEMA, ["repo", "path"], inject={"commit": "commit"})
-
-    assert good1.columns == good2.columns
-    key = lambda df: sorted(
-        (tuple(r) for r in df.collect()),
-        key=lambda t: tuple((x is None, str(x)) for x in t),
-    )
-    assert key(good1) == key(good2)
-    # DLQ contract: the SAME events are rejected (coerced column views on
-    # rejected rows aren't load-bearing — the reference forwards the raw
-    # message to {topic}-failed — and the explicit-null-pk row hits the
-    # documented null-vs-type-default divergence there)
-    dlq_lineage = lambda df: sorted(
-        (r._offset, r._op, r._is_delete, r._partition) for r in df.collect()
-    )
-    assert dlq_lineage(dlq1) == dlq_lineage(dlq2)
-    # the fused path keeps the verbatim wire payload for the failed-topic
-    assert set(r._raw for r in dlq1.collect()) <= set(p[4] for p in rows)
+    good, dlq = events_to_rows(
+        decode_feed(feed, inject={"commit": "commit"}), REPO_SCHEMA, ["repo", "path"])
+    assert good.columns == ["repo", "path", "commit", "lang", "content",
+                            "_op", "_is_delete", "_partition", "_offset"]
+    assert dlq.columns == good.columns + ["_raw"]
+    assert dict(dlq.dtypes)["_raw"] == "string"
+    by_offset = lambda df: sorted((tuple(r) for r in df.collect()), key=lambda t: t[8])  # noqa: E731
+    assert by_offset(good) == [
+        ("r1", "p1", "000000000001", "py", "x", "c", False, 0, 1),
+        ("r1", "p1", "000000000002", None, "y", "u", False, 0, 2),
+        ("r1", "p1", "000000000003", None, None, "d", True, 1, 3),
+        ("r2", "p2", "inpayload", None, None, "u", False, 1, 4),
+        ("r3", "p3", "000000000005", None, None, "c", False, 0, 5),
+        ("r5", "p4", "000000000006", None, None, "c", False, 0, 6),
+        ("abc123", "p9", "000000000013", None, "42", "c", False, 0, 13),
+        ("r9", "p10", "000000000014", None, "1.5", "c", False, 0, 14),
+        # a carried JSON null lands as the type default, an absent key NULL
+        ("r10", "p11", "000000000015", "", None, "c", False, 0, 15),
+    ]
+    # the dead letters carry the failed topic's verbatim message
+    assert [(r._offset, r._raw) for r in dlq.orderBy("_offset").collect()] == [
+        (i, payloads[i - 1][1]) for i in (7, 8, 9, 10, 11)]
 
 
 def test_near_dup_clusters_transitive_collapse(spark):

@@ -56,9 +56,7 @@ def test_pipeline_decodes_feed_once_per_batch(spark):
     from cds_spark.sources.feed import REPO_SCHEMA, change_feed
 
     feed = change_feed(spark, 60, n_repos=2, paths_per_repo=3, seed=1)
-    events = decode_feed(
-        feed, inject={"commit": "commit"}, keep_cols=("payload",)
-    ).persist()
+    events = decode_feed(feed, inject={"commit": "commit"}).persist()
     try:
         events.count()  # materialize the cache
         rows, dlq = events_to_rows(events, REPO_SCHEMA, ["repo", "path"])

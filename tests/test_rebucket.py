@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from cds_spark.lake.table import LakeTable  # noqa: E402
-from cds_spark.operators.decode import decode_feed_rows  # noqa: E402
+from cds_spark.operators.decode import decode_feed, events_to_rows  # noqa: E402
 from cds_spark.sources.feed import (  # noqa: E402
     REPO_SCHEMA,
     change_feed,
@@ -36,7 +36,7 @@ def _mk(spark, root, n_buckets, feed, lo, hi, fence_from=0):
             properties={"merge_mode": "append"},
         )
     batch = feed.filter((F.col("offset") >= lo) & (F.col("offset") < hi))
-    rows, _ = decode_feed_rows(batch, t.schema, t.pk, inject={"commit": "commit"})
+    rows, _ = events_to_rows(decode_feed(batch, inject={"commit": "commit"}), t.schema, t.pk)
     t.merge(rows, fence=("rb", fence_from))
     return t
 
@@ -127,8 +127,8 @@ def test_rebucket_under_concurrent_ingest(spark, tmp_path):
         if fired["n"] == 0 and a[0].get("operation") == "rebucket":
             fired["n"] = 1
             batch = feed.filter((F.col("offset") >= 1600) & (F.col("offset") < 2400))
-            rows, _ = decode_feed_rows(
-                batch, writer.schema, writer.pk, inject={"commit": "commit"}
+            rows, _ = events_to_rows(
+                decode_feed(batch, inject={"commit": "commit"}), writer.schema, writer.pk
             )
             writer.merge(rows, fence=("rb", 1))
         return orig(self, *a, **kw)

@@ -34,7 +34,7 @@ def test_spark_submit_pyfiles_replay_matches_inprocess(spark, tmp_path):
 
     from cds_spark.functions import state_digest
     from cds_spark.lake.table import LakeTable
-    from cds_spark.operators.decode import decode_feed_rows
+    from cds_spark.operators.decode import decode_feed, events_to_rows
     from cds_spark.sources.feed import FEED_SCHEMA, REPO_SCHEMA, materialize_feed
 
     feed_dir = str(tmp_path / "feed")
@@ -49,8 +49,8 @@ def test_spark_submit_pyfiles_replay_matches_inprocess(spark, tmp_path):
     )
     for i, p in enumerate(paths):
         feed = spark.read.schema(FEED_SCHEMA).parquet(p)
-        rows, _ = decode_feed_rows(feed, table.schema, table.pk,
-                                   inject={"commit": "commit"})
+        rows, _ = events_to_rows(decode_feed(feed, inject={"commit": "commit"}),
+                                 table.schema, table.pk)
         table.merge(rows, fence=("local", i))
     table.compact(purge_tombstones=True)
     cur = table.current()
@@ -111,7 +111,7 @@ def test_multiprocess_cas_race_merge_vs_compact(spark, tmp_path):
 
     from cds_spark.functions import state_digest
     from cds_spark.lake.table import LakeTable
-    from cds_spark.operators.decode import decode_feed_rows
+    from cds_spark.operators.decode import decode_feed, events_to_rows
     from cds_spark.sources.feed import FEED_SCHEMA, REPO_SCHEMA, change_feed
 
     feed_dir = str(tmp_path / "feed")
@@ -132,7 +132,7 @@ def test_multiprocess_cas_race_merge_vs_compact(spark, tmp_path):
         properties={"merge_mode": "append"},
     )
     full = spark.read.schema(FEED_SCHEMA).parquet(feed_dir)
-    rows, _ = decode_feed_rows(full, ref.schema, ref.pk, inject={"commit": "commit"})
+    rows, _ = events_to_rows(decode_feed(full, inject={"commit": "commit"}), ref.schema, ref.pk)
     ref.merge(rows, fence=("ref", 0))
     cols = ["repo", "path", "commit", "lang", "content"]
     expected_digest = state_digest(ref.current(), cols)

@@ -1070,7 +1070,7 @@ def test_merge_survives_concurrent_compact_commit(spark, tmp_path):
 
 
 def test_pipeline_arrow_decoder_matches_jvm(spark, tmp_path):
-    """The fused decode (evolve_schema off) drives the full sync loop to
+    """The sync loop with evolve_schema off drives replay to
     the dict-replay oracle's state. (The test name predates the single
     decoder.)"""
     feed = change_feed(spark, 900, n_repos=6, paths_per_repo=10, seed=77).persist()
@@ -1093,8 +1093,8 @@ def test_pipeline_arrow_decoder_matches_jvm(spark, tmp_path):
 
 
 def test_arrow_decoder_with_schema_evolution(spark, tmp_path):
-    """The map-form decode passes the raw payload through (keep_cols) so
-    the evolution probe samples types for unknown keys: a numeric key that
+    """The decode passes the raw payload through (``_raw``) so the
+    evolution probe samples types for unknown keys: a numeric key that
     appears mid-feed lands as a numeric column whose values equal the
     dict-replay oracle's (NULL where the winning event lacks the key).
     (The test name predates the single decoder.)"""
@@ -1549,6 +1549,11 @@ def test_batch_summary_matches_python_replay(spark, tmp_path, evolve):
     dlq = spark.read.parquet(sync.spec.dlq_dir)
     assert dlq.count() == n_dlq
     assert {r["_batch_id"] for r in dlq.select("_batch_id").collect()} == {0}
+    # each dead letter keeps its verbatim wire payload, malformed and
+    # non-object JSON included
+    assert dict(dlq.dtypes)["_raw"] == "string"
+    assert sorted((r["_offset"], r["_raw"]) for r in dlq.collect()) == [
+        (100 + i, SUMMARY_EVENTS[i][3]) for i in (3, 6, 7, 10, 11, 12)]
     types = {f.name: f.dataType.typeName()
              for f in LakeTable.load(spark, sync.table.root).schema.fields}
     if evolve:
@@ -1565,9 +1570,11 @@ def test_batch_summary_matches_python_replay(spark, tmp_path, evolve):
 #: summary (cache build + one aggregation), the DLQ write and the merge
 #: (the batch persisted, its touched buckets from one single-task
 #: aggregation, then the per-bucket merge's exchange and collect).
-#: Measured 7 / 7 jobs and 1 178 / 831 commands (evolve / fused).
+#: Evolution off ("fused", an id kept from the retired struct-parse
+#: decoder) runs the same decode and summary, without the ALTER.
+#: Measured 7 / 7 jobs and 1 179 / 1 046 commands (evolve / fused).
 BATCH_JOBS = {True: 7, False: 7}
-BATCH_GATEWAY_CALLS = {True: 1195, False: 845}
+BATCH_GATEWAY_CALLS = {True: 1195, False: 1060}
 
 
 def _budget_batch(spark, tmp_path, name, evolve, counter):
@@ -1598,8 +1605,6 @@ def test_upsert_local_merge_matches_plan_merge(spark, tmp_path):
     """The per-bucket Arrow upsert merge must produce byte-identical state
     (including tombstones and meta columns) to the classic plan merge
     across multiple batches, and auto must actually take the local path."""
-    from cds_spark.operators.decode import decode_feed_rows
-
     feed = change_feed(spark, 3000, n_repos=10, paths_per_repo=15, seed=55)
     states = {}
     for label, strat in (("classic", "classic"), ("local", "auto")):
@@ -1613,7 +1618,8 @@ def test_upsert_local_merge_matches_plan_merge(spark, tmp_path):
             batch = feed.filter(
                 (F.col("offset") >= i * 1000) & (F.col("offset") < (i + 1) * 1000)
             )
-            rows, _ = decode_feed_rows(batch, t.schema, t.pk, inject={"commit": "commit"})
+            rows, _ = events_to_rows(decode_feed(batch, inject={"commit": "commit"}),
+                                     t.schema, t.pk)
             t.merge(rows, fence=("um", i), strategy=strat)
         t2 = LakeTable.load(spark, root)
         states[label] = sorted(
@@ -1709,7 +1715,8 @@ def test_compact_job_budget(spark, tmp_path, strategy, count_jobs):
 @pytest.mark.parametrize("strategy", ["auto", "classic"])
 def test_compact_of_empty_buckets_commits_nothing(spark, tmp_path, strategy):
     """compact(buckets=...) over buckets that hold no files rewrites
-    nothing: no snapshot is committed and no bucket is reported."""
+    nothing: no snapshot is committed and no bucket is reported. Mixed
+    with a held bucket, only that one is reported."""
     t = _kv_table(spark, tmp_path, f"ce_{strategy}", merge_mode="append")
     t.merge(spark.range(0, 1).selectExpr("id AS k", "'v' AS v", "1L AS ver"))
     t = LakeTable.load(spark, t.root)
@@ -1718,6 +1725,11 @@ def test_compact_of_empty_buckets_commits_nothing(spark, tmp_path, strategy):
     v = t.version
     assert t.compact(buckets=empty, strategy=strategy) == []
     assert LakeTable.load(spark, t.root).version == v
+    # a mixed selection reports and records only the bucket rewritten
+    assert t.compact(buckets=[held, empty[0]], strategy=strategy) == [held]
+    t = LakeTable.load(spark, t.root)
+    assert t.version == v + 1
+    assert t.manifest["summary"]["buckets"] == 1
 
 
 def _one_per_key(df) -> bool:
@@ -1810,14 +1822,12 @@ def _merge_matrix_case(spark, scenario):
     Batches are merged in order, each under its own fence; ``oracle`` maps
     each live key to its expected content, or is None."""
     if scenario == "repo_feed":
-        from cds_spark.operators.decode import decode_feed_rows
-
         feed = change_feed(spark, 3000, n_repos=10, paths_per_repo=15, seed=55)
         feed = feed.persist()
         batches = [
-            decode_feed_rows(
+            events_to_rows(decode_feed(
                 feed.filter((F.col("offset") >= i * 1000) & (F.col("offset") < (i + 1) * 1000)),
-                REPO_SCHEMA, ["repo", "path"], inject={"commit": "commit"})[0]
+                inject={"commit": "commit"}), REPO_SCHEMA, ["repo", "path"])[0]
             for i in range(3)
         ]
         # at-least-once redelivery of batch 0: every stored version ties

@@ -27,7 +27,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from cds_spark.lake.table import CommitConflict, LakeTable
-    from cds_spark.operators.decode import decode_feed_rows
+    from cds_spark.operators.decode import decode_feed, events_to_rows
     from cds_spark.sources.feed import FEED_SCHEMA
 
     spark = (
@@ -50,8 +50,8 @@ def main() -> None:
         while time.time() < args.start_at:
             time.sleep(0.01)
         for i, b in enumerate(batches):
-            rows, _ = decode_feed_rows(
-                b, table.schema, table.pk, inject={"commit": "commit"}
+            rows, _ = events_to_rows(
+                decode_feed(b, inject={"commit": "commit"}), table.schema, table.pk
             )
             stats = table.merge(rows, fence=(args.job_id, i), mode="append")
             out["committed" if not stats.skipped else "skipped"] += 1

@@ -9,7 +9,7 @@ table — the north rule's deployment mode, end to end:
 executors); this script is the only file shipped as the application. The
 feed is a directory of ``batch-*`` parquet dirs (tools like
 ``cds_spark.sources.feed.materialize_feed`` or any Kafka-topic dump with
-the F2 envelope schema). Each batch is decoded (fused struct-parse),
+the F2 envelope schema). Each batch is decoded (map-form decode_feed),
 merged under an offset fence, and the final state is summarized with an
 order-independent content digest so two independently-launched runs (or an
 in-process run) can be compared without shipping rows.
@@ -42,7 +42,7 @@ def main() -> int:
     # writable package dir or the repo on PYTHONPATH
     from cds_spark.functions import state_digest
     from cds_spark.lake.table import LakeTable
-    from cds_spark.operators.decode import decode_feed_rows
+    from cds_spark.operators.decode import decode_feed, events_to_rows
     from cds_spark.session import submit_session
     from cds_spark.sources.feed import FEED_SCHEMA, REPO_SCHEMA
 
@@ -70,8 +70,8 @@ def main() -> int:
         # footer-metadata count (no scan): append-mode MergeStats skips
         # source_rows to avoid an extra count job on the hot path
         merged += feed.count()
-        rows, _dlq = decode_feed_rows(feed, table.schema, table.pk,
-                                      inject={"commit": "commit"})
+        rows, _dlq = events_to_rows(decode_feed(feed, inject={"commit": "commit"}),
+                                    table.schema, table.pk)
         table.merge(rows, fence=("submit", i))
     if args.mode == "append" and not args.no_compact:
         table.compact(purge_tombstones=True)
